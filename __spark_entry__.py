@@ -446,10 +446,9 @@ def q_ngram_jaccard(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    """SimHash fingerprints (16-bit) per document — Arrow pandas-UDF hot
-    path; the pure-Catalyst DD.simhash expression is the cross-engine twin
-    (bit-parity asserted in tests/test_functions.py) and the DuckDB SQL
-    below is the value oracle."""
+    """SimHash fingerprints (16-bit) per document — the shipped Arrow
+    pandas UDF (DD.simhash_pudf); the DuckDB SQL below is the value
+    oracle."""
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", DD.simhash_pudf(16)(F.col("text")).alias("simhash16"))
 
@@ -908,10 +907,9 @@ def q_winnow_fp(spark, sf_dir):
     local fingerprinting algorithm; functions/winnow.py): hash every
     8-char k-gram of the normalized text, slide a 4-hash window, keep
     the rightmost window minimum — any >=11-char clone between two docs
-    is then guaranteed a shared fingerprint. Gate runs the Catalyst HOF
-    form (the oracle-parity twin; winnow_fast is the bit-parity-tested
-    Arrow hot path); the DuckDB twin is generated from the same module
-    constants."""
+    is then guaranteed a shared fingerprint. Gate runs the shipped Arrow
+    winnow_fingerprints; the DuckDB twin is generated from the same
+    module constants."""
     from geospatialtools_spark.functions.winnow import winnow_fingerprints
     d = _t(spark, sf_dir, "documents")
     return winnow_fingerprints(d)
@@ -1000,16 +998,16 @@ def q_doc_fingerprint(spark, sf_dir):
 
 def q_repetition_stats(spark, sf_dir):
     """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1):
-    duplicate-word fraction + top 2-/3-gram character coverage. Pure
-    per-row Catalyst higher-order functions — zero shuffle, scales
-    embarrassingly parallel."""
+    duplicate-word fraction + top 2-/3-gram character coverage. The
+    shipped TS.repetition_stats (Arrow counters + Catalyst fraction
+    arithmetic) — per-row, zero shuffle."""
     d = _t(spark, sf_dir, "documents")
-    t = F.col("text")
+    dup, top2, top3 = TS.repetition_stats(F.col("text"))
     return d.select(
         "doc_id",
-        TS.dup_unit_frac(TS.words_array(t)).alias("dup_word_frac"),
-        TS.top_ngram_char_frac(t, 2).alias("top2_char_frac"),
-        TS.top_ngram_char_frac(t, 3).alias("top3_char_frac"),
+        dup.alias("dup_word_frac"),
+        top2.alias("top2_char_frac"),
+        top3.alias("top3_char_frac"),
     )
 
 
@@ -1858,8 +1856,9 @@ _SQL_MINHASH_PAIRS = _sql_minhash_pairs()
 
 
 def _sql_simhash16() -> str:
-    """CTE chain ending in fp(doc_id, simhash16) — the Catalyst-twin SimHash
-    (shared by the simhash and simhash_pairs oracles)."""
+    """CTE chain ending in fp(doc_id, simhash16) — the SimHash of
+    dedup.simhash_pudf as a grouped vote (shared by the simhash and
+    simhash_pairs oracles)."""
     sums = ", ".join(
         f"sum(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(16))
@@ -3244,7 +3243,7 @@ def oracle_sql() -> dict[str, str]:
         "doc_fingerprint": f"""
             SELECT doc_id, md5({_NORM}) AS fp FROM documents""",
         # Gopher repetition signals: same integer-count / integer-length
-        # arithmetic as the Spark HOFs, via DuckDB list lambdas (nested
+        # arithmetic as TS.repetition_stats, via DuckDB list lambdas (nested
         # list_filter capturing the outer list_transform variable — exact
         # occurrence counts, no probabilistic step). The split class is the
         # EXPLICIT Java \s set [ \t\n\x0B\f\r] — RE2's \s lacks \x0B, the

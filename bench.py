@@ -1825,8 +1825,7 @@ def main_winnow():
     fingerprint), so `planted_missed` must be 0. Remaining extra pairs
     are genuine 8-gram hash-value collisions (8 chars of [a-z0-9]
     carry ~41 bits; ~hundreds expected at 1M docs) — reported, not
-    hidden. Times both the Arrow hot path (full corpus) and the
-    Catalyst oracle-parity form (100k cap) plus the pair join."""
+    hidden. Times the fingerprint pass and the pair join."""
     from pyspark.sql import functions as F
 
     from geospatialtools_spark.functions import winnow as WN
@@ -1848,13 +1847,9 @@ def main_winnow():
     n_fp = None
     for _ in range(2):
         t0 = time.time()
-        n_fp = WN.winnow_fast(docs).count()
+        n_fp = WN.winnow_fingerprints(docs).count()
         reps.append(round(time.time() - t0, 2))
     t_arrow = min(reps)
-    n_cat = min(n, 100_000)
-    t0 = time.time()
-    cat_fp = WN.winnow_fingerprints(docs.limit(n_cat)).count()
-    t_catalyst = round(time.time() - t0, 2)
     t0 = time.time()
     pairs = WN.winnow_pairs(docs).localCheckpoint(eager=True)
     n_pairs = pairs.count()
@@ -1866,14 +1861,12 @@ def main_winnow():
         (F.col("id_a") % 100 == 0) & (F.col("id_b") == F.col("id_a") + 1)
     ).count()
     print(json.dumps({
-        "metric": "winnowing fingerprints (Schleimer 2003) — Arrow hot "
-                  "path, Catalyst twin cost, pair join with planted "
+        "metric": "winnowing fingerprints (Schleimer 2003) — Arrow "
+                  "fingerprint pass and pair join with planted "
                   "exact-recall ground truth",
         "docs": n, "fingerprints": n_fp,
         "arrow_reps_s": reps, "arrow_wall_s": t_arrow,
         "arrow_docs_per_sec": round(n / t_arrow, 1),
-        "catalyst_docs": n_cat, "catalyst_wall_s": t_catalyst,
-        "catalyst_docs_per_sec": round(n_cat / t_catalyst, 1),
         "pairs_wall_s": t_pairs, "pairs_found": n_pairs,
         "planted_pairs": planted, "planted_found": found_planted,
         "planted_missed": planted - found_planted,

@@ -1,13 +1,15 @@
 """Deduplication operators for the training-data pipeline.
 
 Five dedup families over the ``documents`` table (exact, MinHash+LSH,
-SimHash, n-gram Jaccard, embedding cosine), all engine-side:
+SimHash, n-gram Jaccard, embedding cosine):
 
-- Hashes are md5 HEX STRINGS (identical in Spark and DuckDB), so every
-  operator here has an exact cross-engine oracle: MinHash is the min of md5
-  strings over shingles (a valid random permutation family — md5 on a
-  distinct salt per hash function), SimHash converts a 15-hex-char prefix to
-  a 60-bit integer via base conversion.
+- Shingles, MinHash signatures and SimHash fingerprints are Arrow pandas
+  UDFs over the ``textstats.normalize_str`` tokens. Their hashes are
+  md5-derived (identical in Spark and DuckDB), so each has an exact
+  cross-engine oracle: MinHash is the min of md5 hex strings over
+  shingles (a valid random permutation family — md5 on a distinct salt
+  per hash function), SimHash votes on the 60-bit ints of 15-hex-char
+  md5 prefixes.
 - At 100 TB scale: exact dedup is one hash-groupBy (map-side partial agg);
   MinHash-LSH is the standard shingle→signature→band→bucket-join pipeline —
   only same-band candidates shuffle, never all pairs; the brute-force pair
@@ -22,7 +24,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import normalize_text
+from .textstats import normalize_str
 
 from .util import widen_to_parallelism as _widen
 
@@ -51,36 +53,6 @@ LSH_BANDS = 4            # bands of 4 rows each -> catches J >~ 0.5 pairs
 ROWS_PER_BAND = N_MINHASH // LSH_BANDS
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles of the normalized text (array<string>).
-
-    Shorter-than-k documents yield a single shingle of all their tokens, so
-    every non-empty document has >=1 shingle.
-    """
-    toks = F.split(normalize_text(text), " ")
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.array_distinct(grams)
-
-
-def minhash_signature(sh: Column, n_hashes: int = N_MINHASH) -> Column:
-    """MinHash signature: per hash function h, min over shingles of
-    md5('h|' + shingle) — an array<string> of length ``n_hashes``.
-
-    One nested higher-order expression (outer transform over hash index,
-    inner over shingles): inlining 16 separate array_min(transform(...))
-    copies of the shingle expression blows up codegen ~16x.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda h: F.array_min(F.transform(
-            sh, lambda s: F.md5(F.concat(h.cast("string"), F.lit("|"), s)))),
-    )
-
-
 def exact_dups(docs: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: group by content hash, keep min id as canonical.
@@ -96,23 +68,18 @@ def exact_dups(docs: DataFrame, text_col: str = "text",
 
 
 def shingles_pudf(k: int = 3):
-    """Arrow-vectorized distinct word-k-shingles — same outputs as the
-    Catalyst ``shingles`` expression, ~30x faster (interpreted higher-order
-    functions dominate otherwise; see minhash_signature_pudf note)."""
-    import re
-
+    """Arrow-vectorized distinct word k-shingles of the normalized text
+    (array<string>, first-occurrence order). Shorter-than-k documents
+    yield one shingle of all their tokens, and NULL text is treated as
+    "", so every row has >= 1 shingle."""
     from pyspark.sql import types as TY
-
-    ws = re.compile(r"\s+", re.ASCII)
-    nonal = re.compile(r"[^a-z0-9\s]", re.ASCII)
 
     @F.pandas_udf(TY.ArrayType(TY.StringType()))
     def sh(text):
         import pandas as pd
         out = []
         for t in text:
-            norm = ws.sub(" ", nonal.sub(" ", (t or "").lower())).strip()
-            toks = norm.split(" ")
+            toks = normalize_str(t or "").split(" ")
             seen, grams = set(), []
             for i in range(max(len(toks) - k + 1, 1)):
                 g = " ".join(toks[i:i + k])
@@ -126,28 +93,21 @@ def shingles_pudf(k: int = 3):
 
 
 def minhash_signature_pudf(k: int = 3, n_hashes: int = N_MINHASH):
-    """Arrow-vectorized MinHash signature UDF — the hot path.
-
-    Produces EXACTLY the same md5-string signatures as the pure-Catalyst
-    ``minhash_signature(shingles(...))`` (tested equal), but ~50x faster:
-    interpreted nested higher-order functions cost ~80us per md5 on the JVM,
-    hashlib in an Arrow batch costs ~1us. Tokenization mirrors
-    textstats.normalize_text byte-for-byte (ASCII regex classes).
+    """Arrow-vectorized MinHash signature UDF: per hash function h, the
+    min over the document's distinct word k-shingles (``shingles_pudf``
+    rule) of md5('h|' + shingle) — an array<string> of length
+    ``n_hashes``. hashlib in an Arrow batch costs ~1us per md5, where
+    interpreted nested higher-order functions cost ~80us on the JVM.
     """
     import hashlib
-    import re
 
     from pyspark.sql import types as TY
-
-    ws = re.compile(r"\s+", re.ASCII)
-    nonal = re.compile(r"[^a-z0-9\s]", re.ASCII)
 
     @F.pandas_udf(TY.ArrayType(TY.StringType()))
     def sig(text):
         out = []
         for t in text:
-            norm = ws.sub(" ", nonal.sub(" ", (t or "").lower())).strip()
-            toks = norm.split(" ")
+            toks = normalize_str(t or "").split(" ")
             grams = {" ".join(toks[i:i + k]) for i in range(max(len(toks) - k + 1, 1))}
             out.append([
                 min(hashlib.md5(f"{h}|{g}".encode()).hexdigest() for g in grams)
@@ -681,54 +641,23 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
             .select(id_col, "group_id", "keeper_id", "group_size"))
 
 
-def _hex15_to_long(hexstr: Column) -> Column:
-    """First 15 hex chars -> non-negative 60-bit long (same in DuckDB via
-    ('0x'||substr(h,1,15))::BIGINT)."""
-    return F.conv(F.substring(hexstr, 1, 15), 16, 10).cast("long")
-
-
-def simhash(text: Column, bits: int = 16) -> Column:
-    """SimHash over word tokens: per bit b, sign of sum over tokens of
-    (+1 if bit set else -1); fingerprint = Σ 2^b [majority bit b set].
-
-    Tokens hash to 60-bit ints via md5; only the low ``bits`` bits are used.
-    Near-dups differ in few bits (compare via hamming distance on the
-    returned long).
-    """
-    toks = F.split(normalize_text(text), " ")
-    hashes = F.transform(toks, lambda t: _hex15_to_long(F.md5(t)))
-
-    def bit_vote(b: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
-
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), bit_vote(b))
-        out = out + F.when(vote > 0, F.lit(2 ** b)).otherwise(F.lit(0))
-    return out
-
-
 def simhash_pudf(bits: int = 16):
-    """Arrow-vectorized SimHash — the hot path; bit-identical to the
-    pure-Catalyst ``simhash`` expression (which stays as the DuckDB oracle
-    twin; parity asserted in tests/test_functions.py).
+    """Arrow-vectorized SimHash over the normalized word tokens: each
+    token hashes to the 60-bit int of its md5's first 15 hex chars; bit b
+    of the fingerprint is set when more tokens have bit b set than not.
+    Tokens are NON-distinct (repeated tokens vote repeatedly), empty text
+    hashes the one empty token, and NULL text fingerprints to 0. Near-dups
+    differ in few bits (compare with ``hamming64``).
 
-    The Catalyst form runs ``bits`` interpreted higher-order F.aggregate
-    passes over the token array per row (~80us per lambda step); here each
-    Arrow batch hashes each token once and resolves all bit votes in one
-    numpy broadcast — same md5-prefix token hashing, NON-distinct tokens
-    (repeated tokens vote repeatedly), empty text hashes the empty token,
-    mirroring the expression exactly.
+    Each Arrow batch hashes each token once and resolves all bit votes in
+    one numpy broadcast; the DuckDB twin in the gate spells the same vote
+    as a grouped sum.
     """
     import hashlib
-    import re
 
     import numpy as np
     from pyspark.sql import types as TY
 
-    ws = re.compile(r"\s+", re.ASCII)
-    nonal = re.compile(r"[^a-z0-9\s]", re.ASCII)
     shifts = np.arange(bits, dtype=np.int64)
 
     @F.pandas_udf(TY.LongType())
@@ -737,14 +666,11 @@ def simhash_pudf(bits: int = 16):
         out = []
         for t in text:
             if t is None:
-                # Catalyst twin: split(NULL) propagates null through every
-                # vote, each when() falls to otherwise(0) -> fingerprint 0
                 out.append(0)
                 continue
-            norm = ws.sub(" ", nonal.sub(" ", t.lower())).strip()
             hs = np.fromiter(
                 (int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-                 for tok in norm.split(" ")),
+                 for tok in normalize_str(t).split(" ")),
                 dtype=np.int64)
             votes = (2 * ((hs[:, None] >> shifts) & 1) - 1).sum(axis=0)
             out.append(int(((votes > 0).astype(np.int64) << shifts).sum()))

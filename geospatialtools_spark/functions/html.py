@@ -122,13 +122,20 @@ def html_extract(df: DataFrame, html_col: str = "payload",
     """Append ``out_col`` (kept blocks joined with newlines), ``n_blocks``
     (non-empty candidate blocks) and ``n_kept``. NULL html stays NULL
     with NULL counts; a page with no surviving block gets an empty
-    string. Pure per-row expressions — zero shuffle.
+    string. Pure per-row expressions — zero shuffle. An input column
+    named like one of the appended or internal columns raises
+    ``ValueError`` instead of being overwritten.
 
     The struct array and the filtered kept array are BOUND as columns in
-    their own Projects (the winnow_fingerprints CollapseProject law):
-    inlining them would re-evaluate the whole non-codegen regex/HOF
-    chain once per consuming output column — measured ~1.9x slower for
-    identical rows."""
+    their own Projects: Spark's CollapseProject keeps a multiply-
+    referenced non-cheap alias in its own Project, while inlining them
+    would re-evaluate the whole non-codegen regex/HOF chain once per
+    consuming output column — measured ~1.9x slower for identical
+    rows."""
+    for name in ("_hs", "_hk", "n_blocks", "n_kept"):
+        if name in df.columns:
+            raise ValueError(f"input column {name!r} collides with "
+                             "html_extract's output/internal name")
     b = df.withColumn("_hs", block_structs(F.col(html_col)))
     b = b.withColumn(
         "_hk", F.filter(F.col("_hs"),

@@ -35,6 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _LINE_SPLIT = "\r\n|\n|\r"
+# a leading byte-order mark would otherwise glue onto the first
+# directive ("\ufeffUser-agent") and hide the first group
+_LEADING_BOM = "^\ufeff"
 
 
 def parse_robots(bodies: DataFrame, host_col: str = "host",
@@ -50,8 +53,10 @@ def parse_robots(bodies: DataFrame, host_col: str = "host",
     zero shuffle. Comment stripping (#...), whitespace trim and
     case-insensitive directive names follow the RFC; empty Disallow
     lines (allow-all idiom) are dropped as rules (they mean "no rule").
+    A leading U+FEFF byte-order mark is stripped before the line split.
     """
-    lines = F.split(F.col(body_col), _LINE_SPLIT)
+    lines = F.split(F.regexp_replace(F.col(body_col), _LEADING_BOM, ""),
+                    _LINE_SPLIT)
     # normalize each line to struct(directive, value) — directive ''
     # for non-directive lines
     def norm(ln: Column) -> Column:
@@ -143,7 +148,8 @@ def filter_disallowed(df: DataFrame, rules: DataFrame,
                      .alias("_robots_rules_arr"))
                 .withColumnRenamed("host", "_robots_rhost"))
     ph = F.broadcast(per_host)
-    j = df.join(ph, df[host_col] == ph["_robots_rhost"], "left")           .drop("_robots_rhost")
+    j = (df.join(ph, df[host_col] == ph["_robots_rhost"], "left")
+         .drop("_robots_rhost"))
     v = robots_verdict(F.col(path_col), F.col("_robots_rules_arr"))
     if keep_verdict:
         return j.withColumn("robots_allowed", v).drop("_robots_rules_arr")
@@ -158,7 +164,8 @@ def sql_robots_rules(host_expr: str, body_expr: str,
 
     Same group semantics via window functions instead of the array
     aggregate: a line's group binds * iff the latest header RUN at or
-    above it contains 'user-agent: *'."""
+    above it contains 'user-agent: *'. The same leading BOM is
+    stripped."""
     # duckdb has no WITH ORDINALITY — index the line list explicitly.
     # rid: windows partition by (host, rid), not host alone — with
     # duplicate host rows the per-host windows would interleave lines
@@ -169,7 +176,9 @@ def sql_robots_rules(host_expr: str, body_expr: str,
         WITH ln AS (
           SELECT t.host, t.rid, u.u.ord AS ord,
                  trim(regexp_replace(u.u.line, '#.*$', '')) AS clean
-          FROM (SELECT {host_expr} AS host, {body_expr} AS _b,
+          FROM (SELECT {host_expr} AS host,
+                       regexp_replace({body_expr}, '{_LEADING_BOM}', '')
+                         AS _b,
                        row_number() OVER () AS rid FROM {table}) t,
                unnest(list_transform(range(1, len(t._b) + 1),
                       i -> struct_pack(ord := i,

@@ -1,20 +1,30 @@
 """Text-analysis operators for the training-data pipeline surface.
 
-All pure Catalyst expressions over a ``text`` column (no Python in the hot
-path, whole-stage codegen). Designed for the ``documents`` table
-(doc_id, text, lang, source, n_chars) and for the span-level text of the
-interleaved doc table (apply to ``span.text`` after ``explode``).
+Per-row operators over a ``text`` column, designed for the ``documents``
+table (doc_id, text, lang, source, n_chars) and for the span-level text
+of the interleaved doc table (apply to ``span.text`` after ``explode``).
+Most are Catalyst expressions (whole-stage codegen, no Python);
+``repetition_stats`` counts in one Arrow pass because the same counting
+as interpreted higher-order functions is an order of magnitude slower.
 
 Every function is deterministic and ANSI-SQL-expressible, so each has a
-DuckDB oracle in ``__spark_entry__.py``.
+DuckDB oracle in ``__spark_entry__.py``. ``text_tokens`` is the one token
+rule; ``normalize_str`` is its Python form for the Arrow UDFs in
+``dedup`` and ``winnow``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
+# The canonical token: a lowercase [a-z0-9] run (see text_tokens). Java
+# regex and python re agree on this pure-ASCII class.
+TOKEN_RE = "[a-z0-9]+"
+_TOKEN_PY = re.compile(TOKEN_RE)
 # BPE-ish word-piece pattern: runs of letters, runs of digits, or single
 # non-space punctuation — a public GPT-2-style pre-tokenizer simplification.
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -175,7 +185,15 @@ def text_tokens(text: Column) -> Column:
     MinHash / SimHash / shingle path) and retrieval's BM25 index are both
     defined in terms of this one expression, so what counts as a token
     can never silently diverge between dedup and retrieval."""
-    return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), F.lit(0))
+    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), F.lit(0))
+
+
+def normalize_str(t: str) -> str:
+    """Python form of ``normalize_text`` for Arrow UDFs: the lowercase
+    [a-z0-9]+ runs joined by single spaces. Callers apply their own NULL
+    contract first, and split the result on " ", so empty text still
+    yields one empty token."""
+    return " ".join(_TOKEN_PY.findall(t.lower()))
 
 
 def fingerprint(text: Column) -> Column:
@@ -215,46 +233,23 @@ def pii_counts(text: Column) -> tuple[Column, Column, Column]:
 # Repetition statistics (Gopher-style quality signals; Rae et al. 2021 §A1.1)
 #
 # The classic corpus-curation repetition filters: fraction of duplicated
-# units (words / lines) and the character coverage of the most frequent word
-# n-gram. All pure per-row Catalyst higher-order functions — no shuffle, no
-# Python.
-#
-# HOF performance law (measured, 500 ~60-word docs at sf0.001): the most
-# frequent gram via NESTED lambdas — transform(array_distinct(g), d ->
-# size(filter(g, x -> x = d))) — runs 109 s, because the inner lambda
-# re-evaluates the whole ngram-construction subtree per outer element
-# (HOFs are interpreted, no subexpression elimination across lambda
-# scopes). Materializing the gram array as a projected attribute first
-# cuts it to 2.6 s; the shipped form — array_sort + ONE aggregate pass
-# tracking the best run (equal grams are adjacent after the sort, so run
-# length = total occurrence count) — runs 0.5 s and is O(G log G) instead
-# of O(G^2). The DuckDB oracle twin deliberately keeps the nested-lambda
-# formulation (fast there) as an independent computation of the same
-# values. For book-length docs the explode + groupBy(doc_id, gram) plan
-# (one shuffle keyed by doc_id) is the fallback.
+# words and the character coverage of the most frequent word n-gram. Per-row
+# work, no shuffle. ``repetition_stats`` counts in one Arrow pass: the same
+# counts as interpreted Catalyst higher-order functions measured ~12.6 s for
+# all three stats at 1M 12-token docs, an order of magnitude slower. The
+# DuckDB oracle twin computes the values independently with list lambdas.
 # ---------------------------------------------------------------------------
 
 def words_array(text: Column) -> Column:
     """Whitespace tokens as an array; NULL text -> NULL.
 
-    Split artifacts are filtered out (review fix): F.trim strips ASCII
-    SPACE only, so the earlier trim-then-split form left phantom ''
-    tokens on text bounded by tabs/newlines ('\\nHello\\n' -> ['',
-    'Hello', ''] — dup_word_frac 0.333 for a clean one-word doc). One
-    filter pass over the split keeps empty/blank/whitespace-bounded text
-    at zero tokens whatever the whitespace flavor."""
+    Split artifacts are filtered out: F.trim strips ASCII SPACE only, so
+    a trim-then-split form leaves phantom '' tokens on text bounded by
+    tabs/newlines ('\\nHello\\n' -> ['', 'Hello', '']). One filter pass
+    over the split keeps empty/blank/whitespace-bounded text at zero
+    tokens whatever the whitespace flavor."""
     return F.filter(F.split(text, TOKEN_SPLIT_RE),
                     lambda x: F.length(x) > 0)
-
-
-def dup_unit_frac(units: Column) -> Column:
-    """Excess-occurrence fraction of an array of units: (n - n_distinct)/n,
-    0.0 for empty. With units = words this is Gopher's duplicate-word
-    signal; pass split(text, '\\n') for the duplicate-line variant."""
-    n = F.size(units)
-    return F.when(n == 0, F.lit(0.0)) \
-            .otherwise(F.round((n - F.size(F.array_distinct(units)))
-                               .cast("double") / n, 6))
 
 
 def word_ngrams(words: Column, n: int) -> Column:
@@ -275,63 +270,23 @@ def word_ngrams(words: Column, n: int) -> Column:
     return out
 
 
-def top_ngram_char_frac(text: Column, n: int = 2) -> Column:
-    """Character coverage of the most frequent word n-gram:
-    max over distinct grams of count(gram) * length(gram), / length(text).
+def repetition_stats(text: Column) -> tuple[Column, Column, Column]:
+    """(dup_word_frac, top2_char_frac, top3_char_frac) of a text column.
 
-    0.0 when the doc has < n words; NULL text -> NULL (guarded explicitly
-    — F.least SKIPS nulls, so the unguarded form scored a NULL doc 1.0,
-    the same footgun quality_score guards above); clamped to 1.0
-    (count*length is an UPPER bound on covered chars when occurrences
-    overlap, e.g. "a a a a"). Integer numerator / integer denominator
-    then round(6) then least — bit-identical in Spark and DuckDB (the
-    oracle-twin discipline every ratio in this module follows).
+    dup_word_frac = (n - n_distinct) / n over the words; topN_char_frac =
+    max over distinct word N-grams of count * length, / length(text),
+    clamped to 1.0 (count * length over-counts overlapping occurrences,
+    e.g. "a a a a"). 0.0 when the text has no words (or fewer than N);
+    NULL text -> NULL for all three.
 
-    Single sorted-run pass per the module-header HOF law: sort the grams,
-    then one aggregate tracking (prev, run count, best count*length) —
-    equal grams are adjacent after the sort, so the run length IS the
-    gram's total occurrence count."""
-    grams = word_ngrams(words_array(text), n)
-
-    def _step(acc: Column, x: Column) -> Column:
-        cnt = F.when(x == acc.prev, acc.cnt + 1).otherwise(F.lit(1))
-        return F.struct(x.alias("prev"), cnt.alias("cnt"),
-                        F.greatest(acc.best, cnt * F.length(x)).alias("best"))
-
-    cover = F.aggregate(
-        F.array_sort(grams),
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("cnt"),
-                 F.lit(0).alias("best")),
-        _step, lambda acc: acc.best)
-    return F.when(text.isNull(), F.lit(None).cast("double")) \
-            .when(F.size(grams) == 0, F.lit(0.0)) \
-            .otherwise(F.least(
-                F.lit(1.0),
-                F.round(cover.cast("double") / F.length(text), 6)))
-
-
-def repetition_counts_pudf():
-    """Arrow-vectorized repetition COUNTERS — the hot path twin of the
-    Catalyst forms above (same pattern as ``dedup.simhash_pudf``: Catalyst
-    expression stays as the DuckDB-oracle-parity form, Arrow batch path
-    carries the volume; bit-parity asserted in tests/test_functions.py).
-
-    Returns INTEGER counters only — (n_words, n_distinct_words, n_g2,
-    cover2, n_g3, cover3) — so the fraction arithmetic (int/int divide,
-    round(6), clamp) stays in Catalyst and is bit-identical however the
-    counters were produced. Tokenization emulates the Catalyst twin
-    exactly: the split pattern is Java's ASCII-only \\s class and empty
-    fields are dropped afterward, mirroring words_array's
-    filter-after-split (no phantom tokens whatever whitespace bounds the
-    text).
-
-    Why it wins: the Catalyst form is interpreted HOFs (no codegen) —
-    measured ~12.6 s for all three stats at 1M 12-token docs; one Python
-    pass with collections.Counter over an Arrow batch does the same work
-    in C-speed dict ops.
+    One Arrow pass counts INTEGERS per row — (n_words, n_distinct_words,
+    n_g2, cover2, n_g3, cover3) — with collections.Counter; the fraction
+    arithmetic (int/int divide, round(6), clamp) stays in Catalyst, so it
+    lands on the same bits as the DuckDB twin. Words are the
+    ``words_array`` tokens: split on Java's ASCII-only ``\\s`` class with
+    empty fields dropped, so NBSP stays inside a token and no phantom
+    token appears whatever whitespace bounds the text.
     """
-    import re
-
     from pyspark.sql import types as TY
 
     ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s+, ASCII-only
@@ -369,17 +324,7 @@ def repetition_counts_pudf():
             rows.append((nw, len(set(w)), len(g2), c2, len(g3), c3))
         return pd.DataFrame(rows, columns=[f.name for f in schema])
 
-    return rc
-
-
-def repetition_stats_fast(text: Column) -> tuple[Column, Column, Column]:
-    """(dup_word_frac, top2_char_frac, top3_char_frac) via the Arrow
-    counter path + Catalyst fraction arithmetic — value-identical to
-    (dup_unit_frac(words_array(t)), top_ngram_char_frac(t, 2),
-    top_ngram_char_frac(t, 3)) but ~an order of magnitude faster at
-    volume. Use this in pipelines; the pure-Catalyst forms remain the
-    oracle-parity twins."""
-    c = repetition_counts_pudf()(text)
+    c = rc(text)
 
     def _frac(num: Column, den: Column) -> Column:
         return F.when(den == 0, F.lit(0.0)) \

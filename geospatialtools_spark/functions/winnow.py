@@ -11,24 +11,17 @@ hashes, and keep the window minimum (rightmost on ties). Its guarantee
 fingerprint — so ``winnow_pairs`` has EXACT recall for long-enough
 clones, at ~2/(w+1) of the k-gram density.
 
-Two implementations with the module's usual twin discipline:
-
-- ``winnow_fingerprints`` — pure Catalyst HOF chain (transform over the
-  gram positions -> md5-derived 60-bit hashes -> per-window slice /
-  array_min / reversed array_position for the rightmost-min -> explode
-  distinct). Every step has an exact DuckDB spelling (``sql_winnow``
-  emits it from the same constants), so the gate value-checks the
-  selected (pos, fp) set bit-for-bit. Interpreted HOFs — the honest
-  oracle-parity form, not the hot path.
-- ``winnow_fast`` — Arrow ``mapInPandas`` twin: one numpy/hashlib pass
-  per batch producing the identical rows (bit-parity asserted in
-  tests). The volume path.
+``winnow_fingerprints`` is one Arrow ``mapInPandas`` pass: per batch,
+hashlib hashes every gram and a python loop picks the window minima.
+``sql_winnow`` spells the same selection in DuckDB from the same
+constants, so the gate value-checks the selected (pos, fp) set
+bit-for-bit.
 
 Hash: ``int(md5(gram)[:15], 16)`` — the repo's standard cross-engine
 60-bit construction (same as sampling.hash_bucket / warc_to_docs
 doc ids). Positions are 1-based gram indices into the NORMALIZED text.
 
-Scale shape: both paths are per-row map work (zero shuffle);
+Scale shape: fingerprinting is per-row map work (zero shuffle);
 ``winnow_pairs`` shuffles once on the fingerprint value with the same
 ``max_df`` boilerplate cap + disclosed-contract guard as
 ``dedup.ngram_jaccard_pairs`` — a fingerprint shared by the whole
@@ -39,90 +32,29 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import normalize_text
+from .textstats import normalize_str
 
 DEFAULT_K = 8      # k-gram length (chars of normalized text)
 DEFAULT_W = 4      # window: guarantee threshold t = k + w - 1 = 11
-
-
-def _gram_hash(s: Column, i: Column, k: int) -> Column:
-    """60-bit cross-engine hash of the k-gram at 1-based position i."""
-    return F.conv(F.substring(F.md5(F.substring(s, i, k)), 1, 15),
-                  16, 10).cast("long")
-
-
-def _select_structs(hashes: Column, w: int) -> Column:
-    """array<struct<pos,fp>> of selected fingerprints over a BOUND hash
-    array column (may contain duplicates across windows — callers
-    dedup). Fewer than w hashes -> one short window over all of them
-    (short docs still fingerprint; the guarantee only speaks for length
-    >= k + w - 1 anyway).
-
-    ``hashes`` MUST be a plain column reference, not the hashing
-    expression itself: interpreted HOF lambdas re-evaluate captured
-    subtrees per element, so an inlined O(ng)-md5 subtree inside an
-    O(ng) transform is the quadratic element_at trap from the textstats
-    module header (measured: the inlined form timed out at 550 s on 500
-    x 300-char docs where the bound form runs in ~2 s). Slices of a
-    bound array are O(w) copies — cheap."""
-    nw = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
-
-    def pick(st: Column) -> Column:
-        vals = F.slice(hashes, st, w)
-        m = F.array_min(vals)
-        # rightmost occurrence of the min: first position in the
-        # reversed window (ties broken toward later grams, paper §4 —
-        # makes adjacent windows reuse selections)
-        rpos = F.array_position(F.reverse(vals), m)
-        return F.struct((st + F.size(vals) - rpos).cast("long")
-                        .alias("pos"), m.alias("fp"))
-
-    return F.transform(F.sequence(F.lit(1), nw), pick)
 
 
 def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = DEFAULT_K,
                         w: int = DEFAULT_W) -> DataFrame:
     """(id, pos, fp) — the distinct selected fingerprints per document.
-    NULL/short texts contribute no rows. Zero shuffle up to the final
-    per-row distinct (local array_distinct, not an exchange).
-
-    Three chained Projects on purpose: normalize, hash, select. The
-    hash array is referenced many times by the selection lambdas, and
-    Spark's CollapseProject keeps a multiply-referenced non-cheap alias
-    in its own Project — so the ng md5s evaluate ONCE per row instead
-    of once per window (see _select_structs)."""
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    s = df.select(F.col(id_col), normalize_text(F.col(text_col))
-                  .alias("_s"))
-    s = s.filter(F.length("_s") >= k)
-    h = s.select(
-        id_col,
-        F.transform(F.sequence(F.lit(1), F.length("_s") - (k - 1)),
-                    lambda i: _gram_hash(F.col("_s"), i, k)).alias("_h"))
-    sel = F.array_distinct(_select_structs(F.col("_h"), w))
-    return (h.select(F.col(id_col), F.explode(sel).alias("s"))
-            .select(id_col, F.col("s.pos").alias("pos"),
-                    F.col("s.fp").alias("fp")))
-
-
-def winnow_fast(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text", k: int = DEFAULT_K,
-                w: int = DEFAULT_W) -> DataFrame:
-    """Arrow twin of ``winnow_fingerprints`` — identical rows, one
-    hashlib/python pass per batch instead of interpreted HOFs."""
+    NULL texts and texts shorter than k after normalization contribute no
+    rows; texts with fewer than w grams get one short window over all of
+    them. One Arrow ``mapInPandas`` pass (hashlib per gram), zero
+    shuffle."""
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
     import hashlib
-    import re
 
     import pandas as pd
 
-    tok = re.compile("[a-z0-9]+")
     id_dtype = dict(df.dtypes)[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -131,7 +63,7 @@ def winnow_fast(df: DataFrame, id_col: str = "doc_id",
             for rid, t in zip(b[id_col], b[text_col]):
                 if t is None or (isinstance(t, float) and pd.isna(t)):
                     continue
-                s = " ".join(tok.findall(str(t).lower()))
+                s = normalize_str(str(t))
                 ng = len(s) - (k - 1)
                 if ng < 1:
                     continue
@@ -143,7 +75,8 @@ def winnow_fast(df: DataFrame, id_col: str = "doc_id",
                 for st in range(nw):
                     vals = hs[st:st + w]
                     m = min(vals)
-                    # rightmost min
+                    # rightmost min: ties go to the later gram (paper
+                    # §4), so adjacent windows reuse selections
                     ri = len(vals) - 1 - vals[::-1].index(m)
                     key = (st + ri + 1, m)
                     if key not in seen:
@@ -161,8 +94,7 @@ def winnow_fast(df: DataFrame, id_col: str = "doc_id",
 
 def winnow_pairs(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", k: int = DEFAULT_K,
-                 w: int = DEFAULT_W, max_df: int = 1000,
-                 use_arrow: bool = True) -> DataFrame:
+                 w: int = DEFAULT_W, max_df: int = 1000) -> DataFrame:
     """Unordered doc pairs sharing at least one selected fingerprint —
     exact recall for clones of length >= k + w - 1 (winnowing theorem),
     false positives only via 60-bit hash collisions.
@@ -172,8 +104,7 @@ def winnow_pairs(df: DataFrame, id_col: str = "doc_id",
     corpus-wide boilerplate k-gram must not build a quadratic join;
     pairs joined ONLY by dropped fingerprints are lost — disclosed, and
     the cap is a dial). One shuffle on fp; pair emission is per-bucket."""
-    fps = (winnow_fast(df, id_col, text_col, k, w) if use_arrow
-           else winnow_fingerprints(df, id_col, text_col, k, w))
+    fps = winnow_fingerprints(df, id_col, text_col, k, w)
     # materialized once: posts feeds the df-cap aggregate AND both sides
     # of the self-join — without the checkpoint each subtree re-runs the
     # full fingerprint pass over the corpus (the dedup._minhash_banded
@@ -198,7 +129,7 @@ def sql_winnow(id_expr: str, text_expr: str, k: int = DEFAULT_K,
                w: int = DEFAULT_W, table: str = "documents") -> str:
     """SELECT id, pos, fp — the identical selection rule as DuckDB SQL
     (normalize via the replace-chain twin, the same 60-bit md5 hash,
-    list ops mirroring the Catalyst HOFs)."""
+    list slices for the windows)."""
     norm = (f"trim(regexp_replace(regexp_replace(lower({text_expr}), "
             f"'[^a-z0-9]+', ' ', 'g'), ' +', ' ', 'g'))")
     h = (f"CAST(('0x' || substr(md5(substr(s, CAST(i AS INT), {k})), "

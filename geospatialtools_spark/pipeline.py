@@ -164,8 +164,7 @@ class CurationConfig:
     # These are corpus-tuning knobs, not scale guards, so unlike
     # star_threshold they default OFF; the paper's reference values are
     # ~0.2 for top-2-gram char coverage and ~0.3 for duplicate-unit
-    # fraction. Applied inside the quality stage via the Arrow counter
-    # path (textstats.repetition_stats_fast).
+    # fraction. Applied inside the quality stage (textstats.repetition_stats).
     max_dup_word_frac: float | None = None
     max_top2_char_frac: float | None = None
     # C4-style line-level pre-cleaning (round 5; Raffel et al. 2020 §2.2 /
@@ -414,8 +413,8 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
                 .filter(F.col("q") >= config.quality_min)
         if (config.max_dup_word_frac is not None
                 or config.max_top2_char_frac is not None):
-            from .functions.textstats import repetition_stats_fast
-            dup, top2, _ = repetition_stats_fast(F.col(txt))
+            from .functions.textstats import repetition_stats
+            dup, top2, _ = repetition_stats(F.col(txt))
             if config.max_dup_word_frac is not None:
                 d = d.filter(dup <= config.max_dup_word_frac)
             if config.max_top2_char_frac is not None:

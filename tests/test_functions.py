@@ -7,6 +7,9 @@ brute-force numpy for similarity.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -303,10 +306,54 @@ def test_simhash_star_threshold_same_groups_linear_pairs(spark):
             and set(fam_g.group_size) == {60}
 
 
+def test_normalize_str_matches_normalize_text(spark):
+    """The one python normaliser (behind the Arrow shingle / MinHash /
+    SimHash / winnow UDFs) equals Catalyst normalize_text on hostile text:
+    BOM, NUL, lone CR, NBSP, an astral character, dotted capital I
+    (U+0130, lowercases to i + combining dot), the Kelvin sign (U+212A,
+    lowercases to ASCII k), empty and blank text; NULL stays NULL in
+    Catalyst, and every UDF handles NULL before normalising."""
+    from geospatialtools_spark.functions import textstats as TX
+    texts = [
+        "\ufeffHello BOM",
+        "nul\x00inside",
+        "lone\rcr\r\nmix",
+        "nb\u00a0sp",
+        "astral \U0001F600x y\U0001D400z",
+        "\u0130stanbul and \u0130x",
+        "\u212Aelvin 5\u212A",
+        "MiXeD-Case, punct!! 42",
+        "",
+        "   ",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {r["i"]: r["n"] for r in
+           df.select("i", TX.normalize_text(F.col("t")).alias("n")).collect()}
+    assert got == {i: None if t is None else TX.normalize_str(t)
+                   for i, t in enumerate(texts)}
+    assert got[6] == "kelvin 5k" and got[8] == "" and got[10] is None
+
+
+def _py_simhash(text, bits=16):
+    """Reference SimHash: normalized tokens (non-distinct; empty text is
+    one empty token), 60-bit md5-prefix hash per token, per-bit majority
+    vote; NULL text -> 0."""
+    if text is None:
+        return 0
+    toks = " ".join(re.findall("[a-z0-9]+", text.lower())).split(" ")
+    hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+    return sum(1 << b for b in range(bits)
+               if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0)
+
+
 def test_simhash_near_dups_close(spark):
     df = spark.createDataFrame(_DOCS)
-    out = df.select("doc_id", DD.simhash(F.col("text")).alias("sh")).toPandas()
+    out = df.select("doc_id",
+                    DD.simhash_pudf(16)(F.col("text")).alias("sh")).toPandas()
     sh = dict(zip(out["doc_id"], out["sh"]))
+    assert sh == {i: _py_simhash(t) for i, t in zip(_DOCS["doc_id"],
+                                                     _DOCS["text"])}
     assert sh[0] == sh[3]  # identical text -> identical fingerprint
     ham_near = bin(sh[0] ^ sh[1]).count("1")
     ham_far = bin(sh[0] ^ sh[2]).count("1")
@@ -314,18 +361,19 @@ def test_simhash_near_dups_close(spark):
 
 
 def test_simhash_pudf_bit_parity(spark):
-    """The Arrow hot path must emit the exact fingerprints of the Catalyst
-    expression (the cross-engine oracle twin) — incl. empty/punct-only text
-    (normalize -> '' -> the empty token is hashed, not skipped) and repeated
-    tokens (non-distinct votes)."""
+    """The Arrow UDF emits the exact fingerprints of the python reference
+    — incl. empty/punct-only text (normalize -> '' -> the empty token is
+    hashed, not skipped), repeated tokens (non-distinct votes) and NULL
+    (fingerprint 0)."""
     rows = (list(zip(_DOCS["doc_id"].tolist(), _DOCS["text"].tolist()))
             + [(90, ""), (91, "!!! ???"), (92, "dup dup dup dup one"),
                (93, "Tab\tand\nnewline  spaced"), (94, None)])
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = df.select(
-        DD.simhash(F.col("text")).alias("expr"),
-        DD.simhash_pudf(16)(F.col("text")).alias("pudf")).toPandas()
-    assert (out["expr"] == out["pudf"]).all()
+        "doc_id", DD.simhash_pudf(16)(F.col("text")).alias("pudf")).collect()
+    want = {i: _py_simhash(t) for i, t in rows}
+    assert {r["doc_id"]: r["pudf"] for r in out} == want
+    assert want[90] != 0 and want[94] == 0   # '' votes, NULL does not
 
 
 def test_cosine_topk_vs_numpy(spark):
@@ -686,7 +734,7 @@ def test_repetition_stats_vs_brute(spark):
     coverage) match a brute-force Python computation, including the
     edge cases: empty/blank text, single word, all-identical words
     (where overlap makes raw coverage exceed 1.0 — must clamp),
-    whitespace-BOUNDED text (no phantom empty tokens — review fix), and
+    whitespace-BOUNDED text (no phantom empty tokens), and
     NULL text (all three stats NULL — F.least skips nulls, the
     quality_score footgun)."""
     from geospatialtools_spark.functions import textstats as TX
@@ -704,12 +752,12 @@ def test_repetition_stats_vs_brute(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id int, text string")
-    t = F.col("text")
+    dup, top2, top3 = TX.repetition_stats(F.col("text"))
     out = (df.select(
         "doc_id",
-        TX.dup_unit_frac(TX.words_array(t)).alias("dup_word_frac"),
-        TX.top_ngram_char_frac(t, 2).alias("top2"),
-        TX.top_ngram_char_frac(t, 3).alias("top3"),
+        dup.alias("dup_word_frac"),
+        top2.alias("top2"),
+        top3.alias("top3"),
     ).orderBy("doc_id").toPandas())
 
     def brute_top(text, n):
@@ -734,44 +782,50 @@ def test_repetition_stats_vs_brute(spark):
 
 
 def test_repetition_fast_bit_parity(spark):
-    """Arrow counter path (repetition_stats_fast) must be bit-identical to
-    the pure-Catalyst forms on adversarial tokenization inputs: tabs /
-    CR-LF / runs of mixed ASCII whitespace (Java \\s), unicode NBSP (NOT
-    whitespace to Java's ASCII \\s — must stay inside a token), leading
-    and trailing whitespace (F.trim strips ASCII space only), empty and
-    blank strings, and the overlap-clamp case."""
+    """repetition_stats is bit-identical to a python reference that splits
+    on Java's ASCII \\s class, on adversarial tokenization inputs: tabs /
+    CR-LF / runs of mixed ASCII whitespace, unicode NBSP (NOT whitespace to
+    Java's ASCII \\s — must stay inside a token, unlike str.split()),
+    leading and trailing whitespace, empty and blank strings, and the
+    overlap-clamp case."""
     from geospatialtools_spark.functions import textstats as TX
     texts = [
         "a\tb\tc a b",              # tabs
         "x  y \r\n z x y",          # runs + CRLF
-        "nb sp nb sp q",  # NBSP inside tokens (not a separator)
+        "nb\u00a0sp nb\u00a0sp q",    # NBSP inside tokens (not a separator)
         "  lead and trail  ",       # ASCII-space trim
-        "\t tab-lead",              # trim leaves the tab; split eats it
+        "\t tab-lead",              # leading tab: no phantom token
         "a a a a",                  # clamp
         "",
         " ",
         "single",
         "\nHello\n",                # whitespace-bounded: no phantom tokens
-        None,                       # NULL text: NULL on BOTH paths
+        None,                       # NULL text: NULL stats
     ]
+
+    def ref(text):
+        if text is None:
+            return (None, None, None)
+        w = [x for x in re.split(r"[ \t\n\x0b\f\r]+", text) if x]
+
+        def top(n):
+            grams = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
+            if not grams:
+                return 0.0
+            best = max(grams.count(g) * len(g) for g in set(grams))
+            return min(1.0, round(best / len(text), 6))
+        dup = round((len(w) - len(set(w))) / len(w), 6) if w else 0.0
+        return (dup, top(2), top(3))
+
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id int, text string")
-    t = F.col("text")
-    slow = (df.select(
-        "doc_id",
-        TX.dup_unit_frac(TX.words_array(t)).alias("d"),
-        TX.top_ngram_char_frac(t, 2).alias("t2"),
-        TX.top_ngram_char_frac(t, 3).alias("t3"),
-    ).orderBy("doc_id").toPandas())
-    fd, f2, f3 = TX.repetition_stats_fast(t)
-    fast = (df.select("doc_id", fd.alias("d"), f2.alias("t2"), f3.alias("t3"))
-            .orderBy("doc_id").toPandas())
-    for c in ("d", "t2", "t3"):
-        a, b = slow[c], fast[c]
-        assert (a.isna() == b.isna()).all(), (c, a.tolist(), b.tolist())
-        m = ~a.isna()
-        assert a[m].tolist() == b[m].tolist(), (c, a.tolist(), b.tolist())
-        assert a.isna().iloc[-1]            # the NULL row really is NULL
+    fd, f2, f3 = TX.repetition_stats(F.col("text"))
+    got = [(r["d"], r["t2"], r["t3"]) for r in
+           df.select("doc_id", fd.alias("d"), f2.alias("t2"),
+                     f3.alias("t3")).orderBy("doc_id").collect()]
+    assert got == [ref(t) for t in texts]
+    assert got[2][0] == 0.333333            # NBSP kept: 3 words, not 5
+    assert got[-1] == (None, None, None)    # the NULL row really is NULL
 
 
 def test_lsh_arrow_assign_parity(spark):

@@ -138,6 +138,16 @@ def test_html_extract_plan_has_no_exchange(spark):
     assert "Exchange" not in plan
 
 
+@pytest.mark.parametrize("name", ["_hs", "_hk", "n_blocks", "n_kept"])
+def test_html_extract_rejects_name_collision(spark, name):
+    """An input column named like an appended or internal column raises
+    instead of being silently overwritten (the filter_disallowed rule)."""
+    from pyspark.sql import functions as F
+    df = spark.createDataFrame(PAGES[:1], "id long, payload string")
+    with pytest.raises(ValueError, match=name):
+        H.html_extract(df.withColumn(name, F.lit(0)))
+
+
 def test_warc_to_docs_block_extractor(spark):
     """The ingest bridge's extractor seam: blocks mode drops nav/footer
     text that strip mode keeps, on the same records."""

@@ -15,7 +15,7 @@ def py_rules(body):
     """Reference parser: (rule_path, allow) list for User-agent: *."""
     rules = []
     in_star, in_header_run = False, False
-    for raw in re.split("\r\n|\n|\r", body):
+    for raw in re.split("\r\n|\n|\r", body.removeprefix("\ufeff")):
         line = raw.split("#", 1)[0].strip()
         m = re.match("^([^:]+):(.*)$", line)
         d = m.group(1).strip().lower() if m else ""
@@ -55,6 +55,7 @@ ROBOTS = [
     ("d.com", "Disallow: /orphan-before-any-group\nUser-agent: *\n"
               "Disallow:\nAllow: /fine\n"),          # empty Disallow = no rule
     ("e.com", "User-agent: *\r\nDisallow: /a\rAllow: /a/b\r\n"),
+    ("f.com", "\ufeffUser-agent: *\nDisallow: /bom/\n"),  # leading BOM
 ]
 
 URLS = [
@@ -70,6 +71,7 @@ URLS = [
     (9, "e.com", "/a/c"),              # CR/LF mix: disallowed
     (10, "e.com", "/a/b/c"),           # equal-start, longer allow wins
     (11, "nohost.com", "/anything"),   # no robots: allowed
+    (12, "f.com", "/bom/x"),           # BOM-led first group still binds
 ]
 
 
@@ -83,6 +85,7 @@ def test_parse_robots_matches_python_reference(spark):
     assert ("private/ok", True) not in got["a.com"]   # values keep '/'
     assert ("/secret/", False) in got["b.com"]        # comment stripped
     assert got.get("d.com") == [("/fine", True)]      # orphan+empty dropped
+    assert got.get("f.com") == [("/bom/", False)]     # BOM stripped
 
 
 def test_filter_disallowed_verdicts(spark):
@@ -98,7 +101,7 @@ def test_filter_disallowed_verdicts(spark):
     kept = {r["id"] for r in R.filter_disallowed(urls, rb).collect()}
     assert kept == {i for i, h, p in URLS
                     if py_verdict(p, rules_by_host.get(h, []))}
-    assert 0 not in kept and 1 in kept and 11 in kept
+    assert 0 not in kept and 1 in kept and 11 in kept and 12 not in kept
 
 
 def test_filter_disallowed_broadcasts_rules(spark):
@@ -119,6 +122,7 @@ def test_robots_duckdb_twin_parity(spark):
     con.executemany("INSERT INTO robots VALUES (?, ?)", ROBOTS)
     rows = con.sql(R.sql_robots_rules("host", "body", "robots")).fetchall()
     assert {(h, p, bool(a)) for h, p, a in rows} == got
+    assert ("f.com", "/bom/", False) in got
 
 
 def test_robots_twin_handles_duplicate_host_rows(spark):

@@ -1,6 +1,6 @@
-"""Winnowing fingerprints: python-reference parity, the winnowing
-guarantee (shared substring >= k+w-1 => shared fingerprint), Arrow/
-Catalyst bit-parity, DuckDB twin parity, and the pairs cap contract."""
+"""Winnowing fingerprints: python-reference parity (incl. across Arrow
+batch boundaries), the winnowing guarantee (shared substring >= k+w-1 =>
+shared fingerprint), DuckDB twin parity, and the pairs cap contract."""
 
 from __future__ import annotations
 
@@ -59,11 +59,28 @@ def test_winnow_matches_python_reference(spark):
     assert not any(i in (3, 4, 5) for i, _, _ in got)
 
 
-def test_winnow_fast_bit_parity(spark):
-    df = spark.createDataFrame(TEXTS, "doc_id long, text string")
-    a = _collect(WN.winnow_fingerprints(df))
-    b = _collect(WN.winnow_fast(df))
-    assert a == b
+def test_winnow_fingerprints_bit_parity(spark):
+    """The shipped Arrow pass equals the python reference AND the DuckDB
+    twin row-for-row with string ids, three partitions and 7-row Arrow
+    batches, so the tie, short-text and NULL rows land mid-batch."""
+    rows = [(f"d{i}", t) for i, t in TEXTS] + [
+        (f"g{i}", f"Generated doc {i}: {'xy' * (i % 9)} tail {i * 7919}")
+        for i in range(60)]
+    df = spark.createDataFrame(rows, "doc_id string, text string") \
+              .repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = _collect(WN.winnow_fingerprints(df))
+    finally:
+        spark.conf.set(key, old)
+    want = {(i, p, f) for i, t in rows for p, f in py_winnow(t)}
+    assert got == want
+    con = duckdb.connect()
+    con.sql("CREATE TABLE documents(doc_id VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    assert set(con.sql(WN.sql_winnow("doc_id", "text")).fetchall()) == got
 
 
 def test_winnow_duckdb_twin_parity(spark):
@@ -90,13 +107,9 @@ def test_winnow_guarantee_shared_substring(spark):
         rows.append((2 * i + 1, f"other{i}start {core} suffix{2*i+1}"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {(r["id_a"], r["id_b"])
-             for r in WN.winnow_pairs(df, use_arrow=True).collect()}
+             for r in WN.winnow_pairs(df).collect()}
     for i in range(40):
         assert (2 * i, 2 * i + 1) in pairs, i
-    # catalyst path agrees
-    pairs2 = {(r["id_a"], r["id_b"])
-              for r in WN.winnow_pairs(df, use_arrow=False).collect()}
-    assert pairs == pairs2
 
 
 def test_winnow_pairs_max_df_cap(spark):
@@ -124,4 +137,6 @@ def test_winnow_rejects_bad_args(spark):
     with pytest.raises(ValueError):
         WN.winnow_fingerprints(df, k=0)
     with pytest.raises(ValueError):
-        WN.winnow_fast(df, w=0)
+        WN.winnow_fingerprints(df, w=0)
+    with pytest.raises(ValueError):
+        WN.winnow_pairs(df, k=0)
