@@ -1216,8 +1216,9 @@ def q_cosine_topk(spark, sf_dir):
 
 def q_embedding_dups(spark, sf_dir):
     """Embedding near-duplicate pairs (cosine >= 0.99) via the BUCKETED
-    scale path (sign-LSH equi-join + exact verify — no cartesian join; the
-    brute self-join remains the DuckDB oracle).
+    scale path (Arrow GEMM sign-LSH buckets, bucket equi-join + exact
+    verify — no cartesian join; the brute self-join remains the DuckDB
+    oracle).
 
     The driver embeddings have no natural near-dups (max pairwise cosine
     ~0.51), so clones of vec_id < 50 are unioned in at id+10000 — the
@@ -1233,7 +1234,8 @@ def q_embedding_dups(spark, sf_dir):
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup (functions/dedup.py:semantic_dedup — Abbas et al. 2023):
     k-means-cluster embeddings, within-cluster exact-cosine near-dup
-    groups, one keeper per group. The gate runs the n_clusters=1 regime —
+    groups (one numpy GEMM per cluster), one keeper per group. The gate
+    runs the n_clusters=1 regime —
     exact corpus-wide semantics, so the DuckDB twin (brute pair join +
     recursive-CTE closure, the dedup_groups pattern) value-checks the
     pair/CC/keeper chain end-to-end without a cross-engine k-means; the
@@ -1266,7 +1268,9 @@ def q_dsir_weights(spark, sf_dir):
 
 
 def q_ann_lsh_topk(spark, sf_dir):
-    """LSH-bucketed approximate top-k (sign-quantized projections)."""
+    """LSH-bucketed approximate top-k (sign-quantized projections; the
+    buckets are the shipped Arrow GEMM form, the DuckDB twin spells each
+    plane as a ``list_dot_product``)."""
     emb, q = _queries_emb(spark, sf_dir)
     return SIM.bucketed_topk(emb, q, dim=64, k=5, n_planes=8)
 
@@ -1892,6 +1896,9 @@ def _sql_plane_literal(p: int) -> str:
 
 
 def _sql_bucket(vec: str) -> str:
+    # Condition on the embedding fixtures: DuckDB's list_cosine_similarity
+    # returns -1.0 for a zero vector (measured on duckdb 1.0.0) where the
+    # Spark operators give a NULL cosine, so no gate fixture may hold one.
     terms = [
         f"(CASE WHEN list_dot_product({vec}::DOUBLE[], {_sql_plane_literal(p)}) >= 0 "
         f"THEN {2 ** p} ELSE 0 END)"

@@ -856,7 +856,7 @@ def main_semdedup():
 
     t0 = time.time()
     out = semantic_dedup(emb, dim=64, eps=0.99, n_clusters=k,
-                         train_sample=8192, n_corpus=n, arrow_pairs=True) \
+                         train_sample=8192, n_corpus=n) \
         .localCheckpoint(eager=True)
     n_members = out.count()
     wall = round(time.time() - t0, 2)

@@ -136,8 +136,8 @@ def margin_mine(src: DataFrame, tgt: DataFrame, k: int = 4,
 
 def lsh_candidates(src: DataFrame, tgt: DataFrame, dim: int,
                    n_planes: int = 10, probe_radius: int = 1,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   arrow_assign: bool = True) -> DataFrame:
+                   id_col: str = "vec_id",
+                   vec_col: str = "embedding") -> DataFrame:
     """Candidate (src_id, tgt_id, cosine) lists for ``margin_score`` via
     a sign-LSH bucket COGROUP with one GEMM per bucket — the 100 TB
     candidate generator.
@@ -148,14 +148,17 @@ def lsh_candidates(src: DataFrame, tgt: DataFrame, dim: int,
     pairs / dim 64 — the transfer, not the math, was the wall). The
     cogroup ships each bucket's vectors ONCE (src side exploded over its
     Hamming<=r probe buckets, tgt side plain), computes the bucket's
-    full cosine matrix as one float64 GEMM, and emits only the scalar
-    triples — input volume drops from O(pairs * dim) to
+    full cosine matrix with ``similarity.cosine_matrix``, and emits only
+    the scalar triples — input volume drops from O(pairs * dim) to
     O(rows * probes * dim). Multi-probe duplicates (a pair sharing
     several probe buckets) reduce to one row by a max() aggregate over
-    the pair key (scalars only; see the note at the return). Cosines are float64-from-float32 round-6 — the same
-    value contract as ``cosine_expr`` / ``cosine_pairs_pudf``
-    (bit-parity tested), so candidates feed ``margin_score`` with
-    unchanged cross-engine semantics.
+    the pair key (scalars only; see the note at the return). Cosines are
+    float64-from-float32 round-6 — the value contract of ``cosine_expr``
+    (parity tested) — so candidates feed ``margin_score`` with unchanged
+    cross-engine semantics. A NULL or zero-norm vector is never a
+    candidate: a NULL vector has a NULL bucket, which is filtered out
+    before the cogroup (a cogroup groups NULL keys together), and a
+    zero-norm pair's NaN cosine is dropped.
 
     Per-task memory is one bucket's src-probe rows x tgt rows matrix;
     with B buckets that is ~(|src|*probes/B) * (|tgt|/B) doubles — size
@@ -167,28 +170,20 @@ def lsh_candidates(src: DataFrame, tgt: DataFrame, dim: int,
     import numpy as np
     import pandas as pd
 
-    from .similarity import lsh_buckets, lsh_buckets_pudf, probe_buckets
+    from .similarity import cosine_matrix, lsh_buckets, probe_buckets
 
-    if arrow_assign:
-        bk = lsh_buckets_pudf(dim, n_planes)
-        sb = src.select(F.col(id_col).alias("src_id"),
-                        F.col(vec_col).alias("_v"),
-                        bk(F.col(vec_col)).alias("_b0"))
-        tb = tgt.select(F.col(id_col).alias("tgt_id"),
-                        F.col(vec_col).alias("_v"),
-                        bk(F.col(vec_col)).alias("_bucket"))
-    else:
-        sb = src.select(F.col(id_col).alias("src_id"),
-                        F.col(vec_col).alias("_v"),
-                        lsh_buckets(F.col(vec_col), dim, n_planes)
-                        .alias("_b0"))
-        tb = tgt.select(F.col(id_col).alias("tgt_id"),
-                        F.col(vec_col).alias("_v"),
-                        lsh_buckets(F.col(vec_col), dim, n_planes)
-                        .alias("_bucket"))
-    sb = (sb.withColumn("_bucket", F.explode(F.array(
+    sb = (src.select(F.col(id_col).alias("src_id"),
+                     F.col(vec_col).alias("_v"),
+                     lsh_buckets(F.col(vec_col), dim, n_planes).alias("_b0"))
+          .withColumn("_bucket", F.explode(F.array(
               *probe_buckets(F.col("_b0"), n_planes, probe_radius))))
-          .drop("_b0"))
+          .drop("_b0")
+          .filter(F.col("_bucket").isNotNull()))
+    tb = (tgt.select(F.col(id_col).alias("tgt_id"),
+                     F.col(vec_col).alias("_v"),
+                     lsh_buckets(F.col(vec_col), dim, n_planes)
+                     .alias("_bucket"))
+          .filter(F.col("_bucket").isNotNull()))
 
     schema = ("src_id long, tgt_id long, cosine double")
 
@@ -196,21 +191,15 @@ def lsh_candidates(src: DataFrame, tgt: DataFrame, dim: int,
         if not len(left) or not len(right):
             return pd.DataFrame({"src_id": [], "tgt_id": [],
                                  "cosine": []})
-        A = np.stack(left["_v"].to_numpy()).astype(np.float64)
-        B = np.stack(right["_v"].to_numpy()).astype(np.float64)
-        # raw-dot GEMM divided by the norm outer product — the same op
-        # order as cosine_expr / cosine_pairs_pudf (dot / (|a|*|b|)),
-        # not normalize-then-multiply, keeping the three scorers on one
-        # value contract
-        na = np.linalg.norm(A, axis=1)
-        nb = np.linalg.norm(B, axis=1)
-        C = np.round((A @ B.T) / np.outer(na, nb), 6)
+        C = cosine_matrix(np.stack(left["_v"].to_numpy()).astype(np.float64),
+                          np.stack(right["_v"].to_numpy()).astype(np.float64))
         si = left["src_id"].to_numpy(np.int64)
         ti = right["tgt_id"].to_numpy(np.int64)
+        keep = np.isfinite(C.ravel())
         return pd.DataFrame({
-            "src_id": np.repeat(si, len(ti)),
-            "tgt_id": np.tile(ti, len(si)),
-            "cosine": C.ravel(),
+            "src_id": np.repeat(si, len(ti))[keep],
+            "tgt_id": np.tile(ti, len(si))[keep],
+            "cosine": C.ravel()[keep],
         })
 
     # dedup multi-probe repeats by PAIR KEY, not full row: the same pair

@@ -490,8 +490,7 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
                    n_clusters: int = 16, id_col: str = "vec_id",
                    vec_col: str = "embedding", train_sample: int = 4096,
                    n_corpus: int | None = None,
-                   star_threshold: int | None = None,
-                   arrow_pairs: bool = False) -> DataFrame:
+                   star_threshold: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public): semantic deduplication over
     an embedding column — k-means-cluster the corpus, find near-identical
     items WITHIN each cluster (exact cosine >= ``eps``), resolve them into
@@ -512,13 +511,17 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
       hash sample and assigned in one Arrow GEMM pass; the cluster id is
       the bucket key, exactly the IVF layout, so a persisted index
       (``persist_ivf_index``) doubles as the semantic-dedup partitioning.
-    - candidate pairs come from a within-cluster equi-join: only
-      same-cluster rows shuffle, O(sum of cluster_size^2) comparisons —
+    - candidate pairs are scored per cluster: one ``applyInPandas`` group
+      per cluster runs ``similarity.cosine_matrix`` over the cluster's
+      strict upper triangle, row-blocked so memory is O(block x cluster).
+      A cluster must fit one worker — the same constraint the paper's
+      per-cluster matmul has. O(sum of cluster_size^2) comparisons —
       ``n_clusters`` is the dial (the paper scales k with the corpus so
-      clusters stay join-sized). Pairs are exact-verified, never assumed.
+      clusters stay worker-sized). Pairs are exact-verified, never
+      assumed; a zero-norm vector never pairs (its cosine is NaN).
     - pairs -> ``operators.graph.connected_components`` (min-label +
       pointer doubling over the PAIR nodes only) -> keeper election. The
-      corpus never re-enters the plan after the pair join.
+      corpus never re-enters the plan after pair scoring.
     - ``star_threshold``: the same oversized-bucket guard as
       ``embedding_dup_pairs_bucketed``, with the same WEAKER recall
       contract (members pair only against the cluster's min-id hub,
@@ -531,21 +534,12 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
     boundaries); ``n_clusters=1`` recovers exact corpus-wide semantics
     (and is how the gate value-checks this operator end-to-end without a
     cross-engine k-means).
-
-    ``arrow_pairs``: score each cluster's pairs in ONE numpy GEMM per
-    group (applyInPandas; row-blocked so memory is O(block x cluster),
-    and a cluster must fit one worker — the same constraint the paper's
-    per-cluster matmul has). Measured 124x on the pair stage at 50k
-    vectors (78.6 -> 0.63 s of per-pair work); the interpreted-HOF
-    cosine join is the textstats-module law, not a plan problem. The
-    expression form stays the default = the gate-oracle parity path
-    (both compute float64 cosine rounded to 6; they can disagree only
-    for a pair sitting exactly on the 1e-6 rounding boundary of ``eps``
-    — the same disclosed cross-engine float edge every cosine oracle in
-    this repo carries; bit-parity on random data asserted in pytest).
     """
+    import numpy as np
+    import pandas as pd
+
     from ..operators.graph import connected_components
-    from .similarity import build_ivf_index, cosine_expr
+    from .similarity import build_ivf_index, cosine_matrix
     if not 0.0 < eps <= 1.0:
         raise ValueError("eps must be in (0, 1]")
     index = build_ivf_index(emb, dim, n_centroids=n_clusters,
@@ -559,43 +553,28 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
         _warn_weak_guard("semantic_dedup")
         star, a = _cosine_hub_star(a, "_c", eps, star_threshold)
         star = star.select("id_a", "id_b")
-    if arrow_pairs:
-        import numpy as np
-        import pandas as pd
 
-        def _kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            order = np.argsort(pdf["_id"].to_numpy())
-            ids = pdf["_id"].to_numpy()[order]
-            V = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in pdf["_v"].iloc[order]])
-            nrm = np.linalg.norm(V, axis=1)
-            nrm[nrm == 0] = 1.0
-            V = V / nrm[:, None]
-            outs_a, outs_b = [], []
-            blk = 1024  # row-blocked GEMM: memory O(blk x cluster)
-            for lo in range(0, len(ids), blk):
-                hi = min(lo + blk, len(ids))
-                # columns < lo are below the strict upper triangle for
-                # every row of this block — don't compute them (halves
-                # the total multiply-adds vs V[lo:hi] @ V.T)
-                S = V[lo:hi] @ V[lo:].T
-                bi, bj = np.nonzero(np.round(S, 6) >= eps)
-                m = bi < bj                 # strict upper triangle only
-                outs_a.append(ids[bi[m] + lo])
-                outs_b.append(ids[bj[m] + lo])
-            return pd.DataFrame({
-                "id_a": np.concatenate(outs_a) if outs_a else [],
-                "id_b": np.concatenate(outs_b) if outs_b else []})
+    def _kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.argsort(pdf["_id"].to_numpy())
+        ids = pdf["_id"].to_numpy()[order]
+        V = np.asarray([np.asarray(v, dtype=np.float64)
+                        for v in pdf["_v"].iloc[order]])
+        outs_a, outs_b = [], []
+        blk = 1024  # row-blocked GEMM: memory O(blk x cluster)
+        for lo in range(0, len(ids), blk):
+            hi = min(lo + blk, len(ids))
+            # columns < lo are below the strict upper triangle for
+            # every row of this block — don't compute them (halves
+            # the total multiply-adds vs V[lo:hi] @ V.T)
+            bi, bj = np.nonzero(cosine_matrix(V[lo:hi], V[lo:]) >= eps)
+            m = bi < bj                 # strict upper triangle only
+            outs_a.append(ids[bi[m] + lo])
+            outs_b.append(ids[bj[m] + lo])
+        return pd.DataFrame({
+            "id_a": np.concatenate(outs_a) if outs_a else [],
+            "id_b": np.concatenate(outs_b) if outs_b else []})
 
-        pairs = a.groupBy("_c").applyInPandas(
-            _kern, schema="id_a long, id_b long")
-    else:
-        pairs = (a.alias("l").join(a.alias("r"), "_c")
-                 .filter(F.col("l._id") < F.col("r._id"))
-                 .filter(F.round(cosine_expr(F.col("l._v"), F.col("r._v")),
-                                 6) >= eps)
-                 .select(F.col("l._id").alias("id_a"),
-                         F.col("r._id").alias("id_b")))
+    pairs = a.groupBy("_c").applyInPandas(_kern, schema="id_a long, id_b long")
     if star is not None:
         pairs = pairs.unionByName(star)
     comp = connected_components(pairs)
@@ -880,8 +859,7 @@ def embedding_dup_pairs_bucketed(emb: DataFrame, dim: int,
                                  threshold: float = 0.95,
                                  n_planes: int = 8,
                                  probe_radius: int = 1,
-                                 star_threshold: int | None = None,
-                                 arrow_assign: bool = False) -> DataFrame:
+                                 star_threshold: int | None = None) -> DataFrame:
     """Embedding near-dup pairs at scale: sign-LSH bucket prefilter + exact
     cosine verification of candidates. NO cartesian join — the self-join is
     an equi-join on the bucket id, so only same-bucket pairs shuffle
@@ -911,17 +889,12 @@ def embedding_dup_pairs_bucketed(emb: DataFrame, dim: int,
     equivalence is exact.) Default None = exact clique semantics (the gate
     oracle's).
 
-    ``arrow_assign`` (round 5): bucket the corpus via the
-    ``similarity.lsh_buckets_pudf`` GEMM twin — 2.2x on the assign pass;
-    candidates stay exact-verified, so a (measured-zero-rate) near-zero
-    sign flip can only move recall by epsilon, never emit a wrong pair.
-    Default off: the gate oracle replays the expression form.
+    A NULL vector has a NULL bucket and a zero-norm vector a NULL cosine;
+    neither ever forms a pair.
     """
-    from .similarity import cosine_expr, lsh_buckets, lsh_buckets_pudf
-    bucket = (lsh_buckets_pudf(dim, n_planes)(F.col(vec_col)) if arrow_assign
-              else lsh_buckets(F.col(vec_col), dim, n_planes))
+    from .similarity import cosine_expr, lsh_buckets
     v = _widen(emb).select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-                           bucket.alias("_b"))
+                           lsh_buckets(F.col(vec_col), dim, n_planes).alias("_b"))
     v = v.localCheckpoint(eager=True)  # both join sides reuse the buckets
     star = None
     if star_threshold is not None:

@@ -10,9 +10,19 @@ Two tiers, per the training-data-pipeline mandate:
 - ``lsh_buckets`` + ``bucketed_topk``: the 100 TB path. Vectors are bucketed
   by the sign pattern of k fixed pseudo-random hyperplanes (deterministic
   integer-seeded projections — no RNG at runtime, identical across engines
-  and executors). A query probes only its own bucket (+ optional neighboring
-  buckets by Hamming distance), turning a full scan into a bucket equi-join.
-  Recall is tunable via n_planes / multi-probe radius.
+  and executors), computed as one float64 GEMM per Arrow batch. A query
+  probes only its own bucket (+ optional neighboring buckets by Hamming
+  distance), turning a full scan into a bucket equi-join. Recall is
+  tunable via n_planes / multi-probe radius.
+
+Batch scorers that hold a whole bucket or cluster in memory
+(``bitext.lsh_candidates``, ``dedup.semantic_dedup``) score it with the one
+numpy kernel ``cosine_matrix``, which keeps the op order of ``cosine_expr``.
+
+NULL contract shared by every cosine operator: a cosine with a zero-norm
+side is NULL (NaN inside ``cosine_matrix``), so such a vector never forms a
+pair or candidate and ranks after every real match in a top-k; a NULL
+vector gets a NULL bucket and so never joins a bucket.
 """
 
 from __future__ import annotations
@@ -40,7 +50,20 @@ def norm_expr(a: Column) -> Column:
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    """dot / (|a| * |b|); NULL when either side has zero norm (try_divide —
+    a plain divide raises DIVIDE_BY_ZERO under ANSI mode)."""
+    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
+
+
+def cosine_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Round-6 cosine of every (row of A, row of B) pair as one float64
+    GEMM: raw dot divided by the outer product of the norms — the op order
+    of ``cosine_expr``, so batch scorers share its value contract. A pair
+    with a zero-norm side is NaN (``cosine_expr``'s NULL); callers drop it
+    (NaN fails every ``>=`` test)."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round((A @ B.T) / np.outer(np.linalg.norm(A, axis=1),
+                                             np.linalg.norm(B, axis=1)), 6)
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -94,48 +117,34 @@ def _plane(dim: int, p: int) -> list[float]:
 
 
 def lsh_buckets(vecs: Column, dim: int, n_planes: int = 8) -> Column:
-    """Sign-LSH bucket id in [0, 2^n_planes): bit p = [v . plane_p >= 0].
+    """Sign-LSH bucket id in [0, 2^n_planes): bit p = [v . plane_p >= 0];
+    a NULL vector gets a NULL bucket.
 
-    Pure column arithmetic: the planes are literals folded by Catalyst; at
-    scale this is the partition key for the ANN index (bucket join replaces
-    full scan; expected bucket population = N / 2^n_planes).
-    """
-    out = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = _plane(dim, p)
-        proj = F.aggregate(
-            F.zip_with(vecs, F.array(*[F.lit(w) for w in plane]),
-                       lambda x, w: x.cast("double") * w),
-            F.lit(0.0), lambda acc, v: acc + v)
-        out = out + F.when(proj >= 0, F.lit(2 ** p)).otherwise(F.lit(0))
-    return out
-
-
-def lsh_buckets_pudf(dim: int, n_planes: int = 8):
-    """Arrow GEMM twin of ``lsh_buckets`` — one matrix multiply per batch
-    instead of n_planes interpreted aggregate+zip_with passes per row
-    (the textstats HOF law applied here: measured 13.7 s -> 6.1 s warm for
-    the bucket-assign pass over 1M dim-64 vectors at local[32], identical
-    buckets on all 1M).
-
-    Caveat vs the expression twin: numpy's blocked summation can order
-    float additions differently from Catalyst's sequential fold, so a
-    projection within ~1e-13 of zero could sign-flip one bit (measured:
-    ZERO disagreements in 1M vectors). Downstream contracts are
-    approximate-recall bucketing — and both dedup consumers exact-verify
-    candidates — so a flip can shift recall by epsilon, never emit a
-    wrong pair. The gate oracles keep the expression form.
+    One float64 GEMM of each Arrow batch against the dim x n_planes plane
+    matrix. At scale this is the partition key for the ANN index (bucket
+    join replaces full scan; expected bucket population = N / 2^n_planes).
+    numpy's blocked summation can order the float additions differently
+    from a sequential fold such as the DuckDB twin's ``list_dot_product``,
+    so a projection within ~1e-13 of zero could flip one bit (measured
+    against a sequential fold: zero flips in 1M vectors); every consumer
+    either ranks or exact-verifies its candidates, so a flip can move
+    recall by epsilon, never emit a wrong pair.
     """
     planes = np.array([_plane(dim, p) for p in range(n_planes)]).T  # dim x P
     shifts = np.arange(n_planes, dtype=np.int64)
 
     @F.pandas_udf("long")
     def bk(v: pd.Series) -> pd.Series:
-        m = np.asarray(v.tolist(), dtype=np.float64)
-        bits = (m @ planes >= 0).astype(np.int64)
-        return pd.Series((bits << shifts).sum(axis=1))
+        ok = v.notna().to_numpy()
+        m = np.asarray(v[ok].tolist(), dtype=np.float64).reshape(-1, dim)
+        out = pd.Series(pd.NA, index=v.index, dtype="Int64")
+        out[ok] = ((m @ planes >= 0).astype(np.int64) << shifts).sum(axis=1)
+        return out
 
-    return bk
+    # marked nondeterministic only to pin it in its Project: a join on the
+    # bucket infers an isnotnull filter, and pushing that below the Project
+    # would run the whole GEMM pass a second time for the filter
+    return bk.asNondeterministic()(vecs)
 
 
 def probe_buckets(bucket: Column, n_planes: int, radius: int) -> list[Column]:
@@ -155,8 +164,7 @@ def probe_buckets(bucket: Column, n_planes: int, radius: int) -> list[Column]:
 def bucketed_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
                   n_planes: int = 8, probe_radius: int = 0,
                   id_col: str = "vec_id", vec_col: str = "embedding",
-                  q_id_col: str = "query_id", q_vec_col: str = "q_vec",
-                  arrow_assign: bool = False) -> DataFrame:
+                  q_id_col: str = "query_id", q_vec_col: str = "q_vec") -> DataFrame:
     """Approximate top-k: score only corpus vectors in the query's LSH bucket.
 
     The join is a bucket equi-join (shuffle on bucket id, or broadcast of the
@@ -169,22 +177,13 @@ def bucketed_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     the probe count, and recall@k rises with r exactly as the
     Goemans-Williamson per-plane flip probability predicts (measured at 1M
     vectors in BASELINE.md). Default 0 keeps the single-bucket gate-oracle
-    semantics.
-
-    ``arrow_assign`` (round 5): compute BOTH sides' buckets with the
-    ``lsh_buckets_pudf`` GEMM twin — 2.2x on the corpus-wide assign pass,
-    see its docstring for the (measured-zero) sign-flip caveat. Default
-    off: the gate oracle replays the expression form.
+    semantics. A NULL vector on either side has a NULL bucket and joins
+    nothing.
     """
-    if arrow_assign:
-        bk = lsh_buckets_pudf(dim, n_planes)
-        c = _widen(corpus).withColumn("_bucket", bk(F.col(vec_col)))
-        q = queries.withColumn("_bucket", bk(F.col(q_vec_col)))
-    else:
-        c = _widen(corpus).withColumn("_bucket",
-                                      lsh_buckets(F.col(vec_col), dim, n_planes))
-        q = queries.withColumn("_bucket",
-                               lsh_buckets(F.col(q_vec_col), dim, n_planes))
+    c = _widen(corpus).withColumn("_bucket",
+                                  lsh_buckets(F.col(vec_col), dim, n_planes))
+    q = queries.withColumn("_bucket",
+                           lsh_buckets(F.col(q_vec_col), dim, n_planes))
     if probe_radius >= 1:
         probes = probe_buckets(F.col("_b0"), n_planes, probe_radius)
         q = (q.withColumnRenamed("_bucket", "_b0")
@@ -373,33 +372,3 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     return ivf_probe(index, queries, k=k, nprobe=nprobe,
                      q_id_col=q_id_col, q_vec_col=q_vec_col,
                      static_prune=False)
-
-
-def cosine_pairs_pudf():
-    """Arrow GEMM twin of ``cosine_expr`` for PAIR tables (two vector
-    columns side by side — candidate lists from a bucket join): one
-    einsum + two norms per batch instead of three interpreted
-    aggregate/zip_with passes per row. Output is round-6, matching the
-    expression form's contract. Same caveat as ``lsh_buckets_pudf``:
-    numpy's blocked summation can order float additions differently from
-    Catalyst's sequential fold, so a value within ~1e-13 of a .5e-6
-    rounding boundary could round differently (bit-parity pytest on a
-    deterministic 50k-pair fixture measures ZERO disagreements). Gate
-    oracles keep replaying the expression form. Library scorer for pair
-    tables that arrive WITHOUT bucket structure (externally-generated
-    candidate lists); ``bitext.lsh_candidates`` inlines the per-bucket
-    GEMM form instead, which additionally avoids shipping vectors
-    per-pair."""
-    import pandas as pd
-
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series(np.zeros(0))
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(np.round(num / den, 6))
-
-    return _cos

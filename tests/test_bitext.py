@@ -140,24 +140,28 @@ def test_margin_score_bounded_per_key_windows(spark):
              .count() == 0
 
 
-def test_cosine_pairs_pudf_bit_parity_with_expression(spark):
-    # the Arrow GEMM pair scorer must reproduce the Catalyst expression
-    # round-6 value on every pair of a deterministic 50k fixture (the
-    # lsh_buckets_pudf twin discipline)
+def test_cosine_matrix_bit_parity_with_expression(spark):
+    # the numpy batch kernel must reproduce the Catalyst expression's
+    # round-6 value on every pair of a deterministic 50k fixture
     from geospatialtools_spark.functions.similarity import (
-        cosine_expr, cosine_pairs_pudf)
+        cosine_expr, cosine_matrix)
     n = 50_000
     mk = lambda salt: F.transform(
         F.sequence(F.lit(0), F.lit(31)),
         lambda j: (F.pmod(F.xxhash64(F.col("id") + F.lit(salt), j),
                           F.lit(1000003)).cast("double") / 500001.5 - 1.0)
         .cast("float"))
-    pairs = spark.range(n).select(mk(0).alias("a"), mk(7).alias("b"))
-    cos = cosine_pairs_pudf()
-    d = pairs.select(
-        F.round(cosine_expr(F.col("a"), F.col("b")), 6).alias("e"),
-        cos(F.col("a"), F.col("b")).alias("p"))
-    assert d.filter(F.col("e") != F.col("p")).count() == 0
+    d = (spark.range(n).select(mk(0).alias("a"), mk(7).alias("b"))
+         .select("a", "b",
+                 F.round(cosine_expr(F.col("a"), F.col("b")), 6).alias("e"))
+         .toPandas())
+    A = np.stack(d["a"].to_numpy()).astype(np.float64)
+    B = np.stack(d["b"].to_numpy()).astype(np.float64)
+    blk = 1000      # pairs sit on the diagonal of each block's matrix
+    got = np.concatenate([
+        np.diagonal(cosine_matrix(A[lo:lo + blk], B[lo:lo + blk]))
+        for lo in range(0, n, blk)])
+    assert (got == d["e"].to_numpy()).all()
 
 
 def test_lsh_candidates_match_equijoin_scoring(spark):
@@ -178,8 +182,8 @@ def test_lsh_candidates_match_equijoin_scoring(spark):
     tgt = spark.range(400).select(F.col("id").alias("vec_id"),
                                   mk(9).alias("embedding"))
     got = sorted(map(tuple, lsh_candidates(
-        src, tgt, dim=dim, n_planes=n_planes, probe_radius=radius,
-        arrow_assign=False).collect()))
+        src, tgt, dim=dim, n_planes=n_planes, probe_radius=radius
+        ).collect()))
     sb = (src.select(F.col("vec_id").alias("src_id"),
                      F.col("embedding").alias("_sv"))
           .withColumn("_b0", lsh_buckets(F.col("_sv"), dim, n_planes)))

@@ -588,10 +588,7 @@ def _semantic_groups(out_pdf):
     return {k: sorted(v) for k, v in g.items()}
 
 
-def test_semantic_dedup_single_cluster_matches_reference(spark):
-    """n_clusters=1 is the exact corpus-wide regime (also the gate
-    oracle's): groups and keepers must equal the brute union-find
-    reference, including transitive chains."""
+def _semantic_planted70():
     rng = np.random.RandomState(5)
     vecs = rng.normal(size=(70, 12)).astype(np.float64)
     vecs[60:65] = vecs[0] * 1.3                    # exact-direction family
@@ -601,8 +598,27 @@ def test_semantic_dedup_single_cluster_matches_reference(spark):
     vecs[66] = base
     vecs[67] = base + 3e-3 * rng.normal(size=12)
     vecs[68] = vecs[67] + 3e-3 * rng.normal(size=12)
+    return vecs
+
+
+def _semantic_random90():
+    rng = np.random.RandomState(21)
+    vecs = rng.normal(size=(90, 12)).astype(np.float64)
+    vecs[80:85] = vecs[3] * 0.7
+    vecs[85] = vecs[4] + 1e-4 * rng.normal(size=12)
+    return vecs
+
+
+@pytest.mark.parametrize("make", [_semantic_planted70, _semantic_random90],
+                         ids=["planted70", "random90"])
+def test_semantic_dedup_single_cluster_matches_reference(spark, make):
+    """n_clusters=1 is the exact corpus-wide regime (also the gate
+    oracle's): groups and keepers must equal the brute union-find
+    reference, including transitive chains."""
+    vecs = make()
     emb = spark.createDataFrame(pd.DataFrame({
-        "vec_id": np.arange(70), "embedding": [v.tolist() for v in vecs]}))
+        "vec_id": np.arange(len(vecs)),
+        "embedding": [v.tolist() for v in vecs]}))
     out = DD.semantic_dedup(emb, dim=12, eps=0.999, n_clusters=1).toPandas()
     ref = _semantic_ref(vecs, 0.999)
     assert _semantic_groups(out) == ref
@@ -648,24 +664,6 @@ def test_semantic_dedup_star_guard_same_groups(spark):
                                 star_threshold=10)
     assert _semantic_groups(exact.toPandas()) == \
         _semantic_groups(guarded.toPandas())
-
-
-def test_semantic_dedup_arrow_pairs_bit_parity(spark):
-    """GEMM pair kernel == expression cosine join (groups identical on
-    random + planted data away from the 1e-6 rounding boundary), across
-    both the single-cluster and clustered regimes."""
-    rng = np.random.RandomState(21)
-    vecs = rng.normal(size=(90, 12)).astype(np.float64)
-    vecs[80:85] = vecs[3] * 0.7
-    vecs[85] = vecs[4] + 1e-4 * rng.normal(size=12)
-    emb = spark.createDataFrame(pd.DataFrame({
-        "vec_id": np.arange(90), "embedding": [v.tolist() for v in vecs]}))
-    for k in (1, 3):
-        expr = DD.semantic_dedup(emb, dim=12, eps=0.999, n_clusters=k)
-        fast = DD.semantic_dedup(emb, dim=12, eps=0.999, n_clusters=k,
-                                 arrow_pairs=True)
-        assert _semantic_groups(expr.toPandas()) == \
-            _semantic_groups(fast.toPandas())
 
 
 def test_semantic_dedup_rejects_bad_eps(spark):
@@ -828,32 +826,84 @@ def test_repetition_fast_bit_parity(spark):
     assert got[-1] == (None, None, None)    # the NULL row really is NULL
 
 
-def test_lsh_arrow_assign_parity(spark):
-    """The GEMM bucket twin (lsh_buckets_pudf) assigns the identical bucket
-    to every vector as the Catalyst expression, and the arrow_assign paths
-    of bucketed_topk / embedding_dup_pairs_bucketed return row-identical
-    results to the expression paths."""
+def test_lsh_buckets_match_python_reference(spark):
+    """The shipped GEMM ``lsh_buckets`` assigns every vector the bucket of
+    a sequential pure-Python sign-LSH over the same planes, and the
+    bucketed dedup path still finds the planted exact-dup pair."""
     rng = np.random.RandomState(31)
     vecs = rng.normal(size=(300, 16)).astype(np.float32)
     vecs[50] = vecs[40]                      # one exact-dup pair
     df = spark.createDataFrame(pd.DataFrame({
         "vec_id": np.arange(300), "embedding": [v.tolist() for v in vecs]}))
-    exprb = df.select(SIM.lsh_buckets(F.col("embedding"), 16, 8).alias("b")).toPandas()
-    gemm = df.select(SIM.lsh_buckets_pudf(16, 8)(F.col("embedding")).alias("b")).toPandas()
-    assert (exprb["b"] == gemm["b"]).all()
-
-    queries = spark.createDataFrame(pd.DataFrame({
-        "query_id": [3, 9], "q_vec": [vecs[3].tolist(), vecs[9].tolist()]}))
-    key = lambda p: sorted(map(tuple, p.to_numpy().tolist()))
-    a = SIM.bucketed_topk(df, queries, dim=16, k=3, probe_radius=1).toPandas()
-    b = SIM.bucketed_topk(df, queries, dim=16, k=3, probe_radius=1,
-                          arrow_assign=True).toPandas()
-    assert key(a) == key(b)
-    c = DD.embedding_dup_pairs_bucketed(df, dim=16, threshold=0.95).toPandas()
-    d = DD.embedding_dup_pairs_bucketed(df, dim=16, threshold=0.95,
-                                        arrow_assign=True).toPandas()
-    assert key(c) == key(d)
+    planes = [SIM._plane(16, p) for p in range(8)]
+    ref = [sum(1 << p for p, w in enumerate(planes)
+               if sum(float(x) * c for x, c in zip(v, w)) >= 0)
+           for v in vecs]
+    got = [r["b"] for r in df.select(
+        "vec_id", SIM.lsh_buckets(F.col("embedding"), 16, 8).alias("b"))
+        .orderBy("vec_id").collect()]
+    assert got == ref
+    d = DD.embedding_dup_pairs_bucketed(df, dim=16, threshold=0.95).toPandas()
     assert (40.0, 50.0, 1.0) in set(map(tuple, d.to_numpy().tolist()))
+
+
+def _bad_vec_corpus(spark, case):
+    """40 random dim-8 vectors with the exact-dup pair (10, 11), plus row
+    99 holding a zero vector or a NULL one."""
+    rng = np.random.RandomState(41)
+    vecs = rng.normal(size=(40, 8)).astype(np.float32)
+    vecs[11] = vecs[10]
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    rows.append((99, None if case == "null" else [0.0] * 8))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _check_topk(out, bad_emitted):
+    bad = (out.query_id == 99) | (out.vec_id == 99)
+    assert bad_emitted or not bad.any()
+    assert out.loc[bad, "cosine"].isna().all()
+    assert out.loc[~bad, "cosine"].notna().all()
+    for _, g in out.groupby("query_id"):      # NULL cosines rank last
+        nulls = g.sort_values("rank")["cosine"].isna().tolist()
+        assert nulls == sorted(nulls)
+    top = out[(out.query_id == 10) & (out["rank"] <= 2)]
+    assert set(top.vec_id) == {10, 11} and (top.cosine == 1.0).all()
+
+
+@pytest.mark.parametrize("op,case", [
+    (op, case)
+    for op in ("cosine_topk", "bucketed_topk", "embedding_dup_pairs_bucketed",
+               "lsh_candidates", "semantic_dedup")
+    for case in ("zero", "null")
+    if (op, case) != ("semantic_dedup", "null")])
+def test_zero_norm_and_null_vectors_never_pair(spark, op, case):
+    """A zero-norm side makes a cosine NULL (never a DIVIDE_BY_ZERO under
+    ANSI mode): the vector never forms a pair or candidate and ranks after
+    every real match in a top-k. A NULL vector gets a NULL bucket, so the
+    bucketed operators emit nothing for it."""
+    from geospatialtools_spark.functions.bitext import lsh_candidates
+    emb = _bad_vec_corpus(spark, case)
+    q = emb.filter(F.col("vec_id").isin(10, 99)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    if op == "cosine_topk":
+        _check_topk(SIM.cosine_topk(emb, q, k=41).toPandas(), True)
+    elif op == "bucketed_topk":
+        out = SIM.bucketed_topk(emb, q, dim=8, k=41, n_planes=4,
+                                probe_radius=1).toPandas()
+        _check_topk(out, case == "zero")
+    elif op == "semantic_dedup":
+        out = DD.semantic_dedup(emb, dim=8, eps=0.999, n_clusters=1).toPandas()
+        assert _semantic_groups(out) == {10: [10, 11]}
+    else:
+        if op == "lsh_candidates":
+            out = lsh_candidates(emb, emb, dim=8, n_planes=4).toPandas()
+            out.columns = ["id_a", "id_b", "cosine"]
+        else:
+            out = DD.embedding_dup_pairs_bucketed(
+                emb, dim=8, threshold=0.95, n_planes=4).toPandas()
+        assert 99 not in set(out.id_a) | set(out.id_b)
+        assert np.isfinite(out.cosine.to_numpy()).all()
+        assert ((out.id_a == 10) & (out.id_b == 11) & (out.cosine == 1.0)).any()
 
 
 def test_corpus_stats_rollup_total_and_null_semantics(spark):
