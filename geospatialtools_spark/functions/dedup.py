@@ -347,8 +347,7 @@ def load_minhash_index(spark, path: str) -> MinhashIndex:
 def incremental_dup_pairs(index: MinhashIndex, new_docs: DataFrame,
                           text_col: str = "text", id_col: str = "doc_id",
                           star_threshold: int | None = None,
-                          exclude_new_from_history: bool = False,
-                          static_prune: bool = True
+                          exclude_new_from_history: bool = False
                           ) -> tuple[DataFrame, DataFrame]:
     """Near-dup pairs of an INCREMENT against a built index: all
     (old, new) and (new, new) candidate pairs, never (old, old) — the
@@ -360,13 +359,12 @@ def incremental_dup_pairs(index: MinhashIndex, new_docs: DataFrame,
     here. Returns (pairs, new_banded); feed ``new_banded`` to
     ``extend_minhash_index`` so the next increment sees this one.
 
-    ``static_prune`` (default on): when the index came from
-    ``load_minhash_index`` (carries the _bkt partition column), the
-    probe collects the increment's distinct bucket keys — at most 64,
-    the key space is that small by design — into a literal isin, so the
-    partitioned base shows the restriction as PartitionFilters: a small
-    probe reads only the files of its own buckets instead of scanning
-    the whole history.
+    When the index came from ``load_minhash_index`` (carries the _bkt
+    partition column), the probe collects the increment's distinct
+    bucket keys — at most 64, the key space is that small by design —
+    into a literal isin, so the partitioned base shows the restriction as
+    PartitionFilters: a small probe reads only the files of its own
+    buckets instead of scanning the whole history.
 
     ``exclude_new_from_history`` (the streaming handler sets it): drop
     history rows whose id appears in the increment BEFORE counting or
@@ -391,7 +389,7 @@ def incremental_dup_pairs(index: MinhashIndex, new_docs: DataFrame,
     nb = _minhash_banded(new_docs, text_col, id_col,
                          index.k, index.n_hashes, index.bands)
     hist = index.banded
-    if static_prune and "_bkt" in hist.columns:
+    if "_bkt" in hist.columns:
         bkts = [r["b"] for r in
                 nb.select(_mh_bucket(F.col("bhash")).alias("b"))
                 .distinct().collect()]

@@ -150,8 +150,7 @@ def load_text_index(spark, path: str) -> TextIndex:
 def bm25_probe(index: TextIndex, queries: DataFrame, k: int = 5,
                k1: float = 1.2, b: float = 0.75,
                q_id_col: str = "query_id",
-               q_text_col: str = "q_text",
-               static_prune: bool = True) -> DataFrame:
+               q_text_col: str = "q_text") -> DataFrame:
     """Top-k BM25 retrieval of a (small, broadcastable) query batch against
     a built index. Returns (query_id, rank, doc_id, score) with score
     rounded to 6 decimals and ties broken by doc_id ascending — the same
@@ -161,21 +160,19 @@ def bm25_probe(index: TextIndex, queries: DataFrame, k: int = 5,
     one shuffle of candidate rows, one per-query window over candidates.
     The corpus-sized postings table is only ever filtered by the term join.
 
-    ``static_prune`` (default on, same contract as ``ivf_probe``): when
-    the index came from ``load_text_index`` (carries the _bkt partition
-    column), the probe collects the query batch's distinct term buckets —
-    bounded by the query term count, small by this operator's contract —
-    and applies them as a LITERAL isin filter, so the parquet scans show
-    the restriction as PartitionFilters: unqueried buckets' files are
-    never opened. Output is identical either way (the term equi-join
-    already restricts rows); pass False for query batches too large to
-    enumerate driver-side.
+    When the index came from ``load_text_index`` (carries the _bkt
+    partition column), the probe collects the query batch's distinct term
+    buckets — bounded by the query term count, small by this operator's
+    contract — and applies them as a LITERAL isin filter, so the parquet
+    scans show the restriction as PartitionFilters: unqueried buckets'
+    files are never opened. Output is identical either way (the term
+    equi-join already restricts rows).
     """
     qterms = (queries.select(F.col(q_id_col),
                              F.explode(F.array_distinct(
                                  _tokens(F.col(q_text_col)))).alias("term")))
     postings, term_stats = index.postings, index.term_stats
-    if static_prune and "_bkt" in postings.columns:
+    if "_bkt" in postings.columns:
         # pin the (small) query batch before reading it twice: the bucket
         # collect and the joins both consume qterms, and a
         # non-deterministic queries plan re-executed for the join could

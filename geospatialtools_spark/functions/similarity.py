@@ -305,22 +305,21 @@ def load_ivf_index(spark, path: str) -> IvfIndex:
 
 def ivf_probe(index: IvfIndex, queries: DataFrame, k: int = 5,
               nprobe: int = 3, q_id_col: str = "query_id",
-              q_vec_col: str = "q_vec", static_prune: bool = True) -> DataFrame:
+              q_vec_col: str = "q_vec") -> DataFrame:
     """Probe a built IVF index: each query scans only its ``nprobe``
     nearest centroid lists (a bucket equi-join against the materialized
     assignment — at 100 TB a partition-pruned read of nprobe/n_centroids of
     the data), exact cosine re-rank inside. Recall grows with nprobe
     (nprobe = n_centroids -> exact).
 
-    ``static_prune`` (default on) additionally collects the probe batch's
-    distinct list ids — bounded by |queries| * nprobe, and queries are small
-    by this operator's contract (they are broadcast) — and applies them as a
-    LITERAL ``isin`` filter on the assigned table, so a file-backed index
-    written by ``persist_ivf_index`` shows the list restriction as
-    ``PartitionFilters`` on the parquet scan: files of unprobed lists are
-    never opened. Output is identical either way (the equi-join already
-    restricts rows); pass False for query tables too large to enumerate
-    driver-side.
+    When the assigned table is file-backed (``load_ivf_index``), the probe
+    additionally collects the batch's distinct list ids — bounded by
+    |queries| * nprobe, and queries are small by this operator's contract
+    (they are broadcast) — and applies them as a LITERAL ``isin`` filter,
+    so the parquet scan shows the list restriction as ``PartitionFilters``:
+    files of unprobed lists are never opened. The in-memory assignment of
+    ``build_ivf_index`` has no files to prune and skips the collect. Output
+    is identical either way (the equi-join already restricts rows).
     """
     from pyspark.sql import types as TY
 
@@ -338,7 +337,7 @@ def ivf_probe(index: IvfIndex, queries: DataFrame, k: int = 5,
 
     q = queries.withColumn("_list", F.explode(probes(F.col(q_vec_col))))
     assigned = index.assigned
-    if static_prune:
+    if assigned.inputFiles():
         # pin the (small) probe batch before reading it twice: the list
         # collect below and the join both consume q, and a non-deterministic
         # queries plan (limit/sample) re-executed for the join could
@@ -367,8 +366,5 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     index = build_ivf_index(corpus, dim, n_centroids=n_centroids,
                             train_sample=train_sample, id_col=id_col,
                             vec_col=vec_col)
-    # static_prune buys nothing on the just-built in-memory assignment (no
-    # files to prune) and would add a collect job — it's for persisted indexes
     return ivf_probe(index, queries, k=k, nprobe=nprobe,
-                     q_id_col=q_id_col, q_vec_col=q_vec_col,
-                     static_prune=False)
+                     q_id_col=q_id_col, q_vec_col=q_vec_col)

@@ -286,6 +286,16 @@ def _topo_acc(n: int, src: np.ndarray, dst: np.ndarray, base: np.ndarray) -> np.
     return count
 
 
+def _local_index(gid: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Row of each global cell id ``q`` in a tile's ``gid``; -1 where the
+    cell is not in the tile."""
+    if gid.size == 0:
+        return np.full(q.shape, -1, dtype=np.int64)
+    order = np.argsort(gid, kind="stable")
+    loc = np.clip(np.searchsorted(gid[order], q), 0, gid.size - 1)
+    return np.where(gid[order[loc]] == q, order[loc], -1)
+
+
 def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
                       mask_df: DataFrame | None = None,
                       max_rounds: int = 64,
@@ -327,7 +337,6 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
             ii = cells_pdf["i"].to_numpy(np.int64)
             jj = cells_pdf["j"].to_numpy(np.int64)
             gid = ii * ny + jj
-            idx = {g: k for k, g in enumerate(gid)}
             n = len(gid)
             # G5 seeded variant (terrain_tools.f90:303-414): base = seed
             # indicator instead of 1 -> acc(v) counts the seeds whose flow
@@ -335,19 +344,16 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
             base = (cells_pdf[base_col].to_numpy(np.int64).copy()
                     if base_col else np.ones(n, dtype=np.int64))
             if len(inflow_pdf):
-                for d, v in zip(inflow_pdf["dst"].to_numpy(np.int64),
-                                inflow_pdf["val"].to_numpy(np.int64)):
-                    if d in idx:
-                        base[idx[d]] += v
+                loc = _local_index(gid, inflow_pdf["dst"].to_numpy(np.int64))
+                hit = loc >= 0
+                np.add.at(base, loc[hit],
+                          inflow_pdf["val"].to_numpy(np.int64)[hit])
             fi = cells_pdf["fi"].to_numpy(np.int64)
             fj = cells_pdf["fj"].to_numpy(np.int64)
             ok = (fi != IUNDEF) & (fi // tile == ti) & (fj // tile == tj) & (fi >= 0) & (fj >= 0)
-            dst_g = fi[ok] * ny + fj[ok]
-            in_tile = np.array([idx.get(g, -1) for g in dst_g], dtype=np.int64)
-            keep = in_tile >= 0
-            src_l = np.where(ok)[0][keep]
-            dst_l = in_tile[keep]
-            acc = _topo_acc(n, src_l, dst_l, base)
+            loc = _local_index(gid, fi * ny + fj)
+            src_l = np.nonzero(ok & (loc >= 0))[0]
+            acc = _topo_acc(n, src_l, loc[src_l], base)
             return pd.DataFrame({
                 "tile_i": np.full(n, ti, np.int32), "tile_j": np.full(n, tj, np.int32),
                 "i": ii.astype(np.int32), "j": jj.astype(np.int32), "acc": acc,
@@ -382,13 +388,9 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
                 if base_col else np.ones(n, dtype=np.int64))
         valid = (fi != IUNDEF) & (fi >= 0) & (fi < nx) & (fj >= 0) & (fj < ny)
         same = valid & (fi // t == ti) & (fj // t == tj)
-        order = np.argsort(gid, kind="stable")
-        sgid = gid[order]
-        dst_g = fi * ny + fj
-        loc = np.clip(np.searchsorted(sgid, dst_g), 0, n - 1)
-        in_tile = same & (sgid[loc] == dst_g)
-        src_l = np.nonzero(in_tile)[0]
-        dst_l = order[loc[in_tile]]
+        loc = _local_index(gid, fi * ny + fj)
+        src_l = np.nonzero(same & (loc >= 0))[0]
+        dst_l = loc[src_l]
         acc0 = _topo_acc(n, src_l, dst_l, base)
         is_exit = valid & ~same
         rows = [pd.DataFrame({"kind": np.zeros(int(is_exit.sum()), np.int32),
@@ -401,8 +403,8 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
             for _ in range(int(np.ceil(np.log2(max(n, 2)))) + 1):
                 succ = succ[succ]
             ts = np.unique(cross_pdf["dst"].to_numpy(np.int64))
-            tl = order[np.clip(np.searchsorted(sgid, ts), 0, n - 1)]
-            ok = gid[tl] == ts  # every dst should be present; guard anyway
+            tl = _local_index(gid, ts)
+            ok = tl >= 0  # every dst should be present; guard anyway
             term = succ[tl[ok]]
             hits = is_exit[term]
             nh = int(hits.sum())

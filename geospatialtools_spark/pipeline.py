@@ -14,7 +14,8 @@ both as checkpoint-resumable sequences of pure stages:
 Every stage commits through plans.checkpointing.StageRunner (parquet +
 manifest, the sandbox stand-in for an Iceberg snapshot): a killed run
 restarts at the last committed stage, and `<root>/_lineage` accumulates
-per-partition rows/wall-ms records for every commit (north_rule).
+per-partition rows/bytes records, read from the committed files' parquet
+footers, for every commit (north_rule).
 
 Deploy: ``spark-submit --py-files geospatialtools_spark.zip scripts/run_pipeline.py``
 (see scripts/ for the cluster entrypoint; zip the package with

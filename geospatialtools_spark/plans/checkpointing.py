@@ -2,7 +2,7 @@
 
 Every pipeline stage is a pure function (input tables -> output table). A
 stage COMMIT atomically writes the output as parquet plus a manifest
-(stage name, config fingerprint, row count, wall ms, lineage rows). On
+(stage name, config fingerprint, row count, wall ms, partition count). On
 restart, a stage whose manifest matches its fingerprint is SKIPPED and its
 committed output is read back — so a killed job resumes at the last
 committed stage with bit-identical results (stages are deterministic by
@@ -21,8 +21,9 @@ an append-only ``_snapshot_log.jsonl`` and archives the replaced state under
 old snapshot as a NEW logged snapshot, ``expire_snapshots`` is the explicit
 retention knob. See the "snapshot log" section below.
 
-The per-partition lineage table (stage, partition_id, rows, wall_ms) is
-appended under ``<root>/_lineage`` at every commit (plans/lineage.py).
+The per-partition lineage table (stage, partition_id, rows, bytes_estimate),
+read from the footers of the committed files, is appended under
+``<root>/_lineage`` at every commit (plans/lineage.py).
 """
 
 from __future__ import annotations
@@ -90,11 +91,8 @@ class StageRunner:
         lin_dir = os.path.join(self.root, "_lineage")
         out.write.mode("overwrite").parquet(tmp)
         committed = self.spark.read.parquet(tmp)
-        # lineage over the COMMITTED data: measuring the unmaterialized plan
-        # would re-execute the whole stage a second time. The lineage pass
-        # already counts every row per partition, so n_rows comes from its
-        # sum — a separate count() would be a second full scan
-        lin_pdf = lineage_records(committed, stage).toPandas()
+        lin = lineage_records(committed, stage)
+        lin_pdf = lin.toPandas()
         n_rows = int(lin_pdf["rows"].sum())
         wall_ms = int((time.time() - t0) * 1000)
 
@@ -107,8 +105,8 @@ class StageRunner:
         if os.path.exists(d):
             self._archive_current(stage)
         os.rename(tmp, d)
-        self.spark.createDataFrame(lin_pdf).withColumn(
-            "committed_stage", F.lit(stage)).write.mode("append").parquet(lin_dir)
+        lin.withColumn("committed_stage", F.lit(stage)) \
+            .write.mode("append").parquet(lin_dir)
         # LOG BEFORE MANIFEST (r3 advice): the snapshot log must never lag a
         # published manifest. A crash between the two now leaves a logged
         # snapshot whose manifest never published — the resume re-runs the

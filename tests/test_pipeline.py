@@ -3,6 +3,7 @@ checkpoint-resume, streaming windowed ingest."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -215,12 +216,29 @@ def test_real_image_decode_contract(spark):
     assert all(0.0 <= v <= 1.0 for f in out["features"] for v in f)
 
 
-def test_lineage_records(spark):
-    df = spark.range(1000).repartition(4)
-    lin = lineage_records(df, "stage_x").toPandas()
-    assert lin["rows"].sum() == 1000
+def test_lineage_records(spark, tmp_path):
+    """Lineage is read from the written files' footers: one record per
+    part file, ids = the write tasks' partitions (never a read split, which
+    may pack several small files), rows exact, no timing column."""
+    n_parts = 2 * spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "lin")
+    spark.range(5000).repartition(n_parts).write.parquet(path)
+    lin = lineage_records(spark.read.parquet(path), "stage_x").toPandas()
+    assert len(lin) == len(glob.glob(os.path.join(path, "part-*")))
+    assert lin["partition_id"].tolist() == list(range(n_parts))
+    assert lin["rows"].sum() == 5000
+    assert (lin["bytes_estimate"] > 0).all()
     assert (lin["stage"] == "stage_x").all()
-    assert lin["partition_id"].nunique() == len(lin) <= 4
+    assert "wall_ms" not in lin.columns
+
+    # an empty stage still writes one (empty) part file
+    empty = str(tmp_path / "empty")
+    spark.range(0).write.parquet(empty)
+    lin = lineage_records(spark.read.parquet(empty), "e").toPandas()
+    assert lin[["partition_id", "rows"]].values.tolist() == [[0, 0]]
+
+    with pytest.raises(ValueError):       # not file-backed
+        lineage_records(spark.range(10), "x")
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -258,6 +276,11 @@ def test_checkpoint_resume(spark, tmp_path):
     # lineage table accumulated commits
     lin = spark.read.parquet(os.path.join(root, "_lineage")).toPandas()
     assert set(lin["stage"]) == {"a", "b"}
+    # the manifest counts the files the commit wrote
+    for stage in ("a", "b"):
+        with open(os.path.join(root, f"{stage}.manifest.json")) as f:
+            parts = json.load(f)["partitions"]
+        assert parts == len(glob.glob(os.path.join(root, stage, "part-*")))
 
 
 def test_crashed_commit_window_never_destroys_committed_data(spark, tmp_path):
