@@ -517,9 +517,10 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
       ``n_clusters`` is the dial (the paper scales k with the corpus so
       clusters stay worker-sized). Pairs are exact-verified, never
       assumed; a zero-norm vector never pairs (its cosine is NaN).
-    - pairs -> ``operators.graph.connected_components`` (min-label +
-      pointer doubling over the PAIR nodes only) -> keeper election. The
-      corpus never re-enters the plan after pair scoring.
+    - pairs -> ``operators.graph.connected_components`` (min-id label
+      over the PAIR nodes only; one Arrow task up to its edge bound) ->
+      keeper election. The corpus never re-enters the plan after pair
+      scoring.
     - ``star_threshold``: the same oversized-bucket guard as
       ``embedding_dup_pairs_bucketed``, with the same WEAKER recall
       contract (members pair only against the cluster's min-id hub,
@@ -593,9 +594,10 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
     rows (pairs alone can't: A~B and B~C must collapse to ONE keeper even
     when A and C never paired).
 
-    pairs (id_a, id_b) -> connected components (min-id group label, pointer
-    doubling — O(log diameter) rounds over the PAIR nodes only, never the
-    corpus) -> keeper per group = the member with the LONGEST text, ties to
+    pairs (id_a, id_b) -> ``operators.graph.connected_components`` (min-id
+    group label over the PAIR nodes only, never the corpus; one Arrow task
+    up to its edge bound; a pair with a NULL endpoint is not an edge) ->
+    keeper per group = the member with the LONGEST text, ties to
     the smallest id (keep-the-richest, the usual curation policy). Returns
     (doc_id, group_id, keeper_id, group_size) for every doc in a group;
     group_size >= 2 by construction. Anti-join the corpus against the

@@ -21,6 +21,14 @@ Two engines:
 State schema: (id long, done boolean, ptr long, label <any>). DONE rows carry
 their final label; PENDING rows point at ``ptr``. Every ptr must reference an
 existing id. ``resolve_tiled`` additionally needs (i, j) grid positions.
+
+``connected_components`` labels an undirected pair list (near-dup group
+resolution). Up to ``ONE_TASK_MAX_EDGES`` edges it solves the whole graph
+in one grouped ``applyInPandas`` task (numpy min-root hooking + pointer
+jumping), so its Spark job count does not grow with the component
+diameter; above the bound it runs the per-round min-label + shortcut join
+loop, which needs no single worker to hold the edges. A pair with a NULL
+endpoint is not an edge.
 """
 
 from __future__ import annotations
@@ -68,24 +76,84 @@ def resolve(state: DataFrame, max_rounds: int = 64) -> DataFrame:
     return state.select("id", "label")
 
 
+# One-task bound for ``connected_components``: the numpy solve holds every
+# edge in one Python worker, and 2**22 edges is ~4 s and a few hundred MB
+# there (one core); a larger edge list takes the round loop, which scales out.
+ONE_TASK_MAX_EDGES = 2 ** 22
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_rounds: int = 32) -> DataFrame:
     """Connected components of an undirected pair list — (node, comp) with
     comp = min node id in the component.
 
-    Min-label propagation with a pointer-doubling shortcut: each round every
-    node takes the min of its own and its neighbors' labels, then jumps to
-    its label's label (comp <- comp(comp)), so convergence is O(log diameter)
-    shuffle rounds, not O(diameter). Each round is one equi-join + groupBy
-    min + one shortcut join over the NODE table (O(nodes in pairs), not the
-    corpus) — the standard Spark CC plan for near-dup group resolution,
-    where components are tiny and the pair list is the LSH output.
+    A pair with a NULL endpoint is not an edge: no NULL node is emitted,
+    and neither is a node that appears only in such a pair. A self-loop
+    (x, x) yields (x, x).
+
+    The edge list is materialized once and counted. At or under
+    ``ONE_TASK_MAX_EDGES`` edges it is solved in ONE grouped
+    ``applyInPandas`` task (``_components_kernel``): a fixed, small number
+    of Spark jobs whatever the component diameter. Above the bound the
+    per-round Spark loop (``_components_rounds``) runs instead — the only
+    path that does not need the edge list in one worker.
+    """
+    e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+         .localCheckpoint(eager=False))
+    # the count materializes the lazy checkpoint in the same job
+    if e.count() > ONE_TASK_MAX_EDGES:
+        return _components_rounds(e, max_rounds)
+    t = e.schema["u"].dataType.simpleString()
+    # grouping on a named constant column: groupBy(F.lit(0)) fails to
+    # resolve in applyInPandas on pyspark 4.1
+    return (e.withColumn("_cc", F.lit(0)).groupBy("_cc")
+            .applyInPandas(_components_kernel, schema=f"node {t}, comp {t}"))
+
+
+def _components_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    """In-memory connected components of one edge list (u, v): nodes are
+    renumbered to their rank, every component root hooks onto the smallest
+    root across its edges (``np.minimum.at``), then pointer jumping
+    (``lab = lab[lab]``) flattens the forest. Roots only ever hook onto
+    smaller roots, so the forest stays acyclic and the component's min
+    node ends as its root; every round with an edge between two trees
+    hooks at least one root, so the loop ends (14 rounds for a randomly
+    numbered 1M-node path, 4 for a random 1M-edge graph)."""
+    u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[:len(u)], inv[len(u):]
+    lab = np.arange(len(nodes))
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            break
+        np.minimum.at(lab, np.maximum(la, lb)[cross], np.minimum(la, lb)[cross])
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+    return pd.DataFrame({"node": nodes, "comp": nodes[lab]})
+
+
+def _components_rounds(e: DataFrame, max_rounds: int) -> DataFrame:
+    """The scale path of ``connected_components``, over the materialized
+    (u, v) edge list: min-label propagation with a pointer-doubling
+    shortcut. Each round every node takes the min of its own and its
+    neighbors' labels, then jumps to its label's label (comp <- comp(comp)),
+    so a label can move more than one hop per round; the round count
+    still grows with the diameter (a randomly numbered 600-node path needs
+    more than 32 rounds).
+    Each round is one equi-join + groupBy min + one shortcut join over the
+    NODE table (O(nodes in pairs), not the corpus) — the round-based
+    min-label family (Kiveris et al., SoCC 2014).
 
     The per-round convergence probe counts changed labels over the
     materialized (localCheckpoint) state — a scalar, never a driver-side
     copy of the labels.
     """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = (e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
            .distinct().localCheckpoint(eager=True))
     labels = (sym.select(F.col("u").alias("node")).distinct()
@@ -116,9 +184,9 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     if changed != 0:
         # silent non-convergence would split one component into several
         # groups, each electing its own keeper — duplicates would survive
-        # the curation anti-join with no signal. Pointer doubling converges
-        # in O(log diameter), so 32 rounds covers any realistic graph;
-        # hitting this means the input is pathological — fail loudly.
+        # the curation anti-join with no signal. Near-dup components have
+        # small diameters, so 32 rounds covers them; hitting this means the
+        # input is a long chain — fail loudly.
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds")
     return labels

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .grid import GridMeta
@@ -308,9 +308,10 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
       set): C4-style per-document line filtering, then global first-
       occurrence line dedup; emptied documents drop out and ``weight_col``
       is recomputed from the edited text.
-    - ``dedup``: exact dedup — keep a row iff its content hash has no dup
-      group (left-join miss) or it IS the group's keeper. One broadcastable
-      join over the O(dup groups) table, no driver collection.
+    - ``dedup``: exact dedup — keep a row iff it IS the min id among the
+      rows with its content hash (``exact_dups``' keeper). One pass over
+      ``docs``: a window min over the md5 partition, no second scan and
+      no driver collection.
     - ``near_dedup``: MinHash-LSH candidate pairs (clique-guarded by
       default) -> ``dedup_groups`` transitive resolution -> anti-join the
       non-keepers out. The group table is O(dup docs), never the corpus.
@@ -332,7 +333,7 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
     - ``split``: deterministic hash split (stable under append/repartition).
     - ``shard``: budget-packed contiguous shards of the train split.
     """
-    from .functions.dedup import dedup_groups, exact_dups, minhash_lsh_pairs
+    from .functions.dedup import dedup_groups, minhash_lsh_pairs
     from .functions.sampling import (hash_split, mixture_sample,
                                      shard_by_budget)
     from .functions.textstats import quality_score, redact_pii
@@ -378,13 +379,16 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
         docs = runner.run_stage("lines", _lines)
         out["lines"] = docs
 
+    # exact dedup in one pass over docs: the keeper is the min id among
+    # rows with the same content hash; NULL text or an all-NULL-id group
+    # has no keeper and is kept whole
     deduped = runner.run_stage("dedup", lambda: docs
         .withColumn("content_hash", F.md5(txt))
-        .join(F.broadcast(exact_dups(docs, text_col=txt, id_col=idc)),
-              "content_hash", "left")
-        .filter(F.col("keeper_id").isNull() |
+        .withColumn("keeper_id",
+                    F.min(idc).over(Window.partitionBy("content_hash")))
+        .filter(F.col("content_hash").isNull() | F.col("keeper_id").isNull() |
                 (F.col(idc) == F.col("keeper_id")))
-        .drop("content_hash", "keeper_id", "n_dups"))
+        .drop("content_hash", "keeper_id"))
     out["dedup"] = deduped
 
     near = runner.run_stage("near_dedup", lambda: deduped.join(

@@ -40,6 +40,10 @@ from pyspark.sql import functions as F
 
 from .lineage import lineage_records
 
+# the local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
+
 
 class StageRunner:
     def __init__(self, spark: SparkSession, root: str, run_config: dict | None = None):
@@ -78,7 +82,25 @@ class StageRunner:
 
     def run_stage(self, stage: str, fn: Callable[[], DataFrame],
                   force: bool = False) -> DataFrame:
-        """Execute (or resume) one stage; returns the committed DataFrame."""
+        """Execute (or resume) one stage; returns the committed DataFrame.
+
+        The stage's Spark jobs run in their own job group, ``<stage>``, or
+        ``<caller group>/<stage>`` when the caller has set one; the
+        caller's group is restored afterwards. Per-stage job counts are
+        then ``statusTracker().getJobIdsForGroup(group)``.
+        """
+        sc = self.spark.sparkContext
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        caller = saved["spark.jobGroup.id"]
+        sc.setJobGroup(f"{caller}/{stage}" if caller else stage, stage)
+        try:
+            return self._run_stage(stage, fn, force)
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+
+    def _run_stage(self, stage: str, fn: Callable[[], DataFrame],
+                   force: bool) -> DataFrame:
         d, tmp, mf = self._paths(stage)
         if not force and self.is_committed(stage):
             self.metrics.append({"stage": stage, "resumed": True})

@@ -303,6 +303,38 @@ def test_curation_pipeline_end_to_end_resumable(spark, tmp_path):
                       "shard"]
 
 
+# Spark jobs the near_dedup stage may run: MinHash banding and the clique
+# guard, the one-task connected components, keeper election, the stage
+# write and its lineage.
+NEAR_DEDUP_JOB_BUDGET = 25
+
+
+def test_curation_near_dedup_job_budget(spark, tmp_path):
+    """The near_dedup stage runs a fixed number of Spark jobs: the same at
+    two corpus sizes, and within NEAR_DEDUP_JOB_BUDGET. Each StageRunner
+    stage runs in its own job group nested under the caller's."""
+    from geospatialtools_spark import fixtures
+    from geospatialtools_spark.pipeline import (CurationConfig,
+                                                run_curation_pipeline)
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (400, 2000):
+        group = f"near-dedup-budget-{n}"
+        docs = fixtures.planted_docs(spark, n)
+        sc.setJobGroup(group, "job budget")
+        try:
+            out = run_curation_pipeline(spark, docs, CurationConfig(),
+                                        str(tmp_path / str(n)))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert out["near_dedup"].count() < n      # planted near-dups fell
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(
+            f"{group}/near_dedup"))
+    assert jobs[400] == jobs[2000], jobs
+    assert 0 < jobs[400] <= NEAR_DEDUP_JOB_BUDGET, jobs
+
+
 def test_hash_split_thirds_cover_every_bucket(spark):
     """Cumulative rounding property (review fix): three 1/3 fractions must
     cover ALL buckets — per-split rounding left bucket 9999 a silent

@@ -10,7 +10,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -251,11 +251,13 @@ def test_exclusive_prefix_sum_matches_cumsum(spark):
 
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)),
-                min_size=1, max_size=60))
+                min_size=0, max_size=60))
+@example([])
 def test_connected_components_matches_union_find(spark, edges):
-    """Random pair graphs (self-loops, duplicates, arbitrary shapes):
-    distributed CC labels == python union-find, every node present."""
-    from geospatialtools_spark.operators.graph import connected_components
+    """Random pair graphs (self-loops, duplicates, arbitrary shapes, empty):
+    distributed CC labels == python union-find, every node present — on
+    both the one-task path and the round loop (bound forced to 0)."""
+    from geospatialtools_spark.operators import graph as G
     parent: dict[int, int] = {}
 
     def find(x):
@@ -272,5 +274,9 @@ def test_connected_components_matches_union_find(spark, edges):
     expect = {n: find(n) for n in parent}
     df = spark.createDataFrame([(int(a), int(b)) for a, b in edges],
                                "id_a long, id_b long")
-    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-    assert got == expect
+    for bound in (G.ONE_TASK_MAX_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(G, "ONE_TASK_MAX_EDGES", bound)
+            got = {r["node"]: r["comp"]
+                   for r in G.connected_components(df).collect()}
+        assert got == expect, f"ONE_TASK_MAX_EDGES={bound}"
