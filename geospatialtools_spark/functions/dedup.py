@@ -518,9 +518,8 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
       clusters stay worker-sized). Pairs are exact-verified, never
       assumed; a zero-norm vector never pairs (its cosine is NaN).
     - pairs -> ``operators.graph.connected_components`` (min-id label
-      over the PAIR nodes only; one Arrow task up to its edge bound) ->
-      keeper election. The corpus never re-enters the plan after pair
-      scoring.
+      over the PAIR nodes only, in one Arrow task) -> keeper election.
+      The corpus never re-enters the plan after pair scoring.
     - ``star_threshold``: the same oversized-bucket guard as
       ``embedding_dup_pairs_bucketed``, with the same WEAKER recall
       contract (members pair only against the cluster's min-id hub,
@@ -536,6 +535,8 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
     """
     import numpy as np
     import pandas as pd
+
+    from pyspark.sql import Window
 
     from ..operators.graph import connected_components
     from .similarity import build_ivf_index, cosine_matrix
@@ -576,13 +577,12 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
     pairs = a.groupBy("_c").applyInPandas(_kern, schema="id_a long, id_b long")
     if star is not None:
         pairs = pairs.unionByName(star)
-    comp = connected_components(pairs)
-    members = comp.select(F.col("node").alias(id_col),
-                          F.col("comp").alias("group_id"))
-    sizes = members.groupBy("group_id").agg(
-        F.count("*").cast("long").alias("group_size"))
+    # one read of the components: the group size is a window count
+    members = connected_components(pairs).select(
+        F.col("node").alias(id_col), F.col("comp").alias("group_id"),
+        F.count("*").over(Window.partitionBy("comp")).alias("group_size"))
     clusters = index.assigned.select(id_col, F.col("_list").alias("cluster"))
-    return (members.join(sizes, "group_id").join(clusters, id_col)
+    return (members.join(clusters, id_col)
             .select(id_col, "cluster", "group_id",
                     F.col("group_id").alias("keeper_id"), "group_size"))
 
@@ -595,29 +595,35 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
     when A and C never paired).
 
     pairs (id_a, id_b) -> ``operators.graph.connected_components`` (min-id
-    group label over the PAIR nodes only, never the corpus; one Arrow task
-    up to its edge bound; a pair with a NULL endpoint is not an edge) ->
+    group label over the PAIR nodes only, never the corpus, in one Arrow
+    task; a pair with a NULL endpoint is not an edge) ->
     keeper per group = the member with the LONGEST text, ties to
-    the smallest id (keep-the-richest, the usual curation policy). Returns
-    (doc_id, group_id, keeper_id, group_size) for every doc in a group;
-    group_size >= 2 by construction. Anti-join the corpus against the
-    non-keeper rows to apply the dedup.
+    the smallest id (keep-the-richest, the usual curation policy); only a
+    member with a ``docs`` row can keep, and a group with none is dropped.
+    Returns (doc_id, group_id, keeper_id, group_size) for every doc in a
+    group; group_size >= 2 by construction. Anti-join the corpus against
+    the non-keeper rows to apply the dedup. ``id_col`` is a key of
+    ``docs``.
+
+    The components are read once: keeper and size are two windows over
+    the same ``group_id`` partitioning, one shuffle.
     """
     from ..operators.graph import connected_components
     from pyspark.sql import Window
     comp = connected_components(pairs)
-    members = comp.select(F.col("node").alias(id_col),
-                          F.col("comp").alias("group_id"))
-    sized = members.join(
-        docs.select(id_col, F.length(text_col).alias("_len")), id_col)
-    w = Window.partitionBy("group_id").orderBy(F.col("_len").desc(),
-                                               F.col(id_col).asc())
-    keep = (sized.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("group_id", F.col(id_col).alias("keeper_id")))
-    sizes = members.groupBy("group_id").agg(F.count("*").alias("group_size"))
-    return (members.join(keep, "group_id").join(sizes, "group_id")
-            .select(id_col, "group_id", "keeper_id", "group_size"))
+    lens = docs.select(F.col(id_col).alias("node"),
+                       F.length(text_col).alias("_len"),
+                       F.lit(True).alias("_in"))
+    group = Window.partitionBy("comp")
+    rank = group.orderBy(F.col("_in").asc_nulls_last(),
+                         F.col("_len").desc_nulls_last(), F.col("node"))
+    return (comp.join(lens, "node", "left")
+            .select(F.col("node").alias(id_col),
+                    F.col("comp").alias("group_id"),
+                    F.first("node").over(rank).alias("keeper_id"),
+                    F.first("_in").over(rank).alias("_kept"),
+                    F.count("*").over(group).alias("group_size"))
+            .filter(F.col("_kept").isNotNull()).drop("_kept"))
 
 
 def simhash_pudf(bits: int = 16):

@@ -23,12 +23,10 @@ their final label; PENDING rows point at ``ptr``. Every ptr must reference an
 existing id. ``resolve_tiled`` additionally needs (i, j) grid positions.
 
 ``connected_components`` labels an undirected pair list (near-dup group
-resolution). Up to ``ONE_TASK_MAX_EDGES`` edges it solves the whole graph
-in one grouped ``applyInPandas`` task (numpy min-root hooking + pointer
-jumping), so its Spark job count does not grow with the component
-diameter; above the bound it runs the per-round min-label + shortcut join
-loop, which needs no single worker to hold the edges. A pair with a NULL
-endpoint is not an edge.
+resolution). It solves the whole graph in one grouped ``applyInPandas``
+task (numpy min-root hooking + pointer jumping), so its Spark job count
+does not grow with the component diameter. A pair with a NULL endpoint is
+not an edge.
 """
 
 from __future__ import annotations
@@ -76,14 +74,8 @@ def resolve(state: DataFrame, max_rounds: int = 64) -> DataFrame:
     return state.select("id", "label")
 
 
-# One-task bound for ``connected_components``: the numpy solve holds every
-# edge in one Python worker, and 2**22 edges is ~4 s and a few hundred MB
-# there (one core); a larger edge list takes the round loop, which scales out.
-ONE_TASK_MAX_EDGES = 2 ** 22
-
-
 def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_rounds: int = 32) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """Connected components of an undirected pair list — (node, comp) with
     comp = min node id in the component.
 
@@ -91,19 +83,18 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     and neither is a node that appears only in such a pair. A self-loop
     (x, x) yields (x, x).
 
-    The edge list is materialized once and counted. At or under
-    ``ONE_TASK_MAX_EDGES`` edges it is solved in ONE grouped
-    ``applyInPandas`` task (``_components_kernel``): a fixed, small number
-    of Spark jobs whatever the component diameter. Above the bound the
-    per-round Spark loop (``_components_rounds``) runs instead — the only
-    path that does not need the edge list in one worker.
+    The whole edge list is solved in ONE grouped ``applyInPandas`` task
+    (``_components_kernel``), so the Spark job count does not grow with
+    the graph or its diameter. That task holds every edge in one Python
+    worker: near-dup pair lists are O(dup docs), not the corpus, and a
+    random 4M-edge list solves in ~4 s and ~400 MB on one core.
+
+    The result is lazy, so every read of it re-runs the solve and the pair
+    lineage above it: read it once (the dedup callers fold their group
+    sizes into one window) or cache it.
     """
     e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-         .localCheckpoint(eager=False))
-    # the count materializes the lazy checkpoint in the same job
-    if e.count() > ONE_TASK_MAX_EDGES:
-        return _components_rounds(e, max_rounds)
+         .filter(F.col("u").isNotNull() & F.col("v").isNotNull()))
     t = e.schema["u"].dataType.simpleString()
     # grouping on a named constant column: groupBy(F.lit(0)) fails to
     # resolve in applyInPandas on pyspark 4.1
@@ -136,60 +127,6 @@ def _components_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
                 break
             lab = nxt
     return pd.DataFrame({"node": nodes, "comp": nodes[lab]})
-
-
-def _components_rounds(e: DataFrame, max_rounds: int) -> DataFrame:
-    """The scale path of ``connected_components``, over the materialized
-    (u, v) edge list: min-label propagation with a pointer-doubling
-    shortcut. Each round every node takes the min of its own and its
-    neighbors' labels, then jumps to its label's label (comp <- comp(comp)),
-    so a label can move more than one hop per round; the round count
-    still grows with the diameter (a randomly numbered 600-node path needs
-    more than 32 rounds).
-    Each round is one equi-join + groupBy min + one shortcut join over the
-    NODE table (O(nodes in pairs), not the corpus) — the round-based
-    min-label family (Kiveris et al., SoCC 2014).
-
-    The per-round convergence probe counts changed labels over the
-    materialized (localCheckpoint) state — a scalar, never a driver-side
-    copy of the labels.
-    """
-    sym = (e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-           .distinct().localCheckpoint(eager=True))
-    labels = (sym.select(F.col("u").alias("node")).distinct()
-              .withColumn("comp", F.col("node"))
-              .localCheckpoint(eager=True))
-    changed = -1
-    for _ in range(max_rounds):
-        # propagate: comp(v) <- min(comp(v), min over neighbors u of comp(u))
-        nbr = (sym.join(labels, sym.u == labels.node)
-               .select(F.col("v").alias("node"), "comp"))
-        new = (labels.unionByName(nbr)
-               .groupBy("node").agg(F.min("comp").alias("comp")))
-        # shortcut (pointer doubling): comp <- comp(comp)
-        hop = new.select(F.col("node").alias("c_node"), F.col("comp").alias("c_comp"))
-        new = (new.join(hop, new.comp == hop.c_node, "left")
-               .select("node", F.coalesce("c_comp", "comp").alias("comp"))
-               .localCheckpoint(eager=True))
-        changed = (new.alias("n")
-                   .join(labels.select("node", F.col("comp").alias("_old")), "node")
-                   .filter(F.col("comp") != F.col("_old")).count())
-        # new is materialized (eager checkpoint, lineage truncated), so the
-        # superseded round's cached blocks can go — without this a long
-        # curation job accumulates O(rounds x nodes) dead blocks per call
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            break
-    if changed != 0:
-        # silent non-convergence would split one component into several
-        # groups, each electing its own keeper — duplicates would survive
-        # the curation anti-join with no signal. Near-dup components have
-        # small diameters, so 32 rounds covers them; hitting this means the
-        # input is a long chain — fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds")
-    return labels
 
 
 def resolve_tiled(state: DataFrame, meta, label_type: str = "double",

@@ -87,7 +87,11 @@ class StageRunner:
         The stage's Spark jobs run in their own job group, ``<stage>``, or
         ``<caller group>/<stage>`` when the caller has set one; the
         caller's group is restored afterwards. Per-stage job counts are
-        then ``statusTracker().getJobIdsForGroup(group)``.
+        then ``statusTracker().getJobIdsForGroup(group)``. A
+        ``setJobGroup`` made while the stage runs (a tracing span that
+        wraps the lineage scan, say) overrides the stage's group for
+        every later job of the stage, so take job counts from a run that
+        sets no group of its own inside the stage.
         """
         sc = self.spark.sparkContext
         saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}

@@ -140,11 +140,10 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (2, 4) not in got
 
 
-def test_connected_components_chains_and_cycles(spark, monkeypatch):
+def test_connected_components_chains_and_cycles(spark):
     """Transitive chains (A-B, B-C must merge even though A,C never pair),
-    a cycle, and an isolated pair — labels vs a python union-find oracle,
-    on both the one-task path and the round loop (bound forced to 0)."""
-    from geospatialtools_spark.operators import graph as G
+    a cycle, and an isolated pair — labels vs a python union-find oracle."""
+    from geospatialtools_spark.operators.graph import connected_components
     edges = [(1, 2), (2, 3), (3, 4),            # chain 1-2-3-4
              (10, 11), (11, 12), (12, 10),      # cycle
              (20, 21),                          # isolated pair
@@ -164,38 +163,33 @@ def test_connected_components_chains_and_cycles(spark, monkeypatch):
             parent[max(ra, rb)] = min(ra, rb)
     expect = {n: find(n) for n in parent}
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    for bound in (G.ONE_TASK_MAX_EDGES, 0):
-        monkeypatch.setattr(G, "ONE_TASK_MAX_EDGES", bound)
-        got = {r["node"]: r["comp"]
-               for r in G.connected_components(df).collect()}
-        assert got == expect, f"ONE_TASK_MAX_EDGES={bound}"
+    got = {r["node"]: r["comp"]
+           for r in connected_components(df).collect()}
+    assert got == expect
 
 
-def test_connected_components_null_endpoint_is_not_an_edge(spark,
-                                                           monkeypatch):
+def test_connected_components_null_endpoint_is_not_an_edge(spark):
     """A pair with a NULL endpoint is not an edge: no NULL node, no node
     seen only in such a pair (3), a self-loop still labels itself — and
-    dedup_groups' group_size counts real docs only. Both CC paths."""
-    from geospatialtools_spark.operators import graph as G
+    dedup_groups' group_size counts real docs only."""
+    from geospatialtools_spark.operators.graph import connected_components
     pairs = spark.createDataFrame([(1, 2), (2, None), (None, 3), (5, 5)],
                                   "id_a long, id_b long")
     docs = spark.createDataFrame(
         [(1, "aaaa"), (2, "aa"), (3, "a"), (5, "a")],
         "doc_id long, text string")
-    for bound in (G.ONE_TASK_MAX_EDGES, 0):
-        monkeypatch.setattr(G, "ONE_TASK_MAX_EDGES", bound)
-        got = sorted(tuple(r) for r in G.connected_components(pairs).collect())
-        assert got == [(1, 1), (2, 1), (5, 5)], f"ONE_TASK_MAX_EDGES={bound}"
-        g = DD.dedup_groups(docs, pairs).toPandas().set_index("doc_id")
-        assert sorted(g.index) == [1, 2, 5]
-        assert g.loc[[1, 2], "group_size"].tolist() == [2, 2]
-        assert g.loc[[1, 2], "keeper_id"].tolist() == [1, 1]
+    got = sorted(tuple(r) for r in connected_components(pairs).collect())
+    assert got == [(1, 1), (2, 1), (5, 5)]
+    g = DD.dedup_groups(docs, pairs).toPandas().set_index("doc_id")
+    assert sorted(g.index) == [1, 2, 5]
+    assert g.loc[[1, 2], "group_size"].tolist() == [2, 2]
+    assert g.loc[[1, 2], "keeper_id"].tolist() == [1, 1]
 
 
-def test_connected_components_long_path_one_task(spark):
-    """A 600-node path numbered in random order is one component. The
-    round loop does not converge on it within its 32 rounds; the one-task
-    solve's job count does not depend on the diameter."""
+def test_connected_components_long_path(spark):
+    """A 600-node path numbered in random order is one component: the
+    solve does not depend on a bounded number of label-propagation
+    rounds, which a path this long would exceed."""
     from geospatialtools_spark.operators.graph import connected_components
     p = np.random.default_rng(0).permutation(600)
     df = spark.createDataFrame([(int(a), int(b)) for a, b in zip(p[:-1], p[1:])],

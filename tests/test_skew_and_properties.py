@@ -255,9 +255,8 @@ def test_exclusive_prefix_sum_matches_cumsum(spark):
 @example([])
 def test_connected_components_matches_union_find(spark, edges):
     """Random pair graphs (self-loops, duplicates, arbitrary shapes, empty):
-    distributed CC labels == python union-find, every node present — on
-    both the one-task path and the round loop (bound forced to 0)."""
-    from geospatialtools_spark.operators import graph as G
+    distributed CC labels == python union-find, every node present."""
+    from geospatialtools_spark.operators.graph import connected_components
     parent: dict[int, int] = {}
 
     def find(x):
@@ -274,9 +273,5 @@ def test_connected_components_matches_union_find(spark, edges):
     expect = {n: find(n) for n in parent}
     df = spark.createDataFrame([(int(a), int(b)) for a, b in edges],
                                "id_a long, id_b long")
-    for bound in (G.ONE_TASK_MAX_EDGES, 0):
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(G, "ONE_TASK_MAX_EDGES", bound)
-            got = {r["node"]: r["comp"]
-                   for r in G.connected_components(df).collect()}
-        assert got == expect, f"ONE_TASK_MAX_EDGES={bound}"
+    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+    assert got == expect
