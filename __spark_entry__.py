@@ -345,8 +345,9 @@ def q_contamination_near(spark, sf_dir):
     bands collide with an eval-suite doc (% 7 == 0) — the paraphrase
     leakage the exact-shingle contamination entries cannot see. Same
     _minhash_banded code and banding contract as minhash_lsh_pairs,
-    restricted to CROSS pairs; the eval side broadcasts, the corpus
-    never self-joins and never shuffles. Oracle: the shared full-run
+    restricted to CROSS pairs; the eval side broadcasts (under the
+    auto-broadcast threshold), the corpus never self-joins and never
+    shuffles. Oracle: the shared full-run
     MinHash pair CTE with exactly the cross restriction applied."""
     from geospatialtools_spark.functions.decontaminate import (
         contamination_near)

@@ -127,12 +127,16 @@ def contamination_exact(docs: DataFrame, eval_docs: DataFrame,
             .groupBy(id_col).agg(F.count("*").alias("n_hits")))
 
 
+# an eval band row as Spark holds it: an UnsafeRow null-bit word, three
+# 8-byte slots (id, band, bhash offset) and the 32-char md5 hex bhash
+_BAND_ROW_BYTES = 64
+
+
 def contamination_near(docs: DataFrame, eval_docs: DataFrame,
                        id_col: str = "doc_id", text_col: str = "text",
                        eval_id_col: str | None = None,
                        k: int = 3, n_hashes: int | None = None,
-                       bands: int | None = None,
-                       broadcast_eval: bool = True) -> DataFrame:
+                       bands: int | None = None) -> DataFrame:
     """NEAR-duplicate decontamination: corpus documents whose MinHash
     band signature collides with an eval-suite document — the paraphrase
     / light-edit leakage the exact-shingle paths above cannot see
@@ -149,11 +153,15 @@ def contamination_near(docs: DataFrame, eval_docs: DataFrame,
     is corpus-bands x eval-bands.
 
     Scale shape: the eval side is small by nature (a benchmark suite —
-    10^4..10^6 docs x bands rows), so it broadcasts
-    (``broadcast_eval``, default on) and the corpus side stays a
-    map-side hash probe: no corpus shuffle at all. Set
-    ``broadcast_eval=False`` for an abnormally large eval side and
-    Catalyst/AQE picks the strategy. Bucket blowup is bounded by
+    10^4..10^6 docs x bands rows). Its bands are an eager
+    ``localCheckpoint``, counted (a read of the checkpointed blocks), and
+    broadcast when that real size is within
+    ``spark.sql.autoBroadcastJoinThreshold``: the corpus side stays a
+    map-side hash probe, no corpus shuffle at all. An abnormally large
+    eval side, past the threshold, gets the join the planner picks. The
+    count is needed because the checkpoint carries its source's size
+    estimate, which is unbounded for an RDD-backed source such as
+    ``createDataFrame``. Bucket blowup is bounded by
     B_corpus x B_eval per bucket with B_eval small; there is no
     star_threshold here because the eval side caps every bucket.
     """
@@ -165,7 +173,9 @@ def contamination_near(docs: DataFrame, eval_docs: DataFrame,
     eb = _minhash_banded(eval_docs, text_col, eval_id_col,
                          k, n_hashes, bands) \
         .select(F.col("_id").alias("_eval_id"), "band", "bhash")
-    if broadcast_eval:
+    limit = eval_docs.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if eb.count() * _BAND_ROW_BYTES <= limit:
         eb = F.broadcast(eb)
     return (cb.join(eb, ["band", "bhash"])
             .select(F.col("_id").alias(id_col),

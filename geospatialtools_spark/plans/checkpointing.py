@@ -21,9 +21,13 @@ an append-only ``_snapshot_log.jsonl`` and archives the replaced state under
 old snapshot as a NEW logged snapshot, ``expire_snapshots`` is the explicit
 retention knob. See the "snapshot log" section below.
 
-The per-partition lineage table (stage, partition_id, rows, bytes_estimate),
-read from the footers of the committed files, is appended under
-``<root>/_lineage`` at every commit (plans/lineage.py).
+A commit runs one Spark job, the stage's own write. The per-partition
+lineage records (stage, partition_id, rows, bytes_estimate) and the stage
+schema come from one driver-side read of the written files' footers
+(plans/lineage.py); the records are appended under ``<root>/_lineage``
+with pyarrow, and the committed stage is read back with the footer
+schema, so neither needs a job. A resumed stage reads its schema the same
+way and runs no job at all.
 """
 
 from __future__ import annotations
@@ -36,9 +40,10 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .lineage import lineage_records
+# ``lineage_records`` is re-exported: perfbench's tracer wraps this name
+from .lineage import (append_lineage, lineage_records,  # noqa: F401
+                      part_files, read_footers, read_schema)
 
 # the local properties ``SparkContext.setJobGroup`` sets
 _JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
@@ -84,12 +89,16 @@ class StageRunner:
                   force: bool = False) -> DataFrame:
         """Execute (or resume) one stage; returns the committed DataFrame.
 
+        A fresh commit runs the stage's write job and no other: lineage
+        and schema come from the written files' footers. A resumed stage
+        runs none.
+
         The stage's Spark jobs run in their own job group, ``<stage>``, or
         ``<caller group>/<stage>`` when the caller has set one; the
         caller's group is restored afterwards. Per-stage job counts are
         then ``statusTracker().getJobIdsForGroup(group)``. A
         ``setJobGroup`` made while the stage runs (a tracing span that
-        wraps the lineage scan, say) overrides the stage's group for
+        wraps the block release, say) overrides the stage's group for
         every later job of the stage, so take job counts from a run that
         sets no group of its own inside the stage.
         """
@@ -108,17 +117,14 @@ class StageRunner:
         d, tmp, mf = self._paths(stage)
         if not force and self.is_committed(stage):
             self.metrics.append({"stage": stage, "resumed": True})
-            return self.spark.read.parquet(d)
+            return self._read_committed(d)
 
         t0 = time.time()
         out = fn()
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        lin_dir = os.path.join(self.root, "_lineage")
         out.write.mode("overwrite").parquet(tmp)
-        committed = self.spark.read.parquet(tmp)
-        lin = lineage_records(committed, stage)
-        lin_pdf = lin.toPandas()
+        lin_pdf, schema = read_footers(part_files(tmp), stage)
         n_rows = int(lin_pdf["rows"].sum())
         wall_ms = int((time.time() - t0) * 1000)
 
@@ -131,8 +137,8 @@ class StageRunner:
         if os.path.exists(d):
             self._archive_current(stage)
         os.rename(tmp, d)
-        lin.withColumn("committed_stage", F.lit(stage)) \
-            .write.mode("append").parquet(lin_dir)
+        append_lineage(os.path.join(self.root, "_lineage"), lin_pdf, stage,
+                       token)
         # LOG BEFORE MANIFEST (r3 advice): the snapshot log must never lag a
         # published manifest. A crash between the two now leaves a logged
         # snapshot whose manifest never published — the resume re-runs the
@@ -154,7 +160,12 @@ class StageRunner:
         # rather than letting them degrade the rest of the run
         from ..session import release_blocks
         release_blocks(self.spark)
-        return self.spark.read.parquet(d)
+        return self.spark.read.schema(schema).parquet(d)
+
+    def _read_committed(self, d: str) -> DataFrame:
+        """Read a committed stage dir with the schema its footer carries:
+        no schema-inference job."""
+        return self.spark.read.schema(read_schema(d)).parquet(d)
 
     # ------------------------------------------------------- snapshot log
     # Iceberg-semantics emulation over plain parquet: every commit appends
@@ -255,7 +266,7 @@ class StageRunner:
 
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
         """Time travel: read the stage's table as of a committed snapshot."""
-        return self.spark.read.parquet(
+        return self._read_committed(
             self._snapshot_data_dir(stage, snapshot_id))
 
     def rollback(self, stage: str, snapshot_id: int) -> DataFrame:
@@ -282,7 +293,7 @@ class StageRunner:
             if os.path.exists(src_mf):
                 shutil.copy(src_mf, mf)
         self._log_snapshot(stage, "rollback", rolled_back_to=snapshot_id)
-        return self.spark.read.parquet(d)
+        return self._read_committed(d)
 
     def expire_snapshots(self, stage: str, keep_last: int = 2) -> list[int]:
         """Drop archived data dirs beyond the newest ``keep_last`` snapshots

@@ -174,3 +174,29 @@ def test_contamination_near_broadcasts_eval_side(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert (3, 500) in {(r["doc_id"], r["eval_id"]) for r in out.collect()}
+
+
+def test_contamination_near_broadcast_follows_threshold(spark):
+    """The eval side broadcasts only within autoBroadcastJoinThreshold
+    (the test above: a small side does): at -1 neither the initial nor
+    the final adaptive plan has a broadcast join, and the planted pair
+    is still found."""
+    from geospatialtools_spark.functions.decontaminate import (
+        contamination_near)
+    docs = spark.createDataFrame(
+        [(i, f"text number {i} with words") for i in range(20)],
+        "doc_id long, text string")
+    ev = spark.createDataFrame([(500, "text number 3 with words")],
+                               "doc_id long, text string")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = contamination_near(docs, ev)
+        qe = out._jdf.queryExecution()
+        assert "BroadcastHashJoin" not in qe.executedPlan().toString()
+        got = {(r["doc_id"], r["eval_id"]) for r in out.collect()}
+        assert "BroadcastHashJoin" not in qe.executedPlan().toString()
+    finally:
+        spark.conf.set(key, saved)
+    assert (3, 500) in got

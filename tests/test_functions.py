@@ -1156,3 +1156,35 @@ def test_tfidf_keywords_matches_python_reference(spark):
     assert got[(0, 1)][0] == "apple" and got[(2, 1)][0] == "dog"
     # doc 3 has ONLY 'common': it still gets a (zero-scored) keyword
     assert got[(3, 1)] == ("common", 1, 0.0)
+
+
+def test_widen_to_parallelism_reads_the_plan(spark, tmp_path):
+    """widen_to_parallelism decides from the physical plan and executes
+    nothing: a grouped frame runs no job and passes through at its planned
+    shuffle width; a 1-file read is spread to defaultParallelism; a wide
+    read passes through untouched."""
+    from geospatialtools_spark.functions.util import widen_to_parallelism
+    sc = spark.sparkContext
+    p = sc.defaultParallelism
+    grouped = spark.range(100000).groupBy((F.col("id") % 10).alias("k")).count()
+    sc.setJobGroup("widen-grouped", "widen")
+    try:
+        out = widen_to_parallelism(grouped)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("widen-grouped")) == []
+    assert out is grouped
+
+    one = str(tmp_path / "one")
+    spark.range(1000).coalesce(1).write.parquet(one)
+    narrow = spark.read.parquet(one)
+    assert narrow.rdd.getNumPartitions() == 1
+    out = widen_to_parallelism(narrow)
+    assert out.rdd.getNumPartitions() == p
+    assert sorted(r["id"] for r in out.collect()) == list(range(1000))
+
+    wide = str(tmp_path / "wide")
+    spark.range(200000).repartition(2 * p).write.parquet(wide)
+    w = spark.read.parquet(wide)
+    assert w.rdd.getNumPartitions() >= p
+    assert widen_to_parallelism(w) is w

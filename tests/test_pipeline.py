@@ -16,7 +16,7 @@ from geospatialtools_spark import fixtures
 from geospatialtools_spark.operators import media as MD
 from geospatialtools_spark.operators.docs import docs_df, span_fingerprint
 from geospatialtools_spark.plans.checkpointing import StageRunner
-from geospatialtools_spark.plans.lineage import lineage_records
+from geospatialtools_spark.plans.lineage import lineage_records, part_files
 from geospatialtools_spark.streaming import ingest as ST
 
 
@@ -281,6 +281,73 @@ def test_checkpoint_resume(spark, tmp_path):
         with open(os.path.join(root, f"{stage}.manifest.json")) as f:
             parts = json.load(f)["partitions"]
         assert parts == len(glob.glob(os.path.join(root, stage, "part-*")))
+
+
+def _stage_jobs(spark, group, run):
+    """``run()``'s result and the number of Spark jobs its stage ``a``
+    ran, counted in the stage's group under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "commit job budget")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(f"{group}/a"))
+
+
+def test_commit_runs_only_its_write_job(spark, tmp_path):
+    """A fresh commit runs one Spark job, the stage's write: lineage and
+    schema come from the written footers. A resume runs none. Both return
+    the schema ``spark.read.parquet`` infers, nested types included."""
+    root = str(tmp_path / "jobs")
+
+    def stage():
+        return (spark.range(100).withColumn("v", F.col("id") * 2)
+                .withColumn("arr", F.array(F.col("id"), F.lit(1)))
+                .withColumn("m", F.create_map(F.lit("k"), F.col("v")))
+                .withColumn("s", F.struct(F.col("id").alias("x"),
+                                          F.lit("y").alias("y"))))
+
+    fresh, n = _stage_jobs(spark, "commit-fresh", lambda: StageRunner(
+        spark, root, {"cfg": 1}).run_stage("a", stage))
+    assert n == 1
+    resumed, n = _stage_jobs(spark, "commit-resume", lambda: StageRunner(
+        spark, root, {"cfg": 1}).run_stage("a", stage))
+    assert n == 0
+    inferred = spark.read.parquet(os.path.join(root, "a")).schema
+    assert fresh.schema == inferred
+    assert resumed.schema == inferred
+    got = resumed.select("id", "v").orderBy("id").toPandas()
+    assert got["v"].tolist() == [2 * i for i in range(100)]
+
+
+def test_lineage_table_mixes_spark_and_pyarrow_files(spark, tmp_path):
+    """A ``_lineage`` table whose older commits Spark wrote and whose
+    newer ones are pyarrow appends reads back as one table with the
+    Spark-written schema; no temp file is left behind."""
+    root = str(tmp_path / "mixed")
+    lin_dir = os.path.join(root, "_lineage")
+    src = str(tmp_path / "src")
+    spark.range(10).repartition(2).write.parquet(src)
+    (lineage_records(spark.read.parquet(src), "old")
+     .withColumn("committed_stage", F.lit("old"))
+     .write.mode("append").parquet(lin_dir))
+    old_files = set(part_files(lin_dir))
+    old_schema = spark.read.parquet(lin_dir).schema
+
+    r = StageRunner(spark, root)
+    r.run_stage("new", lambda: spark.range(20))
+    r.run_stage("new", lambda: spark.range(30), force=True)
+    new_files = sorted(set(part_files(lin_dir)) - old_files)
+    assert len(new_files) == 2
+    assert spark.read.parquet(*new_files).schema == old_schema
+    lin = spark.read.parquet(lin_dir)
+    assert lin.schema == old_schema
+    pdf = lin.toPandas()
+    assert (pdf["stage"] == pdf["committed_stage"]).all()
+    assert pdf.groupby("stage")["rows"].sum().to_dict() == {
+        "old": 10, "new": 50}
+    assert not glob.glob(os.path.join(lin_dir, "*.tmp"))
 
 
 def test_crashed_commit_window_never_destroys_committed_data(spark, tmp_path):
