@@ -28,6 +28,10 @@ schema come from one driver-side read of the written files' footers
 with pyarrow, and the committed stage is read back with the footer
 schema, so neither needs a job. A resumed stage reads its schema the same
 way and runs no job at all.
+
+A commit forces no GC: once a stage's plans are unreachable, Spark's
+ContextCleaner unpersists the localCheckpoint blocks its operators left,
+at the latest at the periodic GC ``session.get_spark`` schedules.
 """
 
 from __future__ import annotations
@@ -97,10 +101,8 @@ class StageRunner:
         ``<caller group>/<stage>`` when the caller has set one; the
         caller's group is restored afterwards. Per-stage job counts are
         then ``statusTracker().getJobIdsForGroup(group)``. A
-        ``setJobGroup`` made while the stage runs (a tracing span that
-        wraps the block release, say) overrides the stage's group for
-        every later job of the stage, so take job counts from a run that
-        sets no group of its own inside the stage.
+        ``setJobGroup`` made inside ``fn`` overrides the stage's group
+        for the stage's later jobs.
         """
         sc = self.spark.sparkContext
         saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
@@ -155,11 +157,6 @@ class StageRunner:
         os.replace(mf + ".tmp", mf)
         self.metrics.append({"stage": stage, "resumed": False,
                              "rows": n_rows, "wall_ms": wall_ms})
-        # a stage's iterative operators leave dead localCheckpoint blocks;
-        # the next stage reads the committed parquet, so free them now
-        # rather than letting them degrade the rest of the run
-        from ..session import release_blocks
-        release_blocks(self.spark)
         return self.spark.read.schema(schema).parquet(d)
 
     def _read_committed(self, d: str) -> DataFrame:

@@ -56,9 +56,9 @@ def main() -> int:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.showConsoleProgress", "false")
-             # free dead per-round checkpoint blocks between stages — see
-             # session.py: without periodic GC the ContextCleaner never runs
-             # and late stages degrade measurably
+             # the only reclaim of dead per-round checkpoint blocks between
+             # stages (a commit forces no GC) — see session.py: without it
+             # the ContextCleaner never runs and late stages degrade
              .config("spark.cleaner.periodicGC.interval", "1min")
              .getOrCreate())
     meta, cells = make_inputs(spark, args.nx, args.ny, args.tile)

@@ -321,6 +321,63 @@ def test_commit_runs_only_its_write_job(spark, tmp_path):
     assert got["v"].tolist() == [2 * i for i in range(100)]
 
 
+def test_commit_forces_no_gc(spark, tmp_path, monkeypatch):
+    """Neither a fresh commit nor a resume forces a Python or JVM garbage
+    collection: the ContextCleaner frees a stage's dead blocks."""
+    import gc
+
+    from geospatialtools_spark import session
+    calls = {"release_blocks": 0, "gc.collect": 0}
+
+    def counter(name):
+        def count(*args, **kwargs):
+            calls[name] += 1
+        return count
+
+    monkeypatch.setattr(session, "release_blocks", counter("release_blocks"))
+    monkeypatch.setattr(gc, "collect", counter("gc.collect"))
+    root = str(tmp_path / "nogc")
+    for _ in range(2):                    # a fresh commit, then a resume
+        out = StageRunner(spark, root, {"cfg": 1}).run_stage(
+            "a", lambda: spark.range(100).withColumn("v", F.col("id") * 2))
+    assert out.count() == 100
+    assert calls == {"release_blocks": 0, "gc.collect": 0}
+
+
+def test_committed_stage_checkpoints_become_unreachable(spark, tmp_path):
+    """StageRunner keeps no handle on a stage's intermediates: once the
+    committed result is read, a GC lets the ContextCleaner unpersist the
+    stage's eager ``localCheckpoint``."""
+    import time
+
+    from geospatialtools_spark.session import release_blocks
+
+    # the count of SparkContext.persistentRdds, read in place:
+    # ``getPersistentRDDs()`` returns a snapshot map of the RDDs, and while
+    # its py4j proxy lives the snapshot alone keeps the checkpoint alive
+    def persisted():
+        return spark.sparkContext._jsc.sc().persistentRdds().size()
+
+    baseline = persisted()
+
+    def stage():
+        mid = (spark.range(1000).withColumn("v", F.col("id") * 3)
+               .localCheckpoint(eager=True))
+        assert persisted() > baseline
+        return mid.withColumn("w", F.col("v") + 1)
+
+    runner = StageRunner(spark, str(tmp_path / "reach"))   # kept alive
+    out = runner.run_stage("a", stage)
+    assert out.agg(F.sum("w")).first()[0] == 3 * 999 * 1000 // 2 + 1000
+    deadline = time.time() + 30
+    while True:
+        release_blocks(spark)
+        if persisted() <= baseline:
+            break
+        assert time.time() < deadline, persisted()
+        time.sleep(1)
+
+
 def test_lineage_table_mixes_spark_and_pyarrow_files(spark, tmp_path):
     """A ``_lineage`` table whose older commits Spark wrote and whose
     newer ones are pyarrow appends reads back as one table with the

@@ -303,17 +303,20 @@ def test_curation_pipeline_end_to_end_resumable(spark, tmp_path):
                       "shard"]
 
 
-# Spark jobs the near_dedup stage may run: MinHash banding and the clique
-# guard, the one-task connected components, keeper election and the stage
-# write (the commit reads lineage and schema from the footers, no job).
-# 16 is the count before commits lost their bookkeeping jobs.
-NEAR_DEDUP_JOB_BUDGET = 16
+# Spark jobs each curation stage may run: the counts on the planted
+# fixture, the same at both sizes. A commit adds only the stage's write
+# (lineage and schema come from the footers). near_dedup's 12 are MinHash
+# banding and the clique guard, the one-task connected components,
+# keeper election and the write.
+CURATION_JOB_BUDGET = {"dedup": 2, "near_dedup": 12, "quality": 1,
+                       "scrub": 1, "split": 1, "shard": 6}
 
 
-def test_curation_near_dedup_job_budget(spark, tmp_path):
-    """The near_dedup stage runs a fixed number of Spark jobs: the same at
-    two corpus sizes, and within NEAR_DEDUP_JOB_BUDGET. Each StageRunner
-    stage runs in its own job group nested under the caller's."""
+def test_curation_stage_job_budget(spark, tmp_path):
+    """Every curation stage runs a fixed number of Spark jobs: the same at
+    two corpus sizes, and within its CURATION_JOB_BUDGET entry. Each
+    StageRunner stage runs in its own job group nested under the
+    caller's."""
     from geospatialtools_spark import fixtures
     from geospatialtools_spark.pipeline import (CurationConfig,
                                                 run_curation_pipeline)
@@ -321,7 +324,7 @@ def test_curation_near_dedup_job_budget(spark, tmp_path):
     sc = spark.sparkContext
     jobs = {}
     for n in (400, 2000):
-        group = f"near-dedup-budget-{n}"
+        group = f"stage-budget-{n}"
         docs = fixtures.planted_docs(spark, n)
         sc.setJobGroup(group, "job budget")
         try:
@@ -330,10 +333,11 @@ def test_curation_near_dedup_job_budget(spark, tmp_path):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert out["near_dedup"].count() < n      # planted near-dups fell
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(
-            f"{group}/near_dedup"))
+        jobs[n] = {stage: len(sc.statusTracker().getJobIdsForGroup(
+            f"{group}/{stage}")) for stage in CURATION_JOB_BUDGET}
     assert jobs[400] == jobs[2000], jobs
-    assert 0 < jobs[400] <= NEAR_DEDUP_JOB_BUDGET, jobs
+    for stage, budget in CURATION_JOB_BUDGET.items():
+        assert 0 < jobs[400][stage] <= budget, (stage, jobs)
 
 
 def test_hash_split_thirds_cover_every_bucket(spark):
