@@ -26,11 +26,11 @@ Execution shape of ``pagerank`` (the 100 TB design):
   repartitioned on ``src`` and checkpointed, so every iteration's
   rank-by-src join reuses the same partitioning and only the (node, rank)
   table — O(#hosts), tiny next to the edges — moves per round.
-- Each iteration is TWO bounded jobs, like ``graph.resolve``'s
-  one-job-per-round loop: a scalar aggregate for the dangling mass, and
-  the contribution join + groupBy(dst) sum materialized by an eager
-  localCheckpoint (lineage stays bounded; at cluster scale this maps to a
-  snapshot per round, the plans/checkpointing.py story).
+- Each iteration is TWO bounded jobs: a scalar aggregate for the
+  dangling mass, and the contribution join + groupBy(dst) sum
+  materialized by an eager localCheckpoint (lineage stays bounded; at
+  cluster scale this maps to a snapshot per round, the
+  plans/checkpointing.py story).
 - Rounds are FIXED (``n_iter``), the classic formulation; rank mass is
   conserved to float precision every round (asserted in tests), so
   convergence needs no extra corpus pass.

@@ -10,12 +10,13 @@ Execution strategies, per operator class:
   W only decreases, so convergence to the unique fixpoint is monotone;
   rounds ~ O(grid_dim / tile).
 - Flow accumulation: two-level decomposition — exact in-tile topological
-  sums per round, cross-tile inflows as an edge DataFrame, iterate until the
-  global checksum stops changing (rounds ~ max tile-boundary crossings of
-  any flow path; at 100 TB tiles are 4-16k cells wide so a handful of
-  rounds). Integers, so bit-exact vs the reference recursion.
-- Downstream traversals (basins, HAND): pointer doubling (operators/graph.py),
-  O(log path) shuffle rounds.
+  sums, then the tile-exit forest (each exit drains into at most one other
+  exit) is accumulated once in one task, then one final in-tile pass with
+  the solved inflows. Integers, so bit-exact vs the reference recursion;
+  the job count does not grow with tile crossings.
+- Downstream traversals (basins, HAND, seed groups): numpy pointer doubling
+  per tile, then once over the cross-tile hop graph in one task
+  (``graph.resolve_tiled``); a fixed number of Spark jobs.
 - Global sequential labelings (channel segments, hillslopes): decompose into
   independent seed groups by pointer doubling (group = most-downstream
   valid cell of each flow path), run the EXACT single-seed oracle walk per
@@ -41,6 +42,13 @@ from . import graph, stencil
 
 IUNDEF = -9999
 F32_UNDEF = float(np.float32(UNDEF))
+# Round cap of the float fixpoint loops (fill, MFD, MFD HAND, pit removal):
+# each raises rather than return a surface that has not converged.
+MAX_FIXPOINT_ROUNDS = 64
+
+
+def _unconverged(op: str) -> RuntimeError:
+    return RuntimeError(f"{op}: no fixpoint after {MAX_FIXPOINT_ROUNDS} rounds")
 
 
 def _cid(i, j, meta: GridMeta):
@@ -91,8 +99,8 @@ def d8_flow_direction(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem
     return out
 
 
-def planchon_fill(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem",
-                  max_rounds: int = 64) -> DataFrame:
+def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
+                  dem_col="dem") -> DataFrame:
     """G1: Planchon & Darboux fill (planchon_2001.f90) — tile-iterative.
 
     The filled surface W is the unique fixpoint of
@@ -230,7 +238,7 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem",
     offs = F.array(*[F.struct(F.lit(oi).alias("oi"), F.lit(oj).alias("oj"))
                      for oi in (-1, 0, 1) for oj in (-1, 0, 1)])
     active: DataFrame | None = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_FIXPOINT_ROUNDS):
         relaxed = stencil.apply_stencil(state, meta, ["z", "w"], relax_kernel,
                                         out_cols, halo=1, only_tiles=active)
         if active is not None:
@@ -258,6 +266,8 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem",
                           & (F.col("tile_j") >= 0) & (F.col("tile_j") < ntj))
                   .distinct()
                   .localCheckpoint(eager=True))
+    else:
+        raise _unconverged("planchon_fill")
     return state.select("tile_i", "tile_j", "i", "j", F.col("w").alias("demns"))
 
 
@@ -296,20 +306,35 @@ def _local_index(gid: np.ndarray, q: np.ndarray) -> np.ndarray:
     return np.where(gid[order[loc]] == q, order[loc], -1)
 
 
+def _exit_acc(exits: pd.DataFrame, links: pd.DataFrame) -> pd.DataFrame:
+    """Accumulated outflow x(u) of every tile exit u: its zero-inflow base
+    plus the x of every exit linked into it, solved as one out-degree <= 1
+    forest by ``_topo_acc``. ``exits``: (u, base); ``links``: (a, b), exit a
+    drains into exit b. On one core a random 4M-exit forest solves in ~4 s
+    and ~900 MB: 0.7 s in the peel, most of the rest in the one renumbering
+    sort (``np.unique``)."""
+    u = exits["u"].to_numpy(np.int64)
+    a, b = links["a"].to_numpy(np.int64), links["b"].to_numpy(np.int64)
+    nodes, inv = np.unique(np.concatenate([u, a, b]), return_inverse=True)
+    base = np.zeros(nodes.size, np.int64)
+    base[inv[:u.size]] = exits["base"].to_numpy(np.int64)
+    x = _topo_acc(nodes.size, inv[u.size:u.size + a.size], inv[u.size + a.size:], base)
+    return pd.DataFrame({"u": u, "x": x[inv[:u.size]]})
+
+
 def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
                       mask_df: DataFrame | None = None,
-                      max_rounds: int = 64,
                       base_col: str | None = None) -> DataFrame:
     """G3 step 2 / G4: upstream cell counts -> area (terrain_tools.f90:232-249).
 
     fdir_df: (tile_i, tile_j, i, j, fi, fj). Exact integer accumulation:
-    in-tile sums are a local topological peel; cross-tile flow iterates as an
-    inflow edge table until the global count checksum is stable. Returns
+    in-tile sums are a local topological peel; cross-tile flow is solved
+    once on the tile-exit forest (``_exit_acc``), then every tile reruns
+    its peel with the solved inflows. Returns
     cells + acc (long) + area (double, float32-exact, -9999 where mask==0 or
     fdir undefined — mask applied when ``mask_df`` (i, j, mask) given).
     """
     t = meta.tile
-    spark = fdir_df.sparkSession
     valid = (F.col("fi") != IUNDEF) & (F.col("fi") >= 0) & (F.col("fi") < meta.nx) \
         & (F.col("fj") >= 0) & (F.col("fj") < meta.ny)
     edges = fdir_df.select(
@@ -362,16 +387,16 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
 
     kern = make_kernel()
 
-    # ---- tile condensation (two full passes + an O(perimeter) iteration).
+    # ---- tile condensation (two full passes + one O(perimeter) solve).
     # Integer acc is a LINEAR function of the boundary inflows with 0/1
     # coefficients: acc(v) = base_acc(v) + sum over inflow cells t whose
     # in-tile path passes v of inflow(t). Phase A computes, per tile, the
     # zero-inflow base acc at every cross-edge source u plus the transfer
-    # pairs (t -> u) [t's path exits at u]; phase B solves the boundary
-    # system on tables with O(perimeter) rows (rounds = max tile crossings
-    # of any flow path, each round tiny); phase C is one exact final pass
-    # with the converged inflows — bit-identical to iterating full passes,
-    # since integer addition is associative.
+    # pairs (t -> u) [t's path exits at u]; phase B composes each exit's
+    # cross edge with its target's transfer pair into an exit -> exit
+    # forest and accumulates it in one task (``_exit_acc``); phase C is one
+    # exact final pass with the solved inflows — bit-identical to iterating
+    # full passes, since integer addition is associative.
     ny = meta.ny
     nx = meta.nx
     cond_schema = "kind int, a long, b long, val long"
@@ -422,29 +447,15 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
         .select(F.col("a").alias("u"), F.col("val").alias("base"))
     pairs = condensed.filter(F.col("kind") == 1) \
         .select(F.col("a").alias("pt"), F.col("b").alias("pu"))
-    cross_sd = cross.select("src", "dst")
+    # exit -> exit forest: u' crosses into t, t's in-tile path exits at u
+    links = cross.join(pairs, cross.dst == pairs.pt) \
+        .select(F.col("src").alias("a"), F.col("pu").alias("b"))
+    x = (exits.withColumn("_xg", F.lit(0)).groupBy("_xg")
+         .cogroup(links.withColumn("_xg", F.lit(0)).groupBy("_xg"))
+         .applyInPandas(_exit_acc, schema="u long, x long"))
 
-    x = exits.withColumn("x", F.col("base")).localCheckpoint(eager=True)
-    prev = None
-    for _ in range(max_rounds):
-        chk = x.agg(F.sum("x")).collect()[0][0]
-        if chk == prev:
-            break
-        prev = chk
-        inflow = (cross_sd.join(x.select(F.col("u").alias("src"), "x"), "src")
-                  .groupBy("dst").agg(F.sum("x").alias("inf")))
-        upd = (pairs.join(inflow, pairs.pt == F.col("dst"))
-               .groupBy("pu").agg(F.sum("inf").alias("add")))
-        x = (exits.join(upd, exits.u == F.col("pu"), "left")
-             .select("u", "base",
-                     (F.col("base") + F.coalesce(F.col("add"), F.lit(0)))
-                     .alias("x"))).localCheckpoint(eager=False)
-
-    final_inflow = (cross_sd.join(x.select(F.col("u").alias("src"), "x"), "src")
-                    .groupBy("dst").agg(F.sum("x").alias("val")))
-    inflows = (cross.select("dst_ti", "dst_tj", "dst").distinct()
-               .join(final_inflow, "dst")
-               .select("dst_ti", "dst_tj", "dst", "val"))
+    inflows = (cross.join(x.select(F.col("u").alias("src"), "x"), "src")
+               .groupBy("dst_ti", "dst_tj", "dst").agg(F.sum("x").alias("val")))
     acc = (base_cells.groupBy("tile_i", "tile_j")
            .cogroup(inflows.groupBy("dst_ti", "dst_tj"))
            .applyInPandas(kern, schema=acc_schema)).localCheckpoint(eager=True)
@@ -930,13 +941,12 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     sequential ids in i-outer scan order.
 
     Per-tile connected components (local root = min global scan id), then
-    min-label propagation across tile-border equality edges on the CONTRACTED
-    component graph (a few rounds — the graph has one node per border
-    component, not per cell), then ids = rank of each component's min scan id
-    (== the reference's discovery order).
+    ``graph.connected_components`` over the tile-border equality edges of
+    the CONTRACTED component graph (one node per border component, not per
+    cell; one task), then ids = rank of each component's min scan id (==
+    the reference's discovery order).
     """
     t = meta.tile
-    scan = (F.col("i").cast("long") * meta.ny + F.col("j"))
     live = cells.filter(F.col(value_col) != F32_UNDEF) \
                 .select("tile_i", "tile_j", "i", "j", F.col(value_col).alias("val"))
 
@@ -990,33 +1000,19 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
              .select(F.col("r1").alias("x"), F.col("root").alias("y"))
     e2 = right.join(a, ["i", "j"]).filter(F.col("v1") == F.col("val")) \
               .select(F.col("r1").alias("x"), F.col("root").alias("y"))
-    edges = e1.unionByName(e2).distinct().localCheckpoint(eager=True)
-    edges_sym = edges.unionByName(edges.select(F.col("y").alias("x"), F.col("x").alias("y")))
-
-    roots = comp.select(F.col("root").alias("node")).distinct() \
-                .withColumn("lbl", F.col("node"))
-    while True:
-        nbr_min = edges_sym.join(roots.withColumnRenamed("node", "y2"),
-                                 F.col("y") == F.col("y2")) \
-                           .groupBy("x").agg(F.min("lbl").alias("nlbl"))
-        new = roots.join(nbr_min.withColumnRenamed("x", "node"), "node", "left") \
-                   .select("node", F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"))
-        # path compression: lbl = lbl(lbl)
-        l2 = new.select(F.col("node").alias("n2"), F.col("lbl").alias("l2"))
-        new = new.join(l2, new.lbl == F.col("n2"), "left") \
-                 .select("node", F.coalesce(F.col("l2"), F.col("lbl")).alias("lbl")) \
-                 .localCheckpoint(eager=True)
-        changed = new.join(roots.withColumnRenamed("lbl", "old"), "node") \
-                     .filter(F.col("lbl") != F.col("old"))
-        roots = new
-        if changed.isEmpty():
-            break
-
-    labeled = comp.join(roots.withColumnRenamed("node", "root"), "root")
-    # sequential numbering: rank of the component's min scan id
-    comp_min = labeled.groupBy("lbl").agg(F.min(F.col("i").cast("long") * meta.ny + F.col("j")).alias("mn"))
+    # a local root is its tile component's min scan id, so the min root of
+    # a merged component (the CC label) is the component's min scan id
+    merged = graph.connected_components(e1.unionByName(e2), "x", "y") \
+        .withColumnRenamed("node", "root")
+    lbl = (comp.select("root").distinct().join(merged, "root", "left")
+           .select("root", F.coalesce(F.col("comp"), F.col("root")).alias("lbl"))
+           .localCheckpoint(eager=True))
+    labeled = comp.join(lbl, "root")
+    # sequential numbering: rank of the component's min scan id (each label
+    # is the root of exactly one row: its own)
     from .seq import seq_ids
-    pid = seq_ids(comp_min, ["mn"], "pid", start=0).select("lbl", "pid")
+    pid = seq_ids(lbl.filter(F.col("root") == F.col("lbl")).select("lbl"),
+                  ["lbl"], "pid", start=0)
     return labeled.join(pid, "lbl").select("i", "j", F.col("pid").cast("double").alias("polygon"))
 
 
@@ -1109,8 +1105,7 @@ def _peel_levels(target: np.ndarray, dep_masks: list[np.ndarray]) -> list[np.nda
     return levels
 
 def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
-                     p: float = 1.0, dem_col: str = "dem",
-                     max_rounds: int = 64) -> DataFrame:
+                     p: float = 1.0, dem_col: str = "dem") -> DataFrame:
     """G5c Freeman multiple-flow-direction accumulation
     (terrain_tools.f90:517-626, ``fract_flow_mfd`` :581-626) — iterative
     tile+halo fixpoint matching oracle.mfd_acc bit-for-bit.
@@ -1209,7 +1204,7 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
 
     kern = make_kernel()
     prev_sum = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_FIXPOINT_ROUNDS):
         state = stencil.apply_stencil(state, meta, ["dem", "catch"], kern,
                                       [("dem", "float"), ("catch", "float")],
                                       halo=2).localCheckpoint(eager=False)
@@ -1219,6 +1214,8 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
         if chk == prev_sum:
             break
         prev_sum = chk
+    else:
+        raise _unconverged("mfd_accumulation")
     area = (F.lit(float(res32)).cast("float") * F.lit(float(res32)).cast("float")
             * F.col("catch").cast("float")).cast("float")
     return state.select("tile_i", "tile_j", "i", "j",
@@ -1245,8 +1242,8 @@ def acc_neighbors(cells: DataFrame, meta: GridMeta, res: float,
 
 def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
                       p: int = 1, dem_col: str = "dem",
-                      channel_col: str = "channels", mask_col: str = "mask",
-                      max_rounds: int = 64) -> DataFrame:
+                      channel_col: str = "channels",
+                      mask_col: str = "mask") -> DataFrame:
     """G12 ``calculate_depth2channel_mfd`` (terrain_tools.f90:628-746) —
     tile-iterative fixpoint matching oracle.depth2channel_mfd bit-for-bit.
 
@@ -1343,7 +1340,7 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
 
     kern = make_kernel()
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_FIXPOINT_ROUNDS):
         state = stencil.apply_stencil(
             state, meta, ["dem", "mask", "chan", "cd"], kern,
             [("dem", "float"), ("mask", "double"), ("chan", "double"),
@@ -1354,6 +1351,8 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
         if chk == prev:
             break
         prev = chk
+    else:
+        raise _unconverged("depth2channel_mfd")
     d2c = (F.col("dem").cast("float") - F.col("cd").cast("float")).cast("float")
     d2c = F.when(d2c < 0, F.lit(float(UNDEF))) \
            .when(F.col("mask") <= 0, F.lit(float(UNDEF))) \
@@ -1363,7 +1362,7 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
 
 
 def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
-                       dem_col: str = "dem", max_rounds: int = 64) -> DataFrame:
+                       dem_col: str = "dem") -> DataFrame:
     """G2 ``remove_pits`` (terrain_tools.f90:56-169): a non-border cell whose
     best (diagonal-corrected) slope is <= 0 is raised to its argmax-slope
     neighbor + 0.01*res, chasing downstream until no pit remains
@@ -1424,7 +1423,7 @@ def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
     state = cells.select("tile_i", "tile_j", "i", "j",
                          F.col(dem_col).alias("w")).localCheckpoint(eager=True)
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_FIXPOINT_ROUNDS):
         state = stencil.apply_stencil(state, meta, ["w"], relax,
                                       [("w", "double")], halo=1) \
             .localCheckpoint(eager=False)
@@ -1434,4 +1433,6 @@ def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
         if chk == prev:
             break
         prev = chk
+    else:
+        raise _unconverged("remove_pits_simple")
     return state.select("tile_i", "tile_j", "i", "j", F.col("w").alias("demns"))

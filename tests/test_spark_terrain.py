@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geospatialtools_spark.grid import cells_df, collect_dense
+from geospatialtools_spark.grid import UNDEF, cells_df, collect_dense
 from geospatialtools_spark.oracle import terrain as T
 from geospatialtools_spark.operators import terrain as ST
 from tests.conftest import BTH, RES, TH
@@ -281,3 +281,158 @@ def test_remove_pits_simple(spark, grid32):
                 length = T.DIAG * np.float32(RES) if (k + l) in (-2, 0, 2) else np.float32(RES)
                 slopes.append((got[i, j] - got[i + k, j + l]) / length)
             assert max(slopes) > 0, (i, j)
+
+
+def test_fixpoint_loops_raise_when_out_of_rounds(spark, grid32, golden32,
+                                                  monkeypatch):
+    """A float fixpoint loop that runs out of rounds raises, naming its
+    operator, instead of returning an unconverged surface."""
+    meta, dem, mask = grid32
+    monkeypatch.setattr(ST, "MAX_FIXPOINT_ROUNDS", 1)
+    raw = cells_df(spark, meta, dem=dem.astype(np.float64))
+    filled = cells_df(spark, meta, dem=golden32["filled"].astype(np.float64),
+                      channels=golden32["channels"].astype(np.int64),
+                      mask=mask.astype(np.int64))
+    runs = {"planchon_fill": lambda: ST.planchon_fill(raw, meta, RES),
+            "mfd_accumulation": lambda: ST.mfd_accumulation(filled, meta, RES),
+            "depth2channel_mfd": lambda: ST.depth2channel_mfd(filled, meta, RES),
+            "remove_pits_simple": lambda: ST.remove_pits_simple(raw, meta, RES)}
+    for name, run in runs.items():
+        with pytest.raises(RuntimeError, match=name):
+            run()
+
+
+def _walk(rows, i):
+    """Sequential reference for resolve_tiled: follow ptr from row i to the
+    first DONE row; a cycle or a ptr naming no row gives None."""
+    seen = set()
+    while True:
+        r = rows.get(i)
+        if r is None or i in seen:
+            return None
+        if r["done"]:
+            return r["label"]
+        seen.add(i)
+        i = r["ptr"]
+
+
+@pytest.mark.parametrize("label_type", ["long", "double"])
+def test_resolve_tiled_matches_sequential_walk(spark, label_type):
+    """resolve_tiled equals a sequential pointer walk on a 12x12 grid in
+    4x4 tiles: chains across 3+ tiles, in-tile and cross-tile cycles, a
+    ptr to a missing id and DONE rows with a NULL label."""
+    from geospatialtools_spark import fixtures
+    from geospatialtools_spark.operators import graph
+
+    n, t = 12, 4
+    meta = fixtures.dem_meta(n, n, t)
+    rng = np.random.RandomState(11)
+    off = 0.5 if label_type == "double" else 0
+
+    def cid(i, j):
+        return i * n + j
+
+    rows = {}
+    for i in range(n):
+        for j in range(n):
+            if rng.rand() < 0.15:
+                lab = None if rng.rand() < 0.2 else int(rng.randint(1, 1000)) + off
+                rows[cid(i, j)] = {"done": True, "ptr": None, "label": lab}
+            else:
+                di, dj = (int(d) for d in rng.randint(-1, 2, size=2))
+                rows[cid(i, j)] = {"done": False, "ptr": cid(i + di, j + dj),
+                                   "label": None}
+
+    def link(*path):
+        """Each cell of ``path`` points PENDING at the next one."""
+        for (i, j), nxt in zip(path, path[1:]):
+            rows[cid(i, j)] = {"done": False, "ptr": cid(*nxt), "label": None}
+
+    # row 0 drains west, then column 0 south, into one DONE cell: (0, 11)
+    # crosses five tiles
+    link(*[(0, j) for j in range(n - 1, -1, -1)], *[(i, 0) for i in range(1, n)])
+    rows[cid(n - 1, 0)] = {"done": True, "ptr": None, "label": 7 + off}
+    # in-tile cycle in tile (1, 1), entered from tile (1, 2)
+    link((5, 8), (5, 6), (6, 6), (5, 5), (5, 6))
+    # cross-tile cycle through tiles (0, 0), (0, 1), (1, 1), (1, 0)
+    link((3, 3), (3, 4), (4, 4), (4, 3), (3, 3))
+    # a ptr to an id that is not in the state, reached across a tile
+    link((9, 7), (9, 9), (9, 10))
+    del rows[cid(9, 10)]
+    # DONE rows with a NULL label, reached in-tile and across tiles
+    for i, j in ((2, 2), (2, 6)):
+        rows[cid(i, j)] = {"done": True, "ptr": None, "label": None}
+    link((2, 1), (2, 2))
+    link((2, 9), (2, 6))
+
+    want = {k: _walk(rows, k) for k in rows}
+    assert want[cid(0, 11)] == 7 + off
+    assert [want[cid(*c)] for c in ((5, 8), (3, 3), (9, 7), (2, 9))] == [None] * 4
+
+    state = spark.createDataFrame(
+        [(k, r["done"], r["ptr"], r["label"], k // n, k % n)
+         for k, r in rows.items()],
+        f"id long, done boolean, ptr long, label {label_type}, i int, j int")
+    got = {r["id"]: r["label"] for r in
+           graph.resolve_tiled(state, meta, label_type=label_type).collect()}
+    assert got == want
+
+
+# Spark jobs each boundary-graph operator runs (one noop write included):
+# the counts on oracle-built inputs, the same at 64^2 and 128^2 (tile 16).
+TERRAIN_JOB_BUDGET = {"acc": 16, "basins": 13, "hand": 13, "polygonize": 16}
+
+
+def test_terrain_operator_job_budget(spark):
+    """flow_accumulation, delineate_basins, depth2channel and polygonize
+    each run a fixed number of Spark jobs: equal at 64^2 and 128^2 (16 and
+    64 tiles, longer cross-tile paths), within TERRAIN_JOB_BUDGET, and
+    bit-equal to the oracle at both sizes."""
+    from geospatialtools_spark import fixtures
+    from geospatialtools_spark.oracle import rasterize as R
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (64, 128):
+        meta, dem, mask = fixtures.make_dem(n, n, tile=16)
+        filled = T.planchon_fill(dem, RES)
+        area, fdir = T.d8_acc(filled, mask, RES)
+        ch, _, _ = T.calculate_channels_wocean_wprop(area, TH, BTH, fdir, mask)
+        burned = R.rasterize(meta, fixtures.make_polygons(meta))
+        cells = cells_df(spark, meta, fi=fdir[:, :, 0].astype(np.int64),
+                         fj=fdir[:, :, 1].astype(np.int64),
+                         mask=mask.astype(np.int64), channels=ch,
+                         dem=filled.astype(np.float64),
+                         value=burned.astype(np.float64)).localCheckpoint()
+        want = {
+            "acc": ("area", area, UNDEF, np.float32),
+            "basins": ("basins", T.delineate_basins(ch, mask, fdir), -9999, np.int64),
+            "hand": ("hand", T.calculate_depth2channel(ch, mask.copy(), fdir,
+                                                       filled, leak=False),
+                     UNDEF, np.float32),
+            "polygonize": ("polygon", T.polygonize(burned), -9999, np.float64),
+        }
+        ops = {
+            "acc": lambda: ST.flow_accumulation(
+                cells.select("tile_i", "tile_j", "i", "j", "fi", "fj"), meta,
+                RES, mask_df=cells.select("i", "j", "mask")),
+            "basins": lambda: ST.delineate_basins(cells, meta),
+            "hand": lambda: ST.depth2channel(cells, meta),
+            "polygonize": lambda: ST.polygonize(cells, meta, "value"),
+        }
+        jobs[n] = {}
+        for op, run in ops.items():
+            group = f"terrain-budget-{n}-{op}"
+            sc.setJobGroup(group, "job budget")
+            try:
+                out = run()
+                out.write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[n][op] = len(sc.statusTracker().getJobIdsForGroup(group))
+            col, ref, fill, dtype = want[op]
+            got = collect_dense(meta, out, col, fill=fill, dtype=dtype)
+            assert np.array_equal(got, ref), (n, op)
+    assert jobs[64] == jobs[128], jobs
+    for op, budget in TERRAIN_JOB_BUDGET.items():
+        assert 0 < jobs[64][op] <= budget, (op, jobs)
