@@ -1355,10 +1355,10 @@ def _terrain_distributed(spark):
     """Distributed terrain chain (G1 fill -> G3 D8 -> G4 accumulation ->
     G6-G8 channels -> G9 basins -> G11 HAND -> G5c MFD acc -> G12 MFD HAND)
     on the 48x48 fixture DEM — computed ONCE per Spark app and memoized.
-    The gate grid is a single tile (the iterative operators then converge
-    in 2 rounds: compute + checksum-confirm), keeping the driver-gate cost
-    bounded; cross-tile halo correctness is proven by the multi-tile golden
-    bit-parity suite in tests/test_spark_terrain.py, not here.
+    The gate grid is a single tile (the float fixpoints then converge in
+    2 rounds: compute + a round with no tile to re-run), keeping the gate's
+    cost bounded; cross-tile halo correctness is proven by the multi-tile
+    golden bit-parity suite in tests/test_spark_terrain.py, not here.
 
     All four terrain gate queries (terrain_fill_acc, terrain_channels,
     terrain_pipeline, terrain_mfd) read from this chain: the first to run

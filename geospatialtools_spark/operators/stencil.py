@@ -67,35 +67,6 @@ def with_halo_copies(cells: DataFrame, meta: GridMeta, halo: int = 1) -> DataFra
     )
 
 
-def filter_tiles(df: DataFrame, meta: GridMeta,
-                 tiles: "set[tuple[int, int]] | DataFrame",
-                 keep: bool = True) -> DataFrame:
-    """Keep (or drop) rows whose (tile_i, tile_j) is in ``tiles``.
-
-    ``tiles`` may be a driver-side set OR a DataFrame with (tile_i, tile_j)
-    columns — the scale path: the active-tile frontier of a delta iteration
-    never leaves the cluster (no O(tiles) collect); the equi-semi-join lets
-    AQE broadcast it when small. Small sets become an ``isin`` literal
-    (narrow pre-shuffle filter); large sets a broadcast (semi/anti) join so
-    the plan stays sane when a 100 TB grid has 10^6 active tiles.
-    """
-    t = meta.tile
-    ntj = (meta.ny + t - 1) // t
-    key_expr = F.col("tile_i").cast("long") * ntj + F.col("tile_j")
-    if isinstance(tiles, DataFrame):
-        sel = tiles.select(
-            (F.col("tile_i").cast("long") * ntj + F.col("tile_j")).alias("tkey"))
-        return df.join(sel, key_expr == F.col("tkey"),
-                       "left_semi" if keep else "left_anti")
-    keys = [ti * ntj + tj for (ti, tj) in tiles]
-    if len(keys) <= 4096:
-        pred = key_expr.isin(keys) if keys else F.lit(False)
-        return df.filter(pred if keep else ~pred)
-    sel = df.sparkSession.createDataFrame([(k,) for k in sorted(keys)], "tkey long")
-    return df.join(F.broadcast(sel), key_expr == F.col("tkey"),
-                   "left_semi" if keep else "left_anti")
-
-
 def apply_stencil(
     cells: DataFrame,
     meta: GridMeta,
@@ -104,7 +75,6 @@ def apply_stencil(
     out_cols: list[tuple[str, str]],
     halo: int = 1,
     fill: float = np.nan,
-    only_tiles: "set[tuple[int, int]] | DataFrame | None" = None,
 ) -> DataFrame:
     """Run ``kernel`` per tile on dense (block, i0, j0, core_slice) inputs.
 
@@ -112,20 +82,9 @@ def apply_stencil(
     where each block covers [i0, i1) x [j0, j1) INCLUDING halo clipped to the
     grid; outputs must be same-shape arrays, of which only the core window is
     emitted. ``out_cols`` is [(name, spark_type_ddl)].
-
-    ``only_tiles`` restricts the kernel to a subset of (tile_i, tile_j):
-    the filter applies AFTER halo replication but BEFORE the groupBy, so the
-    shuffle and the Python roundtrip move only the subset's rows (plus their
-    halo donors) — the lever behind delta-iteration (re-relax only tiles
-    whose inputs changed). The caller is responsible for merging results
-    back over the untouched tiles. Small sets become an ``isin`` literal
-    (pre-shuffle narrow filter); large sets a broadcast semi-join, so the
-    plan stays sane when a 100 TB grid has 10^6 active tiles.
     """
     t = meta.tile
     haloed = with_halo_copies(cells, meta, halo)
-    if only_tiles is not None:
-        haloed = filter_tiles(haloed, meta, only_tiles, keep=True)
     schema = "tile_i int, tile_j int, i int, j int, " + ", ".join(
         f"{n} {ty}" for n, ty in out_cols
     )
@@ -145,9 +104,9 @@ def apply_stencil(
             b[ii, jj] = pdf[c].to_numpy()
             blocks[c] = b
         if getattr(kernel, "needs_core", False):
-            # core window in block coordinates — for kernels that must NOT
-            # touch halo cells (e.g. iterative fixpoints where halo rows are
-            # other tiles' current estimates)
+            # core window in block coordinates — for the float fixpoints'
+            # round step (terrain._fixpoint), whose halo rows are other
+            # tiles' current estimates and change flags
             res = kernel(blocks, i0, j0, meta,
                          (ci0 - i0, ci1 - i0, cj0 - j0, cj1 - j0))
         else:

@@ -5,10 +5,13 @@ Execution strategies, per operator class:
 - 3x3 stencils (slope/aspect, D8 flow direction, ocean-boundary detect):
   tile + halo ``applyInPandas`` over the numpy-oracle kernels — one narrow
   shuffle of border rows, exact per-cell results (operators/stencil.py).
-- Depression filling (Planchon): per-tile Gauss-Seidel relaxation to the
-  local fixpoint, halo exchange, repeat until a global checksum is stable.
-  W only decreases, so convergence to the unique fixpoint is monotone;
-  rounds ~ O(grid_dim / tile).
+- Float fixpoints (Planchon fill, MFD accumulation, MFD HAND, pit
+  removal): one loop, ``_fixpoint``. Each round is one stencil pass that
+  re-runs only the tiles whose halo changed in the last round; each kernel
+  takes its tile to the local fixpoint for that halo, and the loop stops
+  when no tile's core changed bit for bit. Fill only lowers W, so it
+  converges monotonically to the unique fixpoint; rounds ~ O(grid_dim /
+  tile).
 - Flow accumulation: two-level decomposition — exact in-tile topological
   sums, then the tile-exit forest (each exit drains into at most one other
   exit) is accumulated once in one task, then one final in-tile pass with
@@ -42,17 +45,59 @@ from . import graph, stencil
 
 IUNDEF = -9999
 F32_UNDEF = float(np.float32(UNDEF))
-# Round cap of the float fixpoint loops (fill, MFD, MFD HAND, pit removal):
-# each raises rather than return a surface that has not converged.
+# Round cap of the float fixpoint loop (fill, MFD, MFD HAND, pit removal):
+# _fixpoint raises rather than return a surface that has not converged.
 MAX_FIXPOINT_ROUNDS = 64
-
-
-def _unconverged(op: str) -> RuntimeError:
-    return RuntimeError(f"{op}: no fixpoint after {MAX_FIXPOINT_ROUNDS} rounds")
 
 
 def _cid(i, j, meta: GridMeta):
     return (F.col(i).cast("long") * meta.ny + F.col(j)).alias("id")
+
+
+def _fixpoint(state: DataFrame, meta: GridMeta, kernel,
+              cols: list[tuple[str, str]], halo: int, op: str) -> DataFrame:
+    """Iterate ``kernel`` over the tiles of ``state`` to the global fixpoint:
+    the one round loop of the float fixpoints (fill, MFD, MFD HAND, pit
+    removal).
+
+    ``kernel(blocks, i0, j0, meta, core)`` returns a block for every name of
+    ``cols`` [(name, spark_type_ddl)] without writing into ``blocks``, and
+    must leave its core at the local fixpoint for the halo it was given, or
+    raise: a tile whose halo did not change is never re-run.
+
+    Every cell carries ``_chg``, its tile's change flag of the last round.
+    Each round is one stencil pass: round 1 runs every tile; a later round
+    runs a tile only when some halo cell outside its core has ``_chg > 0``
+    and passes any other tile through with ``_chg = 0``. A tile that runs
+    sets ``_chg`` by comparing its output core with its input core bit for
+    bit. The round's only collect is max(_chg): 0 means converged. Raises
+    RuntimeError naming ``op`` after MAX_FIXPOINT_ROUNDS rounds.
+    """
+    names = [n for n, _ in cols]
+
+    def step(first: bool):
+        def run(blocks, i0, j0, m, core):
+            a0, a1, b0, b1 = core
+            woke = blocks["_chg"] > 0  # NaN (no cell) > 0 is False
+            woke[a0:a1, b0:b1] = False
+            if not first and not woke.any():
+                return {**blocks, "_chg": np.zeros(woke.shape, np.int8)}
+            res = kernel(blocks, i0, j0, m, core)
+            same = all(np.array_equal(res[n][a0:a1, b0:b1],
+                                      blocks[n][a0:a1, b0:b1], equal_nan=True)
+                       for n in names)
+            return {**res, "_chg": np.full(woke.shape, int(not same), np.int8)}
+        run.needs_core = True
+        return run
+
+    state = state.withColumn("_chg", F.lit(1).cast("tinyint"))
+    for r in range(MAX_FIXPOINT_ROUNDS):
+        state = stencil.apply_stencil(
+            state, meta, [*names, "_chg"], step(r == 0),
+            [*cols, ("_chg", "tinyint")], halo=halo).localCheckpoint(eager=False)
+        if not state.agg(F.max("_chg")).collect()[0][0]:
+            return state.drop("_chg")
+    raise RuntimeError(f"{op}: no fixpoint after {MAX_FIXPOINT_ROUNDS} rounds")
 
 
 # ---------------------------------------------------------------------------
@@ -105,11 +150,11 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
 
     The filled surface W is the unique fixpoint of
     ``W(c) = max(z(c), min_n(W(n) + eps))`` with W=z on border/undef-adjacent
-    cells; each round relaxes every tile to its local fixpoint (float32,
-    identical update arithmetic to the reference) with halo W fixed, then
-    re-exchanges halos. W is monotone non-increasing from the wmax
-    initialization, so the iteration converges to the same fixpoint the
-    reference's 8-direction scans find.
+    cells; each ``_fixpoint`` round relaxes every tile whose halo changed to
+    its local fixpoint (float32, identical update arithmetic to the
+    reference) with halo W fixed, then re-exchanges halos. W is monotone
+    non-increasing from the wmax initialization, so the iteration converges
+    to the same fixpoint the reference's 8-direction scans find.
     """
     eps = np.float32(np.float32(0.0001) * np.float32(res))
     wmax = np.float32(1000000.0)
@@ -176,8 +221,6 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
         z = np.nan_to_num(blocks["z"], nan=UNDEF).astype(np.float32)
         w = np.nan_to_num(blocks["w"], nan=UNDEF).astype(np.float32)
         nxb, nyb = z.shape
-        a0, a1, b0, b1 = core
-        w_in_core = w[a0:a1, b0:b1].copy()
         live = z != undef
         # fast descent: directional sweeps until stable. Every update is
         # min(w, max(z, fl32(w_nb + eps))) for a true neighbor, so w stays
@@ -187,9 +230,7 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
             if not _sweep_pass(z, w, live):
                 break
         # exact full-operator Jacobi = the fixpoint certificate (one
-        # no-change iteration after the sweeps converge; also the original
-        # relaxation path, kept verbatim)
-        settled = False
+        # no-change iteration after the sweeps converge)
         for _ in range(10000):
             cand = np.full(z.shape, np.inf, dtype=np.float32)
             for (k, l) in oracle.P8:
@@ -202,72 +243,15 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
             neww = np.maximum(z, cand)
             changed = upd & (neww < w)
             if not changed.any():
-                settled = True
-                break
+                return {"z": z, "w": w}
             w[changed] = neww[changed]
-        # delta-iteration signal: 0 = core untouched (neighbors need not
-        # wake), 1 = core changed (wake the 8 neighbor tiles), 2 = iteration
-        # cap hit before a clean no-change pass (also re-run THIS tile —
-        # unreachable with the sweeps, kept as a correctness belt)
-        flag = 0 if np.array_equal(w[a0:a1, b0:b1], w_in_core) else 1
-        if not settled:
-            flag = 2
-        chg = np.full(z.shape, flag, dtype=np.int8)
-        return {"z": z, "w": w, "chg": chg}
+        # _fixpoint never re-runs a tile whose halo did not change, so a
+        # tile left short of its local fixpoint would stay wrong
+        raise RuntimeError(f"planchon_fill: tile at ({i0}, {j0}) did not "
+                           "settle in 10000 Jacobi passes")
 
-    relax_kernel.needs_core = True
-
-    # Delta iteration: a tile leaves the active set when relaxing it was a
-    # no-op, and wakes only when a neighbor's CORE cells change (its halo
-    # inputs). Convergence = empty active set — exact (flags come from the
-    # kernel, no float checksum), and the certificate is the standard
-    # delta-iteration invariant: every inactive tile is at its local
-    # fixpoint w.r.t. current halos. Round cost shrinks from O(all tiles)
-    # to O(tiles on still-propagating depressions) — at 2048^2 most tiles
-    # settle in 2-3 rounds while a few large pits keep iterating.
-    #
-    # The frontier stays a DATAFRAME (r3 advice): the changed-tile set is
-    # expanded to its 8-neighborhood with an explode and fed back through a
-    # semi-join — the driver only ever sees the scalar count (convergence
-    # test), never O(tiles) rows. At a 10^8-tile production grid, round 1's
-    # frontier is the whole grid; collecting it would be a driver OOM.
-    t = meta.tile
-    nti = (meta.nx + t - 1) // t
-    ntj = (meta.ny + t - 1) // t
-    out_cols = [("z", "float"), ("w", "float"), ("chg", "tinyint")]
-    offs = F.array(*[F.struct(F.lit(oi).alias("oi"), F.lit(oj).alias("oj"))
-                     for oi in (-1, 0, 1) for oj in (-1, 0, 1)])
-    active: DataFrame | None = None
-    for _ in range(MAX_FIXPOINT_ROUNDS):
-        relaxed = stencil.apply_stencil(state, meta, ["z", "w"], relax_kernel,
-                                        out_cols, halo=1, only_tiles=active)
-        if active is not None:
-            untouched = stencil.filter_tiles(state, meta, active, keep=False) \
-                .select("tile_i", "tile_j", "i", "j", "z", "w") \
-                .withColumn("chg", F.lit(0).cast("tinyint"))
-            relaxed = relaxed.unionByName(untouched)
-        state = relaxed.localCheckpoint(eager=False)
-        # materializes the round's lazy checkpoint AND the (tiny) frontier
-        # in one job; count() below reads cached blocks
-        changed = (state.filter(F.col("chg") > 0)
-                   .groupBy("tile_i", "tile_j").agg(F.max("chg").alias("c"))
-                   .localCheckpoint(eager=True))
-        if changed.count() == 0:
-            break
-        # next active set: 8-neighbors of every changed tile, plus the tile
-        # itself when the kernel hit its iteration cap (chg == 2)
-        active = (changed
-                  .select("tile_i", "tile_j", "c", F.explode(offs).alias("o"))
-                  .filter((F.col("o.oi") != 0) | (F.col("o.oj") != 0)
-                          | (F.col("c") >= 2))
-                  .select((F.col("tile_i") + F.col("o.oi")).alias("tile_i"),
-                          (F.col("tile_j") + F.col("o.oj")).alias("tile_j"))
-                  .filter((F.col("tile_i") >= 0) & (F.col("tile_i") < nti)
-                          & (F.col("tile_j") >= 0) & (F.col("tile_j") < ntj))
-                  .distinct()
-                  .localCheckpoint(eager=True))
-    else:
-        raise _unconverged("planchon_fill")
+    state = _fixpoint(state, meta, relax_kernel, [("z", "float"), ("w", "float")],
+                      1, "planchon_fill")
     return state.select("tile_i", "tile_j", "i", "j", F.col("w").alias("demns"))
 
 
@@ -1110,11 +1094,13 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
     (terrain_tools.f90:517-626, ``fract_flow_mfd`` :581-626) — iterative
     tile+halo fixpoint matching oracle.mfd_acc bit-for-bit.
 
-    Each round re-derives every tile's catchment densely (descending-dem
-    order, float32 additions in the Fortran's positions order) using the
-    PREVIOUS round's neighbor-tile catchment estimates in the halo; upstream
-    tiles converge first, so the fixpoint arrives in <= tile-graph-diameter
-    rounds (detected by exact equality of the global float32 bit-checksum).
+    Each ``_fixpoint`` round re-derives the catchment of every tile whose
+    halo changed, densely (descending-dem order, float32 additions in the
+    Fortran's positions order), from the PREVIOUS round's neighbor-tile
+    catchment estimates in the halo; upstream tiles converge first. The
+    loop stops at the first round in which no tile's core changed bit for
+    bit: 19 passes on the 64^2 fixture in tiles of 16, though its 4x4 tile
+    graph has diameter 3.
     Halo = 2: the donor-side normalization (angle_sum of a halo-1 cell)
     needs that cell's own neighbors.
 
@@ -1125,7 +1111,6 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
     """
     from ..oracle.terrain import P8, DIAG
 
-    t = meta.tile
     res32 = np.float32(res)
     p32 = np.float32(p)
 
@@ -1168,54 +1153,39 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
         noffs = [k * w + l for (k, l) in P8]
         return levels, fracts, noffs
 
-    def make_kernel():
-        def kern(blocks, i0, j0, m, core):
-            dem = blocks["dem"].astype(np.float32)
-            prev = blocks["catch"].astype(np.float32)
-            h, w = dem.shape
-            key = _plan_key("mfd", i0, j0, (h, w), core, (dem,))
-            plan = _plan_cache_get(key)
-            if plan is None:
-                plan = _plan(dem, core)
-                _plan_cache_put(key, plan)
-            levels, fracts, noffs = plan
-            # level sweep: every donor (strictly higher) of a level-L cell is
-            # final (lower level => updated, halo/nan => fixed estimate);
-            # additions stay in P8 position order per cell => bit-equal to
-            # the sequential descending-dem sweep (oracle.mfd_acc main loop)
-            catch = prev.ravel().copy()
-            size = catch.size
-            for idxs in levels:
-                acc = np.ones(idxs.size, dtype=np.float32)
-                for pos in range(8):
-                    f = fracts[pos][idxs]
-                    nb = catch[np.clip(idxs + noffs[pos], 0, size - 1)]
-                    # mask like the d2c kernel: a neighbor absent from the
-                    # input table reads NaN and 0*NaN would poison the sum;
-                    # adding an explicit 0.0 where fract == 0 is the same
-                    # bit-exact no-op the zero-fract argument relies on
-                    contrib = np.where(f != 0.0, (f * nb).astype(np.float32),
-                                       np.float32(0.0))
-                    acc = (acc + contrib).astype(np.float32)
-                catch[idxs] = acc
-            return {"dem": dem, "catch": catch.reshape(h, w)}
-        kern.needs_core = True
-        return kern
+    def kern(blocks, i0, j0, m, core):
+        dem = blocks["dem"].astype(np.float32)
+        prev = blocks["catch"].astype(np.float32)
+        h, w = dem.shape
+        key = _plan_key("mfd", i0, j0, (h, w), core, (dem,))
+        plan = _plan_cache_get(key)
+        if plan is None:
+            plan = _plan(dem, core)
+            _plan_cache_put(key, plan)
+        levels, fracts, noffs = plan
+        # level sweep: every donor (strictly higher) of a level-L cell is
+        # final (lower level => updated, halo/nan => fixed estimate);
+        # additions stay in P8 position order per cell => bit-equal to
+        # the sequential descending-dem sweep (oracle.mfd_acc main loop)
+        catch = prev.ravel().copy()
+        size = catch.size
+        for idxs in levels:
+            acc = np.ones(idxs.size, dtype=np.float32)
+            for pos in range(8):
+                f = fracts[pos][idxs]
+                nb = catch[np.clip(idxs + noffs[pos], 0, size - 1)]
+                # mask like the d2c kernel: a neighbor absent from the
+                # input table reads NaN and 0*NaN would poison the sum;
+                # adding an explicit 0.0 where fract == 0 is the same
+                # bit-exact no-op the zero-fract argument relies on
+                contrib = np.where(f != 0.0, (f * nb).astype(np.float32),
+                                   np.float32(0.0))
+                acc = (acc + contrib).astype(np.float32)
+            catch[idxs] = acc
+        return {"dem": dem, "catch": catch.reshape(h, w)}
 
-    kern = make_kernel()
-    prev_sum = None
-    for _ in range(MAX_FIXPOINT_ROUNDS):
-        state = stencil.apply_stencil(state, meta, ["dem", "catch"], kern,
-                                      [("dem", "float"), ("catch", "float")],
-                                      halo=2).localCheckpoint(eager=False)
-        chk = state.select(
-            F.sum(F.crc32(F.col("catch").cast("float").cast("string")).cast("long"))
-        ).collect()[0][0]
-        if chk == prev_sum:
-            break
-        prev_sum = chk
-    else:
-        raise _unconverged("mfd_accumulation")
+    state = _fixpoint(state, meta, kern, [("dem", "float"), ("catch", "float")],
+                      2, "mfd_accumulation")
     area = (F.lit(float(res32)).cast("float") * F.lit(float(res32)).cast("float")
             * F.col("catch").cast("float")).cast("float")
     return state.select("tile_i", "tile_j", "i", "j",
@@ -1302,57 +1272,42 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
         noffs = [k * w + l for (k, l) in P8]
         return levels, fracts, valids, noffs
 
-    def make_kernel():
-        def kern(blocks, i0, j0, m, core):
-            dem = blocks["dem"].astype(np.float32)
-            mask = np.nan_to_num(blocks["mask"], nan=0.0)
-            chan = np.nan_to_num(blocks["chan"], nan=0.0)
-            cd = np.nan_to_num(blocks["cd"], nan=float(UNDEF)).astype(np.float32)
-            h, w = dem.shape
-            key = _plan_key("d2c", i0, j0, (h, w), core, (dem, mask, chan))
-            plan = _plan_cache_get(key)
-            if plan is None:
-                plan = _plan(dem, mask, chan, core)
-                _plan_cache_put(key, plan)
-            levels, fracts, valids, noffs = plan
-            # ascending-dem level sweep; the acc == undef VALUE check (not a
-            # flag) is preserved from the sequential kernel so a partial sum
-            # that lands exactly on -9999 resets identically
-            cdf = cd.ravel()
-            size = cdf.size
-            zero32 = np.float32(0.0)
-            for idxs in levels:
-                acc = np.full(idxs.size, undef32, dtype=np.float32)
-                for pos in range(8):
-                    v = valids[pos][idxs]
-                    nb = cdf[np.clip(idxs + noffs[pos], 0, size - 1)]
-                    contrib = fracts[pos][idxs] * nb
-                    acc = np.where(v & (acc == undef32), zero32, acc)
-                    acc = (acc + np.where(v, contrib, zero32)).astype(np.float32)
-                cdf[idxs] = acc
-            # dem/cd exchange as float32 (kernel arithmetic is float32);
-            # mask/chan stay double — segment ids can exceed float32's
-            # 2^24 exact-integer range at continental scale
-            return {"dem": dem, "mask": mask,
-                    "chan": chan, "cd": cdf.reshape(h, w)}
-        kern.needs_core = True
-        return kern
+    def kern(blocks, i0, j0, m, core):
+        dem = blocks["dem"].astype(np.float32)
+        mask = np.nan_to_num(blocks["mask"], nan=0.0)
+        chan = np.nan_to_num(blocks["chan"], nan=0.0)
+        cd = np.nan_to_num(blocks["cd"], nan=float(UNDEF)).astype(np.float32)
+        h, w = dem.shape
+        key = _plan_key("d2c", i0, j0, (h, w), core, (dem, mask, chan))
+        plan = _plan_cache_get(key)
+        if plan is None:
+            plan = _plan(dem, mask, chan, core)
+            _plan_cache_put(key, plan)
+        levels, fracts, valids, noffs = plan
+        # ascending-dem level sweep; the acc == undef VALUE check (not a
+        # flag) is preserved from the sequential kernel so a partial sum
+        # that lands exactly on -9999 resets identically
+        cdf = cd.ravel()
+        size = cdf.size
+        zero32 = np.float32(0.0)
+        for idxs in levels:
+            acc = np.full(idxs.size, undef32, dtype=np.float32)
+            for pos in range(8):
+                v = valids[pos][idxs]
+                nb = cdf[np.clip(idxs + noffs[pos], 0, size - 1)]
+                contrib = fracts[pos][idxs] * nb
+                acc = np.where(v & (acc == undef32), zero32, acc)
+                acc = (acc + np.where(v, contrib, zero32)).astype(np.float32)
+            cdf[idxs] = acc
+        # dem/cd exchange as float32 (kernel arithmetic is float32);
+        # mask/chan stay double — segment ids can exceed float32's
+        # 2^24 exact-integer range at continental scale
+        return {"dem": dem, "mask": mask,
+                "chan": chan, "cd": cdf.reshape(h, w)}
 
-    kern = make_kernel()
-    prev = None
-    for _ in range(MAX_FIXPOINT_ROUNDS):
-        state = stencil.apply_stencil(
-            state, meta, ["dem", "mask", "chan", "cd"], kern,
-            [("dem", "float"), ("mask", "double"), ("chan", "double"),
-             ("cd", "float")], halo=1).localCheckpoint(eager=False)
-        chk = state.select(
-            F.sum(F.crc32(F.col("cd").cast("float").cast("string")).cast("long"))
-        ).collect()[0][0]
-        if chk == prev:
-            break
-        prev = chk
-    else:
-        raise _unconverged("depth2channel_mfd")
+    state = _fixpoint(state, meta, kern,
+                      [("dem", "float"), ("mask", "double"), ("chan", "double"),
+                       ("cd", "float")], 1, "depth2channel_mfd")
     d2c = (F.col("dem").cast("float") - F.col("cd").cast("float")).cast("float")
     d2c = F.when(d2c < 0, F.lit(float(UNDEF))) \
            .when(F.col("mask") <= 0, F.lit(float(UNDEF))) \
@@ -1370,11 +1325,15 @@ def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
     :140-141; diagonal lengths corrected :148-152).
 
     Tile-iterative chaotic iteration of the same monotone raising operator:
-    per round each tile chases its pits to a local fixpoint with halo fixed,
-    then halos re-exchange. Raises are monotone so the iteration converges;
-    the surface agrees with the serial oracle up to raise-order float32
-    effects on flats (tested pit-free under the oracle's own criterion and
-    equal to the oracle within one minslope step).
+    per ``_fixpoint`` round each tile whose halo changed chases its pits to
+    a local fixpoint with halo fixed, then halos re-exchange. Raises are
+    monotone so the iteration converges, but slowly: each round raises a
+    depression that straddles a tile border by about one minslope step, so
+    rounds grow with its depth in steps (the 64^2 fixture in tiles of 16
+    needs 76 rounds and raises at MAX_FIXPOINT_ROUNDS). The surface differs
+    from the serial oracle by raise order on flats; it is tested pit-free
+    under the oracle's own criterion and within five minslope steps
+    (5 * 0.01 * res) of the oracle.
     """
     from ..oracle.terrain import DIAG, P8
 
@@ -1394,9 +1353,14 @@ def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
                     or gj0 + j == 0 or gj0 + j == m.ny - 1)
 
         stack = [(i, j) for i in range(ci0, ci1) for j in range(cj0, cj1)]
-        guard = 0
-        while stack and guard < 10_000_000:
-            guard += 1
+        pops = 0
+        while stack:
+            pops += 1
+            if pops > 10_000_000:
+                # _fixpoint never re-runs a tile whose halo did not
+                # change, so pits left on the stack would stay
+                raise RuntimeError(f"remove_pits_simple: tile at ({i0}, {j0}) "
+                                   "still had pits after 10M stack pops")
             i, j = stack.pop()
             if not (ci0 <= i < ci1 and cj0 <= j < cj1):
                 continue  # only raise core cells; halo is other tiles' state
@@ -1418,21 +1382,9 @@ def remove_pits_simple(cells: DataFrame, meta: GridMeta, res: float,
                 for (k, l) in P8:
                     stack.append((i + k, j + l))
         return {"w": demb.astype(np.float64)}
-    relax.needs_core = True
 
     state = cells.select("tile_i", "tile_j", "i", "j",
                          F.col(dem_col).alias("w")).localCheckpoint(eager=True)
-    prev = None
-    for _ in range(MAX_FIXPOINT_ROUNDS):
-        state = stencil.apply_stencil(state, meta, ["w"], relax,
-                                      [("w", "double")], halo=1) \
-            .localCheckpoint(eager=False)
-        chk = state.select(
-            F.sum(F.crc32(F.col("w").cast("float").cast("string")).cast("long"))
-        ).collect()[0][0]
-        if chk == prev:
-            break
-        prev = chk
-    else:
-        raise _unconverged("remove_pits_simple")
+    state = _fixpoint(state, meta, relax, [("w", "double")], 1,
+                      "remove_pits_simple")
     return state.select("tile_i", "tile_j", "i", "j", F.col("w").alias("demns"))
