@@ -13,6 +13,8 @@ docs/sec and PIP-tests/sec derived rates.
 (local[N] and local[4N], fresh JVM each) on the same input and reports
 throughput at both plus scaling efficiency — the sandbox proxy for the
 north_rule's N vs 4N executor criterion (no real cluster available here).
+Each of those runs is a ``--flagship-only`` child: the flagship alone, one
+JSON line. Any other argument exits 2 with a usage line.
 """
 
 from __future__ import annotations
@@ -209,7 +211,7 @@ def main_scaling():
     (rate_4N / rate_N) / 4.
 
     Uses a larger doc count than the default bench (SPARK_GRAFT_SCALE_DOCS,
-    default 80M): scaling efficiency is only meaningful when per-job fixed
+    default 160M): scaling efficiency is only meaningful when per-job fixed
     costs (JVM/session setup, Python-worker spin-up, dimension broadcast) are
     amortized — at 10^12-doc production scale they vanish entirely, so the
     bigger input is the honest sandbox proxy.
@@ -237,10 +239,13 @@ def main_scaling():
         rep_rates[cpus] = []
         for _ in range(reps):  # best-of-K: host-level noise swings single
             env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),  # runs ~2x
-                       SPARK_GRAFT_BENCH_DOCS=scale_docs,
-                       SPARK_GRAFT_BENCH_MODE="flagship-only")
+                       SPARK_GRAFT_BENCH_DOCS=scale_docs)
             out = subprocess.run([sys.executable, __file__, "--flagship-only"],
                                  capture_output=True, text=True, env=env)
+            if out.returncode != 0:
+                raise RuntimeError(
+                    f"--flagship-only at local[{cpus}] exited {out.returncode}:"
+                    f"\n{out.stderr[-2000:]}")
             line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
             r = json.loads(line)
             rep_rates[cpus].append(r["flagship"]["docs_per_sec"])
@@ -264,1173 +269,6 @@ def main_scaling():
     }))
 
 
-def main_polys():
-    """Polygon-count scaling of the rasterize kernel (VERDICT r2 item 5
-    evidence): burn N synthetic rectangles (N = 8 fixture-sized, 1k, 10k)
-    onto the 1024^2 grid and report wall + polys/sec per point. The
-    tile-cogroup path's work is O(sum of covered cells) — wall should grow
-    ~linearly in polygon count once N dominates fixed costs."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions import synth as SY
-    from geospatialtools_spark.operators.rasterize import rasterize
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-polys")
-    meta = _meta()
-    grid, tile = GRID, TILE
-    cells = (spark.range(grid * grid)
-             .select((F.col("id") / grid).cast("int").alias("i"),
-                     (F.col("id") % grid).cast("int").alias("j"))
-             .withColumn("tile_i", (F.col("i") / tile).cast("int"))
-             .withColumn("tile_j", (F.col("j") / tile).cast("int"))
-             ).localCheckpoint(eager=True)
-    counts = [int(x) for x in os.environ.get(
-        "SPARK_GRAFT_POLY_COUNTS", "8,1000,10000").split(",")]
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # warm-up: one small burn pays codegen + Python-worker spin-up
-    rasterize(cells, spark.createDataFrame(SY.rects_polygon_pdf()), meta) \
-        .filter(F.col("attr") != -9999.0).count()
-    points = []
-    for n in counts:
-        pdf = SY.rects_polygon_pdf() if n == 8 else SY.many_rects_pdf(n)
-        polys = spark.createDataFrame(pdf).localCheckpoint(eager=True)
-        rec = {"n_polys": n}
-        # both strategies at every count: broadcast (driver-parsed dimension,
-        # zero-exchange) and tile-cogroup (the 10^5+-polygon scale path);
-        # the two kernels are bit-equal (asserted in tests), so burned_cells
-        # must agree here too
-        for label, cap in (("broadcast", 10000), ("cogroup", 0)):
-            if label == "broadcast" and n > cap:
-                continue
-            best, burned_n = float("inf"), None
-            for _ in range(max(1, reps)):
-                t0 = time.time()
-                burned_n = rasterize(cells, polys, meta,
-                                     max_broadcast_polys=cap) \
-                    .filter(F.col("attr") != -9999.0).count()
-                best = min(best, time.time() - t0)
-            rec[f"{label}_wall_s"] = round(best, 3)
-            rec[f"{label}_burned_cells"] = int(burned_n)
-        points.append(rec)
-    print(json.dumps({
-        "metric": "rasterize wall vs polygon count (1024^2 grid, tile 128)",
-        "points": points,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def synth_planted_docs(spark, n: int):
-    """Planted duplicate-cluster corpus — now lives in the package
-    (``fixtures.planted_docs``) so spark-submit jobs can ship it; text is
-    the same xxhash64-token construction, so all committed dedup numbers
-    still describe this generator. Kept as the (doc_id, text) projection
-    the dedup benches always used."""
-    from geospatialtools_spark.fixtures import planted_docs
-    return planted_docs(spark, n, checkpoint=False) \
-        .select("doc_id", "text").localCheckpoint(eager=True)
-
-
-def main_dedup():
-    """Dedup-at-scale evidence (BASELINE.md) on the planted-cluster corpus
-    (synth_planted_docs).
-
-    Beyond pair recall, this measures GROUP RESOLUTION (round 4): the
-    3-clusters exist precisely so that dedup_groups must merge A~B and B~C
-    transitively and pick the longest-text member (m+2) as keeper —
-    checkable per group without any driver-side truth table."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.dedup import (dedup_groups,
-                                                       exact_dups,
-                                                       minhash_lsh_pairs)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-dedup")
-    n = int(os.environ.get("SPARK_GRAFT_DEDUP_DOCS", "500000"))
-    docs = synth_planted_docs(spark, n)
-    minhash_lsh_pairs(docs.limit(5000)).count()   # warm
-    t0 = time.time()
-    pairs = minhash_lsh_pairs(docs).localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    t_mh = round(time.time() - t0, 2)
-    # a pair is planted iff both ids sit in the same block's cluster
-    same_block = (F.col("id_a") - F.col("id_a") % 20
-                  == F.col("id_b") - F.col("id_b") % 20)
-    in3 = (F.col("id_a") % 20 <= 2) & (F.col("id_b") % 20 <= 2)
-    in2 = (F.col("id_a") % 20).isin(10, 11) & (F.col("id_b") % 20).isin(10, 11)
-    planted = pairs.filter(same_block & (in3 | in2)).count()
-    # group resolution: transitive clusters + keeper assignment, verified
-    # against the planted layout (3-clusters keep m+2: the longest text)
-    t0 = time.time()
-    groups = dedup_groups(docs, pairs).localCheckpoint(eager=True)
-    n_members = groups.count()
-    t_gr = round(time.time() - t0, 2)
-    g3 = (groups.filter(F.col("group_id") % 20 == 0).groupBy("group_id")
-          .agg(F.max("group_size").alias("sz"),
-               F.max("keeper_id").alias("k"), F.count("*").alias("m")))
-    g3_total = g3.count()
-    g3_ok = g3.filter((F.col("sz") == 3) & (F.col("m") == 3)
-                      & (F.col("k") % 20 == 2)
-                      & (F.col("k") - F.col("group_id") == 2)).count()
-    g2 = (groups.filter(F.col("group_id") % 20 == 10).groupBy("group_id")
-          .agg(F.max("group_size").alias("sz"), F.max("keeper_id").alias("k")))
-    g2_ok = g2.filter((F.col("sz") == 2)
-                      & (F.col("k") - F.col("group_id") == 1)).count()
-    t0 = time.time()
-    n_exact = exact_dups(docs).count()
-    t_ex = round(time.time() - t0, 2)
-    print(json.dumps({
-        "metric": "minhash-lsh dedup + group resolution on planted-cluster corpus",
-        "docs": n, "wall_s": t_mh, "docs_per_sec": round(n / t_mh, 1),
-        "candidate_pairs": n_pairs, "planted_pairs_found": planted,
-        "false_positives": n_pairs - planted,
-        "planted_3clusters": n // 20, "planted_2clusters": n // 20,
-        "groups_wall_s": t_gr, "group_members": n_members,
-        "full_3clusters_with_correct_keeper": g3_ok,
-        "3cluster_groups_seen": g3_total,
-        "full_2clusters_with_correct_keeper": g2_ok,
-        "exact_dups_wall_s": t_ex, "exact_dup_groups": n_exact,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_curation():
-    """End-to-end curation-chain evidence for the round-5 library entry
-    point (pipeline.run_curation_pipeline): the planted-cluster corpus
-    through dedup -> near-dedup group resolution -> quality -> PII ->
-    split -> shard, every stage StageRunner-committed. The planted layout
-    makes survivorship EXACT ground truth, not an estimate: each 20-doc
-    block loses m/m+1 (exact + near dup of keeper m+2) and m+10 (near dup
-    of keeper m+11), so exactly 17/20 of the corpus survives and every
-    survivor block keeps m+2 and m+11. quality_min=0 isolates the dedup
-    semantics (hash-random token bodies have no natural-language stopword
-    profile for the quality score to rank)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.pipeline import (CurationConfig,
-                                                run_curation_pipeline)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-curation")
-    n = int(os.environ.get("SPARK_GRAFT_CURATION_DOCS", "10000000"))
-    docs = synth_planted_docs(spark, n).withColumn(
-        "n_chars", F.length("text"))
-    ckpt = os.environ.get("SPARK_GRAFT_CURATION_CKPT") or tempfile.mkdtemp(
-        prefix="bench_curation_")
-    cfg = CurationConfig(quality_min=0.0, shard_budget=2_000_000)
-    t0 = time.time()
-    out = run_curation_pipeline(spark, docs, cfg, ckpt)
-    survivors = out["scrub"].localCheckpoint(eager=True)
-    n_out = survivors.count()
-    wall = round(time.time() - t0, 2)
-    # keeper correctness: the planted non-keepers (mod 0/1/10) must be gone,
-    # the planted keepers (mod 2/11) all present
-    mod = F.col("doc_id") % 20
-    n_nonkeepers = survivors.filter(mod.isin(0, 1, 10)).count()
-    n_keepers = survivors.filter(mod.isin(2, 11)).count()
-    n_shards = out["shard"].select("shard").distinct().count()
-    if not os.environ.get("SPARK_GRAFT_CURATION_CKPT"):
-        shutil.rmtree(ckpt, ignore_errors=True)
-    print(json.dumps({
-        "metric": "one-call curation pipeline on planted-cluster corpus",
-        "docs": n, "wall_s": wall, "docs_per_sec": round(n / wall, 1),
-        "survivors": n_out, "expected_survivors": n * 17 // 20,
-        "planted_nonkeepers_remaining": n_nonkeepers,
-        "planted_keepers_kept": n_keepers,
-        "planted_keepers_expected": 2 * (n // 20),
-        "train_shards": n_shards,
-        "stage_metrics": out["_metrics"],
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def synth_vectors(spark, n: int, dim: int, id_name: str, vec_name: str,
-                  salt: str):
-    """Deterministic uniform-random unit-cube vectors, synthesized JVM-side
-    (no driver loop): component c of row i = xxhash64(i, salt, c) mapped to
-    [-1, 1]. Uniform-random is sign-LSH's WORST case (no cluster structure),
-    so the recall numbers below are floors — real embedding corpora cluster
-    and recall rises."""
-    from pyspark.sql import functions as F
-    comps = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda c: (F.pmod(F.xxhash64(F.col(id_name), F.lit(salt), c),
-                          F.lit(2000003)).cast("double") / 1000001.0
-                   - 1.0).cast("float"))
-    return (spark.range(n).select(F.col("id").alias(id_name))
-            .withColumn(vec_name, comps))
-
-
-def main_ann():
-    """ANN recall/latency curve (VERDICT r4 item 6): at SPARK_GRAFT_ANN_VECS
-    corpus vectors (default 1M; the BASELINE series runs 1M and 10M), dim 64,
-    25 queries, top-10 — measure
-
-    - brute exact cosine (the ground truth AND the latency ceiling),
-    - IVF with the round-5 build/probe split: index build timed ONCE, then
-      every nprobe point pays only the probe (two probe reps per point, so
-      the artifact itself shows the second query not re-paying the build),
-    - sign-LSH bucket join at multi-probe radius 0/1/2.
-
-    Recall = |approx top-10 ∩ exact top-10| / (25 x 10), exact ground truth
-    (not sampled). One JSON line."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.similarity import (
-        bucketed_topk, build_ivf_index, cosine_topk, ivf_probe)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-ann")
-    n = int(os.environ.get("SPARK_GRAFT_ANN_VECS", "1000000"))
-    dim, k, n_q, n_cent = 64, 10, 25, 64
-    corpus = synth_vectors(spark, n, dim, "vec_id", "embedding",
-                           "c").localCheckpoint(eager=True)
-    queries = synth_vectors(spark, n_q, dim, "query_id", "q_vec",
-                            "q").localCheckpoint(eager=True)
-
-    def topk_sets(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return out
-
-    # warm: tiny runs pay codegen + Python-worker spin-up
-    small = corpus.limit(10000).localCheckpoint(eager=True)
-    cosine_topk(small, queries, k=k).count()
-    ivf_probe(build_ivf_index(small, dim, n_centroids=8, n_corpus=10000),
-              queries, k=k, nprobe=2).count()
-
-    t0 = time.time()
-    truth = topk_sets(cosine_topk(corpus, queries, k=k).collect())
-    t_exact = round(time.time() - t0, 2)
-    denom = sum(len(v) for v in truth.values())
-
-    def recall(rows):
-        got = topk_sets(rows)
-        return round(sum(len(got.get(q, set()) & truth[q])
-                         for q in truth) / denom, 3)
-
-    t0 = time.time()
-    index = build_ivf_index(corpus, dim, n_centroids=n_cent, n_corpus=n)
-    t_build = round(time.time() - t0, 2)
-    ivf_points = []
-    for nprobe in (8, 32):
-        reps, rows = [], None
-        for _ in range(2):
-            t0 = time.time()
-            rows = ivf_probe(index, queries, k=k, nprobe=nprobe).collect()
-            reps.append(round(time.time() - t0, 2))
-        ivf_points.append({"nprobe": nprobe, "probe_wall_s_reps": reps,
-                           "probe_wall_s": min(reps), "recall": recall(rows)})
-    lsh_points = []
-    for r in (0, 1, 2):
-        t0 = time.time()
-        rows = bucketed_topk(corpus, queries, dim, k=k, n_planes=8,
-                             probe_radius=r).collect()
-        lsh_points.append({"radius": r,
-                           "wall_s": round(time.time() - t0, 2),
-                           "recall": recall(rows)})
-    print(json.dumps({
-        "metric": "ANN recall/latency (dim 64, top-10, 25 queries, "
-                  "uniform-random worst case)",
-        "vectors": n, "exact_wall_s": t_exact,
-        "ivf_build_wall_s": t_build, "n_centroids": n_cent,
-        "ivf": ivf_points, "lsh": lsh_points,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def synth_lined_docs(spark, n: int):
-    """Corpus with planted LINE structure for line_dedup ground truth.
-    Every doc has 5 newline-joined lines:
-
-    - pos 0: one of THREE boilerplate lines (doc_id % 3) — each repeats in
-      n/3 documents, the worst-case skew the map-side-combined winner
-      election must absorb;
-    - pos 1-3: unique hash-random lines (xxhash64 of (doc_id, line_idx));
-    - pos 4: a line shared by each 100-doc block (repeats 100x).
-
-    After first-occurrence dedup, doc d keeps 3 + [d<=2] + [d%100==0]
-    lines, so sum(n_kept) = 3n + min(3, n) + ceil(n/100) exactly."""
-    from pyspark.sql import functions as F
-    uniq = [F.concat_ws(" ", F.transform(
-        F.sequence(F.lit(0), F.lit(7)),
-        lambda i: F.concat(F.lit("u"), F.pmod(F.xxhash64(F.concat(
-            F.col("doc_id").cast("string"), F.lit(f"_{p}_"),
-            i.cast("string"))), F.lit(999983)).cast("string"))))
-        for p in (1, 2, 3)]
-    boiler = F.concat(F.lit("please enable feature "),
-                      (F.col("doc_id") % 3).cast("string"),
-                      F.lit(" to continue browsing this site"))
-    block = F.concat(F.lit("block banner "),
-                     (F.col("doc_id") - F.col("doc_id") % 100).cast("string"))
-    return (spark.range(n).select(F.col("id").alias("doc_id"))
-            .withColumn("text", F.concat_ws("\n", boiler, *uniq, block))
-            .localCheckpoint(eager=True))
-
-
-def main_lines():
-    """Line-op + sampling/packing scale evidence (BASELINE.md):
-
-    - line_dedup on the planted-line corpus (SPARK_GRAFT_LINE_DOCS docs x
-      5 lines, two planted skew tiers) — exact sum(n_kept) ground truth;
-    - weighted_sample top-k over the same corpus (TakeOrderedAndProject);
-    - pack_sequences next-fit packing — verified pack-fill bound (every
-      multi-doc pack <= capacity) computed as one aggregate."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.lines import line_dedup
-    from geospatialtools_spark.functions.sampling import (pack_sequences,
-                                                          weighted_sample)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-lines")
-    n = int(os.environ.get("SPARK_GRAFT_LINE_DOCS", "5000000"))
-    docs = synth_lined_docs(spark, n)
-    line_dedup(docs.limit(2000)).count()          # warm
-    t0 = time.time()
-    out = line_dedup(docs).localCheckpoint(eager=True)
-    n_docs = out.count()
-    t_ld = round(time.time() - t0, 2)
-    agg = out.agg(F.sum("n_kept").alias("kept"),
-                  F.sum("n_lines").alias("total")).head()
-    # 3 unique lines per doc + one first occurrence per boilerplate
-    # variant (3, or n when n < 3) + one banner per (possibly partial)
-    # 100-doc block
-    expect_kept = 3 * n + min(3, n) + -(-n // 100)
-
-    docs_w = docs.withColumn("n_chars", F.length("text"))
-    k = max(10_000, n // 500)
-    t0 = time.time()
-    n_sample = weighted_sample(docs_w, "doc_id", "n_chars", k=k).count()
-    t_ws = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    packed = pack_sequences(docs_w.select("doc_id", "n_chars"), "doc_id",
-                            "n_chars", capacity=2048) \
-        .localCheckpoint(eager=True)
-    n_packed = packed.count()
-    t_pk = round(time.time() - t0, 2)
-    fills = packed.groupBy("shard", "pack").agg(
-        F.sum("n_chars").alias("fill"), F.count("*").alias("m"))
-    n_over = fills.filter((F.col("fill") > 2048) & (F.col("m") > 1)).count()
-    n_packs = fills.count()
-
-    print(json.dumps({
-        "metric": "line dedup + weighted sample + sequence packing at scale",
-        "docs": n, "lines": 5 * n,
-        "line_dedup_wall_s": t_ld,
-        "line_dedup_docs_per_sec": round(n / t_ld, 1),
-        "line_dedup_lines_per_sec": round(5 * n / t_ld, 1),
-        "docs_out": n_docs,
-        "kept_lines": int(agg["kept"]), "expected_kept": expect_kept,
-        "total_lines_seen": int(agg["total"]),
-        "weighted_sample_k": k, "weighted_sample_wall_s": t_ws,
-        "weighted_sample_rows": n_sample,
-        "pack_wall_s": t_pk, "packed_rows": n_packed, "packs": n_packs,
-        "multi_doc_packs_over_capacity": n_over,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_passages():
-    """passage_dedup scale evidence with EXACT planted ground truth
-    (BASELINE.md): every doc is 10 globally-unique prefix words + (for
-    doc_id % 10 == 0) a fixed 12-token boilerplate passage + 8 globally-
-    unique suffix words. Unique words are derived from (doc_id, slot), so
-    any window touching one is globally unique and never drops; the only
-    duplicated windows are the ones fully inside the planted passage,
-    whose covered-position union is exactly the 12 passage tokens. Hence
-    dropped tokens = 12 * (n_planted - 1) EXACTLY, and the keeper (doc 0)
-    survives verbatim. The single shared passage repeated in n/10 docs is
-    also the worst-case window skew the map-side-combined election must
-    absorb."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.lines import passage_dedup
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-passages")
-    n = int(os.environ.get("SPARK_GRAFT_PASSAGE_DOCS", "5000000"))
-
-    def uniq(k: int, cnt: int):
-        return [F.concat(F.lit(f"u{k}_"), F.col("doc_id").cast("string"),
-                         F.lit(f"_{i}") ) for i in range(cnt)]
-
-    passage = "terms of service apply to all content on this site today ok"
-    assert len(passage.split()) == 12
-    docs = (spark.range(n).select(F.col("id").alias("doc_id"))
-            .withColumn("text", F.concat_ws(
-                " ", *uniq(0, 10),
-                F.when(F.col("doc_id") % 10 == 0, F.lit(passage))
-                 .otherwise(F.lit("")),
-                *uniq(1, 8)))
-            # the empty when-branch leaves a double space; words_array
-            # ignores it, but normalize anyway for honest byte counts
-            .withColumn("text", F.regexp_replace("text", " +", " "))
-            .localCheckpoint(eager=True))
-    n_planted = -(-n // 10)
-
-    passage_dedup(docs.limit(2000), n=8).count()  # warm
-    t0 = time.time()
-    out = passage_dedup(docs, n=8).localCheckpoint(eager=True)
-    n_out = out.count()
-    wall = round(time.time() - t0, 2)
-    agg = out.agg(F.sum("n_tokens").alias("tot"),
-                  F.sum("n_kept").alias("kept")).head()
-    dropped = int(agg["tot"]) - int(agg["kept"])
-    keeper = out.filter(F.col("doc_id") == 0).head()
-
-    print(json.dumps({
-        "metric": "passage dedup (Lee et al. window-exact) at scale",
-        "docs": n, "planted_docs": n_planted, "window_tokens": 8,
-        "wall_s": wall, "docs_per_sec": round(n / wall, 1),
-        "tokens_per_sec": round(int(agg["tot"]) / wall, 1),
-        "docs_out": n_out,
-        "total_tokens": int(agg["tot"]), "kept_tokens": int(agg["kept"]),
-        "dropped_tokens": dropped,
-        "expected_dropped": 12 * (n_planted - 1),
-        "keeper_intact": bool(keeper["n_kept"] == keeper["n_tokens"]),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_webgraph():
-    """Web-graph chain scale evidence (BASELINE.md): href extraction +
-    host-edge aggregation over synthesized HTML pages, then PageRank power
-    iteration over the resulting host graph. Planted ground truth: every
-    third page links to celebrity.test, so it must rank FIRST; total rank
-    mass must be 1 to float precision (the per-iteration invariant)."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.webgraph import host_edges, pagerank
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-webgraph")
-    n_pages = int(os.environ.get("SPARK_GRAFT_WEB_PAGES", "2000000"))
-    n_hosts = int(os.environ.get("SPARK_GRAFT_WEB_HOSTS", "100000"))
-
-    i = F.col("id")
-    host = F.concat(F.lit("site"), (i % n_hosts).cast("string"),
-                    F.lit(".test"))
-
-    def rnd_host(salt):
-        return F.concat(F.lit("site"),
-                        F.pmod(F.xxhash64(i, F.lit(salt)),
-                               F.lit(n_hosts)).cast("string"),
-                        F.lit(".test"))
-
-    href = lambda h: F.concat(F.lit('<a href="https://'), h,
-                              F.lit('/p">x</a>'))
-    celeb = F.when(i % 3 == 0, href(F.lit("celebrity.test"))) \
-             .otherwise(F.lit("<p>no</p>"))
-    ring = href(F.concat(F.lit("site"), ((i + 1) % n_hosts).cast("string"),
-                         F.lit(".test")))
-    pages = (spark.range(n_pages)
-             .select(host.alias("source"),
-                     F.concat(F.lit("<html><body>"), celeb, ring,
-                              href(rnd_host(1)), href(rnd_host(2)),
-                              F.lit("</body></html>")).alias("text"))
-             .localCheckpoint(eager=True))
-
-    t0 = time.time()
-    edges = host_edges(pages).localCheckpoint(eager=True)
-    n_edges = edges.count()
-    t_edges = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    pr = pagerank(edges, weight_col="weight", n_iter=10) \
-        .localCheckpoint(eager=True)
-    n_nodes = pr.count()
-    t_pr = round(time.time() - t0, 2)
-    top = pr.orderBy(F.desc("rank")).limit(3).collect()
-    mass = pr.agg(F.sum("rank")).head()[0]
-
-    print(json.dumps({
-        "metric": "web-graph chain: href->host edges + PageRank(10 iter)",
-        "pages": n_pages, "hosts": n_hosts,
-        "edges_wall_s": t_edges,
-        "pages_per_sec": round(n_pages / t_edges, 1),
-        "edges": n_edges, "nodes": n_nodes,
-        "pagerank_wall_s": t_pr,
-        "edge_iter_throughput_per_sec": round(10 * n_edges / t_pr, 1),
-        "top_hosts": [[r["node"], round(r["rank"], 8)] for r in top],
-        "celebrity_first": top[0]["node"] == "celebrity.test",
-        "rank_mass": mass, "mass_err": abs(mass - 1.0),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_dsir():
-    """DSIR scale evidence with EXACT planted ground truth (BASELINE.md):
-    raw corpus of SPARK_GRAFT_DSIR_DOCS docs in two disjoint-vocabulary
-    styles (even ids = target-style vocab A, odd = spam-style vocab B);
-    the target corpus is 2% more vocab-A text. Every A-doc's importance
-    log-weight must exceed every B-doc's (disjoint vocabularies make the
-    separation deterministic), so the Gumbel top-k resample may contain
-    ONLY A-docs."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions import dsir as DS
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-dsir")
-    n = int(os.environ.get("SPARK_GRAFT_DSIR_DOCS", "5000000"))
-    B = int(os.environ.get("SPARK_GRAFT_DSIR_BUCKETS", "10000"))
-
-    def text_of(prefix, salt):
-        i = F.col("id")
-        return F.concat_ws(" ", *[
-            F.concat(F.lit(prefix),
-                     F.pmod(F.xxhash64(i, F.lit(salt), F.lit(j)),
-                            F.lit(20)).cast("string"))
-            for j in range(12)])
-
-    raw = (spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 2 == 0, text_of("good", 1))
-         .otherwise(text_of("spam", 2)).alias("text"))
-        .localCheckpoint(eager=True))
-    target = (spark.range(n // 50).select(
-        F.col("id").alias("doc_id"), text_of("good", 3).alias("text"))
-        .localCheckpoint(eager=True))
-
-    t0 = time.time()
-    model = DS.fit_dsir(target, raw, n_buckets=B).localCheckpoint(eager=True)
-    t_fit = round(time.time() - t0, 2)
-    t0 = time.time()
-    lw = DS.dsir_log_weights(raw, model, n_buckets=B) \
-        .localCheckpoint(eager=True)
-    n_scored = lw.count()
-    t_score = round(time.time() - t0, 2)
-    sep = lw.agg(
-        F.min(F.when(F.col("doc_id") % 2 == 0, F.col("log_w"))).alias("amin"),
-        F.max(F.when(F.col("doc_id") % 2 == 1, F.col("log_w"))).alias("bmax")
-    ).head()
-    k = n // 10
-    t0 = time.time()
-    picked = DS.dsir_sample(lw, k=k).localCheckpoint(eager=True)
-    bad = picked.filter(F.col("doc_id") % 2 == 1).count()
-    n_picked = picked.count()
-    t_sample = round(time.time() - t0, 2)
-
-    print(json.dumps({
-        "metric": "DSIR fit/score/resample at scale",
-        "raw_docs": n, "target_docs": n // 50, "buckets": B,
-        "fit_wall_s": t_fit,
-        "score_wall_s": t_score,
-        "score_docs_per_sec": round(n / t_score, 1),
-        "docs_scored": n_scored,
-        "min_target_style_log_w": sep["amin"],
-        "max_spam_style_log_w": sep["bmax"],
-        "styles_separated": bool(sep["amin"] > sep["bmax"]),
-        "sample_k": k, "sample_wall_s": t_sample,
-        "sampled": n_picked, "spam_docs_sampled": bad,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_semdedup():
-    """SemDeDup scale evidence with EXACT planted ground truth
-    (BASELINE.md): 500k 64-d vectors — ids < 20000 form 1000 families of
-    20 IDENTICAL vectors (family f = ids 20f..20f+19), the rest
-    hash-random (pairwise cosine ~ N(0, 1/64), never near 0.99). Identical
-    vectors always share a k-means cell, so the clustered run must
-    resolve EXACTLY 1000 groups of size 20 with keeper = min id = 20f."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.dedup import semantic_dedup
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-semdedup")
-    n = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_VECS", "500000"))
-    k = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_K", "512"))
-    n_fam, fam_sz = 1000, 20
-    planted = n_fam * fam_sz
-
-    i = F.col("id")
-    seed = F.when(i < planted, F.floor(i / fam_sz)) \
-            .otherwise(i + F.lit(10 ** 9))
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda j: (F.pmod(F.xxhash64(seed, j), F.lit(1000003))
-                   .cast("double") / 500001.5 - 1.0).cast("float"))
-    emb = (spark.range(n)
-           .select(i.alias("vec_id"), vec.alias("embedding"))
-           .localCheckpoint(eager=True))
-
-    t0 = time.time()
-    out = semantic_dedup(emb, dim=64, eps=0.99, n_clusters=k,
-                         train_sample=8192, n_corpus=n) \
-        .localCheckpoint(eager=True)
-    n_members = out.count()
-    wall = round(time.time() - t0, 2)
-    # membership-level check (keeper_id == group_id holds by construction,
-    # so it would be vacuous): family f must resolve to EXACTLY the id
-    # range [20f, 20f+19] with its min as the group label
-    g = out.groupBy("group_id").agg(
-        F.count("*").alias("sz"), F.min("vec_id").alias("lo"),
-        F.max("vec_id").alias("hi")).collect()
-    ok_groups = sum(1 for r in g
-                    if r["sz"] == fam_sz and r["lo"] == r["group_id"]
-                    and r["hi"] == r["group_id"] + fam_sz - 1
-                    and r["group_id"] % fam_sz == 0)
-
-    print(json.dumps({
-        "metric": "SemDeDup (k-means cells + within-cell cosine groups)",
-        "vectors": n, "dim": 64, "clusters": k, "eps": 0.99,
-        "planted_families": n_fam, "family_size": fam_sz,
-        "wall_s": wall, "vectors_per_sec": round(n / wall, 1),
-        "group_members": n_members, "expected_members": planted,
-        "groups": len(g), "expected_groups": n_fam,
-        "exact_groups": ok_groups,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_urls():
-    """URL canonicalize + dedup scale evidence (BASELINE.md): every id in
-    a group of SPARK_GRAFT_URL_DOCS/8 canonical keys gets one of four
-    surface forms (case, www., default port, userinfo, tracking params,
-    dup slashes, fragment — all canonicalize away), so group count, total
-    member mass AND the elected keeper (max id per group, preference = id)
-    are all EXACT ground truth."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.urls import (canonicalize_url,
-                                                      url_dedup)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-urls")
-    n = int(os.environ.get("SPARK_GRAFT_URL_DOCS", "20000000"))
-    g = n // 8
-    ids = spark.range(n).select(F.col("id").alias("doc_id"))
-    k = (F.col("doc_id") % g).cast("string")
-    p = (F.col("doc_id") % g % 16).cast("string")
-    v = F.col("doc_id") % 4
-    url = (F.when(v == 0, F.concat(F.lit("http://www.site"), k,
-                                   F.lit(".com:80/p"), p,
-                                   F.lit("/?utm_source=x&a=1&b=2#f")))
-            .when(v == 1, F.concat(F.lit("HTTP://Site"), k,
-                                   F.lit(".COM/p"), p, F.lit("?b=2&a=1")))
-            .when(v == 2, F.concat(F.lit("http://site"), k,
-                                   F.lit(".com/p"), p,
-                                   F.lit("//?a=1&utm_campaign=y&b=2")))
-            .otherwise(F.concat(F.lit("http://u@site"), k,
-                                F.lit(".com:80/p"), p,
-                                F.lit("?b=2&a=1&gclid=1"))))
-    docs = ids.select("doc_id", url.alias("url"),
-                      F.col("doc_id").cast("double").alias("w")) \
-              .localCheckpoint(eager=True)
-
-    # pure canonicalize pass (projection only; the agg forces evaluation)
-    t0 = time.time()
-    docs.select(canonicalize_url(F.col("url")).alias("c")) \
-        .agg(F.sum(F.length("c"))).head()
-    t_canon = round(time.time() - t0, 2)
-
-    url_dedup(docs.limit(1000), "url", "doc_id", "w").count()   # warm
-    t0 = time.time()
-    out = url_dedup(docs, "url", "doc_id", "w").localCheckpoint(eager=True)
-    n_groups = out.count()
-    t_dedup = round(time.time() - t0, 2)
-
-    chk = out.agg(
-        F.sum("n_dups").alias("mass"),
-        # expected keeper for canonical key k: the largest id < n that is
-        # ≡ k (mod g); recover k from the canonical url's site number
-        F.sum((F.col("keeper") !=
-               (F.lit(n - 1) - F.pmod(
-                   F.lit(n - 1) - F.regexp_extract("canon_url",
-                                                   r"site(\d+)\.", 1)
-                   .cast("long"), F.lit(g)))).cast("int")).alias("bad_keeper")
-    ).head()
-    print(json.dumps({
-        "metric": "URL canonicalize + keep-one-per-URL at scale",
-        "urls": n, "groups_expected": g, "groups": n_groups,
-        "member_mass": int(chk["mass"]), "bad_keepers": int(chk["bad_keeper"]),
-        "canonicalize_wall_s": t_canon,
-        "canonicalize_urls_per_sec": round(n / t_canon, 1),
-        "url_dedup_wall_s": t_dedup,
-        "url_dedup_urls_per_sec": round(n / t_dedup, 1),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_mixture():
-    """Domain-mixture resampling scale evidence (BASELINE.md): skewed
-    synthetic domains (60/30/9/1% of SPARK_GRAFT_MIXTURE_DOCS rows) with
-    equal target shares — the 1% domain binds, so its full retention is
-    EXACT ground truth (cut = BUCKETS by construction), and the achieved
-    mixture shares must sit within hash-bucket noise of 25% each."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.sampling import mixture_sample
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-mixture")
-    n = int(os.environ.get("SPARK_GRAFT_MIXTURE_DOCS", "10000000"))
-    # id % 100 -> 60/30/9/1 split: deterministic, no data files needed
-    m = F.col("id") % 100
-    docs = spark.range(n).withColumn(
-        "dom", F.when(m < 60, "web").when(m < 90, "books")
-                .when(m < 99, "code").otherwise("wiki"))
-    targets = {"web": 0.25, "books": 0.25, "code": 0.25, "wiki": 0.25}
-    mixture_sample(docs.limit(2000), "id", "dom", targets).count()  # warm
-    t0 = time.time()
-    kept = (mixture_sample(docs, "id", "dom", targets)
-            .groupBy("dom").count().toPandas()
-            .set_index("dom")["count"].to_dict())
-    wall = round(time.time() - t0, 2)
-    n_wiki = n // 100  # exact: one per id%100 == 99
-    total = sum(kept.values())
-    print(json.dumps({
-        "metric": "domain-mixture resampling at scale",
-        "docs": n, "wall_s": wall,
-        "docs_per_sec": round(n / wall, 1),
-        "kept_per_domain": kept, "kept_total": total,
-        "binding_domain_rows": n_wiki,
-        "binding_domain_fully_kept": kept.get("wiki") == n_wiki,
-        "achieved_shares": {d: round(c / total, 4) for d, c in kept.items()},
-        "target_shares": targets,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_decon():
-    """Decontamination scale evidence (BASELINE.md): the broadcast
-    fingerprint-prefilter path (functions/decontaminate.py) vs the
-    inverted-index explode+join, at SPARK_GRAFT_DECON_DOCS corpus docs x
-    SPARK_GRAFT_DECON_EVAL eval docs. Ground truth is exact and closed
-    form: 1 in 1000 corpus docs gets one eval doc's 4-word text appended,
-    so exactly docs/1000 rows come back with n_hits == 2 (each eval doc
-    yields two 3-shingles; boundary shingles mix corpus+eval words and
-    cannot match). Both paths must return the SAME rows — the fp path is
-    exact by construction (zero false negatives; collisions die in the
-    string verify)."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.decontaminate import \
-        contamination_exact
-    from geospatialtools_spark.functions.dedup import shingles_pudf
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-decon")
-    n = int(os.environ.get("SPARK_GRAFT_DECON_DOCS", "5000000"))
-    ne = int(os.environ.get("SPARK_GRAFT_DECON_EVAL", "10000"))
-    step = 1000
-
-    def ev_text(e):
-        return F.concat_ws(" ", *[
-            F.concat(F.lit("ev"), e.cast("string"), F.lit(f"w{j}"))
-            for j in range(4)])
-
-    body = F.concat_ws(" ", F.array(*[
-        F.concat(F.lit("w"), F.pmod(
-            F.xxhash64(F.col("doc_id"), F.lit(i)), F.lit(99991))
-            .cast("string")) for i in range(12)]))
-    ev_id = F.pmod((F.col("doc_id") / step).cast("long"), F.lit(ne))
-    docs = (spark.range(n).select(F.col("id").alias("doc_id"))
-            .withColumn("text", F.when(
-                F.col("doc_id") % step == 0,
-                F.concat(body, F.lit(" "), ev_text(ev_id)))
-                .otherwise(body))
-            .localCheckpoint(eager=True))
-    ev = spark.range(ne).select(F.col("id").alias("doc_id"),
-                                ev_text(F.col("id")).alias("text"))
-
-    def inverted(d, e):
-        sh = d.select("doc_id", F.explode(
-            shingles_pudf(3)(F.col("text"))).alias("shingle"))
-        evs = e.select(F.explode(
-            shingles_pudf(3)(F.col("text"))).alias("shingle")).distinct()
-        return (sh.join(F.broadcast(evs), "shingle")
-                .groupBy("doc_id").agg(F.count("*").alias("n_hits")))
-
-    inverted(docs.limit(2000), ev).count()   # warm both paths
-    contamination_exact(docs.limit(2000), ev).count()
-    inv_reps, fp_reps = [], []
-    for _ in range(2):
-        t0 = time.time()
-        n_inv = inverted(docs, ev).count()
-        inv_reps.append(round(time.time() - t0, 2))
-        t0 = time.time()
-        n_fp = contamination_exact(docs, ev).count()
-        fp_reps.append(round(time.time() - t0, 2))
-    t_inv, t_fp = min(inv_reps), min(fp_reps)
-
-    got_inv = {r["doc_id"]: r["n_hits"]
-               for r in inverted(docs, ev).collect()}
-    got_fp = {r["doc_id"]: r["n_hits"]
-              for r in contamination_exact(docs, ev).collect()}
-    expected = -(-n // step)  # doc 0 is always planted: ceil, not floor
-    print(json.dumps({
-        "metric": "exact decontamination: fp prefilter vs inverted index",
-        "docs": n, "eval_docs": ne, "planted_contaminated": expected,
-        "fp_wall_s": t_fp, "fp_reps_s": fp_reps,
-        "fp_docs_per_sec": round(n / t_fp, 1),
-        "inverted_wall_s": t_inv, "inverted_reps_s": inv_reps,
-        "inverted_docs_per_sec": round(n / t_inv, 1),
-        "speedup": round(t_inv / t_fp, 2),
-        "rows_fp": n_fp, "rows_inverted": n_inv,
-        "outputs_identical": got_inv == got_fp,
-        "all_expected_found": (len(got_fp) == expected
-                               and set(got_fp.values()) == {2}),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_tokens():
-    """BPE tokenizer + KMV sketch scale evidence (BASELINE.md).
-
-    BPE (functions/bpe.py): a Zipf-skewed synthetic corpus of
-    SPARK_GRAFT_TOKEN_DOCS docs x 12 letter-encoded words (product of two
-    uniform hashes -> low word ids dominate, so merges learn real digram
-    structure; vocab <= 20k by construction). Train wall covers the one
-    corpus word-count pass + n_merges bounded-vocab iterations; encode
-    wall is the single Arrow pass. Ground truth is EXACT char
-    conservation: the concatenated tokens of every doc must reproduce its
-    text minus whitespace, checked corpus-wide as one aggregate
-    (sum(len(concat(tokens))) == sum(len(text)) - #spaces) plus a
-    zero-token-loss doc count.
-
-    KMV (functions/sketch.py:kmv_distinct): SPARK_GRAFT_KMV_ROWS rows over
-    exactly SPARK_GRAFT_KMV_DISTINCT distinct items (id % D covers all D
-    when rows >= D — true cardinality known exactly), k=1024: sketch wall
-    + relative error vs the exact countDistinct wall. The sketch ships
-    <= k rows per partition where exact ships one row per distinct key."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.bpe import bpe_encode, bpe_train
-    from geospatialtools_spark.functions.sketch import kmv_distinct
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-tokens")
-    n = int(os.environ.get("SPARK_GRAFT_TOKEN_DOCS", "5000000"))
-    n_merges = int(os.environ.get("SPARK_GRAFT_BPE_MERGES", "48"))
-
-    def word(i):
-        h1 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(i), F.lit("a")),
-                    F.lit(141))
-        h2 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(i), F.lit("b")),
-                    F.lit(141))
-        rank = (h1 * h2 / F.lit(141)).cast("long")  # skewed low: 0..140
-        return F.translate(F.conv(rank.cast("string"), 10, 16),
-                           "0123456789ABCDEF", "abcdefghijklmnop")
-
-    docs = (spark.range(n).select(F.col("id").alias("doc_id"))
-            .withColumn("text", F.concat_ws(
-                " ", F.array(*[word(i) for i in range(12)])))
-            .localCheckpoint(eager=True))
-
-    t0 = time.time()
-    merges = bpe_train(docs, n_merges=n_merges, vocab_cap=20000)
-    t_train = round(time.time() - t0, 2)
-
-    bpe_encode(docs.limit(2000), merges).count()  # warm
-    enc_reps, enc = [], None
-    for _ in range(2):
-        if enc is not None:
-            enc.unpersist()  # don't pin the stale rep's tokens in memory
-        t0 = time.time()
-        enc = bpe_encode(docs, merges).localCheckpoint(eager=True)
-        n_enc = enc.count()
-        enc_reps.append(round(time.time() - t0, 2))
-    t_enc = min(enc_reps)
-    tok = enc.agg(
-        F.sum("n_tokens").alias("toks"),
-        F.sum(F.length(F.concat_ws("", F.col("tokens")))).alias("tok_chars"),
-    ).head()
-    src = docs.agg(F.sum(
-        F.length(F.translate(F.col("text"), " ", ""))).alias("chars")).head()
-    lossless = int(tok["tok_chars"]) == int(src["chars"])
-
-    d = int(os.environ.get("SPARK_GRAFT_KMV_DISTINCT", "25000000"))
-    rows = int(os.environ.get("SPARK_GRAFT_KMV_ROWS", "40000000"))
-    items = spark.range(rows).select(
-        F.concat(F.lit("item-"), (F.col("id") % d).cast("string"))
-         .alias("w")).localCheckpoint(eager=True)
-    kmv_distinct(items.limit(2000), "w", k=1024).count()  # warm
-    kmv_reps, exact_reps = [], []
-    for _ in range(2):
-        t0 = time.time()
-        est = kmv_distinct(items, "w", k=1024).head()
-        kmv_reps.append(round(time.time() - t0, 2))
-        t0 = time.time()
-        exact = items.agg(F.countDistinct("w").alias("n")).head()["n"]
-        exact_reps.append(round(time.time() - t0, 2))
-    t_kmv, t_exact = min(kmv_reps), min(exact_reps)
-
-    print(json.dumps({
-        "metric": "BPE train/encode + KMV distinct sketch at scale",
-        "bpe": {
-            "docs": n, "words": 12 * n, "n_merges": len(merges),
-            "train_wall_s": t_train,
-            "encode_wall_s": t_enc, "encode_reps_s": enc_reps,
-            "encode_docs_per_sec": round(n / t_enc, 1),
-            "encode_tokens_per_sec": round(int(tok["toks"]) / t_enc, 1),
-            "tokens_out": int(tok["toks"]),
-            "chars_in_tokens": int(tok["tok_chars"]),
-            "chars_in_text": int(src["chars"]),
-            "char_conservation_exact": lossless,
-            "docs_encoded": n_enc,
-            "compression_tokens_per_word": round(int(tok["toks"]) / (12 * n), 3),
-        },
-        "kmv": {
-            "rows": rows, "true_distinct": d, "k": 1024,
-            "sketch_wall_s": t_kmv, "sketch_reps_s": kmv_reps,
-            "est": est["est"], "is_exact": est["is_exact"],
-            "rel_err": round(abs(est["est"] - exact) / exact, 5),
-            "exact_count_distinct_wall_s": t_exact,
-            "exact_reps_s": exact_reps,
-            "exact_count": int(exact),
-        },
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_incdedup():
-    """Incremental-dedup scale evidence (BASELINE.md): the daily-ingest
-    cost vs a full re-dedup, on the planted-cluster corpus with the
-    increment cut ACROSS the planted clusters (new = doc_id % 20 in
-    {0, 10}) so every block contributes exactly 3 ground-truth
-    increment pairs: (m, m+1) exact, (m, m+2) near, (m+10, m+11) near —
-    recall and false positives are exact, not estimated."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.fixtures import planted_docs
-    from geospatialtools_spark.functions.dedup import (build_minhash_index,
-                                                       incremental_dup_pairs,
-                                                       minhash_lsh_pairs)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-incdedup")
-    n = int(os.environ.get("SPARK_GRAFT_INCDEDUP_DOCS", "5000000"))
-    n = n // 20 * 20   # whole planted blocks only, so `expected` is exact
-    docs = planted_docs(spark, n).select("doc_id", "text")
-    mod = F.col("doc_id") % 20
-    old = docs.filter(~mod.isin(0, 10)).localCheckpoint(eager=True)
-    new = docs.filter(mod.isin(0, 10)).localCheckpoint(eager=True)
-
-    t0 = time.time()
-    full_pairs = minhash_lsh_pairs(docs).count()
-    t_full = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    idx = build_minhash_index(old)
-    t_build = round(time.time() - t0, 2)
-    t0 = time.time()
-    pairs, _nb = incremental_dup_pairs(idx, new)
-    pairs = pairs.localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    t_probe = round(time.time() - t0, 2)
-
-    same_block = (F.col("id_a") - F.col("id_a") % 20
-                  == F.col("id_b") - F.col("id_b") % 20)
-    in3 = (F.col("id_a") % 20 <= 2) & (F.col("id_b") % 20 <= 2)
-    in2 = (F.col("id_a") % 20).isin(10, 11) & (F.col("id_b") % 20).isin(10, 11)
-    planted = pairs.filter(same_block & (in3 | in2)).count()
-    expected = n // 20 * 3
-
-    # persisted layout: (band, bhash-bucket)-partitioned parquet — the
-    # probe prunes partitions (a 10%-of-corpus increment touches every
-    # bucket, so this measures the disk-backed probe, not best-case prune)
-    import shutil
-    import tempfile
-
-    from geospatialtools_spark.functions.dedup import (load_minhash_index,
-                                                       persist_minhash_index)
-    tdir = tempfile.mkdtemp(prefix="mhidx_")
-    try:
-        t0 = time.time()
-        persist_minhash_index(idx, tdir)
-        t_persist = round(time.time() - t0, 2)
-        loaded = load_minhash_index(spark, tdir)
-        t0 = time.time()
-        p2, _ = incremental_dup_pairs(loaded, new)
-        p2 = p2.localCheckpoint(eager=True)
-        pruned_pairs = p2.count()
-        t_pruned = round(time.time() - t0, 2)
-        # SET equality, not just counts — the claim is bit-for-bit
-        sym_diff = (p2.exceptAll(pairs).count()
-                    + pairs.exceptAll(p2).count())
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    print(json.dumps({
-        "metric": "incremental dedup (index probe) vs full re-dedup, planted-cluster corpus",
-        "docs": n, "increment_docs": n // 10,
-        "full_rerun_wall_s": t_full, "full_pairs": int(full_pairs),
-        "index_build_wall_s": t_build,
-        "increment_probe_wall_s": t_probe,
-        "increment_pairs": int(n_pairs),
-        "planted_increment_pairs_found": int(planted),
-        "planted_increment_pairs_expected": expected,
-        "false_positives": int(n_pairs - planted),
-        "recall": round(planted / expected, 4),
-        "probe_vs_full_speedup": round(t_full / t_probe, 2),
-        "persist_wall_s": t_persist,
-        "disk_probe_wall_s": t_pruned,
-        "disk_probe_pairs_identical": (pruned_pairs == n_pairs
-                                       and sym_diff == 0),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_warc():
-    """WARC ingest scale evidence: generate SPARK_GRAFT_WARC_FILES
-    deterministic archives x SPARK_GRAFT_WARC_RECORDS fetches each
-    (generator-known ground truth), then measure the distributed parse —
-    wall, records/s, MB/s, and an exact record-count + per-record
-    payload-byte-sum check against the generator."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.session import get_spark
-    from geospatialtools_spark.sources import warc as W
-    spark = get_spark("bench-warc")
-    n_files = int(os.environ.get("SPARK_GRAFT_WARC_FILES", "256"))
-    n_recs = int(os.environ.get("SPARK_GRAFT_WARC_RECORDS", "2000"))
-    import tempfile
-    root = tempfile.mkdtemp(prefix="warcbench_")
-    try:
-        t0 = time.time()
-        for f in range(n_files):
-            with open(os.path.join(root, f"crawl-{f:03d}.warc"), "wb") as fh:
-                fh.write(W.make_warc_bytes(f, n_recs))
-        t_gen = round(time.time() - t0, 2)
-        total_mb = sum(os.path.getsize(os.path.join(root, p))
-                       for p in os.listdir(root)) / 1e6
-        reps = []
-        agg = None
-        for _ in range(2):
-            t0 = time.time()
-            agg = (W.read_warc(spark, root)
-                   .agg(F.count("*").alias("n"),
-                        F.sum("n_bytes").alias("payload_bytes"),
-                        F.count_distinct("target_uri").alias("uris"))
-                   .first())
-            reps.append(round(time.time() - t0, 2))
-        t_parse = min(reps)
-        # generator ground truth: every response record present exactly
-        # once, payload byte sum exact
-        want_bytes = sum(
-            len(r["payload"].encode())
-            for f in range(n_files) for r in W.make_warc_records(f, n_recs))
-        print(json.dumps({
-            "metric": "warc ingest parse throughput (binaryFile -> mapInPandas)",
-            "files": n_files, "records": n_files * n_recs,
-            "archive_mb": round(total_mb, 1),
-            "gen_wall_s": t_gen,
-            "parse_reps_s": reps, "parse_wall_s": t_parse,
-            "records_per_sec": round(n_files * n_recs / t_parse, 1),
-            "mb_per_sec": round(total_mb / t_parse, 1),
-            "ground_truth_ok": (int(agg["n"]) == n_files * n_recs
-                                and int(agg["uris"]) == n_files * n_recs
-                                and int(agg["payload_bytes"]) == want_bytes),
-            "cpus": spark.sparkContext.defaultParallelism,
-        }))
-    finally:
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def main_retrieval():
-    """BM25 inverted-index retrieval scale evidence (BASELINE.md).
-
-    Corpus: SPARK_GRAFT_RETR_DOCS docs (default 5M) x 12 Zipf-skewed
-    tokens from a 100k vocab (h1*h2 product hash — low ids dominate, so
-    postings lists have a realistic hot head) + every 1000th doc carries
-    one globally UNIQUE token. Ground truth is exact by construction:
-    a unique-token query's top-1 hit MUST be its planted doc (it is the
-    only doc containing the term).
-
-    Measures the build/probe split (same shape as the IVF evidence):
-    index build wall (the one corpus pass), then a 100-query unique-token
-    probe and a 100-query 3-common-token probe (candidate-heavy path),
-    each run twice — the second probe pays ONLY the probe, proving no
-    hidden corpus recompute hides in the index lineage."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.retrieval import (bm25_probe,
-                                                           build_text_index)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-retrieval")
-    n = int(os.environ.get("SPARK_GRAFT_RETR_DOCS", "5000000"))
-    vocab = 100_000
-
-    def word(i):
-        h1 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(i), F.lit("ra")),
-                    F.lit(317))
-        h2 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(i), F.lit("rb")),
-                    F.lit(317))
-        return F.concat(F.lit("w"), ((h1 * h2) % vocab).cast("string"))
-
-    body = F.concat_ws(" ", F.array(*[word(i) for i in range(12)]))
-    docs = (spark.range(n).select(F.col("id").alias("doc_id"))
-            .withColumn("text", F.when(
-                F.col("doc_id") % 1000 == 0,
-                F.concat(body, F.lit(" uniq"),
-                         F.col("doc_id").cast("string")))
-                .otherwise(body))
-            .localCheckpoint(eager=True))
-
-    t0 = time.time()
-    idx = build_text_index(docs)
-    t_build = round(time.time() - t0, 2)
-    n_postings = idx.postings.count()
-    n_terms = idx.term_stats.count()
-    hot_df = idx.term_stats.agg(F.max("df")).first()[0]
-
-    q_uniq = (spark.range(100)
-              .select((F.col("id") * 1000).alias("query_id"),
-                      F.concat(F.lit("uniq"), (F.col("id") * 1000)
-                               .cast("string")).alias("q_text"))
-              .localCheckpoint(eager=True))
-    qc = [F.concat(F.lit("w"), ((F.pmod(F.xxhash64(F.col("id"), F.lit(j),
-                                                   F.lit("qa")), F.lit(317))
-                                 * F.pmod(F.xxhash64(F.col("id"), F.lit(j),
-                                                     F.lit("qb")),
-                                          F.lit(317))) % vocab)
-                   .cast("string")) for j in range(3)]
-    q_common = (spark.range(100)
-                .select(F.col("id").alias("query_id"),
-                        F.concat_ws(" ", F.array(*qc)).alias("q_text"))
-                .localCheckpoint(eager=True))
-
-    out = {"metric": "bm25 inverted-index build/probe on zipf corpus with planted unique terms",
-           "docs": n, "vocab": vocab, "postings_rows": int(n_postings),
-           "distinct_terms": int(n_terms), "hottest_term_df": int(hot_df),
-           "build_wall_s": t_build}
-    for label, q in (("uniq", q_uniq), ("common3", q_common)):
-        reps = []
-        hits = None
-        for _ in range(2):
-            t0 = time.time()
-            res = bm25_probe(idx, q, k=5).localCheckpoint(eager=True)
-            top1 = (res.filter(F.col("rank") == 1)
-                    .filter(F.col("doc_id") == F.col("query_id")).count())
-            reps.append(round(time.time() - t0, 2))
-            hits = top1
-        out[f"probe_{label}_reps_s"] = reps
-        if label == "uniq":
-            out["uniq_top1_is_planted_doc"] = f"{hits}/100"
-            out["ground_truth_ok"] = hits == 100
-
-    # persisted layout: the bucket-partitioned parquet index — the probe
-    # is now a PartitionFilters-pruned READ of <=100/256 of the postings
-    import shutil
-    import tempfile
-
-    from geospatialtools_spark.functions.retrieval import (
-        load_text_index, persist_text_index)
-    tdir = tempfile.mkdtemp(prefix="bm25idx_")
-    try:
-        t0 = time.time()
-        persist_text_index(idx, tdir)
-        out["persist_wall_s"] = round(time.time() - t0, 2)
-        loaded = load_text_index(spark, tdir)
-        for label, q in (("uniq", q_uniq), ("common3", q_common)):
-            reps = []
-            for _ in range(2):
-                t0 = time.time()
-                bm25_probe(loaded, q, k=5).localCheckpoint(eager=True)
-                reps.append(round(time.time() - t0, 2))
-            out[f"probe_{label}_pruned_reps_s"] = reps
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    out["cpus"] = spark.sparkContext.defaultParallelism
-    print(json.dumps(out))
-
-
 def main_flagship_only():
     from geospatialtools_spark.session import get_spark
     spark = get_spark("bench-flagship")
@@ -1439,670 +277,20 @@ def main_flagship_only():
                       "cpus": spark.sparkContext.defaultParallelism}))
 
 
-def main_shuffle():
-    """Epoch shuffle + MRL quantile sketch scale evidence (BASELINE.md).
-
-    epoch_shuffle (functions/sampling.py): a seeded md5 permutation of
-    SPARK_GRAFT_SHUFFLE_DOCS keys dealt round-robin into 1024 shards via
-    the two-level seq_ids plan (range shuffle on the hash + per-partition
-    ranks + O(#partitions) offsets — no single-partition window). Ground
-    truth is EXACT: the positions reconstructed from shard/pos must be
-    the permutation 0..N-1 — certified by count == N, countDistinct == N
-    and min/max == 0/N-1 in one aggregate (N distinct values inside
-    [0, N-1] with count N IS 0..N-1; a plain sum check would pass
-    duplicate/skip corruptions with a compensating sum) — and shard sizes
-    must be balanced to max-min <= 1 by round-robin construction.
-
-    quantile_sketch (functions/sketch.py): doc-length-shaped values at
-    SPARK_GRAFT_QUANT_ROWS rows, capacity 4096 (deep approximation
-    regime). Error is measured EXACTLY: each returned value's true rank
-    is one filter-count over the corpus; reported as relative rank error
-    vs q*N. Spark's builtin approx_percentile runs beside it for an
-    engine-side reference point (same pass count, no persistable summary).
-    """
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.sampling import epoch_shuffle
-    from geospatialtools_spark.functions.sketch import quantile_sketch
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-shuffle")
-
-    def _free_checkpoint_blocks():
-        # Dataset.unpersist only uncaches CacheManager-registered plans;
-        # the blocks pinned by localCheckpoint (ours AND seq_ids'
-        # internal ones) are plain persisted RDDs, freed only through the
-        # RDD handle — sweep them all so the next timed rep starts clean
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist(True)
-
-    n = int(os.environ.get("SPARK_GRAFT_SHUFFLE_DOCS", "20000000"))
-    n_shards = 1024
-    # keys deliberately NOT checkpointed: spark.range is free to
-    # recompute, and the between-rep block sweep would evict it anyway
-    keys = spark.range(n).select(F.col("id").alias("doc_id"))
-    epoch_shuffle(keys.limit(2000), "doc_id", n_shards, seed=1).count()
-    sh_reps, out = [], None
-    for seed in (1, 2):  # different seeds: no cross-rep cache flattery
-        if out is not None:
-            _free_checkpoint_blocks()
-        t0 = time.time()
-        out = (epoch_shuffle(keys, "doc_id", n_shards, seed=seed)
-               .localCheckpoint(eager=True))
-        out.count()
-        sh_reps.append(round(time.time() - t0, 2))
-    t_sh = min(sh_reps)
-    gpos = F.col("pos") * n_shards + F.col("shard")
-    chk = out.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.countDistinct(gpos).alias("nd"),
-        F.min(gpos).alias("gmin"), F.max(gpos).alias("gmax"),
-        F.countDistinct("shard").alias("nsh")).head()
-    perm_ok = (int(chk["cnt"]) == n and int(chk["nd"]) == n
-               and int(chk["gmin"]) == 0 and int(chk["gmax"]) == n - 1)
-    sizes = out.groupBy("shard").count().agg(
-        F.max("count").alias("mx"), F.min("count").alias("mn")).head()
-    balanced = int(sizes["mx"]) - int(sizes["mn"]) <= 1
-    _free_checkpoint_blocks()  # the quantile section starts clean too
-
-    rows = int(os.environ.get("SPARK_GRAFT_QUANT_ROWS", "40000000"))
-    qs = [0.25, 0.5, 0.75, 0.9, 0.99]
-    vals = (spark.range(rows).select(
-        (F.pmod(F.xxhash64("id"), F.lit(4000)) +
-         F.pmod(F.xxhash64("id", F.lit(1)), F.lit(4000)))
-        .cast("double").alias("v")).localCheckpoint(eager=True))
-    quantile_sketch(vals.limit(2000), "v", qs).count()
-    qk_reps, got = [], None
-    for _ in range(2):
-        t0 = time.time()
-        got = quantile_sketch(vals, "v", qs, capacity=4096).collect()
-        qk_reps.append(round(time.time() - t0, 2))
-    t_qk = min(qk_reps)
-    errs = {}
-    for r in got:
-        rank = vals.filter(F.col("v") <= r["value"]).count()
-        errs[str(r["q"])] = round(abs(rank - r["q"] * rows) / rows, 6)
-    t0 = time.time()
-    ap = vals.agg(F.percentile_approx("v", qs, 10000)).head()[0]
-    t_ap = round(time.time() - t0, 2)
-
-    print(json.dumps({
-        "metric": "epoch shuffle + quantile sketch at scale",
-        "epoch_shuffle": {
-            "keys": n, "n_shards": n_shards,
-            "wall_s": t_sh, "reps_s": sh_reps,
-            "keys_per_sec": round(n / t_sh, 1),
-            "permutation_exact": perm_ok,
-            "shards_seen": int(chk["nsh"]),
-            "balanced_within_1": balanced,
-            "max_shard": int(sizes["mx"]), "min_shard": int(sizes["mn"]),
-        },
-        "quantile_sketch": {
-            "rows": rows, "capacity": 4096, "qs": qs,
-            "wall_s": t_qk, "reps_s": qk_reps,
-            "rows_per_sec": round(rows / t_qk, 1),
-            "rel_rank_err": errs,
-            "max_rel_rank_err": max(errs.values()),
-            "builtin_approx_percentile_wall_s": t_ap,
-            "builtin_values": [float(x) for x in ap],
-        },
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
+MODES = {"--scaling": main_scaling, "--flagship-only": main_flagship_only}
+USAGE = ("usage: python bench.py [--scaling | --flagship-only]  "
+         "(no flag: flagship + headline queries, one JSON line)")
 
 
-
-def main_bitext():
-    """Bitext margin-mining scale evidence with planted ground truth
-    (BASELINE.md). src = SPARK_GRAFT_BITEXT_PAIRS hash-random unit-ish
-    64-d vectors; tgt = the same vectors under a deterministic coprime
-    permutation plus 25%-amplitude hash noise (planted cosine ~ 0.970 —
-    hard enough that the margin must discriminate), plus 50% extra
-    pure-random decoys. The miner must recover the planted
-    permutation: precision is exact ground truth (any non-planted pair
-    is a false positive), recall is bounded by the ANN candidate
-    generation (sign-LSH bucket join + src-side multi-probe r=1 — the
-    per-plane Goemans-Williamson flip probability predicts the ceiling,
-    reported next to the measured value).
-
-    Candidate plan (the 100 TB shape, no broadcast of either side):
-    bitext.lsh_candidates — sign-LSH bucket COGROUP (src side exploded
-    over its Hamming-1 probe buckets) with ONE float64 GEMM per bucket,
-    scalar triples out, max()-reduced on the pair key. margin_score runs
-    over the candidate lists only — the CCMatrix form (FAISS k-NN lists
-    in, margins out) with this repo's LSH standing in for FAISS."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.bitext import (lsh_candidates,
-                                                        margin_mine)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-bitext")
-    n = int(os.environ.get("SPARK_GRAFT_BITEXT_PAIRS", "50000"))
-    n_decoy = n // 2
-    n_planes = int(os.environ.get("SPARK_GRAFT_BITEXT_PLANES", "10"))
-    radius = int(os.environ.get("SPARK_GRAFT_BITEXT_RADIUS", "1"))
-    P = 1000003  # coprime to n for every n < P: a full permutation
-
-    def rnd(seed_col, scale):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda j: ((F.pmod(F.xxhash64(seed_col, j), F.lit(1000003))
-                        .cast("double") / 500001.5 - 1.0) * scale)
-            .cast("float"))
-
-    src = (spark.range(n).select(
-        F.col("id").alias("vec_id"), rnd(F.col("id"), 1.0)
-        .alias("embedding")).localCheckpoint(eager=True))
-    # tgt j is src (j*P) % n plus 3% noise; decoys are fresh randoms
-    j = F.col("id")
-    t_aligned = (spark.range(n).select(
-        j.alias("vec_id"),
-        F.zip_with(rnd(F.pmod(j * P, F.lit(n)), 1.0),
-                   rnd(j + F.lit(10 ** 9), 0.25),
-                   lambda a, b: (a + b).cast("float")).alias("embedding")))
-    t_decoy = (spark.range(n, n + n_decoy).select(
-        j.alias("vec_id"),
-        rnd(j + F.lit(2 * 10 ** 9), 1.0).alias("embedding")))
-    tgt = t_aligned.unionByName(t_decoy).localCheckpoint(eager=True)
-
-    t0 = time.time()
-    # cogroup-GEMM candidate generator: each bucket's vectors ship ONCE
-    # and the bucket's cosine matrix is one float64 GEMM. A/B history at
-    # the 30k size: per-pair equi-join 141 s (vector transfer, not math,
-    # was the wall), cogroup 69 s at identical triples, then the _plane
-    # avalanche fix cut the triple count itself 5.7x (103M -> 17.9M,
-    # 7 s) with recall landing ON the GW prediction
-    cand = (lsh_candidates(src, tgt, dim=64, n_planes=n_planes,
-                           probe_radius=radius)
-            .localCheckpoint(eager=True))
-    n_cand = cand.count()
-    t_cand = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    mined = margin_mine(src, tgt, k=4, threshold=1.05, mutual=True,
-                        candidates=cand).localCheckpoint(eager=True)
-    n_mined = mined.count()
-    t_mine = round(time.time() - t0, 2)
-
-    # planted truth: src s pairs with tgt j iff s == (j*P) % n
-    chk = mined.filter(F.col("tgt_id") < n).agg(
-        F.sum((F.col("src_id") == F.pmod(F.col("tgt_id") * P, F.lit(n)))
-              .cast("long")).alias("good")).head()
-    good = int(chk["good"] or 0)
-    decoy_hits = mined.filter(F.col("tgt_id") >= n).count()
-    # sign-LSH ceiling: P(<= radius flips) with per-plane flip prob
-    # theta/pi for the planted cosine
-    import math
-    # ceiling from the MEASURED planted mean cosine; if no planted pair
-    # survived candidate generation (a regression this bench exists to
-    # catch), report None rather than fabricating a ceiling from a
-    # constant that would mask the failure
-    mean_cos = cand.filter(
-        (F.col("tgt_id") < n)
-        & (F.col("src_id") == F.pmod(F.col("tgt_id") * P, F.lit(n))))         .agg(F.avg("cosine")).head()[0]
-    if mean_cos is None:
-        ceiling = None
-    else:
-        flip = math.acos(max(min(mean_cos, 1.0), -1.0)) / math.pi
-        ceiling = sum(
-            math.comb(n_planes, r) * flip ** r
-            * (1 - flip) ** (n_planes - r)
-            for r in range(radius + 1))
-
-    print(json.dumps({
-        "metric": "bitext margin mining with planted alignment",
-        "src": n, "tgt_aligned": n, "tgt_decoys": n_decoy,
-        "n_planes": n_planes, "probe_radius": radius,
-        "candidates": n_cand, "cand_wall_s": t_cand,
-        "mine_wall_s": t_mine,
-        "pairs_mined": n_mined,
-        "planted_recovered": good,
-        "precision": round(good / n_mined, 4) if n_mined else None,
-        "recall": round(good / n, 4),
-        "lsh_recall_ceiling": (round(ceiling, 4)
-                               if ceiling is not None else None),
-        "decoy_hits": decoy_hits,
-        "planted_mean_cosine": round(float(mean_cos), 4) if mean_cos else None,
-        "pairs_per_sec": round(n / (t_cand + t_mine), 1),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-
-def main_html():
-    """HTML boilerplate extraction scale evidence (BASELINE.md).
-
-    SPARK_GRAFT_HTML_PAGES pages (default 5M), each the classic
-    boilerplate sandwich — nav of links, k = id%4+1 prose paragraphs
-    (each long enough to pass the length rule and link-free), a short ad
-    stub, a script block with ghost markup, a link-only footer — so the
-    expected keep set is CLOSED FORM: exactly the k prose blocks
-    survive. Ground truth is exact: every page must report n_kept == k
-    and the recovered content must start with its first paragraph.
-    Pure per-row expression chain — the bench is a map-only scan."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.html import html_extract
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-html")
-    n = int(os.environ.get("SPARK_GRAFT_HTML_PAGES", "5000000"))
-    prose = ("The quick brown fox jumps over the lazy dog and runs along "
-             "the river bank every single morning without fail token ")
-    paras = F.array(*[
-        F.concat(F.lit(f"<p>{prose}p{j} "), F.col("id").cast("string"),
-                 F.lit("</p>"))
-        for j in range(4)])
-    k = (F.col("id") % 4 + 1).cast("int")
-    page = F.concat(
-        F.lit("<html><head><title>t</title><style>p{x}</style></head>"
-              "<body><nav><a href=/>Home</a> <a href=/a>About our site"
-              "</a> <a href=/c>Contact</a></nav>"),
-        F.array_join(F.slice(paras, 1, k), ""),
-        F.lit("<div>ad</div><script>var g = '<p>ghost paragraph that "
-              "must never appear in output</p>';</script>"
-              "<footer><a href=/p>Privacy</a> <a href=/t>Terms of use"
-              "</a> <a href=/s>Sitemap</a></footer></body></html>"))
-    pages = (spark.range(n)
-             .select(F.col("id"), page.alias("payload"), k.alias("k"))
-             .localCheckpoint(eager=True))          # pre-materialized input
-    total_mb = pages.agg(F.sum(F.length("payload"))).first()[0] / 1e6
-    reps, agg = [], None
-    for _ in range(2):
-        t0 = time.time()
-        out = html_extract(pages)
-        agg = out.agg(
-            F.count("*").alias("n"),
-            F.sum("n_kept").alias("kept"),
-            F.sum(F.when(F.col("n_kept") != F.col("k"), 1)
-                  .otherwise(0)).alias("wrong_kept"),
-            F.sum(F.when(F.col("content").startswith(
-                prose + "p0 "), 0).otherwise(1)).alias("wrong_content"),
-            F.sum(F.when(F.col("content").contains("ghost"), 1)
-                  .otherwise(0)).alias("ghosts")).first()
-        reps.append(round(time.time() - t0, 2))
-    wall = min(reps)
-    want_kept = sum((i % 4) + 1 for i in range(4)) * (n // 4) \
-        + sum((i % 4) + 1 for i in range(n % 4))
-    print(json.dumps({
-        "metric": "html boilerplate extraction throughput (per-row "
-                  "Catalyst chain, zero shuffle)",
-        "pages": n, "input_mb": round(total_mb, 1),
-        "reps_s": reps, "wall_s": wall,
-        "pages_per_sec": round(n / wall, 1),
-        "mb_per_sec": round(total_mb / wall, 1),
-        "ground_truth_ok": (int(agg["n"]) == n
-                            and int(agg["kept"]) == want_kept
-                            and int(agg["wrong_kept"]) == 0
-                            and int(agg["wrong_content"]) == 0
-                            and int(agg["ghosts"]) == 0),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_ccnet():
-    """CCNet perplexity-bucketing scale evidence (BASELINE.md).
-
-    SPARK_GRAFT_CCNET_DOCS docs (default 10M) in a deliberately SKEWED
-    language mix (en 80% / fr 10% / de 10% — the worst case for the
-    naive Window.partitionBy(lang) plan this operator exists to avoid);
-    20%% of each language is garbage (unique never-repeating words, so
-    its unigram NLL is strictly above every fluent doc's). Ground truth
-    is exact: per language the three buckets are balanced to +-1 and
-    EVERY garbage doc lands in the tail third (garbage fraction 0.2 <
-    1/3). Wall covers fit_unigram + scoring + the two-level rank."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.classifier import (
-        fit_unigram, perplexity_buckets)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-ccnet")
-    n = int(os.environ.get("SPARK_GRAFT_CCNET_DOCS", "10000000"))
-    lang = (F.when(F.col("id") % 10 < 8, "en")
-            .when(F.col("id") % 10 == 8, "fr").otherwise("de"))
-    sid = F.col("id").cast("string")
-    fluent = F.concat(
-        F.lit("the cat sat on the mat and the dog ran by the house "),
-        F.array_join(F.array_repeat(
-            F.element_at(F.array(F.lit("near"), F.lit("with"),
-                                 F.lit("from")),
-                         (F.col("id") % 3 + 1).cast("int")), 3), " "))
-    garbage = F.concat(F.lit("zz"), sid, F.lit("q wx"), sid,
-                       F.lit("j vv"), sid, F.lit("p qq"), sid, F.lit("z"))
-    # (id div 10) % 5: independent of id % 10 (the language), so each
-    # language gets exactly 20% garbage — id % 5 would alias with the
-    # language residues and make ALL of one language garbage
-    is_garbage = (F.col("id") / 10).cast("long") % 5 == 4
-    docs = (spark.range(n)
-            .select(F.col("id").alias("doc_id"), lang.alias("lang"),
-                    F.when(is_garbage, garbage).otherwise(fluent)
-                    .alias("text"))
-            .localCheckpoint(eager=True))
-    t0 = time.time()
-    model = fit_unigram(docs, vocab_size=20)
-    t_fit = round(time.time() - t0, 2)
-    t0 = time.time()
-    out = perplexity_buckets(docs, model)
-    per = (out.groupBy("lang", "bucket")
-           .agg(F.count("*").alias("c"),
-                F.sum(F.when((F.col("doc_id") / 10).cast("long") % 5 == 4,
-                             1).otherwise(0))
-                .alias("garbage")).collect())
-    t_rank = round(time.time() - t0, 2)
-    by_lang: dict = {}
-    for r in per:
-        by_lang.setdefault(r["lang"], {})[r["bucket"]] = (r["c"],
-                                                          r["garbage"])
-    balanced = all(
-        max(c for c, _ in d.values()) - min(c for c, _ in d.values()) <= 1
-        for d in by_lang.values())
-    garbage_in_tail = all(
-        all(g == 0 for b, (_, g) in d.items() if b != 2)
-        for d in by_lang.values())
-    n_garbage = sum(g for d in by_lang.values() for _, g in d.values())
-    print(json.dumps({
-        "metric": "ccnet perplexity bucketing (fit + score + two-level "
-                  "per-language rank) on an 80/10/10 skewed language mix",
-        "docs": n, "langs": {k: sum(c for c, _ in d.values())
-                             for k, d in sorted(by_lang.items())},
-        "fit_wall_s": t_fit, "rank_wall_s": t_rank,
-        "docs_per_sec": round(n / (t_fit + t_rank), 1),
-        "ground_truth_ok": (balanced and garbage_in_tail
-                            and n_garbage == n // 5),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_winnow():
-    """Winnowing fingerprint scale evidence (BASELINE.md).
-
-    SPARK_GRAFT_WINNOW_DOCS docs (default 1M): 24 hex chars of
-    md5-derived noise each, plus — for ids 100j and 100j+1 — a shared
-    18-char planted clone core (" clone" + 12 hex chars of md5(j), so
-    cores share no digit-prefix structure across centuries; a
-    zero-padded decimal century number here made df~200 fingerprint
-    groups out of shared digit prefixes and 237k structural pairs).
-    The winnowing theorem makes recall on the planted pairs EXACT
-    (shared substring 18 >= k+w-1 = 11 chars => a shared selected
-    fingerprint), so `planted_missed` must be 0. Remaining extra pairs
-    are genuine 8-gram hash-value collisions (8 chars of [a-z0-9]
-    carry ~41 bits; ~hundreds expected at 1M docs) — reported, not
-    hidden. Times the fingerprint pass and the pair join."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions import winnow as WN
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-winnow")
-    n = int(os.environ.get("SPARK_GRAFT_WINNOW_DOCS", "1000000"))
-    noise = F.substring(F.md5(F.col("id").cast("string")), 1, 24)
-    century = (F.col("id") / 100).cast("long")
-    core = F.concat(F.lit(" "),
-                    F.substring(F.md5(F.concat(F.lit("c"),
-                                               century.cast("string"))),
-                                1, 12))
-    text = F.when(F.col("id") % 100 < 2, F.concat(noise, core)) \
-            .otherwise(noise)
-    docs = (spark.range(n)
-            .select(F.col("id").alias("doc_id"), text.alias("text"))
-            .localCheckpoint(eager=True))
-    reps = []
-    n_fp = None
-    for _ in range(2):
-        t0 = time.time()
-        n_fp = WN.winnow_fingerprints(docs).count()
-        reps.append(round(time.time() - t0, 2))
-    t_arrow = min(reps)
-    t0 = time.time()
-    pairs = WN.winnow_pairs(docs).localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    t_pairs = round(time.time() - t0, 2)
-    # a pair exists for every century with BOTH members present: full
-    # centuries plus a trailing partial century iff it has >= 2 docs
-    planted = n // 100 + (1 if n % 100 >= 2 else 0)
-    found_planted = pairs.filter(
-        (F.col("id_a") % 100 == 0) & (F.col("id_b") == F.col("id_a") + 1)
-    ).count()
-    print(json.dumps({
-        "metric": "winnowing fingerprints (Schleimer 2003) — Arrow "
-                  "fingerprint pass and pair join with planted "
-                  "exact-recall ground truth",
-        "docs": n, "fingerprints": n_fp,
-        "arrow_reps_s": reps, "arrow_wall_s": t_arrow,
-        "arrow_docs_per_sec": round(n / t_arrow, 1),
-        "pairs_wall_s": t_pairs, "pairs_found": n_pairs,
-        "planted_pairs": planted, "planted_found": found_planted,
-        "planted_missed": planted - found_planted,
-        "collision_extras": n_pairs - found_planted,
-        "ground_truth_ok": found_planted == planted,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_neardecon():
-    """Near-dup decontamination scale evidence (BASELINE.md).
-
-    SPARK_GRAFT_NEARDECON_DOCS corpus docs (default 5M) of 12 unique
-    md5-derived words each; an eval suite of SPARK_GRAFT_NEARDECON_EVAL
-    docs (default 10k) of which 1000 are VERBATIM copies of known corpus
-    docs. A verbatim copy has Jaccard 1 => identical MinHash signature
-    => identical band keys in every band, so banding recall on the
-    planted leaks is EXACT by construction: `planted_missed` must be 0.
-    Extras are sub-J=1 band collisions among random docs (reported).
-    The corpus never shuffles — eval bands broadcast into a map-side
-    probe."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.decontaminate import (
-        contamination_near)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-neardecon")
-    n = int(os.environ.get("SPARK_GRAFT_NEARDECON_DOCS", "5000000"))
-    n_eval = int(os.environ.get("SPARK_GRAFT_NEARDECON_EVAL", "10000"))
-    n_leak = min(1000, n_eval)
-    stride = n // n_leak
-
-    def words(seed_col, salt):
-        return F.array_join(
-            F.transform(F.sequence(F.lit(1), F.lit(12)),
-                        lambda j: F.substring(
-                            F.md5(F.concat(F.lit(salt),
-                                           seed_col.cast("string"),
-                                           F.lit("-"),
-                                           j.cast("string"))), 1, 8)),
-            " ")
-
-    corpus = (spark.range(n)
-              .select(F.col("id").alias("doc_id"),
-                      words(F.col("id"), "c").alias("text"))
-              .localCheckpoint(eager=True))
-    # eval ids live above the corpus id space; the first n_leak are
-    # verbatim copies of corpus docs 0, stride, 2*stride, ...
-    ev_src = F.when(F.col("id") < n_leak, F.col("id") * stride)
-    ev_text = F.when(F.col("id") < n_leak, words(ev_src, "c")) \
-               .otherwise(words(F.col("id"), "e"))
-    ev = (spark.range(n_eval)
-          .select((F.col("id") + n).alias("doc_id"),
-                  ev_text.alias("text"))
-          .localCheckpoint(eager=True))
-    t0 = time.time()
-    pairs = contamination_near(corpus, ev).localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    wall = round(time.time() - t0, 2)
-    found = pairs.filter(
-        (F.col("eval_id") - n < n_leak)
-        & (F.col("doc_id") == (F.col("eval_id") - n) * stride)).count()
-    print(json.dumps({
-        "metric": "near-dup decontamination (MinHash cross-pair probe, "
-                  "broadcast eval bands, zero corpus shuffle)",
-        "corpus_docs": n, "eval_docs": n_eval,
-        "wall_s": wall, "docs_per_sec": round(n / wall, 1),
-        "pairs_found": n_pairs,
-        "planted_leaks": n_leak, "planted_found": found,
-        "planted_missed": n_leak - found,
-        "band_extras": n_pairs - found,
-        "ground_truth_ok": found == n_leak,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_scripts():
-    """Unicode script-composition scale evidence (BASELINE.md) — the
-    bench the textstats performance laws demand for any operator with
-    sibling regex passes: 8 scripts x regexp_extract_all + array-sum at
-    SPARK_GRAFT_SCRIPT_DOCS docs (default 8M, the scale the laws were
-    measured at). Ground truth is CLOSED FORM: each doc is 6 latin
-    chars + a space + one of {6 cyrillic, 4 cjk, 5 latin} by id%3, so
-    per-class totals and every dominant verdict are exact."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.textstats import (dominant_script,
-                                                           script_counts)
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-scripts")
-    n = int(os.environ.get("SPARK_GRAFT_SCRIPT_DOCS", "8000000"))
-    tail = F.when(F.col("id") % 3 == 0, "привет") \
-            .when(F.col("id") % 3 == 1, "你好世界").otherwise("hello")
-    docs = (spark.range(n)
-            .select(F.col("id"),
-                    F.concat(F.lit("abcdef "), tail).alias("text"))
-            .localCheckpoint(eager=True))
-    n0 = n // 3 + (1 if n % 3 >= 1 else 0)
-    n1 = n // 3 + (1 if n % 3 >= 2 else 0)
-    n2 = n - n0 - n1
-    t0 = time.time()
-    counts = script_counts(F.col("text"))
-    agg = docs.select(
-        dominant_script(F.col("text")).alias("dom"),
-        counts["latin"].alias("lat"), counts["cyrillic"].alias("cyr"),
-        counts["cjk"].alias("cjk"), (F.col("id") % 3).alias("cls")) \
-        .groupBy("cls", "dom") \
-        .agg(F.count("*").alias("c"), F.sum("lat").alias("lat"),
-             F.sum("cyr").alias("cyr"), F.sum("cjk").alias("cjk")) \
-        .collect()
-    wall = round(time.time() - t0, 2)
-    by = {(r["cls"], r["dom"]): r for r in agg}
-    ok = (set(by) == {(0, "cyrillic"), (1, "latin"), (2, "latin")}
-          and by[(0, "cyrillic")]["c"] == n0
-          and by[(0, "cyrillic")]["cyr"] == 6 * n0
-          and by[(0, "cyrillic")]["lat"] == 6 * n0
-          and by[(1, "latin")]["cjk"] == 4 * n1
-          and by[(1, "latin")]["lat"] == 6 * n1
-          and by[(2, "latin")]["lat"] == 11 * n2
-          and by[(2, "latin")]["cyr"] == 0)
-    print(json.dumps({
-        "metric": "unicode script composition (8 extract_all passes + "
-                  "dominant argmax) — the sibling-regex law bench",
-        "docs": n, "wall_s": wall,
-        "docs_per_sec": round(n / wall, 1),
-        "ground_truth_ok": ok,
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
-
-
-def main_keywords():
-    """PMI collocation + tf-idf keyword scale evidence (BASELINE.md).
-
-    SPARK_GRAFT_KEYWORD_DOCS docs (default 10M) of 10 common words plus
-    one per-doc md5 rare word; every 1000th doc instead carries the
-    planted exclusive pair 'zzqx wwvy' (words occurring ONLY together),
-    which PMI must rank #1 — exact by construction, since every other
-    bigram involves at least one high-frequency word. tf-idf ground
-    truth: the per-doc rare word (df=1, highest idf) must be every
-    doc's #1 keyword."""
-    from pyspark.sql import functions as F
-
-    from geospatialtools_spark.functions.retrieval import (build_text_index,
-                                                           tfidf_keywords)
-    from geospatialtools_spark.functions.textstats import pmi_bigrams
-    from geospatialtools_spark.session import get_spark
-    spark = get_spark("bench-keywords")
-    n = int(os.environ.get("SPARK_GRAFT_KEYWORD_DOCS", "10000000"))
-    rare = F.concat(F.lit("r"),
-                    F.substring(F.md5(F.col("id").cast("string")), 1, 10))
-    common = ("the cat sat on the mat and the dog ran near ")
-    text = F.when(F.col("id") % 1000 == 0, F.lit("zzqx wwvy")) \
-            .otherwise(F.concat(F.lit(common), rare))
-    docs = (spark.range(n)
-            .select(F.col("id").alias("doc_id"), text.alias("text"))
-            .localCheckpoint(eager=True))
-    t0 = time.time()
-    top = pmi_bigrams(docs, min_count=5, top_k=10).collect()
-    t_pmi = round(time.time() - t0, 2)
-    pmi_ok = top[0]["bigram"] == "zzqx wwvy" \
-        and top[0]["cab"] == (n + 999) // 1000
-    t0 = time.time()
-    idx = build_text_index(docs)
-    kw = tfidf_keywords(idx, k=1)
-    # exact planted pattern, not startswith('r') — the filler word
-    # 'ran' would satisfy a prefix check and hide a ranking bug
-    bad = kw.filter((F.col("doc_id") % 1000 != 0)
-                    & ~F.col("term").rlike("^r[0-9a-f]{10}$")).count()
-    n_kw = kw.count()
-    t_tfidf = round(time.time() - t0, 2)
-    print(json.dumps({
-        "metric": "PMI collocations + tf-idf keywords at corpus scale",
-        "docs": n,
-        "pmi_wall_s": t_pmi, "pmi_docs_per_sec": round(n / t_pmi, 1),
-        "tfidf_wall_s": t_tfidf,
-        "tfidf_docs_per_sec": round(n / t_tfidf, 1),
-        "keywords_emitted": n_kw,
-        "pmi_top1_is_planted_pair": pmi_ok,
-        "tfidf_wrong_top_keywords": bad,
-        "ground_truth_ok": bool(pmi_ok and bad == 0 and n_kw == n),
-        "cpus": spark.sparkContext.defaultParallelism,
-    }))
+def main(argv: list[str]) -> int:
+    """Dispatch on the one optional mode flag; anything else is a usage
+    error, caught before a Spark session starts."""
+    if len(argv) > 1 or (argv and argv[0] not in MODES):
+        print(USAGE, file=sys.stderr)
+        return 2
+    (MODES[argv[0]] if argv else main_bench)()
+    return 0
 
 
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        main_scaling()
-    elif "--polys" in sys.argv:
-        main_polys()
-    elif "--dedup" in sys.argv:
-        main_dedup()
-    elif "--ann" in sys.argv:
-        main_ann()
-    elif "--curation" in sys.argv:
-        main_curation()
-    elif "--lines" in sys.argv:
-        main_lines()
-    elif "--mixture" in sys.argv:
-        main_mixture()
-    elif "--tokens" in sys.argv:
-        main_tokens()
-    elif "--shuffle" in sys.argv:
-        main_shuffle()
-    elif "--bitext" in sys.argv:
-        main_bitext()
-    elif "--decon" in sys.argv:
-        main_decon()
-    elif "--retrieval" in sys.argv:
-        main_retrieval()
-    elif "--warc" in sys.argv:
-        main_warc()
-    elif "--incdedup" in sys.argv:
-        main_incdedup()
-    elif "--dsir" in sys.argv:
-        main_dsir()
-    elif "--semdedup" in sys.argv:
-        main_semdedup()
-    elif "--webgraph" in sys.argv:
-        main_webgraph()
-    elif "--passages" in sys.argv:
-        main_passages()
-    elif "--urls" in sys.argv:
-        main_urls()
-    elif "--html" in sys.argv:
-        main_html()
-    elif "--ccnet" in sys.argv:
-        main_ccnet()
-    elif "--winnow" in sys.argv:
-        main_winnow()
-    elif "--neardecon" in sys.argv:
-        main_neardecon()
-    elif "--scripts" in sys.argv:
-        main_scripts()
-    elif "--keywords" in sys.argv:
-        main_keywords()
-    elif "--flagship-only" in sys.argv:
-        main_flagship_only()
-    else:
-        main_bench()
+    sys.exit(main(sys.argv[1:]))

@@ -208,8 +208,8 @@ def saxton_golden() -> dict[str, np.ndarray]:
 
 def planted_docs(spark, n: int, checkpoint: bool = True):
     """F9: controlled doc corpus with planted duplicate CLUSTERS — the
-    dedup/curation ground-truth generator (promoted from bench.py so
-    spark-submit jobs can ship it inside the package zip).
+    dedup/curation ground-truth generator, in the package so spark-submit
+    jobs (``scripts/run_curation.py``) ship it inside the package zip.
 
     Per 20-doc block starting at m: docs m/m+1/m+2 form a transitive
     3-cluster (m+1 = exact copy of m, m+2 = m plus one appended token,

@@ -13,6 +13,10 @@ Grid convention for the SQL-oracle spatial queries: unit extent [0,1) x
 no point ever falls exactly on a cell edge or center (denominators are the
 prime 1000003, coprime with 2G), so floor/round boundary behavior can never
 differ between engines.
+
+Users: the gate (``__spark_entry__``), the ``attach`` workload in
+``perfbench/wl_attach.py`` and the ``bench.py`` flagship, which all place
+docs and polygons with these same derivations.
 """
 
 from __future__ import annotations
@@ -104,34 +108,6 @@ def rects_polygon_pdf():
     for rid, attr, x0, y0, x1, y1 in RECTS:
         ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
         rows.append({"polygon_id": rid, "attr": attr, "wkb": polygon_to_wkb([ring])})
-    return pd.DataFrame(rows)
-
-
-def many_rects_pdf(n: int):
-    """Deterministic N-rectangle cadastre for polygon-count scaling runs
-    (bench.py --polys): LCG-placed centers in the unit square, edge lengths
-    1-6% of extent, edges on the 1/(4096) lattice (never through the cell
-    centers of any power-of-two grid <= 2048). attr = polygon_id so
-    last-feature-wins stays deterministic under overlap."""
-    import numpy as np
-    import pandas as pd
-
-    from ..geometry import polygon_to_wkb
-    ids = np.arange(n, dtype=np.int64)
-    cx = ((ids * A1 + B1) % M) / M            # reuse the doc LCG streams
-    cy = ((ids * A2 + B2) % M) / M
-    w = (1 + (ids * 48271 + 11) % 240) / 4096.0
-    h = (1 + (ids * 69621 + 7) % 240) / 4096.0
-    x0 = np.clip(np.round((cx - w) * 4096) / 4096, 0, 1)
-    x1 = np.clip(np.round((cx + w) * 4096) / 4096, 0, 1)
-    y0 = np.clip(np.round((cy - h) * 4096) / 4096, 0, 1)
-    y1 = np.clip(np.round((cy + h) * 4096) / 4096, 0, 1)
-    rows = []
-    for k in range(n):
-        ring = np.array([[x0[k], y0[k]], [x1[k], y0[k]],
-                         [x1[k], y1[k]], [x0[k], y1[k]]])
-        rows.append({"polygon_id": int(k), "attr": float(k % 997),
-                     "wkb": polygon_to_wkb([ring])})
     return pd.DataFrame(rows)
 
 
