@@ -90,6 +90,13 @@ def _components_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"node": nodes, "comp": nodes[lab]})
 
 
+def _local_index(ids: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Row of each id ``q`` in ``ids``; -1 where ``ids`` does not hold it."""
+    if ids.size == 0:
+        return np.full(q.shape, -1, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    loc = np.clip(np.searchsorted(ids[order], q), 0, ids.size - 1)
+    return np.where(ids[order[loc]] == q, order[loc], -1)
 
 
 def _pointer_doubling(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -107,12 +114,10 @@ def _pointer_doubling(pdf: pd.DataFrame) -> pd.DataFrame:
     praw = pdf["ptr"].to_numpy()
     ptr = np.where(pd.isna(praw), -1, praw).astype(np.int64)
     lab = pd.to_numeric(pdf["label"], errors="coerce").to_numpy(np.float64)
-    order = np.argsort(ids, kind="stable")
-    sid = ids[order]
-    loc = np.clip(np.searchsorted(sid, ptr), 0, n - 1)
-    internal = (~done) & (sid[loc] == ptr)
+    loc = _local_index(ids, ptr)
+    internal = (~done) & (loc >= 0)
     succ = np.arange(n)
-    succ[internal] = order[loc[internal]]
+    succ[internal] = loc[internal]
     # pointer doubling to the in-group terminal (terminals self-loop)
     for _ in range(int(np.ceil(np.log2(max(n, 2)))) + 1):
         succ = succ[succ]

@@ -29,12 +29,11 @@ from pyspark.sql import functions as F
 
 def grouped_map(df: DataFrame, keys: list[str],
                 fn: Callable[[pd.DataFrame], pd.DataFrame],
-                schema: str, num_partitions: int | None = None) -> DataFrame:
+                schema: str) -> DataFrame:
     """apply ``fn`` to every key-group of ``df``; one Python call per
     PARTITION, not per group. ``fn`` receives one group's rows (like
     applyInPandas) and returns a DataFrame matching ``schema``."""
-    parted = (df.repartition(num_partitions, *keys) if num_partitions
-              else df.repartition(*keys))
+    parted = df.repartition(*keys)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = list(batches)

@@ -74,7 +74,6 @@ def apply_stencil(
     kernel: Callable,
     out_cols: list[tuple[str, str]],
     halo: int = 1,
-    fill: float = np.nan,
 ) -> DataFrame:
     """Run ``kernel`` per tile on dense (block, i0, j0, core_slice) inputs.
 
@@ -90,7 +89,7 @@ def apply_stencil(
     )
     out_names = [n for n, _ in out_cols]
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         ti, tj = key
         ci0, ci1 = ti * t, min((ti + 1) * t, meta.nx)
         cj0, cj1 = tj * t, min((tj + 1) * t, meta.ny)
@@ -100,7 +99,7 @@ def apply_stencil(
         jj = pdf["j"].to_numpy(np.int64) - j0
         blocks = {}
         for c in value_cols:
-            b = np.full((i1 - i0, j1 - j0), fill, dtype=np.float64)
+            b = np.full((i1 - i0, j1 - j0), np.nan, dtype=np.float64)
             b[ii, jj] = pdf[c].to_numpy()
             blocks[c] = b
         if getattr(kernel, "needs_core", False):

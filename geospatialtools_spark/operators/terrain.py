@@ -5,6 +5,7 @@ Execution strategies, per operator class:
 - 3x3 stencils (slope/aspect, D8 flow direction, ocean-boundary detect):
   tile + halo ``applyInPandas`` over the numpy-oracle kernels — one narrow
   shuffle of border rows, exact per-cell results (operators/stencil.py).
+  Kernels read a P8 neighbour through ``_shift_read``.
 - Float fixpoints (Planchon fill, MFD accumulation, MFD HAND, pit
   removal): one loop, ``_fixpoint``. Each round is one stencil pass that
   re-runs only the tiles whose halo changed in the last round; each kernel
@@ -15,21 +16,26 @@ Execution strategies, per operator class:
 - Flow accumulation: two-level decomposition — exact in-tile topological
   sums, then the tile-exit forest (each exit drains into at most one other
   exit) is accumulated once in one task, then one final in-tile pass with
-  the solved inflows. Integers, so bit-exact vs the reference recursion;
-  the job count does not grow with tile crossings.
+  the solved inflows. Both tile passes run one in-tile peel. Integers, so
+  bit-exact vs the reference recursion; the job count does not grow with
+  tile crossings.
 - Downstream traversals (basins, HAND, seed groups): numpy pointer doubling
   per tile, then once over the cross-tile hop graph in one task
   (``graph.resolve_tiled``); a fixed number of Spark jobs.
-- Global sequential labelings (channel segments, hillslopes): decompose into
-  independent seed groups by pointer doubling (group = most-downstream
-  valid cell of each flow path), run the EXACT single-seed oracle walk per
-  group in applyInPandas (embarrassingly parallel — groups are drainage
-  basins), then restore the reference's global id sequence with a
-  deterministic window: groups ordered by (seed area desc, column-major
-  position), id offsets = running sum of per-group id consumption. This
-  reproduces the Fortran's maxloc-seeded sequential ids bit-for-bit because
-  ids within one walk are contiguous and seeds are consumed in exactly this
-  order (proof sketch in channel_segments docstring).
+- Global sequential labelings (channel segments, hillslopes): one driver,
+  ``_seed_group_walk``. It splits the members into independent seed groups
+  by pointer doubling (group = most-downstream member of each flow path),
+  runs the operator's EXACT single-seed walk once per group in
+  ``grouped_map`` (embarrassingly parallel — groups are drainage basins),
+  then restores the reference's global id sequence: groups ordered by
+  (seed area desc, column-major position), id offsets = running sum of
+  per-group id consumption. This reproduces the Fortran's maxloc-seeded
+  sequential ids bit-for-bit because ids within one walk are contiguous
+  and seeds are consumed in exactly this order (proof sketch in
+  channel_segments docstring).
+- Polygonize: per-tile components of the equal-value 4-neighbour graph
+  (``graph._components_kernel``), then ``graph.connected_components`` over
+  the tile-border edges of those components.
 """
 
 from __future__ import annotations
@@ -42,6 +48,8 @@ from pyspark.sql import functions as F
 from ..grid import UNDEF, GridMeta
 from ..oracle import terrain as oracle
 from . import graph, stencil
+from .grouped import grouped_map
+from .seq import exclusive_prefix_sum, seq_ids
 
 IUNDEF = -9999
 F32_UNDEF = float(np.float32(UNDEF))
@@ -52,6 +60,16 @@ MAX_FIXPOINT_ROUNDS = 64
 
 def _cid(i, j, meta: GridMeta):
     return (F.col(i).cast("long") * meta.ny + F.col(j)).alias("id")
+
+
+def _shift_read(arr: np.ndarray, k: int, l: int, fill) -> np.ndarray:
+    """arr value at (i+k, j+l), ``fill`` outside the block."""
+    out = np.full_like(arr, fill)
+    h, w = arr.shape
+    a0, a1 = max(0, -k), h - max(0, k)
+    b0, b1 = max(0, -l), w - max(0, l)
+    out[a0:a1, b0:b1] = arr[a0 + k:a1 + k, b0 + l:b1 + l]
+    return out
 
 
 def _fixpoint(state: DataFrame, meta: GridMeta, kernel,
@@ -121,8 +139,8 @@ def slope_aspect(cells: DataFrame, meta: GridMeta, dem_col="dem", dx_col="dx", d
     )
 
 
-def d8_flow_direction(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem",
-                      diag_corrected: bool = False) -> DataFrame:
+def d8_flow_direction(cells: DataFrame, meta: GridMeta, res: float,
+                      dem_col="dem") -> DataFrame:
     """G3 step 1: D8 fdir (terrain_tools.f90:199-230) via tile+halo.
 
     Core-cell outputs are exact: every core cell's 8 neighbors are inside
@@ -134,7 +152,7 @@ def d8_flow_direction(cells: DataFrame, meta: GridMeta, res: float, dem_col="dem
 
     def kernel(blocks, i0, j0, m):
         dem = np.nan_to_num(blocks[dem_col], nan=UNDEF).astype(np.float32)
-        fd = oracle.d8_fdir(dem, res, diag_corrected=diag_corrected)
+        fd = oracle.d8_fdir(dem, res)
         fi = np.where(fd[:, :, 0] == IUNDEF, IUNDEF, fd[:, :, 0] + i0).astype(np.int32)
         fj = np.where(fd[:, :, 1] == IUNDEF, IUNDEF, fd[:, :, 1] + j0).astype(np.int32)
         return {"fi": fi, "fj": fj}
@@ -162,15 +180,10 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
 
     def init_kernel(blocks, i0, j0, m):
         z = np.nan_to_num(blocks[dem_col], nan=UNDEF).astype(np.float32)
-        nxb, nyb = z.shape
         interior = np.ones(z.shape, dtype=bool)
         for (k, l) in oracle.P8:
-            valid = np.zeros(z.shape, dtype=bool)
-            a0, a1 = max(0, -k), nxb - max(0, k)
-            b0, b1 = max(0, -l), nyb - max(0, l)
-            valid[a0:a1, b0:b1] = z[a0 + k:a1 + k, b0 + l:b1 + l] != undef
             # block edges that are true grid borders have no neighbor there
-            interior &= valid
+            interior &= _shift_read(z, k, l, undef) != undef
         w = z.copy()
         w[(z != undef) & interior] = wmax
         # emit z alongside w: the relax loop then needs no re-join per round
@@ -220,7 +233,6 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
     def relax_kernel(blocks, i0, j0, m, core):
         z = np.nan_to_num(blocks["z"], nan=UNDEF).astype(np.float32)
         w = np.nan_to_num(blocks["w"], nan=UNDEF).astype(np.float32)
-        nxb, nyb = z.shape
         live = z != undef
         # fast descent: directional sweeps until stable. Every update is
         # min(w, max(z, fl32(w_nb + eps))) for a true neighbor, so w stays
@@ -234,11 +246,9 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
         for _ in range(10000):
             cand = np.full(z.shape, np.inf, dtype=np.float32)
             for (k, l) in oracle.P8:
-                a0_, a1_ = max(0, -k), nxb - max(0, k)
-                b0_, b1_ = max(0, -l), nyb - max(0, l)
-                nb = w[a0_ + k:a1_ + k, b0_ + l:b1_ + l]
-                c = np.where(nb == undef, np.float32(np.inf), (nb + eps).astype(np.float32))
-                cand[a0_:a1_, b0_:b1_] = np.minimum(cand[a0_:a1_, b0_:b1_], c)
+                nb = _shift_read(w, k, l, undef)
+                c = np.where(nb == undef, inf32, (nb + eps).astype(np.float32))
+                cand = np.minimum(cand, c)
             upd = live & (w > z)
             neww = np.maximum(z, cand)
             changed = upd & (neww < w)
@@ -280,16 +290,6 @@ def _topo_acc(n: int, src: np.ndarray, dst: np.ndarray, base: np.ndarray) -> np.
     return count
 
 
-def _local_index(gid: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Row of each global cell id ``q`` in a tile's ``gid``; -1 where the
-    cell is not in the tile."""
-    if gid.size == 0:
-        return np.full(q.shape, -1, dtype=np.int64)
-    order = np.argsort(gid, kind="stable")
-    loc = np.clip(np.searchsorted(gid[order], q), 0, gid.size - 1)
-    return np.where(gid[order[loc]] == q, order[loc], -1)
-
-
 def _exit_acc(exits: pd.DataFrame, links: pd.DataFrame) -> pd.DataFrame:
     """Accumulated outflow x(u) of every tile exit u: its zero-inflow base
     plus the x of every exit linked into it, solved as one out-degree <= 1
@@ -319,12 +319,10 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
     fdir undefined — mask applied when ``mask_df`` (i, j, mask) given).
     """
     t = meta.tile
-    valid = (F.col("fi") != IUNDEF) & (F.col("fi") >= 0) & (F.col("fi") < meta.nx) \
-        & (F.col("fj") >= 0) & (F.col("fj") < meta.ny)
+    valid, dst = _fdir_state(fdir_df, meta)
     edges = fdir_df.select(
         _cid("i", "j", meta),
-        F.col("tile_i"), F.col("tile_j"),
-        (F.col("fi").cast("long") * meta.ny + F.col("fj")).alias("dst"),
+        F.col("tile_i"), F.col("tile_j"), dst.alias("dst"),
         (F.col("fi") / t).cast("int").alias("dst_ti"),
         (F.col("fj") / t).cast("int").alias("dst_tj"),
     ).filter(valid)
@@ -334,42 +332,34 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
 
     base_sel = ["tile_i", "tile_j", "i", "j", "fi", "fj"] + ([base_col] if base_col else [])
     base_cells = fdir_df.select(*base_sel).localCheckpoint(eager=True)
-    inflow_schema = "dst_ti int, dst_tj int, dst long, val long"
-    acc_schema = "tile_i int, tile_j int, i int, j int, acc long"
+    ny = meta.ny
+    nx = meta.nx
 
-    def make_kernel():
-        ny = meta.ny
-        tile = t
-
-        def kern(key, cells_pdf: pd.DataFrame, inflow_pdf: pd.DataFrame) -> pd.DataFrame:
-            ti, tj = key
-            ii = cells_pdf["i"].to_numpy(np.int64)
-            jj = cells_pdf["j"].to_numpy(np.int64)
-            gid = ii * ny + jj
-            n = len(gid)
-            # G5 seeded variant (terrain_tools.f90:303-414): base = seed
-            # indicator instead of 1 -> acc(v) counts the seeds whose flow
-            # path passes v (each seed once: unique downstream paths)
-            base = (cells_pdf[base_col].to_numpy(np.int64).copy()
-                    if base_col else np.ones(n, dtype=np.int64))
-            if len(inflow_pdf):
-                loc = _local_index(gid, inflow_pdf["dst"].to_numpy(np.int64))
-                hit = loc >= 0
-                np.add.at(base, loc[hit],
-                          inflow_pdf["val"].to_numpy(np.int64)[hit])
-            fi = cells_pdf["fi"].to_numpy(np.int64)
-            fj = cells_pdf["fj"].to_numpy(np.int64)
-            ok = (fi != IUNDEF) & (fi // tile == ti) & (fj // tile == tj) & (fi >= 0) & (fj >= 0)
-            loc = _local_index(gid, fi * ny + fj)
-            src_l = np.nonzero(ok & (loc >= 0))[0]
-            acc = _topo_acc(n, src_l, loc[src_l], base)
-            return pd.DataFrame({
-                "tile_i": np.full(n, ti, np.int32), "tile_j": np.full(n, tj, np.int32),
-                "i": ii.astype(np.int32), "j": jj.astype(np.int32), "acc": acc,
-            })
-        return kern
-
-    kern = make_kernel()
+    def in_tile(key, cells_pdf, inflow_pdf=None):
+        """One tile's in-tile peel: (gid, acc, src, dst, exit). acc(v) is
+        base(v), plus the inflows (``inflow_pdf``: dst, val) that land on v,
+        plus the acc of v's in-tile upstream cells; (src, dst) are the
+        tile's in-tile edges as rows; ``exit`` marks the cells that drain
+        into another tile."""
+        ti, tj = key
+        gid = cells_pdf["i"].to_numpy(np.int64) * ny + cells_pdf["j"].to_numpy(np.int64)
+        n = len(gid)
+        # G5 seeded variant (terrain_tools.f90:303-414): base = seed
+        # indicator instead of 1 -> acc(v) counts the seeds whose flow
+        # path passes v (each seed once: unique downstream paths)
+        base = (cells_pdf[base_col].to_numpy(np.int64).copy()
+                if base_col else np.ones(n, dtype=np.int64))
+        if inflow_pdf is not None and len(inflow_pdf):
+            loc = graph._local_index(gid, inflow_pdf["dst"].to_numpy(np.int64))
+            hit = loc >= 0
+            np.add.at(base, loc[hit], inflow_pdf["val"].to_numpy(np.int64)[hit])
+        fi = cells_pdf["fi"].to_numpy(np.int64)
+        fj = cells_pdf["fj"].to_numpy(np.int64)
+        valid = (fi != IUNDEF) & (fi >= 0) & (fi < nx) & (fj >= 0) & (fj < ny)
+        same = valid & (fi // t == ti) & (fj // t == tj)
+        loc = graph._local_index(gid, fi * ny + fj)
+        src = np.nonzero(same & (loc >= 0))[0]
+        return gid, _topo_acc(n, src, loc[src], base), src, loc[src], valid & ~same
 
     # ---- tile condensation (two full passes + one O(perimeter) solve).
     # Integer acc is a LINEAR function of the boundary inflows with 0/1
@@ -381,27 +371,9 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
     # forest and accumulates it in one task (``_exit_acc``); phase C is one
     # exact final pass with the solved inflows — bit-identical to iterating
     # full passes, since integer addition is associative.
-    ny = meta.ny
-    nx = meta.nx
-    cond_schema = "kind int, a long, b long, val long"
-
-    def kern_a(key, cells_pdf: pd.DataFrame, cross_pdf: pd.DataFrame) -> pd.DataFrame:
-        ti, tj = key
-        ii = cells_pdf["i"].to_numpy(np.int64)
-        jj = cells_pdf["j"].to_numpy(np.int64)
-        gid = ii * ny + jj
+    def kern_a(key, cells_pdf, cross_pdf):
+        gid, acc0, src_l, dst_l, is_exit = in_tile(key, cells_pdf)
         n = len(gid)
-        fi = cells_pdf["fi"].to_numpy(np.int64)
-        fj = cells_pdf["fj"].to_numpy(np.int64)
-        base = (cells_pdf[base_col].to_numpy(np.int64).copy()
-                if base_col else np.ones(n, dtype=np.int64))
-        valid = (fi != IUNDEF) & (fi >= 0) & (fi < nx) & (fj >= 0) & (fj < ny)
-        same = valid & (fi // t == ti) & (fj // t == tj)
-        loc = _local_index(gid, fi * ny + fj)
-        src_l = np.nonzero(same & (loc >= 0))[0]
-        dst_l = loc[src_l]
-        acc0 = _topo_acc(n, src_l, dst_l, base)
-        is_exit = valid & ~same
         rows = [pd.DataFrame({"kind": np.zeros(int(is_exit.sum()), np.int32),
                               "a": gid[is_exit],
                               "b": np.full(int(is_exit.sum()), -1, np.int64),
@@ -412,7 +384,7 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
             for _ in range(int(np.ceil(np.log2(max(n, 2)))) + 1):
                 succ = succ[succ]
             ts = np.unique(cross_pdf["dst"].to_numpy(np.int64))
-            tl = _local_index(gid, ts)
+            tl = graph._local_index(gid, ts)
             ok = tl >= 0  # every dst should be present; guard anyway
             term = succ[tl[ok]]
             hits = is_exit[term]
@@ -423,9 +395,18 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
                                       "val": np.zeros(nh, np.int64)}))
         return pd.concat(rows, ignore_index=True)
 
+    def kern_c(key, cells_pdf, inflow_pdf):
+        _, acc, *_ = in_tile(key, cells_pdf, inflow_pdf)
+        n = len(acc)
+        return pd.DataFrame({
+            "tile_i": np.full(n, key[0], np.int32), "tile_j": np.full(n, key[1], np.int32),
+            "i": cells_pdf["i"].to_numpy(np.int32), "j": cells_pdf["j"].to_numpy(np.int32),
+            "acc": acc,
+        })
+
     condensed = (base_cells.groupBy("tile_i", "tile_j")
                  .cogroup(cross.groupBy("dst_ti", "dst_tj"))
-                 .applyInPandas(kern_a, schema=cond_schema)
+                 .applyInPandas(kern_a, schema="kind int, a long, b long, val long")
                  ).localCheckpoint(eager=True)
     exits = condensed.filter(F.col("kind") == 0) \
         .select(F.col("a").alias("u"), F.col("val").alias("base"))
@@ -442,7 +423,8 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
                .groupBy("dst_ti", "dst_tj", "dst").agg(F.sum("x").alias("val")))
     acc = (base_cells.groupBy("tile_i", "tile_j")
            .cogroup(inflows.groupBy("dst_ti", "dst_tj"))
-           .applyInPandas(kern, schema=acc_schema)).localCheckpoint(eager=True)
+           .applyInPandas(kern_c, schema="tile_i int, tile_j int, i int, j int, acc long")
+           ).localCheckpoint(eager=True)
 
     res2 = np.float32(res) ** 2
     out = acc.join(fdir_df.select("i", "j", "fi"), ["i", "j"])
@@ -463,7 +445,7 @@ def flow_accumulation(fdir_df: DataFrame, meta: GridMeta, res: float,
 # ---------------------------------------------------------------------------
 
 def _fdir_state(cells: DataFrame, meta: GridMeta):
-    """Common columns for downstream resolution."""
+    """(in-grid flag, target cell id) of each cell's fdir (fi, fj)."""
     in_grid = (F.col("fi") >= 0) & (F.col("fi") < meta.nx) \
         & (F.col("fj") >= 0) & (F.col("fj") < meta.ny) & (F.col("fi") != IUNDEF)
     nxt = (F.col("fi").cast("long") * meta.ny + F.col("fj"))
@@ -605,6 +587,69 @@ def _seed_groups(members: DataFrame, meta: GridMeta) -> DataFrame:
         .withColumnRenamed("label", "gid")
 
 
+def _seed_group_walk(members: DataFrame, meta: GridMeta, cols: list[str],
+                     walk) -> DataFrame:
+    """Run the exact sequential ``walk`` once per seed group of ``members``
+    (i, j, area, fi, fj, *cols) and place its ids in the reference's global
+    id sequence.
+
+    Each group is one ``grouped_map`` call on a dense block of its cells
+    (+1 halo so out-of-group probes stay cheap). ``walk(pdf, block, fdir,
+    seed)`` gets the group's rows, ``block(values, dtype)`` (a zero block
+    with ``values`` at the group's cells), the fdir block and the seed,
+    both in block coordinates. It returns (labels, topo, n_ids) like
+    ``oracle.channels_walk_single_seed``: local ids 1..n_ids, topo (local
+    cid -> local downstream, -1 at the outlet) or None.
+
+    Returns (gid, kind, i, j, v, off) rows: kind 0 a positive label v at
+    (i, j), kind 1 the group's n_ids v, kind 2 a topology link i -> v.
+    ``off`` counts the ids of every group whose seed comes first in (area
+    desc, column-major) order, the order the reference's maxloc consumes
+    seeds.
+    """
+    groups = _seed_groups(members.select("i", "j", "fi", "fj"), meta)
+
+    def kern(pdf):
+        gid = int(pdf["gid"].iloc[0])
+        ii = pdf["i"].to_numpy(np.int64)
+        jj = pdf["j"].to_numpy(np.int64)
+        i0, j0 = ii.min() - 1, jj.min() - 1
+        shape = (ii.max() - i0 + 2, jj.max() - j0 + 2)
+        li, lj = ii - i0, jj - j0
+
+        def block(values, dtype):
+            b = np.zeros(shape, dtype=dtype)
+            b[li, lj] = values
+            return b
+
+        fdir = np.full((*shape, 2), IUNDEF, dtype=np.int64)
+        fdir[li, lj, 0] = pdf["fi"].to_numpy(np.int64) - i0
+        fdir[li, lj, 1] = pdf["fj"].to_numpy(np.int64) - j0
+        seed = (gid // meta.ny - i0, gid % meta.ny - j0)
+        labels, topo, n_ids = walk(pdf, block, fdir, seed)
+        got = labels[li, lj]
+        sel = got > 0
+        parts = [pd.DataFrame({"kind": 0, "i": ii[sel], "j": jj[sel], "v": got[sel]}),
+                 pd.DataFrame({"kind": [1], "i": [-1], "j": [-1], "v": [n_ids]})]
+        if topo:
+            parts.append(pd.DataFrame({"kind": 2, "i": list(topo.keys()), "j": -1,
+                                       "v": list(topo.values())}))
+        return pd.concat(parts, ignore_index=True).assign(gid=gid)
+
+    walked = grouped_map(
+        members.select(_cid("i", "j", meta), "i", "j", "fi", "fj", *cols)
+        .join(groups, "id").drop("id"),
+        ["gid"], kern, schema="kind int, i int, j int, v long, gid long",
+    ).localCheckpoint(eager=True)
+    # the seed table comes from the walk's own id counts: reading the
+    # member -> group join again would re-run the hop solve behind it
+    seeds = members.select(_cid("i", "j", meta).alias("gid"),
+                           (-F.col("area")).alias("_na"), "j", "i").join(
+        walked.filter(F.col("kind") == 1).select("gid", F.col("v").alias("n_ids")), "gid")
+    offsets = exclusive_prefix_sum(seeds, ["_na", "j", "i"], "n_ids", "off")
+    return walked.join(offsets.select("gid", "off"), "gid")
+
+
 def channel_segments(cells: DataFrame, meta: GridMeta, threshold: float,
                      basin_threshold: float) -> tuple[DataFrame, DataFrame]:
     """G6-G8 (terrain_tools.f90:878-992 wocean_wprop semantics).
@@ -623,69 +668,16 @@ def channel_segments(cells: DataFrame, meta: GridMeta, threshold: float,
     thr = float(np.float32(threshold))
     bt = float(np.float32(basin_threshold))
     chan = cells.filter(F.col("area") > thr)
-    groups = _seed_groups(chan.select("i", "j", "fi", "fj"), meta)
-    chan_g = chan.withColumn("id", F.col("i").cast("long") * meta.ny + F.col("j")) \
-                 .join(groups, "id")
 
-    out_schema = "gid long, kind int, i int, j int, v long"
+    def walk(pdf, block, fdir, seed):
+        return oracle.channels_walk_single_seed(
+            block(pdf["area"].to_numpy(), np.float32), fdir, block(1, np.int32),
+            seed, bt, init_label=0, wprop=True)
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = int(pdf["gid"].iloc[0])
-        ii = pdf["i"].to_numpy(np.int64)
-        jj = pdf["j"].to_numpy(np.int64)
-        i0, j0 = ii.min() - 1, jj.min() - 1  # +1 halo so OOB probes stay cheap
-        nxb, nyb = ii.max() - i0 + 2, jj.max() - j0 + 2
-        area = np.zeros((nxb, nyb), dtype=np.float32)
-        cmask = np.zeros((nxb, nyb), dtype=np.int32)
-        fdir = np.full((nxb, nyb, 2), IUNDEF, dtype=np.int64)
-        li, lj = ii - i0, jj - j0
-        area[li, lj] = pdf["area"].to_numpy(np.float32)
-        cmask[li, lj] = 1
-        fdir[li, lj, 0] = pdf["fi"].to_numpy(np.int64) - i0
-        fdir[li, lj, 1] = pdf["fj"].to_numpy(np.int64) - j0
-        seed = (int(gid) // meta.ny - i0, int(gid) % meta.ny - j0)
-        labels, topo, n_ids = oracle.channels_walk_single_seed(
-            area, fdir, cmask, seed, bt, init_label=0, wprop=True)
-        lab = labels[li, lj]
-        n = len(ii)
-        body = pd.DataFrame({"gid": np.full(n, gid, np.int64),
-                             "kind": np.zeros(n, np.int32),
-                             "i": ii.astype(np.int32),
-                             "j": jj.astype(np.int32),
-                             "v": lab.astype(np.int64)})
-        tail = pd.DataFrame({"gid": [gid], "kind": np.array([1], np.int32),
-                             "i": np.array([-1], np.int32),
-                             "j": np.array([-1], np.int32), "v": [int(n_ids)]})
-        parts = [body, tail]
-        if topo:
-            lcs = np.fromiter(topo.keys(), np.int64, len(topo))
-            lds = np.fromiter(topo.values(), np.int64, len(topo))
-            parts.append(pd.DataFrame({
-                "gid": np.full(len(topo), gid, np.int64),
-                "kind": np.full(len(topo), 2, np.int32),
-                "i": lcs.astype(np.int32),
-                "j": np.full(len(topo), -1, np.int32), "v": lds}))
-        return pd.concat(parts, ignore_index=True)
-
-    from .grouped import grouped_map
-    walked = grouped_map(chan_g.select("gid", "i", "j", "area", "fi", "fj"),
-                         ["gid"], kern, schema=out_schema) \
-        .localCheckpoint(eager=True)
-
-    # deterministic seed order -> id offsets (two-level prefix sum; area
-    # DESC expressed as ascending -area, seq.py sorts ascending only)
-    from .seq import exclusive_prefix_sum
-    seeds = chan_g.filter(F.col("id") == F.col("gid")).select(
-        "gid", F.col("area").alias("s_area"), F.col("j").alias("s_j"), F.col("i").alias("s_i"))
-    counts = walked.filter(F.col("kind") == 1).select("gid", F.col("v").alias("n_ids"))
-    offsets = exclusive_prefix_sum(
-        seeds.join(counts, "gid").withColumn("_na", -F.col("s_area")),
-        ["_na", "s_j", "s_i"], "n_ids", "off").select("gid", "off")
-
-    labels = walked.filter(F.col("kind") == 0).join(offsets, "gid").select(
-        "i", "j",
-        F.when(F.col("v") > 0, F.col("v") + F.col("off")).otherwise(F.col("v")).alias("ch_walk"))
-    topology = walked.filter(F.col("kind") == 2).join(offsets, "gid").select(
+    walked = _seed_group_walk(chan, meta, ["area"], walk)
+    labels = walked.filter(F.col("kind") == 0).select(
+        "i", "j", (F.col("v") + F.col("off")).alias("ch_walk"))
+    topology = walked.filter(F.col("kind") == 2).select(
         (F.col("i") + F.col("off")).alias("cid"),
         F.when(F.col("v") == -1, F.lit(-1)).otherwise(F.col("v") + F.col("off")).alias("downstream"))
 
@@ -693,12 +685,9 @@ def channel_segments(cells: DataFrame, meta: GridMeta, threshold: float,
     # before this one in row-major scan), labeled iff any 3x3 neighbor is land
     def nbr_kernel(blocks, i0, j0, m):
         msk = np.nan_to_num(blocks["mask"], nan=0.0)
-        nxb, nyb = msk.shape
         mx = msk.copy()
         for (k, l) in oracle.P8:
-            a0, a1 = max(0, -k), nxb - max(0, k)
-            b0, b1 = max(0, -l), nyb - max(0, l)
-            mx[a0:a1, b0:b1] = np.maximum(mx[a0:a1, b0:b1], msk[a0 + k:a1 + k, b0 + l:b1 + l])
+            mx = np.maximum(mx, _shift_read(msk, k, l, -np.inf))
         return {"nbr_land": mx}
 
     nbr = stencil.apply_stencil(cells.select("tile_i", "tile_j", "i", "j", "mask"),
@@ -851,55 +840,13 @@ def delineate_hillslopes(cells: DataFrame, meta: GridMeta) -> DataFrame:
     walks run the identical single-seed oracle kernel; offsets restore the
     sequential id stream; cleanup densifies ids to 0..K-1.
     """
-    members = cells.filter(F.col("area") != F32_UNDEF)
-    groups = _seed_groups(members.select("i", "j", "fi", "fj"), meta)
-    mem_g = members.withColumn("id", F.col("i").cast("long") * meta.ny + F.col("j")) \
-                   .join(groups, "id")
+    def walk(pdf, block, fdir, seed):
+        return _hillslopes_walk_fast(block(pdf["channels"].to_numpy(), np.int64), fdir,
+                                     block(pdf["mask"].to_numpy(), np.int64), seed)
 
-    out_schema = "gid long, kind int, i int, j int, v long"
-
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = int(pdf["gid"].iloc[0])
-        ii = pdf["i"].to_numpy(np.int64)
-        jj = pdf["j"].to_numpy(np.int64)
-        i0, j0 = ii.min() - 1, jj.min() - 1
-        nxb, nyb = ii.max() - i0 + 2, jj.max() - j0 + 2
-        ch = np.zeros((nxb, nyb), dtype=np.int64)
-        msk = np.zeros((nxb, nyb), dtype=np.int64)
-        fdir = np.full((nxb, nyb, 2), IUNDEF, dtype=np.int64)
-        li, lj = ii - i0, jj - j0
-        ch[li, lj] = pdf["channels"].to_numpy(np.int64)
-        msk[li, lj] = pdf["mask"].to_numpy(np.int64)
-        fdir[li, lj, 0] = pdf["fi"].to_numpy(np.int64) - i0
-        fdir[li, lj, 1] = pdf["fj"].to_numpy(np.int64) - j0
-        seed = (int(gid) // meta.ny - i0, int(gid) % meta.ny - j0)
-        labels, _, n_ids = _hillslopes_walk_fast(ch, fdir, msk, seed)
-        got = labels[li, lj]
-        sel = got > 0
-        ns = int(sel.sum())
-        body = pd.DataFrame({"gid": np.full(ns, gid, np.int64),
-                             "kind": np.zeros(ns, np.int32),
-                             "i": ii[sel].astype(np.int32),
-                             "j": jj[sel].astype(np.int32),
-                             "v": got[sel].astype(np.int64)})
-        tail = pd.DataFrame({"gid": [gid], "kind": np.array([1], np.int32),
-                             "i": np.array([-1], np.int32),
-                             "j": np.array([-1], np.int32),
-                             "v": [int(n_ids)]})
-        return pd.concat([body, tail], ignore_index=True)
-
-    from .grouped import grouped_map
-    walked = grouped_map(
-        mem_g.select("gid", "i", "j", "channels", "mask", "fi", "fj"),
-        ["gid"], kern, schema=out_schema).localCheckpoint(eager=True)
-    from .seq import exclusive_prefix_sum, seq_ids
-    seeds = mem_g.filter(F.col("id") == F.col("gid")).select(
-        "gid", F.col("area").alias("s_area"), F.col("j").alias("s_j"), F.col("i").alias("s_i"))
-    counts = walked.filter(F.col("kind") == 1).select("gid", F.col("v").alias("n_ids"))
-    offsets = exclusive_prefix_sum(
-        seeds.join(counts, "gid").withColumn("_na", -F.col("s_area")),
-        ["_na", "s_j", "s_i"], "n_ids", "off").select("gid", "off")
-    labels = walked.filter(F.col("kind") == 0).join(offsets, "gid").select(
+    walked = _seed_group_walk(cells.filter(F.col("area") != F32_UNDEF), meta,
+                              ["channels", "mask"], walk)
+    labels = walked.filter(F.col("kind") == 0).select(
         "i", "j", (F.col("v") + F.col("off")).alias("hlab"))
 
     base = cells.select("tile_i", "tile_j", "i", "j", "channels", "mask")
@@ -924,7 +871,8 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     """G13 (terrain_tools.f90:1750-1789): 4-connected same-value regions ->
     sequential ids in i-outer scan order.
 
-    Per-tile connected components (local root = min global scan id), then
+    Per-tile connected components of the 4-neighbour equal-value edges
+    (``graph._components_kernel``; local root = min global scan id), then
     ``graph.connected_components`` over the tile-border equality edges of
     the CONTRACTED component graph (one node per border component, not per
     cell; one task), then ids = rank of each component's min scan id (==
@@ -934,45 +882,30 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     live = cells.filter(F.col(value_col) != F32_UNDEF) \
                 .select("tile_i", "tile_j", "i", "j", F.col(value_col).alias("val"))
 
-    comp_schema = "i int, j int, val double, root long"
-
-    def cc_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def cc_kernel(pdf):
         ii = pdf["i"].to_numpy(np.int64)
         jj = pdf["j"].to_numpy(np.int64)
         vv = pdf["val"].to_numpy()
-        i0, j0 = ii.min(), jj.min()
-        nxb, nyb = ii.max() - i0 + 1, jj.max() - j0 + 1
-        grid = np.full((nxb, nyb), np.nan)
-        pos = np.full((nxb, nyb), -1, dtype=np.int64)
-        grid[ii - i0, jj - j0] = vv
-        pos[ii - i0, jj - j0] = np.arange(len(ii))
-        root = np.full(len(ii), -1, dtype=np.int64)
-        order = np.argsort(ii * meta.ny + jj, kind="stable")
-        for k in order:
-            if root[k] >= 0:
-                continue
-            rid = ii[k] * meta.ny + jj[k]
-            stack = [(ii[k] - i0, jj[k] - j0)]
-            v = vv[k]
-            while stack:
-                x, y = stack.pop()
-                p = pos[x, y]
-                if p < 0 or root[p] >= 0 or grid[x, y] != v:
-                    continue
-                root[p] = rid
-                if x > 0:
-                    stack.append((x - 1, y))
-                if x < nxb - 1:
-                    stack.append((x + 1, y))
-                if y > 0:
-                    stack.append((x, y - 1))
-                if y < nyb - 1:
-                    stack.append((x, y + 1))
-        return pd.DataFrame({"i": ii.astype(np.int32), "j": jj.astype(np.int32),
-                             "val": vv, "root": root})
+        gid = ii * meta.ny + jj
+        pos = np.full((ii.max() - ii.min() + 1, jj.max() - jj.min() + 1), -1)
+        pos[ii - ii.min(), jj - jj.min()] = np.arange(len(ii))
+        # 4-neighbour equal-value edges, plus a self-loop per cell so that
+        # a cell with no equal neighbour is its own component
+        u, v = [gid], [gid]
+        for a, b in ((pos[:-1], pos[1:]), (pos[:, :-1], pos[:, 1:])):
+            a, b = a.ravel(), b.ravel()
+            ok = (a >= 0) & (b >= 0)
+            a, b = a[ok], b[ok]
+            eq = vv[a] == vv[b]
+            u.append(gid[a[eq]])
+            v.append(gid[b[eq]])
+        cc = graph._components_kernel(pd.DataFrame({"u": np.concatenate(u),
+                                                    "v": np.concatenate(v)}))
+        root = cc["comp"].to_numpy()[np.searchsorted(cc["node"].to_numpy(), gid)]
+        return pd.DataFrame({"i": ii, "j": jj, "val": vv, "root": root})
 
-    comp = live.groupBy("tile_i", "tile_j").applyInPandas(cc_kernel, schema=comp_schema) \
-               .localCheckpoint(eager=True)
+    comp = live.groupBy("tile_i", "tile_j").applyInPandas(
+        cc_kernel, schema="i int, j int, val double, root long").localCheckpoint(eager=True)
 
     # tile-border equality edges between LOCAL roots
     a = comp.select(F.col("i"), F.col("j"), F.col("val"), F.col("root"))
@@ -980,10 +913,8 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
         (F.col("i") + 1).alias("i"), "j", F.col("val").alias("v1"), F.col("root").alias("r1"))
     right = a.filter(((F.col("j") + 1) % t) == 0).select(
         "i", (F.col("j") + 1).alias("j"), F.col("val").alias("v1"), F.col("root").alias("r1"))
-    e1 = down.join(a, ["i", "j"]).filter(F.col("v1") == F.col("val")) \
-             .select(F.col("r1").alias("x"), F.col("root").alias("y"))
-    e2 = right.join(a, ["i", "j"]).filter(F.col("v1") == F.col("val")) \
-              .select(F.col("r1").alias("x"), F.col("root").alias("y"))
+    e1, e2 = (b.join(a, ["i", "j"]).filter(F.col("v1") == F.col("val"))
+              .select(F.col("r1").alias("x"), F.col("root").alias("y")) for b in (down, right))
     # a local root is its tile component's min scan id, so the min root of
     # a merged component (the CC label) is the component's min scan id
     merged = graph.connected_components(e1.unionByName(e2), "x", "y") \
@@ -994,7 +925,6 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     labeled = comp.join(lbl, "root")
     # sequential numbering: rank of the component's min scan id (each label
     # is the root of exactly one row: its own)
-    from .seq import seq_ids
     pid = seq_ids(lbl.filter(F.col("root") == F.col("lbl")).select("lbl"),
                   ["lbl"], "pid", start=0)
     return labeled.join(pid, "lbl").select("i", "j", F.col("pid").cast("double").alias("polygon"))
@@ -1033,47 +963,37 @@ _MFD_PLAN_CACHE: dict = {}
 _MFD_PLAN_CACHE_MAX = 128
 
 
-def _plan_key(kind, i0, j0, shape, core, arrays):
+def _cached_plan(kind, i0, j0, core, arrays, make):
+    """The tile plan for these inputs: from the cache, else ``make()``."""
     import hashlib
     h = hashlib.sha256()
     for a in arrays:
         h.update(np.ascontiguousarray(a).tobytes())
-    return (kind, i0, j0, shape, core, h.digest())
+    key = (kind, i0, j0, arrays[0].shape, core, h.digest())
+    plan = _MFD_PLAN_CACHE.get(key)
+    if plan is None:
+        while len(_MFD_PLAN_CACHE) >= _MFD_PLAN_CACHE_MAX:
+            _MFD_PLAN_CACHE.pop(next(iter(_MFD_PLAN_CACHE)))
+        plan = _MFD_PLAN_CACHE[key] = make()
+    return plan
 
 
-def _plan_cache_get(key):
-    return _MFD_PLAN_CACHE.get(key)
-
-
-def _plan_cache_put(key, plan):
-    while len(_MFD_PLAN_CACHE) >= _MFD_PLAN_CACHE_MAX:
-        _MFD_PLAN_CACHE.pop(next(iter(_MFD_PLAN_CACHE)))
-    _MFD_PLAN_CACHE[key] = plan
-
-
-def _shift_read(arr: np.ndarray, k: int, l: int, fill) -> np.ndarray:
-    """arr value at (i+k, j+l), ``fill`` outside the block."""
-    out = np.full_like(arr, fill)
-    h, w = arr.shape
-    a0, a1 = max(0, -k), h - max(0, k)
-    b0, b1 = max(0, -l), w - max(0, l)
-    out[a0:a1, b0:b1] = arr[a0 + k:a1 + k, b0 + l:b1 + l]
-    return out
-
-
-def _peel_levels(target: np.ndarray, dep_masks: list[np.ndarray]) -> list[np.ndarray]:
+def _peel_levels(live: np.ndarray, core, dep_masks: list[np.ndarray]) -> list[np.ndarray]:
     """Wavefront decomposition of the strict-dem dependency DAG.
 
-    ``target``: cells recomputed this sweep; ``dep_masks[pos]``: cell c
+    The cells recomputed this sweep (the target) are the ``live`` cells of
+    the ``core`` window (a0, a1, b0, b1); ``dep_masks[pos]``: cell c
     depends on its P8 neighbor at pos (True at c). Returns flat index arrays
     level 0, 1, ... such that every dependency of a level-L cell lies in a
-    lower level (or outside ``target``). Processing levels in order with the
+    lower level (or outside the target). Processing levels in order with the
     per-cell P8-position addition sequence is arithmetic-identical to the
     sequential sorted-order sweep (strict inequalities => acyclic; equal-dem
     cells never interact)."""
     from ..oracle.terrain import P8
 
-    remaining = target.copy()
+    a0, a1, b0, b1 = core
+    remaining = np.zeros(live.shape, dtype=bool)
+    remaining[a0:a1, b0:b1] = live[a0:a1, b0:b1]
     levels = []
     while remaining.any():
         can = remaining.copy()
@@ -1125,7 +1045,6 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
         fract_flow_mfd:600-612); invalid positions encode fract = 0 so the
         masked vector add is a bit-exact no-op."""
         h, w = dem.shape
-        nanmask = np.isnan(dem)
         angle = np.zeros((h, w), dtype=np.float32)
         for (k, l) in P8:
             length = DIAG * res32 if (k + l) in (-2, 0, 2) else res32
@@ -1133,10 +1052,6 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
             d = ((dem - nb) / length).astype(np.float32)
             s = np.where((dem > nb) & ~np.isnan(d), d, np.float32(0.0)).astype(np.float32)
             angle = (angle + s ** p32).astype(np.float32)
-        ci0, ci1, cj0, cj1 = core
-        target = np.zeros((h, w), dtype=bool)
-        target[ci0:ci1, cj0:cj1] = True
-        target &= ~nanmask
         fracts, deps = [], []
         for (k, l) in P8:
             nb_dem = _shift_read(dem, k, l, np.nan)
@@ -1149,7 +1064,7 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
                              slope ** p32 / nb_angle, np.float32(0.0))
             fracts.append(f.astype(np.float32).ravel())
             deps.append(higher)
-        levels = _peel_levels(target, deps)
+        levels = _peel_levels(~np.isnan(dem), core, deps)
         noffs = [k * w + l for (k, l) in P8]
         return levels, fracts, noffs
 
@@ -1157,12 +1072,8 @@ def mfd_accumulation(cells: DataFrame, meta: GridMeta, res: float,
         dem = blocks["dem"].astype(np.float32)
         prev = blocks["catch"].astype(np.float32)
         h, w = dem.shape
-        key = _plan_key("mfd", i0, j0, (h, w), core, (dem,))
-        plan = _plan_cache_get(key)
-        if plan is None:
-            plan = _plan(dem, core)
-            _plan_cache_put(key, plan)
-        levels, fracts, noffs = plan
+        levels, fracts, noffs = _cached_plan("mfd", i0, j0, core, (dem,),
+                                             lambda: _plan(dem, core))
         # level sweep: every donor (strictly higher) of a level-L cell is
         # final (lower level => updated, halo/nan => fixed estimate);
         # additions stay in P8 position order per cell => bit-equal to
@@ -1264,11 +1175,7 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
             fracts.append(f.astype(np.float32).ravel())
             valids.append(v.ravel())
             deps.append(v)
-        ci0, ci1, cj0, cj1 = core
-        target = np.zeros((h, w), dtype=bool)
-        target[ci0:ci1, cj0:cj1] = True
-        target &= ~np.isnan(dem) & (mask >= 1) & (chan <= 0)
-        levels = _peel_levels(target, deps)
+        levels = _peel_levels(~np.isnan(dem) & (mask >= 1) & (chan <= 0), core, deps)
         noffs = [k * w + l for (k, l) in P8]
         return levels, fracts, valids, noffs
 
@@ -1278,12 +1185,9 @@ def depth2channel_mfd(cells: DataFrame, meta: GridMeta, res: float,
         chan = np.nan_to_num(blocks["chan"], nan=0.0)
         cd = np.nan_to_num(blocks["cd"], nan=float(UNDEF)).astype(np.float32)
         h, w = dem.shape
-        key = _plan_key("d2c", i0, j0, (h, w), core, (dem, mask, chan))
-        plan = _plan_cache_get(key)
-        if plan is None:
-            plan = _plan(dem, mask, chan, core)
-            _plan_cache_put(key, plan)
-        levels, fracts, valids, noffs = plan
+        levels, fracts, valids, noffs = _cached_plan(
+            "d2c", i0, j0, core, (dem, mask, chan),
+            lambda: _plan(dem, mask, chan, core))
         # ascending-dem level sweep; the acc == undef VALUE check (not a
         # flag) is preserved from the sequential kernel so a partial sum
         # that lands exactly on -9999 resets identically

@@ -173,16 +173,28 @@ def test_rasterize_paths_match_oracle(spark, grid32):
     pd.testing.assert_frame_equal(a, b)
 
 
+def _random_field(n: int) -> np.ndarray:
+    """A seeded 3-valued field with a few -9999 holes: many small regions,
+    many of them crossing tile borders."""
+    rng = np.random.RandomState(5)
+    field = rng.randint(1, 4, size=(n, n)).astype(np.float64)
+    field[rng.rand(n, n) < 0.05] = UNDEF
+    return field
+
+
 def test_polygonize(spark, grid32):
+    """Burned polygons at 32^2, and the random field at 32^2 and 64^2."""
     from geospatialtools_spark import fixtures
     from geospatialtools_spark.oracle import rasterize as R
-    meta, dem, mask = grid32
-    burned = R.rasterize(meta, fixtures.make_polygons(meta))
-    want = T.polygonize(burned)
-    cells = cells_df(spark, meta, value=burned.astype(np.float64))
-    got_df = ST.polygonize(cells, meta, "value")
-    got = collect_dense(meta, got_df, "polygon", fill=-9999, dtype=np.float64)
-    assert np.array_equal(got, want)
+    meta = grid32[0]
+    cases = [(meta, R.rasterize(meta, fixtures.make_polygons(meta)))]
+    cases += [(fixtures.dem_meta(n, n, 16), _random_field(n)) for n in (32, 64)]
+    for meta, field in cases:
+        want = T.polygonize(field)
+        cells = cells_df(spark, meta, value=field.astype(np.float64))
+        got_df = ST.polygonize(cells, meta, "value")
+        got = collect_dense(meta, got_df, "polygon", fill=-9999, dtype=np.float64)
+        assert np.array_equal(got, want), meta.nx
 
 
 def test_gap_fill(spark, grid32, golden32):
@@ -449,15 +461,20 @@ def test_resolve_tiled_matches_sequential_walk(spark, label_type):
 
 
 # Spark jobs each boundary-graph operator runs (one noop write included):
-# the counts on oracle-built inputs, the same at 64^2 and 128^2 (tile 16).
-TERRAIN_JOB_BUDGET = {"acc": 16, "basins": 13, "hand": 13, "polygonize": 16}
+# the counts on oracle-built inputs at 64^2 and 128^2 (tile 16).
+TERRAIN_JOB_BUDGET = {"acc": 16, "basins": 13, "hand": 13, "polygonize": 16,
+                      "channels": 38, "hillslopes": 39}
+# channel_segments runs one more job at 128^2 than at 64^2; the others
+# run the same count at both sizes
+SIZE_FREE_OPS = ("acc", "basins", "hand", "polygonize")
 
 
 def test_terrain_operator_job_budget(spark):
-    """flow_accumulation, delineate_basins, depth2channel and polygonize
-    each run a fixed number of Spark jobs: equal at 64^2 and 128^2 (16 and
-    64 tiles, longer cross-tile paths), within TERRAIN_JOB_BUDGET, and
-    bit-equal to the oracle at both sizes."""
+    """flow_accumulation, delineate_basins, depth2channel, polygonize,
+    channel_segments and delineate_hillslopes each run within
+    TERRAIN_JOB_BUDGET at 64^2 and 128^2 (16 and 64 tiles, longer
+    cross-tile paths), the SIZE_FREE_OPS the same count at both sizes, and
+    each is bit-equal to the oracle at both sizes."""
     from geospatialtools_spark import fixtures
     from geospatialtools_spark.oracle import rasterize as R
 
@@ -468,10 +485,12 @@ def test_terrain_operator_job_budget(spark):
         filled = T.planchon_fill(dem, RES)
         area, fdir = T.d8_acc(filled, mask, RES)
         ch, _, _ = T.calculate_channels_wocean_wprop(area, TH, BTH, fdir, mask)
+        hs = T.delineate_hillslopes(ch, area, fdir, mask)
         burned = R.rasterize(meta, fixtures.make_polygons(meta))
         cells = cells_df(spark, meta, fi=fdir[:, :, 0].astype(np.int64),
                          fj=fdir[:, :, 1].astype(np.int64),
                          mask=mask.astype(np.int64), channels=ch,
+                         area=area.astype(np.float64),
                          dem=filled.astype(np.float64),
                          value=burned.astype(np.float64)).localCheckpoint()
         want = {
@@ -481,6 +500,8 @@ def test_terrain_operator_job_budget(spark):
                                                        filled, leak=False),
                      UNDEF, np.float32),
             "polygonize": ("polygon", T.polygonize(burned), -9999, np.float64),
+            "channels": ("channels", ch, -9999, np.int64),
+            "hillslopes": ("hillslopes", hs, -9999, np.int64),
         }
         ops = {
             "acc": lambda: ST.flow_accumulation(
@@ -489,6 +510,8 @@ def test_terrain_operator_job_budget(spark):
             "basins": lambda: ST.delineate_basins(cells, meta),
             "hand": lambda: ST.depth2channel(cells, meta),
             "polygonize": lambda: ST.polygonize(cells, meta, "value"),
+            "channels": lambda: ST.channel_segments(cells, meta, TH, BTH)[0],
+            "hillslopes": lambda: ST.delineate_hillslopes(cells, meta),
         }
         jobs[n] = {}
         for op, run in ops.items():
@@ -503,6 +526,6 @@ def test_terrain_operator_job_budget(spark):
             col, ref, fill, dtype = want[op]
             got = collect_dense(meta, out, col, fill=fill, dtype=dtype)
             assert np.array_equal(got, ref), (n, op)
-    assert jobs[64] == jobs[128], jobs
+    assert all(jobs[64][op] == jobs[128][op] for op in SIZE_FREE_OPS), jobs
     for op, budget in TERRAIN_JOB_BUDGET.items():
-        assert 0 < jobs[64][op] <= budget, (op, jobs)
+        assert 0 < jobs[64][op] <= budget and jobs[128][op] <= budget, (op, jobs)
