@@ -98,51 +98,67 @@ def minhash_signature_pudf(k: int = 3, n_hashes: int = N_MINHASH):
     rule) of md5('h|' + shingle) — an array<string> of length
     ``n_hashes``. hashlib in an Arrow batch costs ~1us per md5, where
     interpreted nested higher-order functions cost ~80us on the JVM.
+
+    Each shingle is encoded once and the ``h|`` prefixes are built once;
+    the min is taken over raw md5 digests, which sort in the same order
+    as their hex strings, so only each minimum is hex-encoded.
     """
     import hashlib
 
     from pyspark.sql import types as TY
+
+    md5 = hashlib.md5
+    prefixes = [f"{h}|".encode() for h in range(n_hashes)]
 
     @F.pandas_udf(TY.ArrayType(TY.StringType()))
     def sig(text):
         out = []
         for t in text:
             toks = normalize_str(t or "").split(" ")
-            grams = {" ".join(toks[i:i + k]) for i in range(max(len(toks) - k + 1, 1))}
-            out.append([
-                min(hashlib.md5(f"{h}|{g}".encode()).hexdigest() for g in grams)
-                for h in range(n_hashes)
-            ])
+            grams = [g.encode() for g in
+                     {" ".join(toks[i:i + k])
+                      for i in range(max(len(toks) - k + 1, 1))}]
+            out.append([min(md5(p + g).digest() for g in grams).hex()
+                        for p in prefixes])
         import pandas as pd
         return pd.Series(out)
 
     return sig
 
 
-def _minhash_banded(docs: DataFrame, text_col: str, id_col: str,
-                    k: int, n_hashes: int, bands: int) -> DataFrame:
-    """Shared banding step: docs -> MinHash signature (Arrow pandas UDF)
-    -> (band, band-hash) rows, materialized — the full-run pair join
-    (``minhash_lsh_pairs``) and the incremental index
-    (``build_minhash_index``) both consume exactly this table, so the two
-    paths can never hash differently."""
+def _minhash_bands(docs: DataFrame, text_col: str, id_col: str,
+                   k: int, n_hashes: int, bands: int,
+                   *carry: Column) -> DataFrame:
+    """docs -> MinHash signature (Arrow pandas UDF) -> one (_id, band,
+    bhash) row per band, lazy; each row also carries the ``carry``
+    columns, evaluated on the doc row."""
     r = n_hashes // bands
     sig = _widen(docs).select(
-        F.col(id_col).alias("_id"),
+        F.col(id_col).alias("_id"), *carry,
         minhash_signature_pudf(k, n_hashes)(F.col(text_col)).alias("sig"),
     )
-    banded = sig.select(
-        "_id",
+    kept = sig.columns[1:-1]
+    return sig.select(
+        "_id", *kept,
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
                      F.md5(F.concat_ws("|", *[F.col("sig")[b * r + i] for i in range(r)]))
                       .alias("bhash"))
             for b in range(bands)
         ])).alias("bb"),
-    ).select("_id", "bb.band", "bb.bhash")
+    ).select("_id", *kept, "bb.band", "bb.bhash")
+
+
+def _minhash_banded(docs: DataFrame, text_col: str, id_col: str,
+                    k: int, n_hashes: int, bands: int) -> DataFrame:
+    """Shared banding step: ``_minhash_bands`` materialized — the full-run
+    pair join (``minhash_lsh_pairs``) and the incremental index
+    (``build_minhash_index``) both consume exactly this table, so the two
+    paths can never hash differently."""
     # materialize before any join: otherwise both join sides re-scan the
     # source and re-evaluate the full signature expression
-    return banded.localCheckpoint(eager=True)
+    return _minhash_bands(docs, text_col, id_col, k, n_hashes, bands) \
+        .localCheckpoint(eager=True)
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -587,6 +603,62 @@ def semantic_dedup(emb: DataFrame, dim: int, eps: float = 0.95,
                     F.col("group_id").alias("keeper_id"), "group_size"))
 
 
+# keeper rank of a group member: the text length, -1 for NULL text, and
+# _NO_DOC_ROW for a node with no ``docs`` row (it can never keep)
+_NO_DOC_ROW = -2
+
+
+def _keeper_rank(text_col: str) -> Column:
+    return F.coalesce(F.length(text_col), F.lit(-1))
+
+
+def _keeper_kernel(pdf):
+    """Components and keepers of one edge list (u, v, w), w = the keeper
+    rank of ``u``: ``graph._components_kernel`` labels the components
+    (comp = min node), and each component's keeper is its member with the
+    highest rank, ties to the smallest node. A node's rank is the max w
+    over its ``u`` rows (``_NO_DOC_ROW`` when it has none). Returns (node,
+    comp, keeper, size) for every node of a component whose keeper has a
+    docs row; a component with none is dropped."""
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.graph import _components_kernel
+
+    cc = _components_kernel(pdf)
+    nodes = cc["node"].to_numpy()
+    comp = cc["comp"].to_numpy()
+    n = len(nodes)
+    root = np.searchsorted(nodes, comp)      # nodes are sorted (np.unique)
+    w = np.full(n, _NO_DOC_ROW, dtype=np.int64)
+    np.maximum.at(w, np.searchsorted(nodes, pdf["u"].to_numpy()),
+                  pdf["w"].to_numpy(np.int64))
+    order = np.lexsort((np.arange(n), -w, root))
+    ro = root[order]
+    first = order[np.r_[True, ro[1:] != ro[:-1]]]
+    best = np.empty(n, dtype=np.int64)
+    best[root[first]] = first
+    keeper = best[root]
+    size = np.bincount(root, minlength=n)[root]
+    kept = w[keeper] > _NO_DOC_ROW
+    return pd.DataFrame({"node": nodes[kept], "comp": comp[kept],
+                         "keeper": nodes[keeper[kept]],
+                         "size": size[kept]})
+
+
+def _elect_keepers(edges: DataFrame) -> DataFrame:
+    """(u, v, w) edges -> ``_keeper_kernel`` in ONE grouped
+    ``applyInPandas`` task: (node, comp, keeper, size). The task holds
+    every edge, as ``graph.connected_components``' does."""
+    t = edges.schema["u"].dataType.simpleString()
+    # grouping on a named constant column: groupBy(F.lit(0)) fails to
+    # resolve in applyInPandas on pyspark 4.1
+    return (edges.withColumn("_cc", F.lit(0))
+            .groupBy("_cc").applyInPandas(
+                _keeper_kernel,
+                schema=f"node {t}, comp {t}, keeper {t}, size long"))
+
+
 def dedup_groups(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
     """Resolve near-dup PAIRS into transitive dedup groups and pick one
@@ -594,36 +666,65 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
     rows (pairs alone can't: A~B and B~C must collapse to ONE keeper even
     when A and C never paired).
 
-    pairs (id_a, id_b) -> ``operators.graph.connected_components`` (min-id
-    group label over the PAIR nodes only, never the corpus, in one Arrow
-    task; a pair with a NULL endpoint is not an edge) ->
-    keeper per group = the member with the LONGEST text, ties to
-    the smallest id (keep-the-richest, the usual curation policy); only a
-    member with a ``docs`` row can keep, and a group with none is dropped.
+    pairs (id_a, id_b), each endpoint with its text length from ``docs``
+    -> one Arrow task (``_keeper_kernel``): connected components (min-id
+    group label over the PAIR nodes only, never the corpus; a pair with a
+    NULL endpoint is not an edge) and the keeper per group = the member
+    with the LONGEST text, NULL text last, ties to the smallest id
+    (keep-the-richest, the usual curation policy); only a member with a
+    ``docs`` row can keep, and a group with none is dropped.
     Returns (doc_id, group_id, keeper_id, group_size) for every doc in a
     group; group_size >= 2 by construction. Anti-join the corpus against
     the non-keeper rows to apply the dedup. ``id_col`` is a key of
-    ``docs``.
+    ``docs``. ``minhash_near_dedup`` elects keepers with the same kernel.
 
-    The components are read once: keeper and size are two windows over
-    the same ``group_id`` partitioning, one shuffle.
+    The result is lazy: each read re-runs the solve and the pair lineage.
     """
-    from ..operators.graph import connected_components
+    e = (pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
+         .select(F.explode(F.array(
+             F.struct(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
+             F.struct(F.col("id_b").alias("u"), F.col("id_a").alias("v"))))
+             .alias("e"))
+         .select("e.u", "e.v"))
+    ranks = docs.select(F.col(id_col).alias("u"),
+                        _keeper_rank(text_col).alias("w"))
+    edges = e.join(ranks, "u", "left") \
+             .withColumn("w", F.coalesce("w", F.lit(_NO_DOC_ROW)))
+    return _elect_keepers(edges).select(
+        F.col("node").alias(id_col), F.col("comp").alias("group_id"),
+        F.col("keeper").alias("keeper_id"),
+        F.col("size").alias("group_size"))
+
+
+def minhash_near_dedup(docs: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id") -> DataFrame:
+    """``docs`` without the non-keepers of its MinHash near-dup groups:
+    the rows ``dedup_groups(docs, minhash_lsh_pairs(docs, ...))`` marks
+    for dropping (default shingle size, signature and bands), anti-joined
+    out, in one pass.
+
+    Every (band, bhash) bucket with at least 2 members links each member
+    to the bucket's min id (its hub). A star has the same components as
+    the bucket's clique of pairs, so the groups, and with them the
+    keepers (``_keeper_kernel``), equal the pair path's at any
+    ``star_threshold``, with O(members) edges per bucket. A NULL id never
+    pairs, so rows with one are never dropped. Nothing is checkpointed:
+    the band rows feed one window, the edges one Arrow task. ``id_col``
+    is a key of ``docs``.
+    """
     from pyspark.sql import Window
-    comp = connected_components(pairs)
-    lens = docs.select(F.col(id_col).alias("node"),
-                       F.length(text_col).alias("_len"),
-                       F.lit(True).alias("_in"))
-    group = Window.partitionBy("comp")
-    rank = group.orderBy(F.col("_in").asc_nulls_last(),
-                         F.col("_len").desc_nulls_last(), F.col("node"))
-    return (comp.join(lens, "node", "left")
-            .select(F.col("node").alias(id_col),
-                    F.col("comp").alias("group_id"),
-                    F.first("node").over(rank).alias("keeper_id"),
-                    F.first("_in").over(rank).alias("_kept"),
-                    F.count("*").over(group).alias("group_size"))
-            .filter(F.col("_kept").isNotNull()).drop("_kept"))
+    bands_df = _minhash_bands(docs.filter(F.col(id_col).isNotNull()),
+                              text_col, id_col, 3, N_MINHASH, LSH_BANDS,
+                              _keeper_rank(text_col).alias("w"))
+    bucket = Window.partitionBy("band", "bhash")
+    edges = (bands_df.withColumn("_n", F.count("*").over(bucket))
+             .withColumn("v", F.min("_id").over(bucket))
+             .filter(F.col("_n") >= 2)
+             .select(F.col("_id").alias("u"), "v", "w"))
+    losers = _elect_keepers(edges) \
+        .filter(F.col("node") != F.col("keeper")) \
+        .select(F.col("node").alias(id_col))
+    return docs.join(losers, id_col, "left_anti")
 
 
 def simhash_pudf(bits: int = 16):

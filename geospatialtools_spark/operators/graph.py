@@ -20,8 +20,9 @@ State schema: (id long, done boolean, ptr long, label <any>, i, j), with
 id = i*ny + j. DONE rows carry their final label; PENDING rows point at
 ``ptr``.
 
-``connected_components`` labels an undirected pair list (near-dup group
-resolution, polygonize's tile-border merge). It solves the whole graph in
+``connected_components`` labels an undirected pair list (semantic-dedup
+groups, polygonize's tile-border merge; ``dedup._keeper_kernel`` runs
+``_components_kernel`` itself). It solves the whole graph in
 one grouped ``applyInPandas`` task (numpy min-root hooking + pointer
 jumping), so its Spark job count does not grow with the component
 diameter. A pair with a NULL endpoint is not an edge.
@@ -51,7 +52,7 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     random 4M-edge list solves in ~4 s and ~400 MB on one core.
 
     The result is lazy, so every read of it re-runs the solve and the pair
-    lineage above it: read it once (the dedup callers fold their group
+    lineage above it: read it once (``semantic_dedup`` folds its group
     sizes into one window) or cache it.
     """
     e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))

@@ -877,10 +877,15 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     the CONTRACTED component graph (one node per border component, not per
     cell; one task), then ids = rank of each component's min scan id (==
     the reference's discovery order).
+
+    A NULL or NaN cell equals no cell, so it is its own component: it
+    takes an id, as the reference spends one on it (NaN != UNDEF), but
+    emits no row.
     """
     t = meta.tile
-    live = cells.filter(F.col(value_col) != F32_UNDEF) \
-                .select("tile_i", "tile_j", "i", "j", F.col(value_col).alias("val"))
+    val = F.nanvl(F.col(value_col).cast("double"), F.lit(None).cast("double"))
+    live = cells.select("tile_i", "tile_j", "i", "j", val.alias("val")) \
+                .filter(F.col("val").isNull() | (F.col("val") != F32_UNDEF))
 
     def cc_kernel(pdf):
         ii = pdf["i"].to_numpy(np.int64)
@@ -927,7 +932,8 @@ def polygonize(cells: DataFrame, meta: GridMeta, value_col: str = "value") -> Da
     # is the root of exactly one row: its own)
     pid = seq_ids(lbl.filter(F.col("root") == F.col("lbl")).select("lbl"),
                   ["lbl"], "pid", start=0)
-    return labeled.join(pid, "lbl").select("i", "j", F.col("pid").cast("double").alias("polygon"))
+    return (labeled.filter(F.col("val").isNotNull()).join(pid, "lbl")
+            .select("i", "j", F.col("pid").cast("double").alias("polygon")))
 
 
 def gap_fill_hrus(cells: DataFrame, meta: GridMeta) -> DataFrame:

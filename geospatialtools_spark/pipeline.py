@@ -147,11 +147,12 @@ def run_terrain_pipeline(spark: SparkSession, cells: DataFrame, meta: GridMeta,
 
 @dataclass
 class CurationConfig:
-    """Knobs for ``run_curation_pipeline``. ``star_threshold`` defaults ON
-    (the clique guard): a production corpus always contains boilerplate
-    families, and an unguarded band join over one is the last quadratic
-    path in the dedup surface; pass None to recover exact clique emission
-    for calibration runs."""
+    """Knobs for ``run_curation_pipeline``. ``star_threshold`` no longer
+    shapes the ``near_dedup`` output: that stage links each band-bucket
+    member to its hub, which needs no clique guard, and its groups equal
+    the pair path's at any threshold. The field stays in the config and
+    its fingerprint (``star``) for callers that run ``minhash_lsh_pairs``
+    with the pipeline's setting."""
     id_col: str = "doc_id"
     text_col: str = "text"
     weight_col: str = "n_chars"
@@ -312,9 +313,13 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
       rows with its content hash (``exact_dups``' keeper). One pass over
       ``docs``: a window min over the md5 partition, no second scan and
       no driver collection.
-    - ``near_dedup``: MinHash-LSH candidate pairs (clique-guarded by
-      default) -> ``dedup_groups`` transitive resolution -> anti-join the
-      non-keepers out. The group table is O(dup docs), never the corpus.
+    - ``near_dedup``: ``dedup.minhash_near_dedup`` — MinHash band
+      buckets -> each member linked to its bucket's min id -> one Arrow
+      task solves the transitive groups and elects the keepers (the
+      ``dedup_groups`` kernel) -> anti-join the non-keepers out. The
+      output equals the ``minhash_lsh_pairs`` + ``dedup_groups`` path's
+      at any ``star_threshold``. The edge table is O(dup docs), never the
+      corpus.
     - ``passages`` (optional, when ``passage_window`` is set): corpus-wide
       duplicated-passage removal (lines.passage_dedup) on the near-deduped
       survivors; emptied documents drop and ``weight_col`` is recomputed.
@@ -333,7 +338,7 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
     - ``split``: deterministic hash split (stable under append/repartition).
     - ``shard``: budget-packed contiguous shards of the train split.
     """
-    from .functions.dedup import dedup_groups, minhash_lsh_pairs
+    from .functions.dedup import minhash_near_dedup
     from .functions.sampling import (hash_split, mixture_sample,
                                      shard_by_budget)
     from .functions.textstats import quality_score, redact_pii
@@ -391,13 +396,8 @@ def run_curation_pipeline(spark: SparkSession, docs: DataFrame,
         .drop("content_hash", "keeper_id"))
     out["dedup"] = deduped
 
-    near = runner.run_stage("near_dedup", lambda: deduped.join(
-        dedup_groups(deduped,
-                     minhash_lsh_pairs(deduped, text_col=txt, id_col=idc,
-                                       star_threshold=config.star_threshold),
-                     text_col=txt, id_col=idc)
-        .filter(F.col(idc) != F.col("keeper_id")).select(idc),
-        idc, "left_anti"))
+    near = runner.run_stage("near_dedup", lambda: minhash_near_dedup(
+        deduped, text_col=txt, id_col=idc))
     out["near_dedup"] = near
 
     if config.passage_window is not None:

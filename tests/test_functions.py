@@ -140,6 +140,32 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (2, 4) not in got
 
 
+def test_minhash_signature_matches_hex_formula(spark):
+    """The signature UDF equals the documented formula, per hash function
+    h the min over distinct word 3-shingles g of md5(f"{h}|{g}") as hex,
+    on NULL, empty, punctuation-only and astral-character texts."""
+    from geospatialtools_spark.functions.textstats import normalize_str
+    texts = [None, "", "?! ... ;;", "\U0001d518\U0001d52b\U0001d526 caf\u00e9 "
+             "\U0001f600 d\u00e9j\u00e0 vu \U00020000 \u212a elvin",
+             "the quick brown fox jumps over the lazy dog",
+             "two words", "The  QUICK brown-fox, jumps! over the lazy dog"]
+
+    def want(t):
+        toks = normalize_str(t or "").split(" ")
+        grams = {" ".join(toks[i:i + 3]) for i in range(max(len(toks) - 2, 1))}
+        return [min(hashlib.md5(f"{h}|{g}".encode()).hexdigest() for g in grams)
+                for h in range(DD.N_MINHASH)]
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "doc_id long, text string")
+    got = {r["doc_id"]: list(r["sig"]) for r in df.select(
+        "doc_id", DD.minhash_signature_pudf()(F.col("text")).alias("sig"))
+        .collect()}
+    assert got == {i: want(t) for i, t in enumerate(texts)}
+    # NULL, empty and punctuation-only text share the one empty shingle
+    assert got[0] == got[1] == got[2]
+
+
 def test_connected_components_chains_and_cycles(spark):
     """Transitive chains (A-B, B-C must merge even though A,C never pair),
     a cycle, and an isolated pair — labels vs a python union-find oracle."""
@@ -245,10 +271,38 @@ def test_minhash_star_threshold_same_groups_linear_pairs(spark):
         assert set(g[g.doc_id >= 100].doc_id) == {100, 101}
 
 
+def test_minhash_near_dedup_drops_the_pair_path_nonkeepers(spark):
+    """The one-pass near-dedup drops exactly the non-keepers of
+    dedup_groups over minhash_lsh_pairs, clique or star-guarded: on the
+    60-member family, a near-dup pair, NULL / empty / punctuation-only
+    texts (one shingle, so one group whose keeper is the longest text)
+    and a NULL-id row (never pairs, always kept)."""
+    fam = [(i, "terms of service apply to all users of this site") for i in range(60)]
+    rows = fam + [(100, "the quick brown fox jumps over the lazy dog"),
+                  (101, "the quick brown fox jumps over the lazy cat"),
+                  (200, "completely unrelated content about spark engines"),
+                  (300, None), (301, ""), (302, "!!"),
+                  (None, "the quick brown fox jumps over the lazy dog")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def key(r):
+        return (r[0] is None, r[0] or 0)
+
+    got = sorted(map(tuple, DD.minhash_near_dedup(df).collect()), key=key)
+    for t in (None, 10):
+        g = DD.dedup_groups(df, DD.minhash_lsh_pairs(df, star_threshold=t))
+        losers = g.filter(F.col("doc_id") != F.col("keeper_id")).select("doc_id")
+        want = sorted(map(tuple, df.join(losers, "doc_id", "left_anti")
+                          .collect()), key=key)
+        assert got == want, t
+    assert [r[0] for r in got] == [0, 100, 200, 302, None]
+
+
 def test_dedup_groups_plan_no_cartesian(spark):
     """The group-resolution plan must stay bucketed: no CartesianProduct
-    anywhere (pairs meet through equi-joins only), and the keeper window is
-    PARTITIONED by group (never a single-partition global window)."""
+    anywhere and no nested-loop join (the pair endpoints meet their docs
+    rows through one equi-join); the components and keepers are solved
+    in one Arrow task, not in a window over the groups."""
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in range(20)], "doc_id long, text string")
     pairs = spark.createDataFrame(

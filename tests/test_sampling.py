@@ -305,10 +305,10 @@ def test_curation_pipeline_end_to_end_resumable(spark, tmp_path):
 
 # Spark jobs each curation stage may run: the counts on the planted
 # fixture, the same at both sizes. A commit adds only the stage's write
-# (lineage and schema come from the footers). near_dedup's 12 are MinHash
-# banding and the clique guard, the one-task connected components,
-# keeper election and the write.
-CURATION_JOB_BUDGET = {"dedup": 2, "near_dedup": 12, "quality": 1,
+# (lineage and schema come from the footers). near_dedup's 5 are the
+# adaptive shuffle stages of the bucket window, the one-task
+# components-and-keeper solve and the anti-join, then the write.
+CURATION_JOB_BUDGET = {"dedup": 2, "near_dedup": 5, "quality": 1,
                        "scrub": 1, "split": 1, "shard": 6}
 
 

@@ -182,13 +182,26 @@ def _random_field(n: int) -> np.ndarray:
     return field
 
 
+def _nan_field(n: int) -> np.ndarray:
+    """The random field with NaN cells: scattered singles, an adjacent
+    pair inside a tile, and pairs across a tile border both ways."""
+    field = _random_field(n)
+    field[np.random.RandomState(6).rand(n, n) < 0.03] = np.nan
+    field[3, 4:6] = np.nan
+    field[15:17, 9] = np.nan
+    field[20, 15:17] = np.nan
+    return field
+
+
 def test_polygonize(spark, grid32):
-    """Burned polygons at 32^2, and the random field at 32^2 and 64^2."""
+    """Burned polygons at 32^2, and the random field at 32^2 and 64^2,
+    with and without NaN cells (each spends one id and keeps none)."""
     from geospatialtools_spark import fixtures
     from geospatialtools_spark.oracle import rasterize as R
     meta = grid32[0]
     cases = [(meta, R.rasterize(meta, fixtures.make_polygons(meta)))]
-    cases += [(fixtures.dem_meta(n, n, 16), _random_field(n)) for n in (32, 64)]
+    cases += [(fixtures.dem_meta(n, n, 16), f(n))
+              for n in (32, 64) for f in (_random_field, _nan_field)]
     for meta, field in cases:
         want = T.polygonize(field)
         cells = cells_df(spark, meta, value=field.astype(np.float64))
