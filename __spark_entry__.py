@@ -1153,15 +1153,14 @@ def q_bitext_mine(spark, sf_dir):
 
 
 def q_bpe_tokens(spark, sf_dir):
-    """Distributed BPE tokenizer induction + encode (functions/bpe.py):
-    learn 12 merges on the deterministic fixture corpus
-    (oracle/bpe_twin.py — one corpus word-count aggregation, then
-    per-iteration pair-count argmax + Arrow re-segmentation over the
-    bounded vocab table), then rank-priority-encode every sf document in
-    one Arrow pass. The output fingerprints the FULL token sequence per
-    doc (md5 of the separator-joined tokens), so the gate value-checks
-    BOTH train and encode against the independent python reference
-    trainer + in-SQL order-replay encode twin."""
+    """BPE tokenizer induction + encode (functions/bpe.py): learn 12
+    merges on the deterministic fixture corpus (oracle/bpe_twin.py —
+    collect once, driver loop: one word-count aggregation, collected, then
+    the merge loop on the driver), then rank-priority-encode every sf
+    document in one Arrow pass. The output fingerprints the FULL token
+    sequence per doc (md5 of the separator-joined tokens), so the gate
+    value-checks BOTH train and encode against the independent python
+    reference trainer + in-SQL order-replay encode twin."""
     from geospatialtools_spark.functions.bpe import bpe_encode, bpe_train
     from geospatialtools_spark.oracle.bpe_twin import (FIXTURE_TEXTS,
                                                        N_MERGES, SEP)

@@ -96,16 +96,6 @@ def parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
     return encode_xy(x >> shift, y >> shift, parent_res)
 
 
-def cell_center(cell: np.ndarray):
-    """(lat, lon) of the cell center."""
-    x, y = cell_to_xy(cell)
-    res = cell_res(cell).astype(np.float64)
-    n = np.power(2.0, res)
-    lon = (x + 0.5) / n * 360.0 - 180.0
-    lat = (y + 0.5) / n * 180.0 - 90.0
-    return lat, lon
-
-
 def kring(cell: np.ndarray, k: int) -> np.ndarray:
     """All cells within Chebyshev distance k (the (2k+1)^2 block).
 
@@ -138,17 +128,6 @@ def ring(cell: np.ndarray, k: int) -> np.ndarray:
     nx = x[:, None] + offs[:, 0][None, :]
     ny = y[:, None] + offs[:, 1][None, :]
     return encode_xy(nx, ny, res)
-
-
-def res_for_extent(width_deg: float, target_cells: int = 256) -> int:
-    """Resolution whose cell edge keeps a cover of ``width_deg`` under
-    ~``target_cells`` cells per axis-aligned bbox."""
-    if width_deg <= 0:
-        return MAX_RES
-    per_axis = max(int(np.sqrt(target_cells)), 1)
-    cell_deg = width_deg / per_axis
-    res = int(np.floor(np.log2(360.0 / max(cell_deg, 1e-12))))
-    return int(np.clip(res, 0, MAX_RES))
 
 
 def cover_bbox(min_lat: float, min_lon: float, max_lat: float, max_lon: float,

@@ -179,13 +179,6 @@ def make_documents(meta: GridMeta, n: int = 1000, hotspot_frac: float = 0.2) -> 
     return pd.DataFrame({"doc_id": doc_ids, "spans": spans, "lat": lat, "lon": lon})
 
 
-def make_fdir_arcgis(meta: GridMeta) -> np.ndarray:
-    """F6: prescribed ArcGIS power-of-two flow-direction codes."""
-    rng = np.random.RandomState(SEED + 5)
-    codes = np.array([1, 2, 4, 8, 16, 32, 64, 128])
-    return codes[rng.randint(0, 8, size=(meta.nx, meta.ny))].astype(np.int32)
-
-
 def make_series(nt_in: int = 720) -> np.ndarray:
     """F7: time series for block averaging (float64, seeded)."""
     rng = np.random.RandomState(SEED + 6)

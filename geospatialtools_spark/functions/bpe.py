@@ -7,29 +7,29 @@ learn the top-N character-pair merges and the subword vocabulary they
 induce (Sennrich, Haddow & Birch 2016, "Neural Machine Translation of
 Rare Words with Subword Units" — the counted-words formulation).
 
-Scale shape — the classic fast-BPE factorization:
+Scale shape — collect once, driver loop:
 
 - The CORPUS is touched exactly twice, both linearly: one map-side-
-  combined ``word -> count`` aggregation to build the word-count table
-  (bounded: natural-language vocabulary, optionally capped to the top
-  ``vocab_cap`` words, which is what every production BPE trainer does),
-  and one Arrow-batched encode pass at the end.
-- Every TRAINING iteration runs over the word-count table only
-  (<= vocab_cap rows): one weighted pair-count aggregation + a driver-side
-  argmax of ONE row (the same bounded-table driver-loop shape as
-  ``clustering.reduce_basin_number``), then one Arrow pass re-segmenting
-  the <= vocab_cap symbol arrays. n_merges x O(vocab) — never
-  n_merges x O(corpus).
+  combined ``word -> count`` aggregation, capped to the top ``vocab_cap``
+  words (what every production BPE trainer does), and one Arrow-batched
+  encode pass at the end.
+- The capped word-count table is collected once, and the whole merge
+  loop runs on the driver over it (``_learn_merges``): no Spark job per
+  merge, and each merge touches only the words that hold its pair.
 
 Determinism: ties in pair counts break on the pair's lexicographic order
 (count DESC, a ASC, b ASC), so the merge sequence is a pure function of
-the word counts; pytest locks it against an independent pure-python
+the word counts. Python orders ``str`` by code point, the same order as
+Spark's UTF-8 byte order. pytest locks it against an independent pure-python
 reference implementation (tests/test_bpe.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import heapq
+from collections import Counter, defaultdict
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TY
 
@@ -41,7 +41,7 @@ def word_counts(docs: DataFrame, text_col: str = "text",
     """``(word, n)`` whitespace-token counts — ONE map-side-combined
     aggregation over the corpus; optionally capped to the ``vocab_cap``
     most frequent words (ties to the lexicographically smaller word),
-    which bounds every later training iteration."""
+    which bounds the table ``bpe_train`` collects."""
     wc = (docs.select(F.explode(words_array(F.col(text_col))).alias("word"))
           .groupBy("word").agg(F.count("*").alias("n")))
     if vocab_cap is not None:
@@ -49,81 +49,78 @@ def word_counts(docs: DataFrame, text_col: str = "text",
     return wc
 
 
-def _chars(word: Column) -> Column:
-    """Character array of a word (array<string> of 1-char strings)."""
-    return F.transform(F.sequence(F.lit(1), F.length(word)),
-                       lambda i: word.substr(i, F.lit(1)))
-
-
-def pair_counts(vocab: DataFrame, syms_col: str = "syms",
-                n_col: str = "n") -> DataFrame:
-    """Weighted adjacent-symbol pair counts ``(a, b, cnt)`` over a vocab
-    table carrying a symbol-array column — zip_with over shifted slices
-    (one fused pass, the same shape as textstats' n-gram builder), then
-    one aggregation over <= vocab rows."""
-    syms = F.col(syms_col)
-    sz = F.size(syms)
-    pairs = F.zip_with(
-        F.slice(syms, 1, F.greatest(sz - 1, F.lit(0))),
-        F.slice(syms, 2, F.greatest(sz - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")))
-    return (vocab.select(F.explode(pairs).alias("p"), F.col(n_col))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum(n_col).alias("cnt")))
-
-
-def _merge_syms_udf(a: str, b: str):
-    """Arrow UDF replacing every non-overlapping adjacent (a, b) with the
+def _merge_pair(syms: list[str], a: str, b: str) -> list[str]:
+    """Replace every non-overlapping adjacent (a, b) in ``syms`` with the
     fused symbol a+b, scanning left to right (the BPE merge step)."""
-    ab = a + b
+    res, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            res.append(a + b)
+            i += 2
+        else:
+            res.append(syms[i])
+            i += 1
+    return res
 
-    @F.pandas_udf(TY.ArrayType(TY.StringType()))
-    def merge(syms):
-        import pandas as pd
-        out = []
-        for s in syms:
-            s = list(s)
-            res, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    res.append(ab)
-                    i += 2
-                else:
-                    res.append(s[i])
-                    i += 1
-            out.append(res)
-        return pd.Series(out)
 
-    return merge
+def _learn_merges(words: list[tuple[str, int]], n_merges: int,
+                  min_pair_count: int) -> list[tuple[str, str, int]]:
+    """The merge loop over ``(word, n)`` counts, incrementally: weighted
+    pair counts, a pair -> word-index map and a lazy max-heap keyed
+    ``(-count, a, b)``. Each merge re-segments only the words that hold
+    the merged pair and pushes the pairs whose counts changed; a popped
+    entry whose count is no longer current is skipped."""
+    segs = [list(w) for w, _ in words]
+    ns = [n for _, n in words]
+    counts: dict[tuple[str, str], int] = defaultdict(int)
+    where: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for k, s in enumerate(segs):
+        for p in zip(s, s[1:]):
+            counts[p] += ns[k]
+            where[p].add(k)
+    heap = [(-c, a, b) for (a, b), c in counts.items()]
+    heapq.heapify(heap)
+    merges: list[tuple[str, str, int]] = []
+    while heap and len(merges) < n_merges:
+        c, a, b = heapq.heappop(heap)
+        if -c != counts[(a, b)]:
+            continue
+        if -c < min_pair_count:
+            break
+        merges.append((a, b, -c))
+        delta: Counter = Counter()
+        for k in where.pop((a, b)):
+            old, n = segs[k], ns[k]
+            segs[k] = new = _merge_pair(old, a, b)
+            for p in zip(old, old[1:]):
+                delta[p] -= n
+            for p in zip(new, new[1:]):
+                delta[p] += n
+                where[p].add(k)
+        for p, d in delta.items():
+            if d:
+                counts[p] += d
+                if counts[p] > 0:
+                    heapq.heappush(heap, (-counts[p], *p))
+    return merges
 
 
 def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
-              vocab_cap: int | None = 50_000,
+              vocab_cap: int = 50_000,
               min_pair_count: int = 2) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the ordered
     merge table ``[(a, b, count), ...]`` (may be shorter than n_merges if
     pair counts fall below ``min_pair_count``).
 
-    The driver loop runs over the BOUNDED word-count table (see module
-    docstring); each iteration localCheckpoints the re-segmented vocab so
-    lineage stays O(1) across iterations instead of stacking n_merges
-    Arrow stages into one plan.
+    One ``word_counts`` pass, collected once (at most ``vocab_cap`` rows,
+    so ``vocab_cap`` must be a positive int), then the merge loop on the
+    driver: the Spark job count does not grow with ``n_merges``.
     """
-    vocab = (word_counts(docs, text_col, vocab_cap)
-             .withColumn("syms", _chars(F.col("word")))
-             .select("syms", "n")
-             .localCheckpoint(eager=True))
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        best = (pair_counts(vocab)
-                .orderBy(F.desc("cnt"), "a", "b").limit(1).collect())
-        if not best or best[0]["cnt"] < min_pair_count:
-            break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
-        merges.append((a, b, cnt))
-        vocab = (vocab.withColumn("syms", _merge_syms_udf(a, b)(F.col("syms")))
-                 .localCheckpoint(eager=True))
-    return merges
+    if not isinstance(vocab_cap, int) or vocab_cap < 1:
+        raise ValueError(f"vocab_cap must be a positive int, got {vocab_cap!r}")
+    words = [(r["word"], r["n"])
+             for r in word_counts(docs, text_col, vocab_cap).collect()]
+    return _learn_merges(words, n_merges, min_pair_count)
 
 
 def bpe_encode(docs: DataFrame, merges: list[tuple[str, str, int]],

@@ -106,17 +106,6 @@ def cluster_data(X: np.ndarray, nc: int) -> np.ndarray:
     return np.zeros(X.shape[0])
 
 
-def minibatch_kmeans_fixed(X: np.ndarray, nc: int, seed: int = 1) -> np.ndarray:
-    """M2's MiniBatchKMeans(random_state=1, init=0.5*ones, batch_size=25*nc)
-    (terrain_tools.py:760-764). The reference's init places ALL centers at
-    the same point (0.5 vector) and relies on MBK's internal random
-    reassignment to split them; here the centers get a tiny seeded jitter
-    around 0.5 to break the tie, then full-batch Lloyd — deterministic and
-    the same objective."""
-    centers = fit_kmeans_fixed(np.asarray(X, dtype=np.float64), nc, seed)
-    return predict_kmeans(np.asarray(X, dtype=np.float64), centers)
-
-
 def fit_kmeans_fixed(X: np.ndarray, nc: int, seed: int = 1) -> np.ndarray:
     rng = np.random.RandomState(seed)
     centers = 0.5 * np.ones((nc, X.shape[1])) + 1e-4 * rng.standard_normal((nc, X.shape[1]))

@@ -3,16 +3,17 @@
 No Spark primitive expresses a 2-D neighborhood, so stencils run as:
 
 1. every cell within ``halo`` of a tile border is *replicated* to the
-   adjacent tile(s) (a narrow, explode-based shuffle — only border rows
-   move, interior cells do not);
+   adjacent tile(s) (an explode: interior cells emit one row, border
+   cells one row per tile that reads them);
 2. ``groupBy(tile_i, tile_j).applyInPandas`` rehydrates each tile plus its
    halo into a dense numpy block and applies the kernel;
 3. the kernel's output for the CORE cells only is re-emitted long-form.
 
-This is the engine's equivalent of the reference's whole-grid Fortran
-stencils (slope/aspect ``terrain_tools.f90:14-54``, D8 ``:199-230``): at
-100 TB the cell table is stored partitioned by (tile_i, tile_j), so stage 1
-shuffles O(perimeter) rows per tile, not O(area).
+The groupBy shuffles every cell row, not only the border copies: the plan
+has one ``Exchange hashpartitioning(tile_i, tile_j)`` above the explode, so
+a pass moves O(area) rows per tile. This is the engine's equivalent of the
+reference's whole-grid Fortran stencils (slope/aspect
+``terrain_tools.f90:14-54``, D8 ``:199-230``).
 """
 
 from __future__ import annotations
@@ -77,10 +78,12 @@ def apply_stencil(
 ) -> DataFrame:
     """Run ``kernel`` per tile on dense (block, i0, j0, core_slice) inputs.
 
-    kernel(blocks: dict[str, np.ndarray], i0, j0, meta) -> dict[str, np.ndarray]
-    where each block covers [i0, i1) x [j0, j1) INCLUDING halo clipped to the
-    grid; outputs must be same-shape arrays, of which only the core window is
-    emitted. ``out_cols`` is [(name, spark_type_ddl)].
+    kernel(blocks: dict[str, np.ndarray], i0, j0, meta, core)
+    -> dict[str, np.ndarray], where each block covers [i0, i1) x [j0, j1)
+    INCLUDING halo clipped to the grid and ``core`` = (a0, a1, b0, b1) is the
+    tile's own window in block coordinates; outputs must be same-shape
+    arrays, of which only the core window is emitted. ``out_cols`` is
+    [(name, spark_type_ddl)].
     """
     t = meta.tile
     haloed = with_halo_copies(cells, meta, halo)
@@ -102,14 +105,8 @@ def apply_stencil(
             b = np.full((i1 - i0, j1 - j0), np.nan, dtype=np.float64)
             b[ii, jj] = pdf[c].to_numpy()
             blocks[c] = b
-        if getattr(kernel, "needs_core", False):
-            # core window in block coordinates — for the float fixpoints'
-            # round step (terrain._fixpoint), whose halo rows are other
-            # tiles' current estimates and change flags
-            res = kernel(blocks, i0, j0, meta,
-                         (ci0 - i0, ci1 - i0, cj0 - j0, cj1 - j0))
-        else:
-            res = kernel(blocks, i0, j0, meta)
+        res = kernel(blocks, i0, j0, meta,
+                     (ci0 - i0, ci1 - i0, cj0 - j0, cj1 - j0))
         ci, cj = np.meshgrid(np.arange(ci0, ci1), np.arange(cj0, cj1), indexing="ij")
         out = {
             "tile_i": np.full(ci.size, ti, dtype=np.int32),

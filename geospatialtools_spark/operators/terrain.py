@@ -105,7 +105,6 @@ def _fixpoint(state: DataFrame, meta: GridMeta, kernel,
                                       blocks[n][a0:a1, b0:b1], equal_nan=True)
                        for n in names)
             return {**res, "_chg": np.full(woke.shape, int(not same), np.int8)}
-        run.needs_core = True
         return run
 
     state = state.withColumn("_chg", F.lit(1).cast("tinyint"))
@@ -125,7 +124,7 @@ def _fixpoint(state: DataFrame, meta: GridMeta, kernel,
 def slope_aspect(cells: DataFrame, meta: GridMeta, dem_col="dem", dx_col="dx", dy_col="dy") -> DataFrame:
     """W5: Horn slope/aspect (terrain_tools.f90:14-54) via tile+halo."""
 
-    def kernel(blocks, i0, j0, m):
+    def kernel(blocks, i0, j0, m, core):
         s, a = oracle.slope_aspect(
             np.nan_to_num(blocks[dem_col], nan=UNDEF).astype(np.float32),
             np.nan_to_num(blocks[dx_col], nan=1.0).astype(np.float32),
@@ -150,7 +149,7 @@ def d8_flow_direction(cells: DataFrame, meta: GridMeta, res: float,
     global targets, possibly outside the grid, -9999 when undefined.
     """
 
-    def kernel(blocks, i0, j0, m):
+    def kernel(blocks, i0, j0, m, core):
         dem = np.nan_to_num(blocks[dem_col], nan=UNDEF).astype(np.float32)
         fd = oracle.d8_fdir(dem, res)
         fi = np.where(fd[:, :, 0] == IUNDEF, IUNDEF, fd[:, :, 0] + i0).astype(np.int32)
@@ -178,7 +177,7 @@ def planchon_fill(cells: DataFrame, meta: GridMeta, res: float,
     wmax = np.float32(1000000.0)
     undef = np.float32(UNDEF)
 
-    def init_kernel(blocks, i0, j0, m):
+    def init_kernel(blocks, i0, j0, m, core):
         z = np.nan_to_num(blocks[dem_col], nan=UNDEF).astype(np.float32)
         interior = np.ones(z.shape, dtype=bool)
         for (k, l) in oracle.P8:
@@ -683,7 +682,7 @@ def channel_segments(cells: DataFrame, meta: GridMeta, threshold: float,
 
     # ocean/land boundary pseudo-channels: cid = 999999 + (# mask-0 cells
     # before this one in row-major scan), labeled iff any 3x3 neighbor is land
-    def nbr_kernel(blocks, i0, j0, m):
+    def nbr_kernel(blocks, i0, j0, m, core):
         msk = np.nan_to_num(blocks["mask"], nan=0.0)
         mx = msk.copy()
         for (k, l) in oracle.P8:
@@ -941,7 +940,7 @@ def gap_fill_hrus(cells: DataFrame, meta: GridMeta) -> DataFrame:
     HRU of the 3x3 neighborhood (first-seen insertion order tie-break).
     cells: (tile_i, tile_j, i, j, hru, channels)."""
 
-    def kernel(blocks, i0, j0, m):
+    def kernel(blocks, i0, j0, m, core):
         hrus = np.nan_to_num(blocks["hru"], nan=IUNDEF).astype(np.int64)
         ch = np.nan_to_num(blocks["channels"], nan=IUNDEF).astype(np.int64)
         out = oracle.gap_fill_hrus(hrus, ch)
@@ -1117,7 +1116,7 @@ def acc_neighbors(cells: DataFrame, meta: GridMeta, res: float,
     corrected). Non-recursive -> ONE stencil pass, no iteration."""
     from ..oracle.terrain import d8_acc_neighbors as _oracle_fn
 
-    def kern(blocks, i0, j0, m):
+    def kern(blocks, i0, j0, m, core):
         dem = np.nan_to_num(blocks["dem"], nan=float(F32_UNDEF))
         var = np.nan_to_num(blocks[var_col], nan=0.0)
         out = _oracle_fn(dem, res, var)

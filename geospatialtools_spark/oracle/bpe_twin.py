@@ -1,9 +1,10 @@
 """Golden-twin SQL for the ``bpe_tokens`` gate entry.
 
-The gate query trains a BPE merge table DISTRIBUTED (``functions/bpe.py``:
-one corpus word-count aggregation, then per-iteration pair-count argmax +
-Arrow re-segmentation) on the deterministic fixture corpus below, and
-encodes the sf ``documents`` table with it (rank-priority Arrow encode).
+The gate query trains a BPE merge table (``functions/bpe.py``: collect
+once, driver loop: one Spark word-count aggregation, collected, then an
+incremental heap trainer on the driver) on the deterministic fixture
+corpus below, and encodes the sf ``documents`` table with it
+(rank-priority Arrow encode).
 Training is iterative and encoding is rank-recursive — neither is directly
 expressible in one SQL statement — so the twin follows the terrain
 golden-twin pattern (``gate_twins.py``): the MERGE TABLE values are
@@ -26,9 +27,10 @@ The replay identity doing the work:
 So the twin is ``replace(replace(s, pat, rep), pat, rep)`` nested once per
 merge over ``chr(1)``-separated characters (chr(1) cannot occur in text the
 whitespace tokenizer kept). The comparison the gate performs is two-sided
-and real: Spark's distributed train + Arrow rank-priority encode vs an
-independent python trainer + in-SQL order-replay encode, value-hashed per
-document over the full token sequence (md5 of the separator-joined tokens).
+and real: Spark's word count + heap trainer + Arrow rank-priority encode
+vs an independent python trainer that recounts every pair on each merge +
+in-SQL order-replay encode, value-hashed per document over the full token
+sequence (md5 of the separator-joined tokens).
 """
 
 from __future__ import annotations
@@ -57,8 +59,9 @@ _MEMO: dict = {}
 def _ref_train(texts: list[str], n_merges: int,
                min_pair_count: int = 2) -> list[tuple[str, str, int]]:
     """Independent single-node reference trainer (counted-words BPE):
-    the authority the twin SQL replays. Ties break (count DESC, a ASC,
-    b ASC) exactly like ``bpe.bpe_train``."""
+    the authority the twin SQL replays. It recounts every pair on each
+    merge, a different algorithm from ``bpe.bpe_train``'s incremental
+    heap; ties break (count DESC, a ASC, b ASC) the same way."""
     wc: Counter = Counter()
     for t in texts:
         for w in _WS.split(t or ""):

@@ -569,14 +569,6 @@ def _ocean_boundary(channels: np.ndarray, mask: np.ndarray):
     return channels
 
 
-def calculate_channels_wocean(area, threshold, basin_threshold, fdir, mask) -> np.ndarray:
-    """terrain_tools.f90:1069-1170 (channels init 0, ocean boundaries)."""
-    channels, _, _ = _channels_loop(area, threshold, basin_threshold, fdir, mask=mask)
-    channels = _ocean_boundary(channels, mask)
-    channels[(np.asarray(mask) == 0) & (channels == 0)] = IUNDEF
-    return channels
-
-
 def calculate_channels_wocean_wprop(area, threshold, basin_threshold, fdir, mask):
     """terrain_tools.f90:878-992. Returns (channels, channels_wob, topology).
 

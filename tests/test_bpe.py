@@ -4,13 +4,16 @@ encoded output, and the edge cases are locked exactly."""
 
 from __future__ import annotations
 
+import random
 import re
+import uuid
 from collections import Counter
 
-from pyspark.sql import functions as F
+import pytest
 
 from geospatialtools_spark.functions.bpe import (bpe_encode, bpe_train,
-                                                 pair_counts, word_counts)
+                                                 word_counts)
+from geospatialtools_spark.oracle import bpe_twin
 
 _WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
@@ -22,37 +25,6 @@ def _ref_word_counts(texts):
             if w:
                 c[w] += 1
     return c
-
-
-def _ref_merge(syms, a, b):
-    res, i = [], 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            res.append(a + b)
-            i += 2
-        else:
-            res.append(syms[i])
-            i += 1
-    return res
-
-
-def _ref_train(wc, n_merges, min_pair_count=2):
-    entries = [(list(w), n) for w, n in wc.items()]
-    merges = []
-    for _ in range(n_merges):
-        pc = Counter()
-        for syms, n in entries:
-            for i in range(len(syms) - 1):
-                pc[(syms[i], syms[i + 1])] += n
-        if not pc:
-            break
-        (a, b), cnt = min(pc.items(),
-                          key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
-        if cnt < min_pair_count:
-            break
-        merges.append((a, b, cnt))
-        entries = [(_ref_merge(s, a, b), n) for s, n in entries]
-    return merges
 
 
 def _ref_encode(word, ranks):
@@ -85,27 +57,16 @@ def _docs(spark, texts=TEXTS):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
 
 
-def test_word_counts_and_pair_counts_match_reference(spark):
+def test_word_counts_match_reference(spark):
     docs = _docs(spark)
     wc = {r["word"]: r["n"] for r in word_counts(docs).collect()}
     assert wc == dict(_ref_word_counts(TEXTS))
-    vocab = (word_counts(docs)
-             .withColumn("syms", F.transform(
-                 F.sequence(F.lit(1), F.length("word")),
-                 lambda i: F.col("word").substr(i, F.lit(1)))))
-    got = {(r["a"], r["b"]): r["cnt"]
-           for r in pair_counts(vocab).collect()}
-    ref = Counter()
-    for w, n in _ref_word_counts(TEXTS).items():
-        for i in range(len(w) - 1):
-            ref[(w[i], w[i + 1])] += n
-    assert got == dict(ref)
 
 
 def test_bpe_train_matches_reference_merge_sequence(spark):
     docs = _docs(spark)
     got = bpe_train(docs, n_merges=12)
-    ref = _ref_train(_ref_word_counts(TEXTS), 12)
+    ref = bpe_twin._ref_train(TEXTS, 12)
     assert got == ref
     assert len(got) >= 6          # corpus genuinely supports merges
     counts = [c for _, _, c in got]
@@ -180,3 +141,67 @@ def test_bpe_encode_null_text_and_cap(spark):
     out = {r["doc_id"]: r["tokens"] for r in bpe_encode(docs, merges).collect()}
     assert out[0] == []
     assert out[1] == ["zz", "zz", "y", "y"]
+
+
+# letters of the random corpora: ASCII, Latin-1 and Cyrillic, and two
+# astral characters (UTF-16 surrogate pairs on the JVM side)
+_ALPHABET = list("abcde") + ["\u00e9", "\u00df", "\u0436", "\U0001d11e",
+                              "\U0001f600"]
+
+
+def _random_corpus(seed):
+    """120 docs over 150 random words of 2-10 letters, 15% of the words
+    one letter repeated (the a == b merges of runs)."""
+    rng = random.Random(seed)
+    words = [rng.choice(_ALPHABET) * rng.randint(2, 9) if rng.random() < 0.15
+             else "".join(rng.choices(_ALPHABET, k=rng.randint(2, 10)))
+             for _ in range(150)]
+    return [" ".join(rng.choices(words, k=rng.randint(1, 12)))
+            for _ in range(120)]
+
+
+def test_bpe_train_matches_reference_on_random_corpora(spark):
+    """The driver-side heap trainer against the gate's recount-every-pair
+    reference on 20 seeded non-ASCII / astral corpora, 200+ merges each:
+    the count DESC, a ASC, b ASC tie-break holds beyond ASCII."""
+    for seed in range(20):
+        texts = _random_corpus(seed)
+        ref = bpe_twin._ref_train(texts, 250)
+        assert len(ref) == 250, seed
+        assert any(ord(c) > 0xFFFF for a, b, _ in ref for c in a + b), seed
+        assert bpe_train(_docs(spark, texts), n_merges=250) == ref, seed
+
+
+def _jobs_in_group(spark, run):
+    sc = spark.sparkContext
+    group = f"bpe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bpe job count")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bpe_train_job_count_does_not_grow_with_merges(spark):
+    """One word-count pass, collected once: the merges run on the driver,
+    so 4 and 24 merges run the same (small) number of Spark jobs."""
+    docs = _docs(spark, bpe_twin.FIXTURE_TEXTS)
+    jobs = {}
+    for n in (4, 24):
+        got, jobs[n] = _jobs_in_group(spark, lambda: bpe_train(docs, n))
+        assert got == bpe_twin._ref_train(bpe_twin.FIXTURE_TEXTS, n)
+    assert jobs[4] == jobs[24] <= 3, jobs
+
+
+@pytest.mark.parametrize("cap", [None, 0, -1])
+def test_bpe_train_rejects_unbounded_vocab_cap(spark, cap):
+    """The word table is collected, so it must be capped; the check runs
+    before any Spark job."""
+    docs = _docs(spark)
+
+    def run():
+        with pytest.raises(ValueError, match="vocab_cap"):
+            bpe_train(docs, 4, vocab_cap=cap)
+
+    assert _jobs_in_group(spark, run)[1] == 0

@@ -98,6 +98,22 @@ def test_performance_metrics_improves(spark, zone_cells):
     assert r[6] <= r[2]
 
 
+def test_compute_cluster_parameters(spark, zone_cells):
+    """M4 doubles the cluster count until every covariate's RMSE is within
+    its tolerance: a loose tolerance stops at nc0, one it cannot meet runs
+    every round and returns the count of the last clustering it made."""
+    cols = ["tas", "prec"]
+    n_basin = zone_cells.filter(F.col("basins") > 0).count()
+    for tol, want in ((1.0, 2), (-1.0, 2 * 2 ** (3 - 1))):
+        out, nc = CL.compute_cluster_parameters(
+            zone_cells, cols, {c: tol for c in cols}, nc0=2, max_rounds=3)
+        assert nc == want, tol
+        pdf = out.select("basins", "tile").toPandas()
+        assert len(pdf) == n_basin
+        per_basin = pdf.groupby("basins")["tile"].nunique().max()
+        assert 1 < per_basin <= nc and (per_basin > 2) == (nc > 2), tol
+
+
 def test_reduce_basin_number():
     bp = pd.DataFrame({
         "id": [1, 2, 3, 4, 5],
